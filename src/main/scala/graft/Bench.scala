@@ -295,7 +295,7 @@ object Bench {
       s""""samples":$walls,"gc_ms":${longMap(gcSamples)},""" +
       s""""jobs":${longMap(jobSamples)},""" +
       s""""task_ms":${longMap(taskSamples)},""" +
-      s""""sf":"$sfDir"}"""
+      s""""sf":${jstr(sfDir)}}"""
     (contract, detail)
   }
 }

@@ -63,11 +63,7 @@ object Prof {
             Tables.starSchema))
         case "e2e_validate_csv" => Validate.reportDF(spark,
           Validate.validateCsv(spark,
-            graft.sources.CsvFixture.ensure(spark, dir),
-            // SPARK_GRAFT_CSV_LEGACY=1 profiles the retired two-scan
-            // shape for same-build A/Bs and before-plan artifacts
-            fuseScan =
-              !sys.env.get("SPARK_GRAFT_CSV_LEGACY").contains("1")))
+            graft.sources.CsvFixture.ensure(spark, dir)))
         case n => SparkEntry.queries(n)(spark, dir)
       }
       if (explain) {

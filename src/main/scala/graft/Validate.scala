@@ -74,9 +74,16 @@ object Validate {
     * projection handles the token *list* and per-field overrides exactly
     * (SURVEY.md §1.2).
     */
-  def readCsv(spark: SparkSession, res: Resource): DataFrame = {
+  def readCsv(spark: SparkSession, res: Resource): DataFrame =
+    readCsv(spark, res, actualCsvHeader(spark, res))
+
+  /** [[readCsv]] bound against an already-read header `actual` (as
+    * returned by [[actualCsvHeader]]), so a caller that also checks the
+    * header reads it once.
+    */
+  private def readCsv(
+      spark: SparkSession, res: Resource, actual: Seq[String]): DataFrame = {
     val declared = res.schema.fieldNames
-    val actual = actualCsvHeader(spark, res)
     // The declared schema binds POSITIONALLY (the header row is only
     // skipped). When the file's header is the same name multiset in a
     // different order, bind the all-string schema under the ACTUAL header
@@ -199,9 +206,19 @@ object Validate {
     *     replaces the regex-gate + cast per row).
     *
     * Worth it only when parse cost ≫ probe cost and cardinality ≪
-    * rows (strptime dates on a fact table — measured in PLANS.md
-    * round 7); for near-unique columns it is strictly worse, so
-    * callers opt in per field and the broadcast stays bounded.
+    * rows; for near-unique columns it is strictly worse, so callers
+    * opt in per field and the broadcast stays bounded. Measured
+    * (PLANS.md round 7): an order-controlled A/B on the sf0.1
+    * star-schema CSV flagship put dict dates WITHIN NOISE of the row
+    * path on a warm JVM (~12.5 s both; the first row-first A/B's 21%
+    * "win" was JIT position bias, exposed by reversing the variant
+    * order), and slightly SLOWER in-suite (+24 jobs); wider type sets
+    * measured clearly slower (key-like columns have corpus-sized
+    * dictionaries — [[MaxDictValues]] guards that hazard
+    * structurally). Spark's codegen'd regex gates are not the
+    * bottleneck the upstream trick assumes, so [[validateCsv]] parses
+    * every field per row; this path stays for genuinely expensive
+    * parses (exotic strptime patterns, huge enums).
     */
   def parseTable(
       df: DataFrame,
@@ -227,7 +244,11 @@ object Validate {
     * the dominant cost) is scanned once instead of twice. The persisted
     * frame is appended to `fuseScan` for the caller to release; the
     * returned typed frame is a column-pruning projection over it, so
-    * downstream checks read the same cache.
+    * downstream checks read the same cache. The aggregate always runs
+    * (it carries a row count even when no field is row-parsed), and as
+    * an aggregate it scans every partition: the registered frame is
+    * fully cached when this returns, so concurrent downstream checks
+    * never race each other to build it.
     */
   private[graft] def parseTable(
       df: DataFrame,
@@ -366,9 +387,10 @@ object Validate {
               lit(MaxErrorValues)).as(s"${f.name}__v")
           )
         }
-        val rr =
-          if (aggs.isEmpty) Seq.empty[CheckResult]
-          else unpack(typedPlus.agg(aggs.head, aggs.tail: _*).collect()(0))
+        // the trailing row count keeps the aggregate's action (and so the
+        // full cache build) when no field is row-parsed
+        val all = aggs :+ count(lit(1)).as("__graft_rows")
+        val rr = unpack(typedPlus.agg(all.head, all.tail: _*).collect()(0))
         (rr, typedPlus.select(schema.fields.map(f => col(f.name)): _*))
     }
     val results = schema.fields.flatMap(f =>
@@ -509,7 +531,14 @@ object Validate {
           Await.result(Future.sequence(fs), Duration.Inf).flatten)
       }
       PackageReport(perTable)
-    } finally pool.shutdown()
+    } finally {
+      // on a failed check, let the checks already submitted finish
+      // before returning: a caller releasing the caches they read
+      // (validateCsv) must not race a check that would rebuild one
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue,
+        java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
   }
 
   /** One task per check action for a resource: the table's own checks
@@ -538,93 +567,47 @@ object Validate {
     tableTasks ++ fkTasks
   }
 
-  /** Full reference lifecycle over CSV resources (E1).
-    * `dictParseTypes`: field TYPES routed through the dictionary-parse
-    * path (see the three-step scaladoc on [[parseTable]]); empty =
-    * per-row parse everywhere — the DEFAULT, kept after measurement
-    * (PLANS.md round 7): an order-controlled A/B on the sf0.1
-    * star-schema flagship put dict dates WITHIN NOISE of the row path
-    * on a warm JVM (~12.5 s both; the first row-first A/B's 21% "win"
-    * was JIT position bias, exposed by reversing the variant order),
-    * and slightly SLOWER in-suite (+24 jobs). Spark's codegen'd regex
-    * gates are simply not the pandas-speed bottleneck the upstream
-    * trick assumes. The path stays available per field type for
-    * genuinely expensive parses (exotic strptime patterns, huge
-    * enums); wider type sets measured clearly slower (key-like
-    * columns have corpus-sized dictionaries), and [[MaxDictValues]]
-    * guards that hazard structurally.
+  /** Full reference lifecycle over CSV resources (E1): per resource,
+    * read the CSV header once (it feeds both [[headerCheck]] and the
+    * by-name bind of the all-string read), then ONE fused scan
+    * ([[parseTable]]'s single-scan mode) computes the
+    * `type-or-format-error` results and persists the typed frame; the
+    * aggregate that yields those results has scanned every partition,
+    * so the caches are complete before [[validateTyped]]'s concurrent
+    * checks read them (concurrent first readers of a COLD cache
+    * serialize on BlockManager partition locks — PLANS.md round 12).
+    * Constraint results of fields that failed to parse are dropped
+    * (skip semantics). Every persisted frame is released on return,
+    * normal or exceptional.
     */
-  def validateCsv(spark: SparkSession, pkg: Package,
-      dictParseTypes: Set[String] = Set.empty,
-      persistRaw: Boolean = false,
-      fuseScan: Boolean = true): PackageReport = {
-    // read + header check + parse each resource once. r18 (guide §6 —
-    // one parse instead of two): the fused parseTable mode makes each
-    // resource's validity aggregate and typed projection share ONE
-    // scan — for CSV that halves the dominant read+text-parse cost;
-    // the persisted typed(+bad) frame it registers in `fused` IS the
-    // cache the downstream checks read (the old separate
-    // typed.persist() second parse is gone). Report value-identical
-    // (see the fused-mode scaladoc; ValidateSpec pins fused ≡ legacy).
-    val rawFrames = scala.collection.mutable.ListBuffer[DataFrame]()
+  def validateCsv(spark: SparkSession, pkg: Package): PackageReport = {
     val fused = scala.collection.mutable.ListBuffer[DataFrame]()
-    val parsed: Map[String, (DataFrame, Seq[CheckResult], Set[String])] =
-      pkg.resources.map { res =>
-        // `persistRaw` caches the raw all-string frame — with the fused
-        // single-scan path it is only useful for sources whose ONE scan
-        // is itself worth pinning across the dict path's extra exchange;
-        // kept for API compatibility. Released after the typed frames
-        // materialize.
-        val raw0 = readResource(spark, res)
-        val raw = if (persistRaw) { rawFrames += raw0.persist(); raw0 }
-          else raw0
-        val headerErrs =
-          if (res.inlineData.isDefined) Nil // no header row to reconcile
-          else headerCheck(actualCsvHeader(spark, res), res.schema)
-            .map(_.copy(table = res.name))
-        val dictFields = res.schema.fields
-          .filter(f => dictParseTypes(f.ftype)).map(_.name).toSet
-        val (typed, parseErrs, failed) =
-          parseTable(raw, res.schema, dictFields, MaxDictValues,
-            if (fuseScan) Some(fused) else None)
-        if (!fuseScan) typed.persist()
-        res.name ->
-          ((typed, headerErrs ++ parseErrs.map(_.copy(table = res.name)),
-            failed))
-      }.toMap
-    val tables = parsed.map { case (k, (df, _, _)) => k -> df }
-    // Materialize every typed cache in parallel BEFORE the per-check
-    // pool: validateTyped's concurrent actions on a COLD cache
-    // serialize on BlockManager partition locks — tasks hold executor
-    // threads while waiting for another job's task to finish computing
-    // the same cached partition. Measured same-JVM at sf0.1 (bench
-    // protocol, reps=5 medians): cold-cache per-check pool 28.9 s
-    // (task 75 s — ~25 s of it lock-wait) vs 21.3 s per-table before
-    // the pool existed; warming first gives the pool the warm-cache
-    // conditions its A/B was measured under.
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, tables.size.max(1)))
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      try Await.result(
-        Future.sequence(tables.values.map(df => Future(df.count())).toSeq),
-        Duration.Inf)
-      finally pool.shutdown()
-    }
-    val base = validateTyped(tables, pkg)
-    val report = PackageReport(base.tables.map { t =>
-      val (_, parseErrs, failed) = parsed(t.table)
-      // drop constraint results for fields whose parse failed
-      val kept = t.errors.filterNot(e => failed(e.field))
-      TableReport(t.table, parseErrs ++ kept)
-    })
-    if (fuseScan) fused.foreach(_.unpersist())
-    else tables.values.foreach(_.unpersist())
-    rawFrames.foreach(_.unpersist(blocking = false))
-    report
+    try {
+      val parsed: Map[String, (DataFrame, Seq[CheckResult], Set[String])] =
+        pkg.resources.map { res =>
+          val (raw, headerErrs) =
+            if (res.inlineData.isDefined) // no header row to reconcile
+              (readInline(spark, res), Nil)
+            else {
+              val header = actualCsvHeader(spark, res)
+              (readCsv(spark, res, header),
+                headerCheck(header, res.schema).map(_.copy(table = res.name)))
+            }
+          val (typed, parseErrs, failed) = parseTable(raw, res.schema,
+            Set.empty, MaxDictValues, Some(fused))
+          res.name ->
+            ((typed, headerErrs ++ parseErrs.map(_.copy(table = res.name)),
+              failed))
+        }.toMap
+      val base = validateTyped(parsed.map { case (k, (df, _, _)) => k -> df },
+        pkg)
+      PackageReport(base.tables.map { t =>
+        val (_, parseErrs, failed) = parsed(t.table)
+        // drop constraint results for fields whose parse failed
+        val kept = t.errors.filterNot(e => failed(e.field))
+        TableReport(t.table, parseErrs ++ kept)
+      })
+    } finally fused.foreach(_.unpersist())
   }
 
   /** Report as a DataFrame — one row per executed check (passing or not);

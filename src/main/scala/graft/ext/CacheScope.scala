@@ -36,9 +36,9 @@ private[graft] object CacheScope {
     * of the COLD cache do not recompute the upstream — they serialize
     * on BlockManager partition locks, each blocked task holding an
     * executor slot and billing executorRunTime while it waits (the
-    * same mechanism Validate.validateCsv measured: cold-cache
-    * concurrent checks 28.9 s wall / 75 s task, ~25 s of it
-    * lock-wait). So the hazard is specific to bodies that fan out to
+    * same mechanism measured on Validate.validateCsv in PLANS.md
+    * round 12: cold-cache concurrent checks 28.9 s wall / 75 s task,
+    * ~25 s of it lock-wait). So the hazard is specific to bodies that fan out to
     * SEVERAL concurrent first consumers — AQE leaf stages and
     * broadcast-exchange threads — with no intermediate action. The
     * remedy is per-operator, not global: give such a body one cheap

@@ -923,9 +923,10 @@ object Dedup {
 
   /** The pre-round-13 extension — one gram-frame replication per
     * candidate (id_b, diag) pair — kept as the parity-law reference
-    * and the SubstrAB baseline (the fan-out it pays on same-diagonal
-    * templates is what [[substringCore]]'s grouped-diagonal shape
-    * removes). Not a production path.
+    * and the baseline of PLANS.md round 13's grouped-vs-direct A/B
+    * (the fan-out it pays on same-diagonal templates is what
+    * [[substringCore]]'s grouped-diagonal shape removes). Not a
+    * production path.
     */
   private[graft] def substringRunsDirect(df: DataFrame, idCol: String,
       toksCol: Column, minRunLen: Int, k: Int,

@@ -1284,8 +1284,8 @@ object Profile {
       // hit the COLD cell cache at once and serialize on BlockManager
       // partition locks, holding executor slots while they wait — the
       // r17 driver billed this row ×2.8 task_ms / ×1.39 wall (the same
-      // lock-wait mechanism Validate.validateCsv documents and warms
-      // its typed caches against).
+      // lock-wait mechanism Validate.validateCsv's fused parse
+      // aggregate primes its typed caches against).
       val tot = cl.groupBy("__k").agg(sum(col("__c")).as("__n"))
         .localCheckpoint(eager = true)
       val pairs = tot.select(col("__k").as("__ka"), col("__n").as("__na"))

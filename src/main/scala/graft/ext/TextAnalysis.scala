@@ -215,8 +215,8 @@ object TextAnalysis {
     * histograms); this path is for histograms too large for one task —
     * hundreds of millions of distinct words pre-prune — where the
     * sequential trainer's O(vocab) heap residency is the bound, at the
-    * price of nMerges shuffle rounds (the honest trade: BpeDistAB
-    * measures the single-task trainer FASTER on every
+    * price of nMerges shuffle rounds (the honest trade: PLANS.md
+    * round 13 measures the single-task trainer FASTER on every
     * fits-in-one-task histogram, ~1M distinct words included — use
     * this variant for memory, never speed; or better, use
     * [[learnBpeMergesDistributedDelta]], which keeps the memory
@@ -296,8 +296,8 @@ object TextAnalysis {
     * the law baseline; Round13PropSpec pins all three paths to
     * identical merge sequences on random histograms.
     *
-    * Honest measurement (BpeDistAB, 1M distinct words, 8 merges, full
-    * table in PLANS.md §Round 14): the delta path wins the full
+    * Honest measurement (1M distinct words, 8 merges, full table in
+    * PLANS.md §Round 14): the delta path wins the full
     * re-aggregation by ~1.2× (25 s vs 30 s), NOT the 5× hoped for —
     * removing the per-merge corpus explode exposed the next floor, the
     * per-merge rewrite + eager materialization of the 1M-row symbol

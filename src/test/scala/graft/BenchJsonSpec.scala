@@ -79,6 +79,14 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(node.get("gc_ms").get("q_failed").size == 3)
   }
 
+  test("sf dir with a quote and a backslash is escaped in both lines") {
+    val sf = "/tmp/odd \"dir\"\\sf0.1"
+    val (contract, detail) = Bench.renderJson(results, errors, 3, sf,
+      samples, longs, longs, longs)
+    assert(parse(contract).get("sf").asText == sf)
+    assert(parse(detail).get("sf").asText == sf)
+  }
+
   test("reps=1 omits spread and still parses") {
     val (contract, detail) = Bench.renderJson(results, errors, 1,
       "/tmp/sf0.1", samples, longs, longs, longs)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+
 import graft.report.ErrorCodes
 import graft.schema._
 
@@ -372,32 +374,95 @@ class ValidateSpec extends SparkSpec {
     // r18 (guide §6): the fused mode derives the invalid-cell column
     // from the typed value inside ONE scan — every violation count,
     // every bounded sample, the failed set, and every typed cell must
-    // be identical to the legacy raw-scan aggregate. Exercises: a good
-    // date, a bad date, a missing token, a bad number, a plain string
-    // (never invalid), and an untranslatable field (schema-error path).
+    // be identical to the legacy raw-scan aggregate. The rows hold a
+    // good date, a bad date, a missing token, a bad number and a plain
+    // string (never invalid); the inputs run them row-parsed, with a
+    // dictionary-parsed field, with a dictionary field that falls back
+    // to row parsing past its cardinality cap (5 distinct n values over
+    // a cap of 2), and under a date format that cannot compile
+    // (schema-error path: no parse expression, raw column kept).
     val csv = "d,n,s\n2024-01-31,1.5,a\nnot-a-date,2.5,b\n,xx,c\n" +
       "2024-01-31,7,\n9999-99,0,d\n"
-    val res = Resource("t", write("fused.csv", csv),
-      TableSchema(fields = Seq(Field("d", "date"), Field("n", "number"),
-        Field("s", "string")), missingValues = Seq("")))
-    val raw = Validate.readResource(spark, res)
-    val (typedL, errsL, failedL) = Validate.parseTable(raw, res.schema)
-    val buf = scala.collection.mutable.ListBuffer[
-      org.apache.spark.sql.DataFrame]()
-    val (typedF, errsF, failedF) = Validate.parseTable(raw, res.schema,
-      Set.empty, Validate.MaxDictValues, Some(buf))
-    try {
-      assert(failedL === failedF)
-      assert(errsL.map(e => (e.code, e.field, e.violations,
-        e.sampleValues)) ===
-        errsF.map(e => (e.code, e.field, e.violations, e.sampleValues)))
-      assert(typedL.schema === typedF.schema)
-      val rows = (df: org.apache.spark.sql.DataFrame) =>
-        df.collect().map(_.toSeq.map(String.valueOf).mkString("|"))
-          .toSeq.sorted
-      assert(rows(typedL) === rows(typedF))
-      assert(buf.size === 1, "fused mode must register its one cache")
-    } finally buf.foreach(_.unpersist(blocking = false))
+    def schema(d: Field) = TableSchema(fields = Seq(d, Field("n", "number"),
+      Field("s", "string")), missingValues = Seq(""))
+    val plain = schema(Field("d", "date"))
+    val inputs = Seq(
+      ("row-parsed", plain, Set.empty[String], Validate.MaxDictValues),
+      ("dictionary", plain, Set("d"), Validate.MaxDictValues),
+      ("dictionary fallback", plain, Set("n"), 2L),
+      ("schema-error", schema(Field("d", "date", format = "%G-%V-%u")),
+        Set.empty[String], Validate.MaxDictValues))
+    val path = write("fused.csv", csv)
+    for ((label, sch, dictFields, cap) <- inputs) {
+      val raw = Validate.readResource(spark, Resource("t", path, sch))
+      val (typedL, errsL, failedL) =
+        Validate.parseTable(raw, sch, dictFields, cap)
+      val buf = scala.collection.mutable.ListBuffer[
+        org.apache.spark.sql.DataFrame]()
+      val (typedF, errsF, failedF) =
+        Validate.parseTable(raw, sch, dictFields, cap, Some(buf))
+      try {
+        if (label == "schema-error")
+          assert(errsF.exists(e => e.code == ErrorCodes.SchemaError &&
+            e.field == "d"), errsF.mkString("; "))
+        assert(failedL === failedF, label)
+        assert(errsL.map(e => (e.code, e.field, e.violations,
+          e.sampleValues)) ===
+          errsF.map(e => (e.code, e.field, e.violations, e.sampleValues)),
+          label)
+        assert(typedL.schema === typedF.schema, label)
+        val rows = (df: org.apache.spark.sql.DataFrame) =>
+          df.collect().map(_.toSeq.map(String.valueOf).mkString("|"))
+            .toSeq.sorted
+        assert(rows(typedL) === rows(typedF), label)
+        assert(buf.size === 1, s"$label: fused mode must register its one cache")
+      } finally buf.foreach(_.unpersist(blocking = false))
+    }
+  }
+
+  test("fused parse returns with its registered frame fully cached") {
+    // validateCsv's concurrent checks rely on this: no cold cache for
+    // them to race on. Also when no field is row-parsed (every field a
+    // schema-error), where the aggregate has no per-field columns.
+    val path = write("warm.csv",
+      "a,b\n1,x\n2,y\n3,z\n4,w\nbad,v\n6,u\n")
+    val inputs = Seq(
+      "normal" -> TableSchema(Seq(Field("a", "integer"), Field("b"))),
+      "all schema-error" -> TableSchema(Seq(
+        Field("a", "date", format = "%G-%V-%u"),
+        Field("b", "date", format = "%G-%V-%u"))))
+    for ((label, sch) <- inputs) {
+      val raw = Validate.readResource(spark, Resource("t", path, sch))
+        .repartition(3)
+      val buf = scala.collection.mutable.ListBuffer[
+        org.apache.spark.sql.DataFrame]()
+      val (typed, _, _) = Validate.parseTable(raw, sch, Set.empty,
+        Validate.MaxDictValues, Some(buf))
+      try {
+        assert(buf.size === 1, label)
+        val rdd = typed.queryExecution.withCachedData
+          .collectFirst { case r: InMemoryRelation => r }
+          .getOrElse(fail(s"$label: typed frame reads no cache"))
+          .cacheBuilder.cachedColumnBuffers
+        val cached = spark.sparkContext.getRDDStorageInfo
+          .find(_.id == rdd.id).map(_.numCachedPartitions).getOrElse(0)
+        assert(cached === 3 && rdd.getNumPartitions === 3, label)
+      } finally buf.foreach(_.unpersist(blocking = false))
+    }
+  }
+
+  test("validateCsv releases its caches when it fails mid-package") {
+    // the first resource's fused frame is persisted and built before
+    // the second resource's read throws (its file does not exist)
+    val good = Resource("good", write("leak_good.csv", "a\n1\n2\n"),
+      TableSchema(Seq(Field("a", "integer"))))
+    val missing = Resource("missing", dir.resolve("absent.csv").toString,
+      TableSchema(Seq(Field("a", "integer"))))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](
+      Validate.validateCsv(spark, Package("p", Seq(good, missing))))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
   }
 
   test("dict parse falls back to row parse past the cardinality cap") {

@@ -32,18 +32,19 @@ def table(d, n):
     gc = d.get("gc_ms", {})
     jobs = d.get("jobs", {})
     rows = sorted(qs.items(), key=lambda kv: -kv[1])
-    total = sum(v for v in qs.values() if v >= 0)
-    if total <= 0:
+    if not any(v >= 0 for v in qs.values()):
         print(f"no successful rows in artifact ({len(qs)} entries, "
               f"all walls < 0)")
         return
+    total = sum(v for v in qs.values() if v >= 0)
     print(f"total {total:.1f}s over {len(qs)} entries")
     cum = 0.0
     print(f"{'query':44s} {'wall':>7s} {'cum%':>5s} {'task_ms':>8s} "
           f"{'gc_ms':>6s} {'jobs':>5s}")
     for k, v in rows[:n]:
         cum += max(v, 0)
-        print(f"{k:44s} {v:7.2f} {100*cum/total:5.1f} "
+        share = 100 * cum / total if total > 0 else 0.0
+        print(f"{k:44s} {v:7.2f} {share:5.1f} "
               f"{med(task.get(k, [])):8d} {med(gc.get(k, [])):6d} "
               f"{med(jobs.get(k, [])):5d}")
     print("\nfamily rollup (sum of medians):")
