@@ -861,16 +861,11 @@ object SparkEntry {
       .orderBy("new_id", "corpus_id")
   }
 
-  /** Recursive delete of a scratch path (stream dirs, checkpoints,
-    * sinks) — per-invocation reset so bench reps stay independent.
+  /** Per-invocation reset of a scratch path (stream dirs, checkpoints,
+    * sinks) so bench reps stay independent.
     */
-  private def wipeDir(p: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rec)
-      f.delete(); ()
-    }
-    rec(new java.io.File(p))
-  }
+  private def wipeDir(p: String): Unit =
+    graft.sources.Scratch.deleteRecursively(new java.io.File(p))
 
   /** RESTART-SAFE near-dup ingestion (round-13 directive #5 —
     * x_stream_unique_resume's two-run arc for the MinHash index): the

@@ -113,12 +113,6 @@ object BucketedManifest {
       (l.substring(0, i), l.substring(i + 1).toInt)
     }
 
-  private def deleteTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      .foreach(deleteTree)
-    f.delete(): Unit
-  }
-
   /** The live version number (0 if the family is uninitialized). */
   def currentVersion(spark: SparkSession, family: String): Int =
     VersionedFlat.currentVersion(metaDir(spark, family))
@@ -274,7 +268,7 @@ object BucketedManifest {
           "store owns that partition column")
       spark.sql(s"DROP TABLE IF EXISTS `$table`")
       val loc = new java.io.File(warehouse(spark), table.toLowerCase)
-      deleteTree(loc)
+      Scratch.deleteRecursively(loc)
       loc.mkdirs(): Unit
       spark.sql(
         s"""CREATE TABLE `$table` (${df.schema.toDDL}, gen INT)
@@ -297,7 +291,7 @@ object BucketedManifest {
     // Spark write too, which is where an append spends most of its
     // wall time. Pre-protocol debris under OUR claimed number is
     // reclaimed first (we hold the claim).
-    if (genDir.exists()) deleteTree(genDir)
+    if (genDir.exists()) Scratch.deleteRecursively(genDir)
     genDir.mkdirs(): Unit
     val staging = committer.stagingDir(genDir)
     val bucketCol = "__graft_bucket"
@@ -339,7 +333,7 @@ object BucketedManifest {
           case _ => ()
         }
       }
-    deleteTree(staging)
+    Scratch.deleteRecursively(staging)
     spark.sql(s"ALTER TABLE `$table` ADD IF NOT EXISTS PARTITION " +
       s"(gen=$gen)")
     spark.catalog.refreshTable(table)
@@ -363,7 +357,7 @@ object BucketedManifest {
       members: Seq[(String, DataFrame, Seq[String], Int)]): Unit = {
     require(members.nonEmpty, "a family needs at least one member")
     val meta = metaDir(spark, family)
-    deleteTree(new java.io.File(meta))
+    Scratch.deleteRecursively(new java.io.File(meta))
     new java.io.File(meta).mkdirs()
     members.foreach { case (t, _, _, _) =>
       spark.sql(s"DROP TABLE IF EXISTS `$t`") }
@@ -567,9 +561,10 @@ object BucketedManifest {
           Some(new java.io.File(m.location))
         else None
       spark.sql(s"DROP TABLE IF EXISTS `$table`")
-      loc.foreach(deleteTree)
+      loc.foreach(Scratch.deleteRecursively)
     }
-    deleteTree(new java.io.File(warehouse(spark), table.toLowerCase))
+    Scratch.deleteRecursively(
+      new java.io.File(warehouse(spark), table.toLowerCase))
   }
 
   /** The generation numbers version `v` (0 = current) references for
@@ -785,7 +780,7 @@ object BucketedManifest {
                   d.lastModified() <= cutoff) {
                 spark.sql(s"ALTER TABLE `$t` DROP IF EXISTS " +
                   s"PARTITION (gen=$g)")
-                deleteTree(d)
+                Scratch.deleteRecursively(d)
               } else survivingGens += g
             // a crashed writer's staging (dot-prefixed, beside the
             // gen dirs — both committers stage here) — same age gate
@@ -793,7 +788,7 @@ object BucketedManifest {
             // and while it survives it also keeps its generation
             // number's claim alive (see the claim rule below)
             case stagingRe(gs) if d.isDirectory =>
-              if (d.lastModified() <= cutoff) deleteTree(d)
+              if (d.lastModified() <= cutoff) Scratch.deleteRecursively(d)
               else survivingGens += gs.toInt
             case _ => ()
           }
@@ -838,7 +833,7 @@ object BucketedManifest {
             !survivingGens.contains(d.toInt)
           case _ => false
         }))
-      .foreach(deleteTree)
+      .foreach(Scratch.deleteRecursively)
   }
 
   /** Re-register a member table in a session whose catalog has no
@@ -909,9 +904,10 @@ object BucketedManifest {
           else None
         }
       spark.sql(s"DROP TABLE IF EXISTS `$t`")
-      loc.foreach(deleteTree)
-      deleteTree(new java.io.File(warehouse(spark), t.toLowerCase))
+      loc.foreach(Scratch.deleteRecursively)
+      Scratch.deleteRecursively(
+        new java.io.File(warehouse(spark), t.toLowerCase))
     }
-    deleteTree(new java.io.File(metaDir(spark, family)))
+    Scratch.deleteRecursively(new java.io.File(metaDir(spark, family)))
   }
 }

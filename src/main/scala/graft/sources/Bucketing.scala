@@ -123,7 +123,7 @@ object Bucketing {
       Seq(tmp, old).foreach { n =>
         val dir = new java.io.File(parent, n.toLowerCase)
         if (dir.exists() && !spark.catalog.tableExists(n))
-          deleteDir(dir)
+          Scratch.deleteRecursively(dir)
       }
     }
     // Read the table's files BY PATH, not via the catalog: a catalog
@@ -153,12 +153,6 @@ object Bucketing {
     spark.sql(s"ALTER TABLE `$table` RENAME TO `$old`")
     spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
     spark.sql(s"DROP TABLE `$old`")
-  }
-
-  private def deleteDir(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      .foreach(deleteDir)
-    f.delete(): Unit
   }
 
   /** SIZE-TIERED compaction (round-13 directive #6):
@@ -237,7 +231,7 @@ object Bucketing {
         val visible = new java.io.File(dir,
           f"part-00000-graftcompact$tag%s_$bucket%05d.c000.snappy.parquet")
         java.nio.file.Files.move(produced.toPath, hidden.toPath)
-        deleteDir(scratch)
+        Scratch.deleteRecursively(scratch)
         // 2. manifest BEFORE any delete (the recovery pivot)
         val manifest = new java.io.File(dir, s".graftcompact-$tag.manifest")
         java.nio.file.Files.write(manifest.toPath,

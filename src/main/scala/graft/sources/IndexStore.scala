@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, Similarity}
+import graft.ext.{Dedup, Multimodal, Similarity}
 
 /** Write-once / read-many index artifacts (round-7 directive #3).
   *
@@ -31,49 +31,326 @@ import graft.ext.{Dedup, Similarity}
   * IVF frames are read probe-restricted (nProbe/nLists of the lists).
   * Doubles round-trip parquet bit-identically, so a served query is
   * hash-equal to the in-memory plan, not just approximately equal.
+  *
+  * The bucketed families (MinHash dedup and its multi-index pipeline
+  * extension, substring grams, edit distance, pHash, key) are each
+  * described once as a [[Family]] value, and every lifecycle step is
+  * written once per store: the plain store ([[Bucketing]] catalog
+  * tables) and the versioned store ([[BucketedManifest]] gen
+  * manifests). The public methods below name a family and a store.
   */
 object IndexStore {
 
-  /** One-row (num_hashes, bands, k) parameter record. A batch served
-    * with DIFFERENT banding parameters than the index was built with
-    * never collides with the corpus buckets and silently under-reports
-    * duplicates — so the artifact records its parameters and every
-    * read path requires a match (fail loudly, not quietly empty).
+  // ------------------------------------------ bucketed index families
+  /** One member table of a bucketed family: its name suffix, its
+    * bucket keys (the serve join's key), and its rows, derived from
+    * the input frame and the family's shared intermediate frame. An
+    * `lsm` member holds `(key…, n)` count rows that compaction
+    * re-aggregates ([[keyMerge]]).
     */
-  private def metaFrame(spark: SparkSession, numHashes: Int, bands: Int,
-      k: Int): DataFrame =
-    spark.range(1).select(lit(numHashes).as("num_hashes"),
-      lit(bands).as("bands"), lit(k).as("k"))
+  private final case class Member[P](suffix: String,
+      keys: P => Seq[String], rows: (P, DataFrame, DataFrame) => DataFrame,
+      lsm: Boolean = false)
 
-  private def checkMeta(meta: DataFrame, where: String, numHashes: Int,
-      bands: Int, k: Int): Unit = {
-    val r = meta.select(col("num_hashes"), col("bands"), col("k")).head
-    require(
-      r.getInt(0) == numHashes && r.getInt(1) == bands && r.getInt(2) == k,
-      s"dedup index at $where was built with (numHashes=${r.getInt(0)}, " +
-        s"bands=${r.getInt(1)}, k=${r.getInt(2)}) but is being served " +
-        s"with (numHashes=$numHashes, bands=$bands, k=$k) — mismatched " +
-        "banding never collides with the corpus buckets and silently " +
-        "under-reports duplicates")
+  /** A bucketed index family. Its build parameters `P` ride along as
+    * the one-row `_meta` record every read and append checks first:
+    * serving or admitting under different parameters than the index
+    * was built with would silently break what `why` names, so it fails
+    * loudly instead. `shared` is the intermediate frame the members
+    * derive from (cached while they are written when there is more
+    * than one member); `idFrom` is the member whose `id` column types
+    * the empty tombstone frame of the id-tombstoned families.
+    */
+  private final case class Family[P](kind: String, why: String,
+      meta: P => Seq[(String, Any)], members: Seq[Member[P]],
+      shared: P => DataFrame => DataFrame = (_: P) => identity[DataFrame] _,
+      idFrom: String = "")
+
+  /** MinHash banding parameters: (numHashes, bands, k). */
+  private type Banding = (Int, Int, Int)
+
+  /** MinHash dedup over `(id, toks)`: `_sh` (id, sh) on id — the verify
+    * join's key — and `_bands` (id, band, bucket) on (band, bucket) —
+    * the candidate join's key.
+    */
+  private val DedupFamily = Family[Banding]("dedup",
+    "mismatched banding never collides with the corpus buckets and " +
+      "silently under-reports duplicates",
+    { case (numHashes, bands, k) =>
+      Seq("num_hashes" -> numHashes, "bands" -> bands, "k" -> k) },
+    Seq(Member("_sh", _ => Seq("id"), (_, _, sh) => sh),
+      Member("_bands", _ => Seq("band", "bucket"),
+        { case ((numHashes, bands, _), _, sh) =>
+          Dedup.bandAssignmentsFromShingles(sh, numHashes, bands) })),
+    shared = { case (_, _, k) => toks => toks.select(col("id"),
+      Dedup.shingleHashesFromTokens(col("toks"), k).as("sh")) },
+    idFrom = "_sh")
+
+  /** The key-uniqueness member: one `(key…, n)` count row per distinct
+    * non-null key tuple of the input. Nulls are exempt, matching
+    * [[graft.check.Checks.unique]] / SQL convention: a null key tuple
+    * is a `required` problem, not a uniqueness one.
+    */
+  private def keyMember[P](keys: P => Seq[String]): Member[P] =
+    Member("_keys", keys, (p, in, _) => keyCounts(in, keys(p)), lsm = true)
+
+  private def keyCounts(df: DataFrame, keys: Seq[String]): DataFrame =
+    df.filter(keys.map(df(_).isNotNull).reduce(_ && _))
+      .groupBy(keys.map(df(_)): _*)
+      .agg(count(lit(1)).as("n"))
+
+  /** The LSM merge of a key member: split rows re-aggregate per key and
+    * keys whose total reached zero (collapsed tombstones) drop. Serve
+    * paths already sum per key, so a merge never changes an answer.
+    */
+  private val keyMerge: DataFrame => DataFrame = df => {
+    val keys = df.columns.filter(_ != "n").toSeq
+    df.groupBy(keys.map(df(_)): _*).agg(sum(col("n")).as("n"))
+      .filter(col("n") =!= 0)
   }
 
+  /** The MinHash halves plus a key member on `id` (document identity)
+    * in one family, with the dedup `_meta` record.
+    */
+  private val PipelineFamily = DedupFamily.copy(members =
+    DedupFamily.members :+ keyMember[Banding](_ => Seq("id")))
+
+  private val KeyFamily = Family[Seq[String]]("key",
+    "a different key set silently reports zero collisions",
+    keys => Seq("keys" -> keys.mkString(",")),
+    Seq(keyMember[Seq[String]](keys => keys)))
+
+  /** Substring grams over `(id, toks)`: `(id, pos, h)` rows on `h`, the
+    * key both serve-time joins use.
+    */
+  private val SubstringFamily = Family[Int]("substring",
+    "mismatched gram sizes never collide and silently report zero " +
+      "overlap",
+    k => Seq("k" -> k),
+    Seq(Member("_grams", _ => Seq("h"),
+      (k, toks, _) => Dedup.substringGrams(toks, "id", col("toks"), k))),
+    idFrom = "_grams")
+
+  /** PassJoin edit distance over `(id, s)` strings (nulls dropped):
+    * `_segs` (id, len, h) on `h` — the single-column candidate join,
+    * length and slot folded into the hash — `_str` (id, s) on `id` —
+    * the verify fetch — and `_bylen` (len, id) on `len` — the
+    * sub-(d+1)-char directory.
+    */
+  private val EditFamily = Family[Int]("edit",
+    "differently-cut segments never collide and silently report no " +
+      "matches",
+    d => Seq("d" -> d),
+    Seq(Member("_segs", _ => Seq("h"),
+        (d, _, c) => Dedup.editSegmentFrame(c, d)),
+      Member("_str", _ => Seq("id"),
+        (_, _, c) => c.select(col("__id").as("id"), col("__s").as("s"))),
+      Member("_bylen", _ => Seq("len"),
+        (_, _, c) => c.select(col("__l").as("len"), col("__id").as("id")))),
+    shared = _ => in => in.select(col("id").as("__id"), col("s").as("__s"))
+      .filter(col("__s").isNotNull)
+      .withColumn("__l", length(col("__s"))),
+    idFrom = "_str")
+
+  private def editInput(df: DataFrame, idCol: String,
+      strCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(strCol).as("s"))
+
+  /** Perceptual hashes `(id, dhash)` banded on (band, key) — exactly the
+    * serve join's key.
+    */
+  private val PhashFamily = Family[Int]("phash",
+    "mismatched banding never collides and silently reports no " +
+      "near-duplicates",
+    bands => Seq("bands" -> bands),
+    Seq(Member("_bands", _ => Seq("band", "key"),
+      (bands, hashes, _) => Multimodal.phashBands(hashes, bands))),
+    idFrom = "_bands")
+
+  private def metaFrame(spark: SparkSession,
+      meta: Seq[(String, Any)]): DataFrame =
+    spark.range(1).select(meta.map { case (c, v) => lit(v).as(c) }: _*)
+
+  private def writeMeta(spark: SparkSession, table: String,
+      meta: Seq[(String, Any)]): Unit =
+    metaFrame(spark, meta).write.mode("overwrite").format("parquet")
+      .saveAsTable(s"${table}_meta")
+
+  private def checkMeta[P](built: DataFrame, where: String, f: Family[P],
+      p: P): Unit = {
+    val want = f.meta(p)
+    val got = built.select(want.map(c => col(c._1)): _*).head.toSeq
+    def show(vs: Seq[Any]): String =
+      want.map(_._1).zip(vs).map { case (c, v) => s"$c=$v" }.mkString(", ")
+    require(got == want.map(_._2),
+      s"${f.kind} index at $where was built with (${show(got)}) but is " +
+        s"being served with (${show(want.map(_._2))}) — ${f.why}")
+  }
+
+  /** Member table name, rows and bucket keys, as a store writes them. */
+  private type Rows = Seq[(String, DataFrame, Seq[String])]
+
+  /** Derive every member's rows from `in` and hand them to `use`; the
+    * shared frame is cached meanwhile when more than one member reads
+    * it (one input scan for the whole family).
+    */
+  private def withRows[P, R](f: Family[P], p: P, in: DataFrame,
+      table: String)(use: Rows => R): R = {
+    val multi = f.members.size > 1
+    val s = f.shared(p)(in)
+    if (multi) s.cache()
+    try use(f.members.map(m => (table + m.suffix, m.rows(p, in, s),
+      m.keys(p))))
+    finally { if (multi) s.unpersist(blocking = false); () }
+  }
+
+  /** The two places a family's members can live. */
+  private sealed trait Store {
+    def create(spark: SparkSession, table: String, rows: Rows,
+        numBuckets: Int): Unit
+
+    /** The committed version (0 on the unversioned store). */
+    def append(spark: SparkSession, table: String, rows: Rows): Int
+  }
+
+  /** The plain store: one bucketed catalog table per member. Appends
+    * land one file per non-empty bucket beside the standing files (the
+    * bucket count is read from the catalog; Spark rejects a spec
+    * mismatch), compaction rewrites in place, and deleted ids wait in a
+    * sibling `_dead` table until a purge.
+    */
+  private object Plain extends Store {
+    def create(spark: SparkSession, table: String, rows: Rows,
+        numBuckets: Int): Unit =
+      rows.foreach { case (t, df, keys) =>
+        Bucketing.writeBucketed(df, t, keys, numBuckets) }
+
+    def append(spark: SparkSession, table: String, rows: Rows): Int = {
+      rows.foreach { case (t, df, keys) =>
+        Bucketing.appendBucketed(df, t, keys,
+          Bucketing.numBucketsOf(spark, t)) }
+      0
+    }
+
+    def read(spark: SparkSession, member: String): DataFrame =
+      Bucketing.readBucketed(spark, member)
+
+    def compact(spark: SparkSession, table: String, f: Family[_]): Unit =
+      f.members.foreach(m => Bucketing.compactBucketed(spark,
+        table + m.suffix, if (m.lsm) keyMerge else identity))
+
+    def compactTiered(spark: SparkSession, table: String, f: Family[_],
+        minFilesPerBucket: Int): Unit =
+      f.members.foreach(m => Bucketing.compactBucketedTiered(spark,
+        table + m.suffix, minFilesPerBucket))
+
+    /** Rewrite every member without the tombstoned ids (the compaction
+      * rewrite with an anti-join merge), then clear the tombstones.
+      */
+    def purge(spark: SparkSession, table: String, f: Family[_]): Unit = {
+      val dead = readDeadIds(spark, table, table + f.idFrom)
+      f.members.foreach(m => Bucketing.compactBucketed(spark,
+        table + m.suffix, _.join(dead, Seq("id"), "left_anti")))
+      spark.sql(s"DROP TABLE IF EXISTS `${table}_dead`"): Unit
+    }
+  }
+
+  /** The versioned store: the members of one [[BucketedManifest]]
+    * family, so every append and compaction is one atomic manifest
+    * commit across all members and every commit stays readable as of
+    * its version until vacuumed.
+    */
+  private object Versioned extends Store {
+    def create(spark: SparkSession, table: String, rows: Rows,
+        numBuckets: Int): Unit =
+      BucketedManifest.create(spark, table,
+        rows.map { case (t, df, keys) => (t, df, keys, numBuckets) })
+
+    def append(spark: SparkSession, table: String, rows: Rows): Int =
+      BucketedManifest.append(spark, table,
+        rows.map { case (t, df, _) => (t, df) })
+
+    def read(spark: SparkSession, table: String, member: String)
+        : DataFrame =
+      BucketedManifest.read(spark, table, member)
+
+    def readAsOf(spark: SparkSession, table: String, member: String,
+        v: Int): DataFrame =
+      BucketedManifest.readVersion(spark, table, member, v)
+
+    def snapshot(spark: SparkSession, table: String): Int =
+      BucketedManifest.currentVersion(spark, table)
+
+    def compact(spark: SparkSession, table: String, f: Family[_]): Unit =
+      BucketedManifest.compact(spark, table, merges(table, f))
+
+    def compactTiered(spark: SparkSession, table: String, f: Family[_],
+        maxGens: Int): Boolean =
+      BucketedManifest.compactTiered(spark, table, maxGens,
+        merges(table, f))
+
+    def addMember(spark: SparkSession, table: String, member: String,
+        rows: DataFrame, keys: Seq[String], numBuckets: Int): Int =
+      BucketedManifest.addMember(spark, table, member, rows, keys,
+        numBuckets)
+
+    private def merges(table: String, f: Family[_])
+        : Map[String, DataFrame => DataFrame] =
+      f.members.filter(_.lsm)
+        .map(m => (table + m.suffix).toLowerCase -> keyMerge).toMap
+  }
+
+  private def build[P](store: Store, f: Family[P], p: P, in: DataFrame,
+      table: String, numBuckets: Int): Unit = {
+    val spark = in.sparkSession
+    Scratch.sweepOnce(spark) // age out dead-pid scratch
+    withRows(f, p, in, table)(store.create(spark, table, _, numBuckets))
+    writeMeta(spark, table, f.meta(p))
+  }
+
+  private def admit[P](store: Store, f: Family[P], p: P, delta: DataFrame,
+      table: String): Int = {
+    val spark = delta.sparkSession
+    checkMeta(spark.table(s"${table}_meta"), table, f, p)
+    withRows(f, p, delta, table)(store.append(spark, table, _))
+  }
+
+  private def serve[P](f: Family[P], p: P, spark: SparkSession,
+      table: String)(read: String => DataFrame): Seq[DataFrame] = {
+    checkMeta(spark.table(s"${table}_meta"), table, f, p)
+    f.members.map(m => read(table + m.suffix))
+  }
+
+  /** Key deletion as LSM tombstones: the deleted rows' per-key counts
+    * are appended NEGATED, so a fully-deleted key sums to zero.
+    */
+  private def deleteKeys(store: Store, deleted: DataFrame, table: String,
+      keys: Seq[String]): Unit = {
+    val spark = deleted.sparkSession
+    checkMeta(spark.table(s"${table}_meta"), table, KeyFamily, keys)
+    store.append(spark, table, Seq((s"${table}_keys",
+      keyCounts(deleted, keys).withColumn("n", -col("n")), keys))): Unit
+  }
+
+  private def pair(dfs: Seq[DataFrame]): (DataFrame, DataFrame) =
+    (dfs(0), dfs(1))
+
+  // ------------------------------------------------- MinHash family
   /** Build + persist the near-dup corpus index from a pre-tokenized
-    * `(id, toks)` frame. One corpus scan: the shingle frame is cached,
-    * written, and reused for the band build. The banding parameters
-    * ride along as `meta.parquet`; [[readDedupIndex]] validates them.
+    * `(id, toks)` frame as plain parquet under `dir`. One corpus scan:
+    * the shingle frame is cached, written, and reused for the band
+    * build. The banding parameters ride along as `meta.parquet`;
+    * [[readDedupIndex]] validates them.
     */
   def writeDedupIndex(corpusToks: DataFrame, dir: String,
       numHashes: Int = 32, bands: Int = 16, k: Int = 3): Unit = {
-    Scratch.sweepOnce(corpusToks.sparkSession) // age out dead-pid scratch
-    val sh = corpusToks.select(col("id"),
-      Dedup.shingleHashesFromTokens(col("toks"), k).as("sh")).cache()
-    try {
-      sh.write.mode("overwrite").parquet(s"$dir/shingles.parquet")
-      Dedup.bandAssignmentsFromShingles(sh, numHashes, bands)
-        .write.mode("overwrite").parquet(s"$dir/bands.parquet")
-      metaFrame(sh.sparkSession, numHashes, bands, k)
-        .write.mode("overwrite").parquet(s"$dir/meta.parquet")
-    } finally sh.unpersist(blocking = false)
+    val p = (numHashes, bands, k)
+    Scratch.sweepOnce(corpusToks.sparkSession)
+    withRows(DedupFamily, p, corpusToks, dir)(_.zip(Seq("shingles", "bands"))
+      .foreach { case ((_, df, _), leaf) =>
+        df.write.mode("overwrite").parquet(s"$dir/$leaf.parquet") })
+    metaFrame(corpusToks.sparkSession, DedupFamily.meta(p))
+      .write.mode("overwrite").parquet(s"$dir/meta.parquet")
   }
 
   /** Re-read the two dedup artifacts: (shingles, bands). The serve-time
@@ -82,8 +359,8 @@ object IndexStore {
   def readDedupIndex(spark: SparkSession, dir: String,
       numHashes: Int = 32, bands: Int = 16, k: Int = 3)
       : (DataFrame, DataFrame) = {
-    checkMeta(spark.read.parquet(s"$dir/meta.parquet"), dir,
-      numHashes, bands, k)
+    checkMeta(spark.read.parquet(s"$dir/meta.parquet"), dir, DedupFamily,
+      (numHashes, bands, k))
     (spark.read.parquet(s"$dir/shingles.parquet"),
       spark.read.parquet(s"$dir/bands.parquet"))
   }
@@ -99,19 +376,9 @@ object IndexStore {
     */
   def writeDedupIndexBucketed(corpusToks: DataFrame, table: String,
       numBuckets: Int, numHashes: Int = 32, bands: Int = 16,
-      k: Int = 3): Unit = {
-    val sh = corpusToks.select(col("id"),
-      Dedup.shingleHashesFromTokens(col("toks"), k).as("sh")).cache()
-    try {
-      Bucketing.writeBucketed(sh, s"${table}_sh", Seq("id"), numBuckets)
-      Bucketing.writeBucketed(
-        Dedup.bandAssignmentsFromShingles(sh, numHashes, bands),
-        s"${table}_bands", Seq("band", "bucket"), numBuckets)
-      metaFrame(sh.sparkSession, numHashes, bands, k)
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${table}_meta")
-    } finally sh.unpersist(blocking = false)
-  }
+      k: Int = 3): Unit =
+    build(Plain, DedupFamily, (numHashes, bands, k), corpusToks, table,
+      numBuckets)
 
   /** Re-read the bucketed dedup index: (shingles, bands), both with
     * catalog bucket metadata so the per-batch serve join reads the
@@ -120,11 +387,9 @@ object IndexStore {
     */
   def readDedupIndexBucketed(spark: SparkSession, table: String,
       numHashes: Int = 32, bands: Int = 16, k: Int = 3)
-      : (DataFrame, DataFrame) = {
-    checkMeta(spark.table(s"${table}_meta"), table, numHashes, bands, k)
-    (Bucketing.readBucketed(spark, s"${table}_sh"),
-      Bucketing.readBucketed(spark, s"${table}_bands"))
-  }
+      : (DataFrame, DataFrame) =
+    pair(serve(DedupFamily, (numHashes, bands, k), spark, table)(
+      Plain.read(spark, _)))
 
   /** Append a DELTA of new `(id, toks)` documents INTO the standing
     * bucketed dedup index — the maintenance arc that closes the
@@ -152,90 +417,8 @@ object IndexStore {
     * the union-corpus answer in DuckDB and the hash-match proves it.
     */
   def appendDedupIndexBucketed(deltaToks: DataFrame, table: String,
-      numHashes: Int = 32, bands: Int = 16, k: Int = 3): Unit = {
-    val spark = deltaToks.sparkSession
-    checkMeta(spark.table(s"${table}_meta"), table, numHashes, bands, k)
-    val sh = deltaToks.select(col("id"),
-      Dedup.shingleHashesFromTokens(col("toks"), k).as("sh")).cache()
-    try {
-      Bucketing.appendBucketed(sh, s"${table}_sh", Seq("id"),
-        Bucketing.numBucketsOf(spark, s"${table}_sh"))
-      Bucketing.appendBucketed(
-        Dedup.bandAssignmentsFromShingles(sh, numHashes, bands),
-        s"${table}_bands", Seq("band", "bucket"),
-        Bucketing.numBucketsOf(spark, s"${table}_bands"))
-    } finally sh.unpersist(blocking = false)
-  }
-
-  /** Build + persist the SUBSTRING-DEDUP gram index from a
-    * pre-tokenized `(id, toks)` frame: `(id, pos, h)` k-gram rows
-    * ([[Dedup.substringGrams]]) saved as a bucketed table on `h` — the
-    * key BOTH serve-time joins (anchor candidates and diagonal
-    * extension) use, so every future batch reads the corpus side of
-    * both joins in place (asserted in BucketingSpec). The gram size
-    * `k` rides along as `_meta`: serving with a different k than the
-    * index was built with never matches a single gram and silently
-    * reports zero overlap — fail loudly instead.
-    */
-  def writeSubstringIndexBucketed(corpusToks: DataFrame, table: String,
-      numBuckets: Int, k: Int): Unit = {
-    Bucketing.writeBucketed(
-      Dedup.substringGrams(corpusToks, "id", col("toks"), k),
-      s"${table}_grams", Seq("h"), numBuckets)
-    corpusToks.sparkSession.range(1).select(lit(k).as("k"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_meta")
-  }
-
-  /** Re-read the bucketed substring gram index; the serve-time `k`
-    * must match the build-time record.
-    */
-  def readSubstringIndexBucketed(spark: SparkSession, table: String,
-      k: Int): DataFrame = {
-    checkSubstringMeta(spark, table, k)
-    Bucketing.readBucketed(spark, s"${table}_grams")
-  }
-
-  private def checkSubstringMeta(spark: SparkSession, table: String,
-      k: Int): Unit = {
-    val built = spark.table(s"${table}_meta").select(col("k")).head.getInt(0)
-    require(built == k,
-      s"substring index at $table was built with k=$built but is being " +
-        s"served with k=$k — mismatched gram sizes never collide and " +
-        "silently report zero overlap")
-  }
-
-  /** Append a DELTA of new `(id, toks)` documents INTO the standing
-    * bucketed substring gram index — the LSM maintenance arc the
-    * MinHash index already has ([[appendDedupIndexBucketed]]): without
-    * it a growing 100 TB corpus must re-gram-hash the FULL corpus per
-    * ingest batch just to admit the batch into future screens.
-    *
-    * Only the delta is gram-hashed and shuffled into the table's
-    * bucket layout (bucket count read from the catalog; a spec
-    * mismatch is rejected by Spark itself, so an append can never
-    * silently break the serve join's exchange-free contract —
-    * re-asserted post-append in BucketingSpec). Standing files are
-    * never rewritten; each append adds one file per non-empty bucket,
-    * compacted periodically like any bucketed fact table.
-    *
-    * The gram size is validated against the build-time `_meta` record
-    * FIRST: appending k'-grams into a k-gram index would silently
-    * split every cross-boundary run. [[graft.ext.Dedup.substringGrams]]
-    * is a pure per-document function, so append(build(base), delta)
-    * is ROW-IDENTICAL to build(base ∪ delta) — the
-    * x_dedup_substring_append oracle computes the union-corpus answer
-    * from scratch in DuckDB and the hash-match proves it.
-    */
-  def appendSubstringIndexBucketed(deltaToks: DataFrame, table: String,
-      k: Int): Unit = {
-    val spark = deltaToks.sparkSession
-    checkSubstringMeta(spark, table, k)
-    Bucketing.appendBucketed(
-      Dedup.substringGrams(deltaToks, "id", col("toks"), k),
-      s"${table}_grams", Seq("h"),
-      Bucketing.numBucketsOf(spark, s"${table}_grams"))
-  }
+      numHashes: Int = 32, bands: Int = 16, k: Int = 3): Unit =
+    admit(Plain, DedupFamily, (numHashes, bands, k), deltaToks, table): Unit
 
   /** Tombstone DELETION for the MinHash index: deleted document ids
     * land in a sibling `_dead` table — standing index files untouched,
@@ -268,7 +451,8 @@ object IndexStore {
   /** The standing tombstone set — empty frame if none were deleted;
     * the empty fallback's id TYPE comes from `idTypeFrom`'s own id
     * column, never a hardcoded type (a mismatched empty frame would
-    * silently type-coerce the purge anti-join).
+    * silently type-coerce the purge anti-join and the serve-side
+    * exclusion: string-vs-long casts can null out and un-exclude).
     */
   def readDeadIds(spark: SparkSession, table: String,
       idTypeFrom: String): DataFrame =
@@ -276,29 +460,17 @@ object IndexStore {
       spark.table(s"${table}_dead")
     else spark.table(idTypeFrom).select(col("id")).limit(0)
 
-  /** The current tombstone set — empty frame if none were deleted.
-    * The empty fallback derives its `id` TYPE from the index's own
-    * `_sh` table (round-13, ADVICE): a hardcoded LongType frame would
-    * silently type-coerce the purge anti-join and the serve-side
-    * exclusion for non-long corpus ids (string-vs-long casts can null
-    * out and un-exclude).
-    */
+  /** The MinHash index's standing tombstone set (id type from `_sh`). */
   def readDedupDeadIds(spark: SparkSession, table: String): DataFrame =
-    readDeadIds(spark, table, s"${table}_sh")
+    readDeadIds(spark, table, table + DedupFamily.idFrom)
 
   /** Physically remove tombstoned documents from both index halves
     * (the compaction rewrite with an anti-join merge) and clear the
     * tombstone table. After a purge, serving needs no exclusion until
     * the next delete.
     */
-  def purgeDedupIndexBucketed(spark: SparkSession, table: String): Unit = {
-    val dead = readDedupDeadIds(spark, table)
-    Bucketing.compactBucketed(spark, s"${table}_sh",
-      df => df.join(dead, Seq("id"), "left_anti"))
-    Bucketing.compactBucketed(spark, s"${table}_bands",
-      df => df.join(dead, Seq("id"), "left_anti"))
-    spark.sql(s"DROP TABLE IF EXISTS `${table}_dead`")
-  }
+  def purgeDedupIndexBucketed(spark: SparkSession, table: String): Unit =
+    Plain.purge(spark, table, DedupFamily)
 
   /** Compact the standing bucketed MinHash dedup index back to one
     * data file per non-empty bucket ([[Bucketing.compactBucketed]] on
@@ -313,48 +485,28 @@ object IndexStore {
     * contract survives.
     */
   def compactDedupIndexBucketed(spark: SparkSession,
-      table: String): Unit = {
-    Bucketing.compactBucketed(spark, s"${table}_sh")
-    Bucketing.compactBucketed(spark, s"${table}_bands")
-  }
+      table: String): Unit =
+    Plain.compact(spark, table, DedupFamily)
 
   // -------------------------- MinHash family, versioned (round-15 #1)
   /** The MinHash dedup index on [[BucketedManifest]] gen-manifest
-    * tables — the first bucketed family on the real table format
-    * (round-15 directive #1; rounds 13–14 versioned it on
-    * the retired pointer store's hard-link freezes, whose scaladoc named
-    * this store as the object-store-deployable fix). Both halves
-    * (`_sh` on id, `_bands` on (band, bucket)) are MEMBERS of ONE
-    * family: every append commits both in a single atomic manifest
-    * (the half-frozen crash split of the freeze-per-half design cannot
-    * exist), every commit is a time-travelable version, and compaction
-    * publishes merged generations the old versions keep referencing —
-    * no hard links, no catalog-table-per-version, no pointer swap.
-    * Serve reads are partition-pruned catalog scans carrying the
-    * bucket metadata, so the per-batch join still reads the corpus
-    * side exchange-free (BucketedManifestSpec asserts the executed
-    * plan). Content contract unchanged: x_dedup_index_versioned shares
-    * x_dedup_index_append's oracle verbatim through a
-    * build/append/compact cycle.
+    * tables. Both halves (`_sh` on id, `_bands` on (band, bucket)) are
+    * MEMBERS of ONE family: every append commits both in a single
+    * atomic manifest (a half-frozen crash split cannot exist), every
+    * commit is a time-travelable version, and compaction publishes
+    * merged generations the old versions keep referencing — no hard
+    * links, no catalog-table-per-version, no pointer swap. Serve reads
+    * are partition-pruned catalog scans carrying the bucket metadata,
+    * so the per-batch join still reads the corpus side exchange-free
+    * (BucketedManifestSpec asserts the executed plan). Content contract
+    * unchanged: x_dedup_index_versioned shares x_dedup_index_append's
+    * oracle verbatim through a build/append/compact cycle.
     */
   def writeDedupIndexBucketedVersioned(corpusToks: DataFrame,
       table: String, numBuckets: Int, numHashes: Int = 32,
-      bands: Int = 16, k: Int = 3): Unit = {
-    val spark = corpusToks.sparkSession
-    Scratch.sweepOnce(spark)
-    val sh = corpusToks.select(col("id"),
-      Dedup.shingleHashesFromTokens(col("toks"), k).as("sh")).cache()
-    try {
-      BucketedManifest.create(spark, table, Seq(
-        (s"${table}_sh", sh, Seq("id"), numBuckets),
-        (s"${table}_bands",
-          Dedup.bandAssignmentsFromShingles(sh, numHashes, bands),
-          Seq("band", "bucket"), numBuckets)))
-      metaFrame(spark, numHashes, bands, k)
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${table}_meta")
-    } finally sh.unpersist(blocking = false)
-  }
+      bands: Int = 16, k: Int = 3): Unit =
+    build(Versioned, DedupFamily, (numHashes, bands, k), corpusToks, table,
+      numBuckets)
 
   /** (shingles, bands) of the CURRENT version, bucket metadata
     * attached; serve-time parameters validated against the build-time
@@ -363,11 +515,9 @@ object IndexStore {
     */
   def readDedupIndexBucketedVersioned(spark: SparkSession,
       table: String, numHashes: Int = 32, bands: Int = 16, k: Int = 3)
-      : (DataFrame, DataFrame) = {
-    checkMeta(spark.table(s"${table}_meta"), table, numHashes, bands, k)
-    (BucketedManifest.read(spark, table, s"${table}_sh"),
-      BucketedManifest.read(spark, table, s"${table}_bands"))
-  }
+      : (DataFrame, DataFrame) =
+    pair(serve(DedupFamily, (numHashes, bands, k), spark, table)(
+      Versioned.read(spark, table, _)))
 
   /** [[appendDedupIndexBucketed]] as ONE atomic family commit: the
     * delta's shingle and band generations land under a claimed gen
@@ -378,42 +528,27 @@ object IndexStore {
     */
   def appendDedupIndexBucketedVersioned(deltaToks: DataFrame,
       table: String, numHashes: Int = 32, bands: Int = 16,
-      k: Int = 3): Int = {
-    val spark = deltaToks.sparkSession
-    checkMeta(spark.table(s"${table}_meta"), table, numHashes, bands, k)
-    val sh = deltaToks.select(col("id"),
-      Dedup.shingleHashesFromTokens(col("toks"), k).as("sh")).cache()
-    try
-      BucketedManifest.append(spark, table, Seq(
-        (s"${table}_sh", sh),
-        (s"${table}_bands",
-          Dedup.bandAssignmentsFromShingles(sh, numHashes, bands))))
-    finally sh.unpersist(blocking = false)
-  }
+      k: Int = 3): Int =
+    admit(Versioned, DedupFamily, (numHashes, bands, k), deltaToks, table)
 
   /** The freeze point of the current ingest state. On the manifest
     * store a snapshot is PURE METADATA — every committed version is
     * already frozen (generations are immutable, manifests reference
     * them forever until vacuum), so "freeze now" just reads the
-    * current version number. The round-14 half-by-half freeze (and its
-    * crash-split recovery, round-14 ADVICE) is retired structurally:
-    * both halves live in one manifest, there are no halves to
-    * re-align.
+    * current version number.
     */
   def snapshotDedupIndexBucketedVersioned(spark: SparkSession,
       table: String): Int =
-    BucketedManifest.currentVersion(spark, table)
+    Versioned.snapshot(spark, table)
 
   /** (shingles, bands) of FROZEN version `v` — the corpus exactly as
     * of that commit, regardless of every admission since.
     */
   def readDedupIndexBucketedVersionedAsOf(spark: SparkSession,
       table: String, v: Int, numHashes: Int = 32, bands: Int = 16,
-      k: Int = 3): (DataFrame, DataFrame) = {
-    checkMeta(spark.table(s"${table}_meta"), table, numHashes, bands, k)
-    (BucketedManifest.readVersion(spark, table, s"${table}_sh", v),
-      BucketedManifest.readVersion(spark, table, s"${table}_bands", v))
-  }
+      k: Int = 3): (DataFrame, DataFrame) =
+    pair(serve(DedupFamily, (numHashes, bands, k), spark, table)(
+      Versioned.readAsOf(spark, table, _, v)))
 
   /** [[compactDedupIndexBucketed]] as version publication: both
     * halves' one-file-per-bucket merged generations land under one
@@ -424,7 +559,7 @@ object IndexStore {
     */
   def compactDedupIndexBucketedVersioned(spark: SparkSession,
       table: String): Unit =
-    BucketedManifest.compact(spark, table)
+    Versioned.compact(spark, table, DedupFamily)
 
   /** Size-tiered cadence for the versioned MinHash family
     * ([[BucketedManifest.compactTiered]]): when the manifest
@@ -435,7 +570,7 @@ object IndexStore {
     */
   def maybeCompactDedupIndexBucketedVersioned(spark: SparkSession,
       table: String, maxGens: Int): Boolean =
-    BucketedManifest.compactTiered(spark, table, maxGens)
+    Versioned.compactTiered(spark, table, DedupFamily, maxGens)
 
   // ------------------- multi-index pipeline family (round-15 capstone)
   /** The MULTI-INDEX pipeline family: the MinHash halves (content
@@ -454,51 +589,24 @@ object IndexStore {
     */
   def writePipelineIndexVersioned(corpusToks: DataFrame, table: String,
       numBuckets: Int, numHashes: Int = 32, bands: Int = 16,
-      k: Int = 3): Unit = {
-    val spark = corpusToks.sparkSession
-    Scratch.sweepOnce(spark)
-    val sh = corpusToks.select(col("id"),
-      Dedup.shingleHashesFromTokens(col("toks"), k).as("sh")).cache()
-    try {
-      BucketedManifest.create(spark, table, Seq(
-        (s"${table}_sh", sh, Seq("id"), numBuckets),
-        (s"${table}_bands",
-          Dedup.bandAssignmentsFromShingles(sh, numHashes, bands),
-          Seq("band", "bucket"), numBuckets),
-        (s"${table}_keys",
-          keyCounts(corpusToks.select("id"), Seq("id")),
-          Seq("id"), numBuckets)))
-      metaFrame(spark, numHashes, bands, k)
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${table}_meta")
-    } finally sh.unpersist(blocking = false)
-  }
+      k: Int = 3): Unit =
+    build(Versioned, PipelineFamily, (numHashes, bands, k), corpusToks,
+      table, numBuckets)
 
   /** Admit a delta into ALL THREE members atomically (one manifest
     * link — returns the committed version, which is the freeze point
     * of the whole pipeline state).
     */
   def appendPipelineIndexVersioned(deltaToks: DataFrame, table: String,
-      numHashes: Int = 32, bands: Int = 16, k: Int = 3): Int = {
-    val spark = deltaToks.sparkSession
-    checkMeta(spark.table(s"${table}_meta"), table, numHashes, bands, k)
-    val sh = deltaToks.select(col("id"),
-      Dedup.shingleHashesFromTokens(col("toks"), k).as("sh")).cache()
-    try
-      BucketedManifest.append(spark, table, Seq(
-        (s"${table}_sh", sh),
-        (s"${table}_bands",
-          Dedup.bandAssignmentsFromShingles(sh, numHashes, bands)),
-        (s"${table}_keys",
-          keyCounts(deltaToks.select("id"), Seq("id")))))
-    finally sh.unpersist(blocking = false)
-  }
+      numHashes: Int = 32, bands: Int = 16, k: Int = 3): Int =
+    admit(Versioned, PipelineFamily, (numHashes, bands, k), deltaToks,
+      table)
 
   /** The key member's raw LSM rows (id, n) of the current version —
     * the uniqueness gate anti-joins present ids, audits sum totals.
     */
   def readPipelineKeyIndex(spark: SparkSession, table: String): DataFrame =
-    BucketedManifest.read(spark, table, s"${table}_keys")
+    Versioned.read(spark, table, s"${table}_keys")
 
   /** EVOLVE a versioned MinHash family into the pipeline family
     * online ([[BucketedManifest.addMember]] — round-16): the key
@@ -514,8 +622,8 @@ object IndexStore {
     */
   def addPipelineKeyMember(spark: SparkSession, table: String,
       numBuckets: Int): Int =
-    BucketedManifest.addMember(spark, table, s"${table}_keys",
-      keyCounts(BucketedManifest.read(spark, table, s"${table}_sh")
+    Versioned.addMember(spark, table, s"${table}_keys",
+      keyCounts(Versioned.read(spark, table, s"${table}_sh")
         .select("id").distinct(), Seq("id")),
       Seq("id"), numBuckets)
 
@@ -532,106 +640,56 @@ object IndexStore {
     */
   def maybeCompactPipelineIndexVersioned(spark: SparkSession,
       table: String, maxGens: Int): Boolean =
-    BucketedManifest.compactTiered(spark, table, maxGens,
-      merges = Map(s"${table}_keys".toLowerCase -> (keyMergeFn _)))
+    Versioned.compactTiered(spark, table, PipelineFamily, maxGens)
 
-  /** Compact the standing bucketed substring gram index (one half:
-    * the gram frame) — same contract as
-    * [[compactDedupIndexBucketed]].
+  // ------------------------------------------ substring gram family
+  /** Build + persist the SUBSTRING-DEDUP gram index from a
+    * pre-tokenized `(id, toks)` frame: `(id, pos, h)` k-gram rows
+    * ([[Dedup.substringGrams]]) saved as a bucketed table on `h` — the
+    * key BOTH serve-time joins (anchor candidates and diagonal
+    * extension) use, so every future batch reads the corpus side of
+    * both joins in place (asserted in BucketingSpec). The gram size
+    * `k` rides along as `_meta`: serving with a different k than the
+    * index was built with never matches a single gram and silently
+    * reports zero overlap — fail loudly instead.
+    */
+  def writeSubstringIndexBucketed(corpusToks: DataFrame, table: String,
+      numBuckets: Int, k: Int): Unit =
+    build(Plain, SubstringFamily, k, corpusToks, table, numBuckets)
+
+  /** Re-read the bucketed substring gram index; the serve-time `k`
+    * must match the build-time record.
+    */
+  def readSubstringIndexBucketed(spark: SparkSession, table: String,
+      k: Int): DataFrame =
+    serve(SubstringFamily, k, spark, table)(Plain.read(spark, _)).head
+
+  /** Append a DELTA of new `(id, toks)` documents INTO the standing
+    * bucketed substring gram index — the LSM maintenance arc the
+    * MinHash index already has ([[appendDedupIndexBucketed]]): without
+    * it a growing 100 TB corpus must re-gram-hash the FULL corpus per
+    * ingest batch just to admit the batch into future screens.
+    *
+    * Only the delta is gram-hashed and shuffled into the table's
+    * bucket layout; standing files are never rewritten. The gram size
+    * is validated against the build-time `_meta` record FIRST:
+    * appending k'-grams into a k-gram index would silently split every
+    * cross-boundary run. [[graft.ext.Dedup.substringGrams]] is a pure
+    * per-document function, so append(build(base), delta) is
+    * ROW-IDENTICAL to build(base ∪ delta) — the
+    * x_dedup_substring_append oracle computes the union-corpus answer
+    * from scratch in DuckDB and the hash-match proves it.
+    */
+  def appendSubstringIndexBucketed(deltaToks: DataFrame, table: String,
+      k: Int): Unit =
+    admit(Plain, SubstringFamily, k, deltaToks, table): Unit
+
+  /** Compact the standing bucketed substring gram index — same
+    * contract as [[compactDedupIndexBucketed]].
     */
   def compactSubstringIndexBucketed(spark: SparkSession,
       table: String): Unit =
-    Bucketing.compactBucketed(spark, s"${table}_grams")
-
-  /** The substring gram index on [[BucketedManifest]] gen-manifest
-    * tables (round-16 directive #1 — the THIRD family on the table
-    * format after MinHash and key, and the heaviest bucketed one:
-    * O(tokens) gram rows per document). One member: the gram frame on
-    * `h` — the key both serve-time joins use; `_meta` pins k exactly
-    * as the swap-compacted twin does. Migrated off
-    * the retired pointer store: appends are natively
-    * versioned (every admit commits a manifest and IS the freeze
-    * point — no hard-link clone, no `file:`-scheme freeze), snapshots
-    * are pure metadata reads, tiered compaction references big
-    * standing generations untouched, and the store's object-store
-    * posture (immutable generation puts + manifest CAS + LWW hint)
-    * comes along for free. Serve content is unchanged through the
-    * migration: x_dedup_substring_versioned,
-    * x_dedup_substring_tiered_versioned, and
-    * x_stream_substring_versioned keep sharing
-    * x_dedup_substring_append's oracle verbatim on the new store.
-    */
-  def writeSubstringIndexBucketedVersioned(corpusToks: DataFrame,
-      table: String, numBuckets: Int, k: Int): Unit = {
-    val spark = corpusToks.sparkSession
-    Scratch.sweepOnce(spark)
-    BucketedManifest.create(spark, table, Seq(
-      (s"${table}_grams",
-        Dedup.substringGrams(corpusToks, "id", col("toks"), k),
-        Seq("h"), numBuckets)))
-    spark.range(1).select(lit(k).as("k"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_meta")
-  }
-
-  /** The CURRENT version's gram set, bucket metadata attached (the
-    * manifest is resolved at call time, so a per-batch caller always
-    * serves against everything committed so far).
-    */
-  def readSubstringIndexBucketedVersioned(spark: SparkSession,
-      table: String, k: Int): DataFrame = {
-    checkSubstringMeta(spark, table, k)
-    BucketedManifest.read(spark, table, s"${table}_grams")
-  }
-
-  /** Admit a delta's grams as a NEW VERSION (returned — it IS the
-    * freeze point "the corpus after this batch"; standing generations
-    * untouched, captured reader frames remain valid).
-    */
-  def appendSubstringIndexBucketedVersioned(deltaToks: DataFrame,
-      table: String, k: Int): Int = {
-    checkSubstringMeta(deltaToks.sparkSession, table, k)
-    BucketedManifest.append(deltaToks.sparkSession, table, Seq(
-      (s"${table}_grams",
-        Dedup.substringGrams(deltaToks, "id", col("toks"), k))))
-  }
-
-  /** The freeze point of the current ingest state — PURE METADATA on
-    * the manifest store (every committed version is already frozen;
-    * the pointer store needed a hard-link clone for this).
-    */
-  def snapshotSubstringIndexBucketedVersioned(spark: SparkSession,
-      table: String): Int =
-    BucketedManifest.currentVersion(spark, table)
-
-  /** The gram set as of FROZEN version `v` — blind to every admission
-    * and rewrite since that commit.
-    */
-  def readSubstringIndexBucketedVersionedAsOf(spark: SparkSession,
-      table: String, v: Int, k: Int): DataFrame = {
-    checkSubstringMeta(spark, table, k)
-    BucketedManifest.readVersion(spark, table, s"${table}_grams", v)
-  }
-
-  /** Full compaction as version publication: one merged generation,
-    * one file per non-empty bucket; older versions keep their
-    * generations until [[BucketedManifest.vacuum]]. Content-invariant
-    * (grams are pure per-document rows — no merge algebra needed).
-    */
-  def compactSubstringIndexBucketedVersioned(spark: SparkSession,
-      table: String): Unit =
-    BucketedManifest.compact(spark, table)
-
-  /** Size-tiered cadence ([[BucketedManifest.compactTiered]]): when
-    * the manifest references more than `maxGens` generations, merge
-    * the SMALLEST down to the cap and reference the big standing ones
-    * untouched — O(small generations) maintenance with snapshot
-    * isolation, replacing the pointer store's hard-link hybrid for
-    * this family.
-    */
-  def maybeCompactSubstringIndexBucketedVersioned(spark: SparkSession,
-      table: String, maxGens: Int): Boolean =
-    BucketedManifest.compactTiered(spark, table, maxGens)
+    Plain.compact(spark, table, SubstringFamily)
 
   /** Size-tiered compaction of the substring gram index: only buckets
     * that accumulated >= `minFilesPerBucket` files are rewritten
@@ -640,19 +698,16 @@ object IndexStore {
     */
   def compactSubstringIndexTiered(spark: SparkSession, table: String,
       minFilesPerBucket: Int): Unit =
-    Bucketing.compactBucketedTiered(spark, s"${table}_grams",
-      minFilesPerBucket)
+    Plain.compactTiered(spark, table, SubstringFamily, minFilesPerBucket)
 
   /** Tombstone DELETION for the substring gram index — the MinHash
-    * id-tombstone pattern transplanted (round-13 directive #1; grams
-    * are a pure per-document frame, so deletes are id-keyed): deleted
-    * ids land in `_dead` (one batch-sized append, standing gram files
-    * untouched); serving excludes dead corpus ids by anti-joining the
-    * OUTPUT run/pair rows on corpus_id (exact — a dead doc can only
-    * surface through gram candidates);
-    * [[purgeSubstringIndexBucketed]] later removes dead grams
-    * physically. The right-to-be-forgotten shape: no rewrite of a
-    * 100 TB gram index on the request path.
+    * id-tombstone pattern (grams are a pure per-document frame, so
+    * deletes are id-keyed): deleted ids land in `_dead`; serving
+    * excludes dead corpus ids by anti-joining the OUTPUT run/pair rows
+    * on corpus_id (exact — a dead doc can only surface through gram
+    * candidates); [[purgeSubstringIndexBucketed]] later removes dead
+    * grams physically. The right-to-be-forgotten shape: no rewrite of
+    * a 100 TB gram index on the request path.
     */
   def deleteFromSubstringIndexBucketed(ids: DataFrame,
       table: String): Unit =
@@ -660,7 +715,7 @@ object IndexStore {
 
   /** The substring index's standing tombstone set. */
   def readSubstringDeadIds(spark: SparkSession, table: String): DataFrame =
-    readDeadIds(spark, table, s"${table}_grams")
+    readDeadIds(spark, table, table + SubstringFamily.idFrom)
 
   /** Physically remove tombstoned documents' grams (the compaction
     * rewrite with an anti-join merge) and clear the tombstone table;
@@ -668,95 +723,106 @@ object IndexStore {
     * excluded serve ≡ rebuild-without-deleted ≡ post-purge serve).
     */
   def purgeSubstringIndexBucketed(spark: SparkSession,
-      table: String): Unit = {
-    val dead = readSubstringDeadIds(spark, table)
-    Bucketing.compactBucketed(spark, s"${table}_grams",
-      df => df.join(dead, Seq("id"), "left_anti"))
-    spark.sql(s"DROP TABLE IF EXISTS `${table}_dead`")
-  }
+      table: String): Unit =
+    Plain.purge(spark, table, SubstringFamily)
+
+  /** The substring gram index on [[BucketedManifest]] gen-manifest
+    * tables: one member, the gram frame on `h`; `_meta` pins k exactly
+    * as the plain twin does. Every admit commits a manifest and IS the
+    * freeze point, snapshots are pure metadata reads, and tiered
+    * compaction references big standing generations untouched. Serve
+    * content matches the plain store: x_dedup_substring_versioned,
+    * x_dedup_substring_tiered_versioned, and
+    * x_stream_substring_versioned share x_dedup_substring_append's
+    * oracle verbatim.
+    */
+  def writeSubstringIndexBucketedVersioned(corpusToks: DataFrame,
+      table: String, numBuckets: Int, k: Int): Unit =
+    build(Versioned, SubstringFamily, k, corpusToks, table, numBuckets)
+
+  /** The CURRENT version's gram set, bucket metadata attached (the
+    * manifest is resolved at call time, so a per-batch caller always
+    * serves against everything committed so far).
+    */
+  def readSubstringIndexBucketedVersioned(spark: SparkSession,
+      table: String, k: Int): DataFrame =
+    serve(SubstringFamily, k, spark, table)(
+      Versioned.read(spark, table, _)).head
+
+  /** Admit a delta's grams as a NEW VERSION (returned — it IS the
+    * freeze point "the corpus after this batch"; standing generations
+    * untouched, captured reader frames remain valid).
+    */
+  def appendSubstringIndexBucketedVersioned(deltaToks: DataFrame,
+      table: String, k: Int): Int =
+    admit(Versioned, SubstringFamily, k, deltaToks, table)
+
+  /** The freeze point of the current ingest state — PURE METADATA on
+    * the manifest store (every committed version is already frozen).
+    */
+  def snapshotSubstringIndexBucketedVersioned(spark: SparkSession,
+      table: String): Int =
+    Versioned.snapshot(spark, table)
+
+  /** The gram set as of FROZEN version `v` — blind to every admission
+    * and rewrite since that commit.
+    */
+  def readSubstringIndexBucketedVersionedAsOf(spark: SparkSession,
+      table: String, v: Int, k: Int): DataFrame =
+    serve(SubstringFamily, k, spark, table)(
+      Versioned.readAsOf(spark, table, _, v)).head
+
+  /** Full compaction as version publication: one merged generation,
+    * one file per non-empty bucket; older versions keep their
+    * generations until [[BucketedManifest.vacuum]]. Content-invariant
+    * (grams are pure per-document rows — no merge algebra needed).
+    */
+  def compactSubstringIndexBucketedVersioned(spark: SparkSession,
+      table: String): Unit =
+    Versioned.compact(spark, table, SubstringFamily)
+
+  /** Size-tiered cadence ([[BucketedManifest.compactTiered]]): when
+    * the manifest references more than `maxGens` generations, merge
+    * the SMALLEST down to the cap and reference the big standing ones
+    * untouched — O(small generations) maintenance with snapshot
+    * isolation.
+    */
+  def maybeCompactSubstringIndexBucketedVersioned(spark: SparkSession,
+      table: String, maxGens: Int): Boolean =
+    Versioned.compactTiered(spark, table, SubstringFamily, maxGens)
 
   // ------------------------------------------------ edit-dist index
   /** Persist the PassJoin corpus for incremental edit-distance
     * screening ([[graft.ext.Dedup.editDistanceAgainst]]): three
-    * bucketed tables, each on its own serve join's key —
-    * `_segs` (id, len, h) on `h` (the single-column candidate join:
-    * length and slot are folded INTO the hash by design), `_str`
-    * (id, s) on `id` (the verify fetch), `_bylen` (len, id) on `len`
-    * (the sub-(d+1)-char directory). All three are pure per-string
-    * functions, so append(build(base), delta) ≡ build(base ∪ delta)
-    * row-for-row and the generic LSM append/compaction paths apply.
-    * `_meta` pins `d`: segments cut for a different threshold never
-    * hash-collide with the probes and silently report nothing —
-    * fail loudly instead.
+    * bucketed tables, each on its own serve join's key — `_segs`
+    * (id, len, h) on `h`, `_str` (id, s) on `id`, `_bylen` (len, id)
+    * on `len`. All three are pure per-string functions, so
+    * append(build(base), delta) ≡ build(base ∪ delta) row-for-row and
+    * the generic LSM append/compaction paths apply. `_meta` pins `d`:
+    * segments cut for a different threshold never hash-collide with
+    * the probes and silently report nothing — fail loudly instead.
     */
   def writeEditIndexBucketed(corpus: DataFrame, table: String,
       numBuckets: Int, d: Int, idCol: String = "id",
-      strCol: String = "s"): Unit = {
-    Scratch.sweepOnce(corpus.sparkSession)
-    val c = normalizedEditFrame(corpus, idCol, strCol).cache()
-    try {
-      Bucketing.writeBucketed(graft.ext.Dedup.editSegmentFrame(c, d),
-        s"${table}_segs", Seq("h"), numBuckets)
-      Bucketing.writeBucketed(
-        c.select(col("__id").as("id"), col("__s").as("s")),
-        s"${table}_str", Seq("id"), numBuckets)
-      Bucketing.writeBucketed(
-        c.select(col("__l").as("len"), col("__id").as("id")),
-        s"${table}_bylen", Seq("len"), numBuckets)
-      c.sparkSession.range(1).select(lit(d).as("d"))
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${table}_meta")
-    } finally c.unpersist(blocking = false)
-  }
-
-  private def normalizedEditFrame(df: DataFrame, idCol: String,
-      strCol: String): DataFrame =
-    df.select(col(idCol).as("__id"), col(strCol).as("__s"))
-      .filter(col("__s").isNotNull)
-      .withColumn("__l", length(col("__s")))
-
-  private def checkEditMeta(spark: SparkSession, table: String,
-      d: Int): Unit = {
-    val built = spark.table(s"${table}_meta").select(col("d")).head
-      .getInt(0)
-    require(built == d,
-      s"edit index at $table was built for d=$built but is being " +
-        s"served with d=$d — differently-cut segments never collide " +
-        "and silently report no matches")
-  }
+      strCol: String = "s"): Unit =
+    build(Plain, EditFamily, d, editInput(corpus, idCol, strCol), table,
+      numBuckets)
 
   /** Admit a checked batch into the standing edit index (all three
     * tables; only the delta shuffles).
     */
   def appendEditIndexBucketed(delta: DataFrame, table: String, d: Int,
-      idCol: String = "id", strCol: String = "s"): Unit = {
-    val spark = delta.sparkSession
-    checkEditMeta(spark, table, d)
-    val c = normalizedEditFrame(delta, idCol, strCol).cache()
-    try {
-      Bucketing.appendBucketed(graft.ext.Dedup.editSegmentFrame(c, d),
-        s"${table}_segs", Seq("h"),
-        Bucketing.numBucketsOf(spark, s"${table}_segs"))
-      Bucketing.appendBucketed(
-        c.select(col("__id").as("id"), col("__s").as("s")),
-        s"${table}_str", Seq("id"),
-        Bucketing.numBucketsOf(spark, s"${table}_str"))
-      Bucketing.appendBucketed(
-        c.select(col("__l").as("len"), col("__id").as("id")),
-        s"${table}_bylen", Seq("len"),
-        Bucketing.numBucketsOf(spark, s"${table}_bylen"))
-    } finally c.unpersist(blocking = false)
-  }
+      idCol: String = "id", strCol: String = "s"): Unit =
+    admit(Plain, EditFamily, d, editInput(delta, idCol, strCol), table)
+      : Unit
 
   /** Re-read the edit index: (segs, str, bylen); serve-time `d` must
     * match the build-time record.
     */
   def readEditIndexBucketed(spark: SparkSession, table: String, d: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    checkEditMeta(spark, table, d)
-    (Bucketing.readBucketed(spark, s"${table}_segs"),
-      Bucketing.readBucketed(spark, s"${table}_str"),
-      Bucketing.readBucketed(spark, s"${table}_bylen"))
+    val m = serve(EditFamily, d, spark, table)(Plain.read(spark, _))
+    (m(0), m(1), m(2))
   }
 
   /** Compact all three standing edit-index tables back to one file
@@ -767,114 +833,66 @@ object IndexStore {
     * verbatim).
     */
   def compactEditIndexBucketed(spark: SparkSession,
-      table: String): Unit = {
-    Bucketing.compactBucketed(spark, s"${table}_segs")
-    Bucketing.compactBucketed(spark, s"${table}_str")
-    Bucketing.compactBucketed(spark, s"${table}_bylen")
-  }
+      table: String): Unit =
+    Plain.compact(spark, table, EditFamily)
 
   /** The PassJoin edit index on [[BucketedManifest]] gen-manifest
-    * tables (round-17 directive #2 — the FOURTH family on the table
-    * format, completing the migration the substring family templated
-    * in round 16): ONE family with THREE members — `_segs` on `h`
-    * (the candidate join), `_str` on `id` (the verify fetch),
-    * `_bylen` on `len` (the sub-(d+1)-char directory) — so every
-    * admit advances all three in ONE atomic manifest commit: the
-    * pointer store's per-table appends could crash with the segment
-    * table a batch ahead of the string table (a candidate whose
-    * verify fetch finds no string); here that split cannot exist.
-    * Appends are natively versioned (each admit IS a freeze point),
-    * snapshots are pure metadata, and the store's object-store
-    * posture (committer-seam writes, manifest CAS, attach, rollback)
-    * comes along for free — no hard links, no `file:`-scheme
-    * requirement. `_meta` pins d as before. Serve content is
-    * unchanged through the migration: x_dedup_editdist_versioned and
-    * x_stream_editdist_versioned keep sharing
-    * x_dedup_editdist_append's oracle verbatim on the new store.
+    * tables: ONE family with THREE members, so every admit advances
+    * all three in ONE atomic manifest commit — per-table appends could
+    * crash with the segment table a batch ahead of the string table (a
+    * candidate whose verify fetch finds no string); here that split
+    * cannot exist. `_meta` pins d as on the plain store. Serve content
+    * matches the plain store: x_dedup_editdist_versioned and
+    * x_stream_editdist_versioned share x_dedup_editdist_append's
+    * oracle verbatim.
     */
   def writeEditIndexBucketedVersioned(corpus: DataFrame, table: String,
       numBuckets: Int, d: Int, idCol: String = "id",
-      strCol: String = "s"): Unit = {
-    val spark = corpus.sparkSession
-    Scratch.sweepOnce(spark)
-    val c = normalizedEditFrame(corpus, idCol, strCol).cache()
-    try {
-      BucketedManifest.create(spark, table, Seq(
-        (s"${table}_segs", graft.ext.Dedup.editSegmentFrame(c, d),
-          Seq("h"), numBuckets),
-        (s"${table}_str",
-          c.select(col("__id").as("id"), col("__s").as("s")),
-          Seq("id"), numBuckets),
-        (s"${table}_bylen",
-          c.select(col("__l").as("len"), col("__id").as("id")),
-          Seq("len"), numBuckets)))
-      spark.range(1).select(lit(d).as("d"))
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${table}_meta")
-    } finally c.unpersist(blocking = false)
-  }
+      strCol: String = "s"): Unit =
+    build(Versioned, EditFamily, d, editInput(corpus, idCol, strCol),
+      table, numBuckets)
 
   /** Admit a checked batch as a NEW VERSION — all three members in
     * one atomic manifest commit (returned; it IS the freeze point).
     */
   def appendEditIndexBucketedVersioned(delta: DataFrame, table: String,
-      d: Int, idCol: String = "id", strCol: String = "s"): Int = {
-    checkEditMeta(delta.sparkSession, table, d)
-    val c = normalizedEditFrame(delta, idCol, strCol).cache()
-    try {
-      BucketedManifest.append(delta.sparkSession, table, Seq(
-        (s"${table}_segs", graft.ext.Dedup.editSegmentFrame(c, d)),
-        (s"${table}_str",
-          c.select(col("__id").as("id"), col("__s").as("s"))),
-        (s"${table}_bylen",
-          c.select(col("__l").as("len"), col("__id").as("id")))))
-    } finally c.unpersist(blocking = false)
-  }
+      d: Int, idCol: String = "id", strCol: String = "s"): Int =
+    admit(Versioned, EditFamily, d, editInput(delta, idCol, strCol), table)
 
   def readEditIndexBucketedVersioned(spark: SparkSession, table: String,
       d: Int): (DataFrame, DataFrame, DataFrame) = {
-    checkEditMeta(spark, table, d)
-    (BucketedManifest.read(spark, table, s"${table}_segs"),
-      BucketedManifest.read(spark, table, s"${table}_str"),
-      BucketedManifest.read(spark, table, s"${table}_bylen"))
+    val m = serve(EditFamily, d, spark, table)(
+      Versioned.read(spark, table, _))
+    (m(0), m(1), m(2))
   }
 
   /** Full compaction as version publication — one merged generation
-    * per member, all three published in ONE manifest commit (the
-    * pointer store needed three separate compact+repoint cycles).
+    * per member, all three published in ONE manifest commit.
     */
   def compactEditIndexBucketedVersioned(spark: SparkSession,
       table: String): Unit =
-    BucketedManifest.compact(spark, table)
+    Versioned.compact(spark, table, EditFamily)
 
-  /** Tombstone DELETION for the edit-distance index (round-13
-    * directive #1): all three tables are pure per-string frames keyed
-    * by id, so one id-list tombstone covers segments, strings, and the
-    * length directory alike. Serving excludes dead corpus ids on the
-    * OUTPUT pairs; [[purgeEditIndexBucketed]] rewrites all three
-    * tables without dead rows and clears the tombstones.
+  /** Tombstone DELETION for the edit-distance index: all three tables
+    * are pure per-string frames keyed by id, so one id-list tombstone
+    * covers segments, strings, and the length directory alike. Serving
+    * excludes dead corpus ids on the OUTPUT pairs;
+    * [[purgeEditIndexBucketed]] rewrites all three tables without dead
+    * rows and clears the tombstones.
     */
   def deleteFromEditIndexBucketed(ids: DataFrame, table: String): Unit =
     appendDeadIds(ids, table)
 
   /** The edit index's standing tombstone set. */
   def readEditDeadIds(spark: SparkSession, table: String): DataFrame =
-    readDeadIds(spark, table, s"${table}_str")
+    readDeadIds(spark, table, table + EditFamily.idFrom)
 
   /** Physically remove tombstoned strings from all three edit-index
     * tables (compaction rewrites with an anti-join merge) and clear
     * the tombstone table; serve answer invariant (BucketingSpec).
     */
-  def purgeEditIndexBucketed(spark: SparkSession, table: String): Unit = {
-    val dead = readEditDeadIds(spark, table)
-    Bucketing.compactBucketed(spark, s"${table}_segs",
-      df => df.join(dead, Seq("id"), "left_anti"))
-    Bucketing.compactBucketed(spark, s"${table}_str",
-      df => df.join(dead, Seq("id"), "left_anti"))
-    Bucketing.compactBucketed(spark, s"${table}_bylen",
-      df => df.join(dead, Seq("id"), "left_anti"))
-    spark.sql(s"DROP TABLE IF EXISTS `${table}_dead`")
-  }
+  def purgeEditIndexBucketed(spark: SparkSession, table: String): Unit =
+    Plain.purge(spark, table, EditFamily)
 
   // ----------------------------------------------------- pHash index
   /** Persist the banded perceptual-hash frame
@@ -885,133 +903,80 @@ object IndexStore {
     * corpus side in place; only the batch is decoded, hashed, banded,
     * and shuffled. `_meta` pins the band count: hashes banded
     * differently never collide and silently report no near-dups —
-    * fail loudly instead. Append + compaction come free from the
-    * generic bucketed-table paths ([[Bucketing.appendBucketed]] /
-    * [[Bucketing.compactBucketed]]) since bands are a pure
-    * per-image function.
+    * fail loudly instead.
     */
   def writePhashIndexBucketed(hashes: DataFrame, table: String,
-      numBuckets: Int, bands: Int = 8): Unit = {
-    Scratch.sweepOnce(hashes.sparkSession)
-    Bucketing.writeBucketed(
-      graft.ext.Multimodal.phashBands(hashes, bands),
-      s"${table}_bands", Seq("band", "key"), numBuckets)
-    hashes.sparkSession.range(1).select(lit(bands).as("bands"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_meta")
-  }
+      numBuckets: Int, bands: Int = 8): Unit =
+    build(Plain, PhashFamily, bands, hashes, table, numBuckets)
 
   def readPhashIndexBucketed(spark: SparkSession, table: String,
-      bands: Int = 8): DataFrame = {
-    checkPhashMeta(spark, table, bands)
-    Bucketing.readBucketed(spark, s"${table}_bands")
-  }
-
-  private def checkPhashMeta(spark: SparkSession, table: String,
-      bands: Int): Unit = {
-    val built = spark.table(s"${table}_meta")
-      .select(col("bands")).head.getInt(0)
-    require(built == bands,
-      s"phash index at $table was built with bands=$built but is being " +
-        s"served with bands=$bands — mismatched banding never collides " +
-        "and silently reports no near-duplicates")
-  }
+      bands: Int = 8): DataFrame =
+    serve(PhashFamily, bands, spark, table)(Plain.read(spark, _)).head
 
   /** Admit a checked image batch's `(id, dhash)` rows into the
-    * standing pHash index — the LSM append arc the other per-document
-    * families already have: only the delta is banded and shuffled into
+    * standing pHash index: only the delta is banded and shuffled into
     * the table's bucket layout; standing files untouched. Band count
-    * validated against the build-time `_meta` record first (banding
-    * mismatches never collide — fail loudly). Bands are a pure
-    * per-image function, so append(build(base), delta) ≡
+    * validated against the build-time `_meta` record first. Bands are
+    * a pure per-image function, so append(build(base), delta) ≡
     * build(base ∪ delta) row-for-row — x_mm_phash_append proves it by
     * sharing the full-corpus serve oracle.
     */
   def appendPhashIndexBucketed(deltaHashes: DataFrame, table: String,
-      bands: Int = 8): Unit = {
-    val spark = deltaHashes.sparkSession
-    checkPhashMeta(spark, table, bands)
-    Bucketing.appendBucketed(
-      graft.ext.Multimodal.phashBands(deltaHashes, bands),
-      s"${table}_bands", Seq("band", "key"),
-      Bucketing.numBucketsOf(spark, s"${table}_bands"))
-  }
+      bands: Int = 8): Unit =
+    admit(Plain, PhashFamily, bands, deltaHashes, table): Unit
 
   /** Compact the standing pHash band table — same contract as
     * [[compactDedupIndexBucketed]].
     */
   def compactPhashIndexBucketed(spark: SparkSession,
       table: String): Unit =
-    Bucketing.compactBucketed(spark, s"${table}_bands")
+    Plain.compact(spark, table, PhashFamily)
 
-  /** The pHash band index on [[BucketedManifest]] gen-manifest tables
-    * (round-17 directive #2 — the FIFTH and final bucketed family on
-    * the table format): one member on (band, key); `_meta` pins the
-    * band count. Appends are natively versioned, snapshots pure
-    * metadata, object-store posture (committer-seam writes, manifest
-    * CAS, attach, rollback) inherited — no hard links, no `file:`
-    * scheme. Serve content unchanged through the migration:
-    * x_mm_phash_versioned and x_stream_phash_versioned keep sharing
-    * x_mm_phash_served's oracle verbatim on the new store.
+  /** The pHash band index on [[BucketedManifest]] gen-manifest tables:
+    * one member on (band, key); `_meta` pins the band count. Serve
+    * content matches the plain store: x_mm_phash_versioned and
+    * x_stream_phash_versioned share x_mm_phash_served's oracle
+    * verbatim.
     */
   def writePhashIndexBucketedVersioned(hashes: DataFrame, table: String,
-      numBuckets: Int, bands: Int = 8): Unit = {
-    val spark = hashes.sparkSession
-    Scratch.sweepOnce(spark)
-    BucketedManifest.create(spark, table, Seq(
-      (s"${table}_bands",
-        graft.ext.Multimodal.phashBands(hashes, bands),
-        Seq("band", "key"), numBuckets)))
-    spark.range(1).select(lit(bands).as("bands"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_meta")
-  }
+      numBuckets: Int, bands: Int = 8): Unit =
+    build(Versioned, PhashFamily, bands, hashes, table, numBuckets)
 
   def readPhashIndexBucketedVersioned(spark: SparkSession,
-      table: String, bands: Int = 8): DataFrame = {
-    checkPhashMeta(spark, table, bands)
-    BucketedManifest.read(spark, table, s"${table}_bands")
-  }
+      table: String, bands: Int = 8): DataFrame =
+    serve(PhashFamily, bands, spark, table)(
+      Versioned.read(spark, table, _)).head
 
   /** Admit a checked image batch as a NEW VERSION (returned; it IS
     * the freeze point).
     */
   def appendPhashIndexBucketedVersioned(deltaHashes: DataFrame,
-      table: String, bands: Int = 8): Int = {
-    checkPhashMeta(deltaHashes.sparkSession, table, bands)
-    BucketedManifest.append(deltaHashes.sparkSession, table, Seq(
-      (s"${table}_bands",
-        graft.ext.Multimodal.phashBands(deltaHashes, bands))))
-  }
+      table: String, bands: Int = 8): Int =
+    admit(Versioned, PhashFamily, bands, deltaHashes, table)
 
   def compactPhashIndexBucketedVersioned(spark: SparkSession,
       table: String): Unit =
-    BucketedManifest.compact(spark, table)
+    Versioned.compact(spark, table, PhashFamily)
 
-  /** Tombstone DELETION for the pHash index (round-13 directive #1):
-    * the banded hash frame is a pure per-image function, so deletes
-    * are id-keyed like the other per-document families. Serving
-    * excludes dead corpus ids on the OUTPUT pairs;
-    * [[purgePhashIndexBucketed]] rewrites the band table without dead
-    * rows and clears the tombstones.
+  /** Tombstone DELETION for the pHash index: the banded hash frame is
+    * a pure per-image function, so deletes are id-keyed like the other
+    * per-document families. Serving excludes dead corpus ids on the
+    * OUTPUT pairs; [[purgePhashIndexBucketed]] rewrites the band table
+    * without dead rows and clears the tombstones.
     */
   def deleteFromPhashIndexBucketed(ids: DataFrame, table: String): Unit =
     appendDeadIds(ids, table)
 
   /** The pHash index's standing tombstone set. */
   def readPhashDeadIds(spark: SparkSession, table: String): DataFrame =
-    readDeadIds(spark, table, s"${table}_bands")
+    readDeadIds(spark, table, table + PhashFamily.idFrom)
 
   /** Physically remove tombstoned images' band rows (compaction
     * rewrite with an anti-join merge) and clear the tombstone table;
     * serve answer invariant (BucketingSpec).
     */
-  def purgePhashIndexBucketed(spark: SparkSession, table: String): Unit = {
-    val dead = readPhashDeadIds(spark, table)
-    Bucketing.compactBucketed(spark, s"${table}_bands",
-      df => df.join(dead, Seq("id"), "left_anti"))
-    spark.sql(s"DROP TABLE IF EXISTS `${table}_dead`")
-  }
+  def purgePhashIndexBucketed(spark: SparkSession, table: String): Unit =
+    Plain.purge(spark, table, PhashFamily)
 
   // ------------------------------------------------------- key index
   /** The key-uniqueness / foreign-key twin of the dedup index arc —
@@ -1035,35 +1000,10 @@ object IndexStore {
     * just a file rewrite: it re-aggregates split rows while
     * compacting, and the serve answer cannot change because the serve
     * already sums.
-    *
-    * Nulls are exempt, matching [[graft.check.Checks.unique]] / SQL
-    * convention: a null key tuple is a `required` problem, not a
-    * uniqueness one.
     */
-  private def keyCounts(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.filter(keys.map(df(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(df(_)): _*)
-      .agg(count(lit(1)).as("n"))
-
-  private def checkKeyMeta(spark: SparkSession, table: String,
-      keys: Seq[String]): Unit = {
-    val built = spark.table(s"${table}_meta")
-      .select(col("keys")).head.getString(0)
-    require(built == keys.mkString(","),
-      s"key index at $table was built on ($built) but is being served " +
-        s"on (${keys.mkString(",")}) — a different key set silently " +
-        "reports zero collisions")
-  }
-
   def writeKeyIndexBucketed(df: DataFrame, table: String,
-      keys: Seq[String], numBuckets: Int): Unit = {
-    Scratch.sweepOnce(df.sparkSession)
-    Bucketing.writeBucketed(keyCounts(df, keys), s"${table}_keys",
-      keys, numBuckets)
-    df.sparkSession.range(1).select(lit(keys.mkString(",")).as("keys"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_meta")
-  }
+      keys: Seq[String], numBuckets: Int): Unit =
+    build(Plain, KeyFamily, keys, df, table, numBuckets)
 
   /** Admit a checked batch's keys into the standing index: only the
     * delta aggregates and shuffles into the table's bucket layout;
@@ -1071,12 +1011,8 @@ object IndexStore {
     * the build-time `_meta` record first.
     */
   def appendKeyIndexBucketed(delta: DataFrame, table: String,
-      keys: Seq[String]): Unit = {
-    val spark = delta.sparkSession
-    checkKeyMeta(spark, table, keys)
-    Bucketing.appendBucketed(keyCounts(delta, keys), s"${table}_keys",
-      keys, Bucketing.numBucketsOf(spark, s"${table}_keys"))
-  }
+      keys: Seq[String]): Unit =
+    admit(Plain, KeyFamily, keys, delta, table): Unit
 
   /** Re-read the standing key index (bucket metadata from the
     * catalog). Rows are RAW LSM rows — consumers must merge per key
@@ -1084,10 +1020,8 @@ object IndexStore {
     * doesn't need to, an anti join ignores right-side multiplicity).
     */
   def readKeyIndexBucketed(spark: SparkSession, table: String,
-      keys: Seq[String]): DataFrame = {
-    checkKeyMeta(spark, table, keys)
-    Bucketing.readBucketed(spark, s"${table}_keys")
-  }
+      keys: Seq[String]): DataFrame =
+    serve(KeyFamily, keys, spark, table)(Plain.read(spark, _)).head
 
   /** DELETE keys from the standing index WITHOUT touching history
     * files — LSM tombstones: the deleted rows' per-key counts are
@@ -1102,14 +1036,8 @@ object IndexStore {
     * total negative, which no serve interprets.
     */
   def deleteFromKeyIndexBucketed(deleted: DataFrame, table: String,
-      keys: Seq[String]): Unit = {
-    val spark = deleted.sparkSession
-    checkKeyMeta(spark, table, keys)
-    Bucketing.appendBucketed(
-      keyCounts(deleted, keys).withColumn("n", -col("n")),
-      s"${table}_keys", keys,
-      Bucketing.numBucketsOf(spark, s"${table}_keys"))
-  }
+      keys: Seq[String]): Unit =
+    deleteKeys(Plain, deleted, table, keys)
 
   /** True LSM merge-compaction: re-aggregate rows a key accumulated
     * across appends AND rewrite to one file per non-empty bucket,
@@ -1120,77 +1048,47 @@ object IndexStore {
     * asserted in BucketingSpec alongside the file-count drop.
     */
   def compactKeyIndexBucketed(spark: SparkSession, table: String): Unit =
-    Bucketing.compactBucketed(spark, s"${table}_keys", df => {
-      val keys = df.columns.filter(_ != "n").toSeq
-      df.groupBy(keys.map(df(_)): _*).agg(sum(col("n")).as("n"))
-        .filter(col("n") =!= 0)
-    })
+    Plain.compact(spark, table, KeyFamily)
 
   // ------------------------- key index, versioned (round-14 #2 cont.)
-  /** The key index on [[BucketedManifest]] gen-manifests (round-15 —
-    * the second family on the table format, chosen because it is the
-    * LSM one: split rows, NEGATED-COUNT tombstones, and a
-    * merge-compaction that must re-aggregate INTO the merged
-    * generation prove the store's `merges` hook carries the full LSM
-    * algebra, not just file layout). Every append — admissions AND
-    * tombstones alike — is an atomic versioned commit, so the key
-    * history is time-travelable per batch with no freeze step. The
-    * substring family followed in round 16, edit-distance and pHash
-    * in round 17 — all five bucketed families now live on the table
-    * format, and the pointer store is retired.
+  /** The key index on [[BucketedManifest]] gen-manifests — the LSM
+    * family: split rows, NEGATED-COUNT tombstones, and a
+    * merge-compaction that re-aggregates INTO the merged generation
+    * (the store's `merges` hook carries the full LSM algebra, not just
+    * file layout). Every append — admissions AND tombstones alike — is
+    * an atomic versioned commit, so the key history is time-travelable
+    * per batch with no freeze step.
     */
   def writeKeyIndexBucketedVersioned(df: DataFrame, table: String,
-      keys: Seq[String], numBuckets: Int): Unit = {
-    val spark = df.sparkSession
-    Scratch.sweepOnce(spark)
-    BucketedManifest.create(spark, table,
-      Seq((s"${table}_keys", keyCounts(df, keys), keys, numBuckets)))
-    spark.range(1).select(lit(keys.mkString(",")).as("keys"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_meta")
-  }
+      keys: Seq[String], numBuckets: Int): Unit =
+    build(Versioned, KeyFamily, keys, df, table, numBuckets)
 
   /** Admit a delta's count rows as a new version (returns it). */
   def appendKeyIndexBucketedVersioned(delta: DataFrame, table: String,
-      keys: Seq[String]): Int = {
-    checkKeyMeta(delta.sparkSession, table, keys)
-    BucketedManifest.append(delta.sparkSession, table,
-      Seq((s"${table}_keys", keyCounts(delta, keys))))
-  }
+      keys: Seq[String]): Int =
+    admit(Versioned, KeyFamily, keys, delta, table)
 
   /** RAW LSM rows of the current version — consumers merge per key,
     * like [[readKeyIndexBucketed]].
     */
   def readKeyIndexBucketedVersioned(spark: SparkSession, table: String,
-      keys: Seq[String]): DataFrame = {
-    checkKeyMeta(spark, table, keys)
-    BucketedManifest.read(spark, table, s"${table}_keys")
-  }
+      keys: Seq[String]): DataFrame =
+    serve(KeyFamily, keys, spark, table)(
+      Versioned.read(spark, table, _)).head
 
   /** RAW LSM rows as of version `v` — the key history at that commit. */
   def readKeyIndexBucketedVersionedAsOf(spark: SparkSession,
-      table: String, keys: Seq[String], v: Int): DataFrame = {
-    checkKeyMeta(spark, table, keys)
-    BucketedManifest.readVersion(spark, table, s"${table}_keys", v)
-  }
+      table: String, keys: Seq[String], v: Int): DataFrame =
+    serve(KeyFamily, keys, spark, table)(
+      Versioned.readAsOf(spark, table, _, v)).head
 
   /** Negated-count tombstones, committed as their own version
     * ([[deleteFromKeyIndexBucketed]]'s contract — deletion is part of
     * the auditable history too).
     */
   def deleteFromKeyIndexBucketedVersioned(deleted: DataFrame,
-      table: String, keys: Seq[String]): Unit = {
-    checkKeyMeta(deleted.sparkSession, table, keys)
-    BucketedManifest.append(deleted.sparkSession, table,
-      Seq((s"${table}_keys",
-        keyCounts(deleted, keys).withColumn("n", -col("n"))))): Unit
-  }
-
-  private def keyMergeFn(df: DataFrame): DataFrame = {
-    val keys = df.columns.filter(_ != "n").toSeq
-    df.groupBy(keys.map(df(_)): _*).agg(sum(col("n")).as("n"))
-      .filter(col("n") =!= 0)
-  }
+      table: String, keys: Seq[String]): Unit =
+    deleteKeys(Versioned, deleted, table, keys)
 
   /** The LSM merge-compaction as version publication: split rows
     * re-aggregate, zero-total keys (collapsed tombstones) drop, and
@@ -1199,8 +1097,7 @@ object IndexStore {
     */
   def compactKeyIndexBucketedVersioned(spark: SparkSession,
       table: String): Unit =
-    BucketedManifest.compact(spark, table,
-      merges = Map(s"${table}_keys".toLowerCase -> (keyMergeFn _)))
+    Versioned.compact(spark, table, KeyFamily)
 
   /** Size-tiered cadence for the versioned key index: the smallest
     * generations MERGE (with the LSM re-aggregation — split rows
@@ -1211,8 +1108,8 @@ object IndexStore {
     */
   def maybeCompactKeyIndexBucketedVersioned(spark: SparkSession,
       table: String, maxGens: Int): Boolean =
-    BucketedManifest.compactTiered(spark, table, maxGens,
-      merges = Map(s"${table}_keys".toLowerCase -> (keyMergeFn _)))
+    Versioned.compactTiered(spark, table, KeyFamily, maxGens)
+
 
   /** Build + persist the IVF index under an explicit centroid frame
     * (pass [[Similarity.firstIdCentroids]] output for the
@@ -1269,17 +1166,13 @@ object IndexStore {
     * an object-store deployment swaps them for its FileSystem.
     */
   def deleteFromIvfIndex(ids: DataFrame, dir: String): Unit =
-    ids.select(col("id"))
-      .write.mode("append").parquet(s"$dir/dead.parquet")
+    appendDeadFile(ids, dir)
 
   /** The IVF artifact's standing tombstone set; the empty fallback's
     * id type comes from the artifact itself.
     */
   def readIvfDeadIds(spark: SparkSession, dir: String): DataFrame =
-    if (new java.io.File(s"$dir/dead.parquet").exists())
-      spark.read.parquet(s"$dir/dead.parquet")
-    else spark.read.parquet(s"$dir/ivf.parquet")
-      .select(col("id")).limit(0)
+    readDeadFile(spark, dir, spark.read.parquet(s"$dir/ivf.parquet"))
 
   /** (index minus tombstoned ids, centroids) — the frame serving must
     * rank over while tombstones are pending.
@@ -1402,15 +1295,11 @@ object IndexStore {
     * time travel.
     */
   def deleteFromIvfIndexVersioned(ids: DataFrame, dir: String): Unit =
-    ids.select(col("id"))
-      .write.mode("append").parquet(s"$dir/dead.parquet")
+    appendDeadFile(ids, dir)
 
   def readIvfVersionedDeadIds(spark: SparkSession,
       dir: String): DataFrame =
-    if (new java.io.File(s"$dir/dead.parquet").exists())
-      spark.read.parquet(s"$dir/dead.parquet")
-    else VersionedFlat.read(spark, s"$dir/enc")
-      .select(col("id")).limit(0)
+    readDeadFile(spark, dir, VersionedFlat.read(spark, s"$dir/enc"))
 
   /** (current enc minus tombstoned ids, centroids). */
   def readIvfIndexVersionedLive(spark: SparkSession, dir: String)
@@ -1421,29 +1310,16 @@ object IndexStore {
   }
 
   /** Publish the tombstone-excluded frame as the next version and
-    * clear the tombstones — publish STRICTLY BEFORE the clear, so a
-    * crash between the two leaves pending tombstones whose anti-join
-    * over the already-purged rows is a harmless no-op. Older versions
+    * clear the tombstones ([[purgeVersionedFlat]]: publish before the
+    * clear, CAS against the captured base version). Older versions
     * still hold the dead rows until vacuum (see
     * [[deleteFromIvfIndexVersioned]]).
-    *
-    * The base version is captured FIRST and passed to
-    * [[VersionedFlat.replace]] as `basedOn` (round-14 ADVICE): the
-    * excluded frame is computed from exactly that version, so an
-    * append that commits between the capture and the CAS raises
-    * ConcurrentModificationException instead of being silently erased
-    * by a purge built from a now-stale snapshot.
     */
   def purgeIvfIndexVersioned(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit = {
-    val v = VersionedFlat.currentVersion(s"$dir/enc")
-    VersionedFlat.replace(
-      VersionedFlat.readVersion(spark, s"$dir/enc", v)
-        .join(readIvfVersionedDeadIds(spark, dir), Seq("id"),
-          "left_anti"),
-      s"$dir/enc", targetFiles, basedOn = v)
-    deleteDirTree(new java.io.File(s"$dir/dead.parquet"))
-  }
+      targetFiles: Int = 1): Unit =
+    purgeVersionedFlat(spark, dir, "enc", readIvfVersionedDeadIds(spark, dir),
+      targetFiles)
+
 
   /** The int8 artifact on [[VersionedFlat]] manifests — the second
     * wiring, showing the store is artifact-agnostic: int8 has NO model
@@ -1504,17 +1380,48 @@ object IndexStore {
       .join(dead, Seq("id"), "left_anti")
     (if (targetFiles > 0) live.coalesce(targetFiles) else live)
       .write.mode("overwrite").parquet(tmp.getPath)
-    deleteDirTree(old)
+    Scratch.deleteRecursively(old)
     java.nio.file.Files.move(cur.toPath, old.toPath)
     java.nio.file.Files.move(tmp.toPath, cur.toPath)
-    deleteDirTree(old)
-    deleteDirTree(new java.io.File(s"$dir/dead.parquet"))
+    Scratch.deleteRecursively(old)
+    Scratch.deleteRecursively(new java.io.File(s"$dir/dead.parquet"))
   }
 
-  private def deleteDirTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      .foreach(deleteDirTree)
-    f.delete(): Unit
+  /** The flat artifacts' one tombstone writer: deleted ids append to
+    * `dir/dead.parquet`, the standing artifact untouched.
+    */
+  private def appendDeadFile(ids: DataFrame, dir: String): Unit =
+    ids.select(col("id"))
+      .write.mode("append").parquet(s"$dir/dead.parquet")
+
+  /** The flat artifacts' one tombstone reader: `dir/dead.parquet`, or
+    * an empty frame whose id type comes from the artifact itself
+    * (`typedFrom`, read only when there are no tombstones).
+    */
+  private def readDeadFile(spark: SparkSession, dir: String,
+      typedFrom: => DataFrame): DataFrame =
+    if (new java.io.File(s"$dir/dead.parquet").exists())
+      spark.read.parquet(s"$dir/dead.parquet")
+    else typedFrom.select(col("id")).limit(0)
+
+  /** Publish the versioned frame under `dir/sub` minus `dead` as its
+    * next version, then clear the tombstones — publish STRICTLY BEFORE
+    * the clear, so a crash between the two leaves pending tombstones
+    * whose anti-join over the already-purged rows is a harmless no-op.
+    * The base version is captured FIRST and passed to
+    * [[VersionedFlat.replace]] as `basedOn`: an append that commits
+    * between the capture and the CAS raises
+    * ConcurrentModificationException instead of being silently erased
+    * by a purge built from a now-stale snapshot.
+    */
+  private def purgeVersionedFlat(spark: SparkSession, dir: String,
+      sub: String, dead: DataFrame, targetFiles: Int): Unit = {
+    val v = VersionedFlat.currentVersion(s"$dir/$sub")
+    VersionedFlat.replace(
+      VersionedFlat.readVersion(spark, s"$dir/$sub", v)
+        .join(dead, Seq("id"), "left_anti"),
+      s"$dir/$sub", targetFiles, basedOn = v)
+    Scratch.deleteRecursively(new java.io.File(s"$dir/dead.parquet"))
   }
 
   /** Persist the int8-quantized corpus: `int8.parquet` (id long,
@@ -1581,14 +1488,10 @@ object IndexStore {
     * per-vector frames.
     */
   def deleteFromInt8Index(ids: DataFrame, dir: String): Unit =
-    ids.select(col("id"))
-      .write.mode("append").parquet(s"$dir/dead.parquet")
+    appendDeadFile(ids, dir)
 
   def readInt8DeadIds(spark: SparkSession, dir: String): DataFrame =
-    if (new java.io.File(s"$dir/dead.parquet").exists())
-      spark.read.parquet(s"$dir/dead.parquet")
-    else spark.read.parquet(s"$dir/int8.parquet")
-      .select(col("id")).limit(0)
+    readDeadFile(spark, dir, spark.read.parquet(s"$dir/int8.parquet"))
 
   /** The int8 corpus minus tombstoned ids, decoded for serving. */
   def readInt8IndexLive(spark: SparkSession, dir: String): DataFrame =
@@ -1662,14 +1565,10 @@ object IndexStore {
     * model — stay, like the IVF centroids.
     */
   def deleteFromPqIndex(ids: DataFrame, dir: String): Unit =
-    ids.select(col("id"))
-      .write.mode("append").parquet(s"$dir/dead.parquet")
+    appendDeadFile(ids, dir)
 
   def readPqDeadIds(spark: SparkSession, dir: String): DataFrame =
-    if (new java.io.File(s"$dir/dead.parquet").exists())
-      spark.read.parquet(s"$dir/dead.parquet")
-    else spark.read.parquet(s"$dir/codes.parquet")
-      .select(col("id")).limit(0)
+    readDeadFile(spark, dir, spark.read.parquet(s"$dir/codes.parquet"))
 
   /** The PQ corpus codes minus tombstoned ids. */
   def readPqCodesLive(spark: SparkSession, dir: String): DataFrame =
@@ -1747,14 +1646,11 @@ object IndexStore {
     * vacuum (see [[deleteFromIvfIndexVersioned]]).
     */
   def deleteFromPqIndexVersioned(ids: DataFrame, dir: String): Unit =
-    ids.select(col("id"))
-      .write.mode("append").parquet(s"$dir/dead.parquet")
+    appendDeadFile(ids, dir)
 
   def readPqVersionedDeadIds(spark: SparkSession,
       dir: String): DataFrame =
-    if (new java.io.File(s"$dir/dead.parquet").exists())
-      spark.read.parquet(s"$dir/dead.parquet")
-    else readPqCodesVersioned(spark, dir).select(col("id")).limit(0)
+    readDeadFile(spark, dir, readPqCodesVersioned(spark, dir))
 
   /** The current code frame minus tombstoned ids — exclusion BEFORE
     * ADC ranking, so next-best neighbors promote in.
@@ -1770,15 +1666,10 @@ object IndexStore {
     * captured `basedOn` stale-frame guard).
     */
   def purgePqIndexVersioned(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit = {
-    val v = VersionedFlat.currentVersion(s"$dir/codes")
-    VersionedFlat.replace(
-      VersionedFlat.readVersion(spark, s"$dir/codes", v)
-        .join(readPqVersionedDeadIds(spark, dir), Seq("id"),
-          "left_anti"),
-      s"$dir/codes", targetFiles, basedOn = v)
-    deleteDirTree(new java.io.File(s"$dir/dead.parquet"))
-  }
+      targetFiles: Int = 1): Unit =
+    purgeVersionedFlat(spark, dir, "codes", readPqVersionedDeadIds(spark, dir),
+      targetFiles)
+
 
   /** Persist the COMPOSED IVF-PQ index — the 100 TB ANN architecture
     * end to end on disk: `centroids.parquet` (probe routing),
@@ -1830,14 +1721,10 @@ object IndexStore {
     * codebooks (both model halves) stay.
     */
   def deleteFromIvfPqIndex(ids: DataFrame, dir: String): Unit =
-    ids.select(col("id"))
-      .write.mode("append").parquet(s"$dir/dead.parquet")
+    appendDeadFile(ids, dir)
 
   def readIvfPqDeadIds(spark: SparkSession, dir: String): DataFrame =
-    if (new java.io.File(s"$dir/dead.parquet").exists())
-      spark.read.parquet(s"$dir/dead.parquet")
-    else spark.read.parquet(s"$dir/ivfpq.parquet")
-      .select(col("id")).limit(0)
+    readDeadFile(spark, dir, spark.read.parquet(s"$dir/ivfpq.parquet"))
 
   /** (enc minus tombstoned ids, centroids). */
   def readIvfPqIndexLive(spark: SparkSession, dir: String)
@@ -1916,15 +1803,11 @@ object IndexStore {
     * contract; both model halves stay.
     */
   def deleteFromIvfPqIndexVersioned(ids: DataFrame, dir: String): Unit =
-    ids.select(col("id"))
-      .write.mode("append").parquet(s"$dir/dead.parquet")
+    appendDeadFile(ids, dir)
 
   def readIvfPqVersionedDeadIds(spark: SparkSession,
       dir: String): DataFrame =
-    if (new java.io.File(s"$dir/dead.parquet").exists())
-      spark.read.parquet(s"$dir/dead.parquet")
-    else VersionedFlat.read(spark, s"$dir/enc")
-      .select(col("id")).limit(0)
+    readDeadFile(spark, dir, VersionedFlat.read(spark, s"$dir/enc"))
 
   /** (current enc minus tombstoned ids, centroids) — exclusion before
     * probe-join and ranking.
@@ -1942,15 +1825,10 @@ object IndexStore {
     * guard).
     */
   def purgeIvfPqIndexVersioned(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit = {
-    val v = VersionedFlat.currentVersion(s"$dir/enc")
-    VersionedFlat.replace(
-      VersionedFlat.readVersion(spark, s"$dir/enc", v)
-        .join(readIvfPqVersionedDeadIds(spark, dir), Seq("id"),
-          "left_anti"),
-      s"$dir/enc", targetFiles, basedOn = v)
-    deleteDirTree(new java.io.File(s"$dir/dead.parquet"))
-  }
+      targetFiles: Int = 1): Unit =
+    purgeVersionedFlat(spark, dir, "enc", readIvfPqVersionedDeadIds(spark, dir),
+      targetFiles)
+
 
   /** Reconstruct the PqModel from the codebook artifact (bounded:
     * m·ks rows of ds doubles — driver-side by the same contract as

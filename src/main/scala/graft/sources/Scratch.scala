@@ -68,7 +68,10 @@ object Scratch {
     try ProcessHandle.of(pid).isPresent
     catch { case _: Throwable => true } // unsure → keep
 
-  private def deleteRecursively(f: File): Unit = {
+  /** Recursive delete: children via `listFiles`, then the path itself;
+    * a missing path is a no-op.
+    */
+  private[graft] def deleteRecursively(f: File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty[File])
       .foreach(deleteRecursively)
     f.delete(): Unit

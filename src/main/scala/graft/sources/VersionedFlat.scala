@@ -99,12 +99,6 @@ object VersionedFlat {
     */
   private val tmpNonce = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def deleteTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      .foreach(deleteTree)
-    f.delete(): Unit
-  }
-
   private def listNames(dir: String): Seq[String] =
     Option(new java.io.File(dir).listFiles())
       .getOrElse(Array.empty[java.io.File]).toSeq.map(_.getName)
@@ -273,7 +267,7 @@ object VersionedFlat {
     * concurrent writers join at [[append]] time.
     */
   def write(df: DataFrame, dir: String): Unit = {
-    deleteTree(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     new java.io.File(dir).mkdirs()
     val ok = tryCommit(dir, 1, Seq(writeBatch(df, claimBatchDir(dir))))
     require(ok, s"init of $dir raced a concurrent writer — " +
@@ -463,6 +457,6 @@ object VersionedFlat {
         case BatchRe(_) => !referenced(f.getName)
         case _ => false
       }))
-      .foreach(deleteTree)
+      .foreach(Scratch.deleteRecursively)
   }
 }

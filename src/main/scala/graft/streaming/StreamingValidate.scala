@@ -631,25 +631,83 @@ object StreamingValidate {
       minQuality: Double = 0.7, minTokens: Int = 10,
       lang: String = "en", salt: String = "",
       nShards: Int = 8): DataFrame = {
-    import graft.ext.{Dedup, TextAnalysis}
     val (sh, bandIdx) = graft.sources.IndexStore
       .readDedupIndexBucketed(spark, indexTable, numHashes, bands, k)
-    serveAvailableNow(spark, newDocsDir, filesPerTrigger = 1, batch => {
-      val dupIds = Dedup.nearDuplicatesAgainstIndex(
-          batch.select(col("doc_id").as("id"),
-            TextAnalysis.tokens(col("text")).as("toks")),
-          sh, bandIdx, threshold, numHashes, bands, k)
-        .select(col("new_id").as("doc_id")).distinct()
-      batch.join(dupIds, Seq("doc_id"), "left_anti")
-        .filter(TextAnalysis.qualityScore(col("text")) >= minQuality &&
-          TextAnalysis.langId(col("text")) === lang &&
-          TextAnalysis.tokenCount(col("text")) >= minTokens)
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long")
-            .as("n_tokens"),
-          (Dedup.hash48(concat(lit(salt),
-            col("doc_id").cast("string"))) % nShards).as("shard"))
-    })
+    serveAvailableNow(spark, newDocsDir, filesPerTrigger = 1, batch =>
+      admitRecords(gatedSurvivors(batch, sh, bandIdx, None, threshold,
+        numHashes, bands, k, minQuality, minTokens, lang), salt, nShards))
+  }
+
+  /** The gated ingests' one screen: documents with a verified near-dup
+    * pair ≥ `threshold` against (sh, bandIdx) are rejected, then those
+    * whose id is in `takenIds` (the identity gate, when given), then
+    * the quality / language / minimum-length gates.
+    */
+  private def gatedSurvivors(b: DataFrame, sh: DataFrame,
+      bandIdx: DataFrame, takenIds: Option[DataFrame], threshold: Double,
+      numHashes: Int, bands: Int, k: Int, minQuality: Double,
+      minTokens: Int, lang: String): DataFrame = {
+    import graft.ext.{Dedup, TextAnalysis}
+    val dupIds = Dedup.nearDuplicatesAgainstIndex(docToks(b),
+        sh, bandIdx, threshold, numHashes, bands, k)
+      .select(col("new_id").as("doc_id")).distinct()
+    val fresh = b.join(dupIds, Seq("doc_id"), "left_anti")
+    takenIds.fold(fresh)(fresh.join(_, Seq("doc_id"), "left_anti"))
+      .filter(TextAnalysis.qualityScore(col("text")) >= minQuality &&
+        TextAnalysis.langId(col("text")) === lang &&
+        TextAnalysis.tokenCount(col("text")) >= minTokens)
+  }
+
+  /** `(doc_id, text)` documents as the `(id, toks)` frame the MinHash
+    * index screens and admits.
+    */
+  private def docToks(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("id"),
+      graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
+
+  /** The admit record a downstream packing stage consumes:
+    * `(doc_id, n_tokens, shard)`.
+    */
+  private def admitRecords(sv: DataFrame, salt: String,
+      nShards: Int): DataFrame =
+    sv.select(col("doc_id"),
+      graft.ext.TextAnalysis.tokenCount(col("text")).cast("long")
+        .as("n_tokens"),
+      (graft.ext.Dedup.hash48(concat(lit(salt),
+        col("doc_id").cast("string"))) % nShards).as("shard"))
+
+  /** The gated runs' one check-then-admit loop: one AvailableNow run
+    * over `newDocsDir`, one file per micro-batch. Each batch's
+    * `survivors` are cached, sunk as admit records to `sinkDir`
+    * strictly before `admit` receives their `(id, toks)` frame, so the
+    * check never sees the batch's own admissions. An absent sink is
+    * first created empty with the record schema.
+    */
+  private def gatedLoop(spark: org.apache.spark.sql.SparkSession,
+      newDocsDir: String, checkpointDir: String, sinkDir: String,
+      salt: String, nShards: Int, survivors: DataFrame => DataFrame)(
+      admit: DataFrame => Unit): Unit = {
+    import org.apache.spark.sql.streaming.Trigger
+    val batchInput = spark.read.parquet(newDocsDir)
+    if (!new java.io.File(sinkDir).exists())
+      admitRecords(survivors(batchInput.limit(0)), salt, nShards)
+        .write.mode("overwrite").parquet(sinkDir)
+    val reader = spark.readStream.schema(batchInput.schema)
+      .option("maxFilesPerTrigger", "1").parquet(newDocsDir)
+    val writer0 = reader.writeStream
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val sv = survivors(b).cache()
+        try {
+          admitRecords(sv, salt, nShards)
+            .write.mode("append").parquet(sinkDir)
+          admit(docToks(sv))
+        } finally { sv.unpersist(blocking = false); () }
+      }
+    val writer = if (checkpointDir == null) writer0
+      else writer0.option("checkpointLocation", checkpointDir)
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    q.processAllAvailable()
+    q.stop()
   }
 
   /** The gated composition with a GROWING index — check-then-admit
@@ -679,51 +737,18 @@ object StreamingValidate {
       minQuality: Double = 0.7, minTokens: Int = 10,
       lang: String = "en", salt: String = "", nShards: Int = 8,
       checkpointDir: String = null, sinkDir: String): Unit = {
-    import graft.ext.{Dedup, TextAnalysis}
-    import org.apache.spark.sql.streaming.Trigger
-    def survivors(b: DataFrame): DataFrame = {
-      val (sh, bandIdx) = graft.sources.IndexStore
-        .readDedupIndexBucketed(spark, indexTable, numHashes, bands, k)
-      val dupIds = Dedup.nearDuplicatesAgainstIndex(
-          b.select(col("doc_id").as("id"),
-            TextAnalysis.tokens(col("text")).as("toks")),
-          sh, bandIdx, threshold, numHashes, bands, k)
-        .select(col("new_id").as("doc_id")).distinct()
-      b.join(dupIds, Seq("doc_id"), "left_anti")
-        .filter(TextAnalysis.qualityScore(col("text")) >= minQuality &&
-          TextAnalysis.langId(col("text")) === lang &&
-          TextAnalysis.tokenCount(col("text")) >= minTokens)
+    gatedLoop(spark, newDocsDir, checkpointDir, sinkDir, salt, nShards,
+      b => {
+        val (sh, bandIdx) = graft.sources.IndexStore
+          .readDedupIndexBucketed(spark, indexTable, numHashes, bands, k)
+        gatedSurvivors(b, sh, bandIdx, None, threshold, numHashes, bands,
+          k, minQuality, minTokens, lang)
+      }) { toks =>
+      graft.sources.IndexStore.appendDedupIndexBucketed(toks, indexTable,
+        numHashes, bands, k)
+      Seq(s"${indexTable}_sh", s"${indexTable}_bands")
+        .foreach(spark.catalog.refreshTable)
     }
-    def admitRecords(sv: DataFrame): DataFrame =
-      sv.select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long")
-          .as("n_tokens"),
-        (Dedup.hash48(concat(lit(salt),
-          col("doc_id").cast("string"))) % nShards).as("shard"))
-    val batchInput = spark.read.parquet(newDocsDir)
-    if (!new java.io.File(sinkDir).exists())
-      admitRecords(survivors(batchInput.limit(0)))
-        .write.mode("overwrite").parquet(sinkDir)
-    val reader = spark.readStream.schema(batchInput.schema)
-      .option("maxFilesPerTrigger", "1").parquet(newDocsDir)
-    val writer0 = reader.writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val sv = survivors(b).cache()
-        try {
-          admitRecords(sv).write.mode("append").parquet(sinkDir)
-          graft.sources.IndexStore.appendDedupIndexBucketed(
-            sv.select(col("doc_id").as("id"),
-              TextAnalysis.tokens(col("text")).as("toks")),
-            indexTable, numHashes, bands, k)
-          Seq(s"${indexTable}_sh", s"${indexTable}_bands")
-            .foreach(spark.catalog.refreshTable)
-        } finally { sv.unpersist(blocking = false); () }
-      }
-    val writer = if (checkpointDir == null) writer0
-      else writer0.option("checkpointLocation", checkpointDir)
-    val q = writer.trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable()
-    q.stop()
   }
 
   /** [[gatedIngestRun]] over the VERSIONED MinHash family with a
@@ -771,61 +796,26 @@ object StreamingValidate {
       checkpointDir: String = null, sinkDir: String,
       autoCompactGens: Int = 0, autoVacuumRetain: Int = 0,
       vacuumOrphanAgeMs: Long = 0L): Unit = {
-    import graft.ext.{Dedup, TextAnalysis}
-    import org.apache.spark.sql.streaming.Trigger
-    def survivors(b: DataFrame): DataFrame = {
-      val (sh, bandIdx) = graft.sources.IndexStore
-        .readDedupIndexBucketedVersioned(spark, indexTable, numHashes,
-          bands, k)
-      val dupIds = Dedup.nearDuplicatesAgainstIndex(
-          b.select(col("doc_id").as("id"),
-            TextAnalysis.tokens(col("text")).as("toks")),
-          sh, bandIdx, threshold, numHashes, bands, k)
-        .select(col("new_id").as("doc_id")).distinct()
-      b.join(dupIds, Seq("doc_id"), "left_anti")
-        .filter(TextAnalysis.qualityScore(col("text")) >= minQuality &&
-          TextAnalysis.langId(col("text")) === lang &&
-          TextAnalysis.tokenCount(col("text")) >= minTokens)
+    gatedLoop(spark, newDocsDir, checkpointDir, sinkDir, salt, nShards,
+      b => {
+        val (sh, bandIdx) = graft.sources.IndexStore
+          .readDedupIndexBucketedVersioned(spark, indexTable, numHashes,
+            bands, k)
+        gatedSurvivors(b, sh, bandIdx, None, threshold, numHashes, bands,
+          k, minQuality, minTokens, lang)
+      }) { toks =>
+      // the append's manifest commit IS the per-batch freeze on the
+      // gen-manifest store: version k+1 = the corpus after batch k, no
+      // separate snapshot step
+      graft.sources.IndexStore.appendDedupIndexBucketedVersioned(toks,
+        indexTable, numHashes, bands, k): Unit
+      if (autoCompactGens > 0)
+        graft.sources.IndexStore.maybeCompactDedupIndexBucketedVersioned(
+          spark, indexTable, autoCompactGens): Unit
+      if (autoVacuumRetain > 0)
+        graft.sources.BucketedManifest.vacuum(spark, indexTable,
+          retain = autoVacuumRetain, orphanMinAgeMs = vacuumOrphanAgeMs)
     }
-    def admitRecords(sv: DataFrame): DataFrame =
-      sv.select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long")
-          .as("n_tokens"),
-        (Dedup.hash48(concat(lit(salt),
-          col("doc_id").cast("string"))) % nShards).as("shard"))
-    val batchInput = spark.read.parquet(newDocsDir)
-    if (!new java.io.File(sinkDir).exists())
-      admitRecords(survivors(batchInput.limit(0)))
-        .write.mode("overwrite").parquet(sinkDir)
-    val reader = spark.readStream.schema(batchInput.schema)
-      .option("maxFilesPerTrigger", "1").parquet(newDocsDir)
-    val writer0 = reader.writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val sv = survivors(b).cache()
-        try {
-          admitRecords(sv).write.mode("append").parquet(sinkDir)
-          // the append's manifest commit IS the per-batch freeze on
-          // the gen-manifest store (round-15): version k+1 = the
-          // corpus after batch k, no separate snapshot step
-          graft.sources.IndexStore.appendDedupIndexBucketedVersioned(
-            sv.select(col("doc_id").as("id"),
-              TextAnalysis.tokens(col("text")).as("toks")),
-            indexTable, numHashes, bands, k): Unit
-          if (autoCompactGens > 0)
-            graft.sources.IndexStore
-              .maybeCompactDedupIndexBucketedVersioned(spark,
-                indexTable, autoCompactGens): Unit
-          if (autoVacuumRetain > 0)
-            graft.sources.BucketedManifest.vacuum(spark, indexTable,
-              retain = autoVacuumRetain,
-              orphanMinAgeMs = vacuumOrphanAgeMs)
-        } finally { sv.unpersist(blocking = false); () }
-      }
-    val writer = if (checkpointDir == null) writer0
-      else writer0.option("checkpointLocation", checkpointDir)
-    val q = writer.trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable()
-    q.stop()
   }
 
   /** [[gatedIngestRunVersioned]] over the MULTI-INDEX pipeline family
@@ -870,65 +860,29 @@ object StreamingValidate {
       checkpointDir: String = null, sinkDir: String,
       autoCompactGens: Int = 0, autoVacuumRetain: Int = 0,
       vacuumOrphanAgeMs: Long = 0L): Unit = {
-    import graft.ext.{Dedup, TextAnalysis}
-    import org.apache.spark.sql.streaming.Trigger
-    def survivors(b: DataFrame): DataFrame = {
-      val (sh, bandIdx) = graft.sources.IndexStore
-        .readDedupIndexBucketedVersioned(spark, indexTable, numHashes,
-          bands, k)
-      val dupIds = Dedup.nearDuplicatesAgainstIndex(
-          b.select(col("doc_id").as("id"),
-            TextAnalysis.tokens(col("text")).as("toks")),
-          sh, bandIdx, threshold, numHashes, bands, k)
-        .select(col("new_id").as("doc_id")).distinct()
-      // the identity gate: ids already counted in the key member
-      val takenIds = graft.sources.IndexStore
-        .readPipelineKeyIndex(spark, indexTable)
-        .groupBy("id").agg(sum(col("n")).as("n"))
-        .filter(col("n") > 0)
-        .select(col("id").as("doc_id"))
-      b.join(dupIds, Seq("doc_id"), "left_anti")
-        .join(takenIds, Seq("doc_id"), "left_anti")
-        .filter(TextAnalysis.qualityScore(col("text")) >= minQuality &&
-          TextAnalysis.langId(col("text")) === lang &&
-          TextAnalysis.tokenCount(col("text")) >= minTokens)
+    gatedLoop(spark, newDocsDir, checkpointDir, sinkDir, salt, nShards,
+      b => {
+        val (sh, bandIdx) = graft.sources.IndexStore
+          .readDedupIndexBucketedVersioned(spark, indexTable, numHashes,
+            bands, k)
+        // the identity gate: ids already counted in the key member
+        val takenIds = graft.sources.IndexStore
+          .readPipelineKeyIndex(spark, indexTable)
+          .groupBy("id").agg(sum(col("n")).as("n"))
+          .filter(col("n") > 0)
+          .select(col("id").as("doc_id"))
+        gatedSurvivors(b, sh, bandIdx, Some(takenIds), threshold,
+          numHashes, bands, k, minQuality, minTokens, lang)
+      }) { toks =>
+      graft.sources.IndexStore.appendPipelineIndexVersioned(toks,
+        indexTable, numHashes, bands, k): Unit
+      if (autoCompactGens > 0)
+        graft.sources.IndexStore.maybeCompactPipelineIndexVersioned(spark,
+          indexTable, autoCompactGens): Unit
+      if (autoVacuumRetain > 0)
+        graft.sources.BucketedManifest.vacuum(spark, indexTable,
+          retain = autoVacuumRetain, orphanMinAgeMs = vacuumOrphanAgeMs)
     }
-    def admitRecords(sv: DataFrame): DataFrame =
-      sv.select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long")
-          .as("n_tokens"),
-        (Dedup.hash48(concat(lit(salt),
-          col("doc_id").cast("string"))) % nShards).as("shard"))
-    val batchInput = spark.read.parquet(newDocsDir)
-    if (!new java.io.File(sinkDir).exists())
-      admitRecords(survivors(batchInput.limit(0)))
-        .write.mode("overwrite").parquet(sinkDir)
-    val reader = spark.readStream.schema(batchInput.schema)
-      .option("maxFilesPerTrigger", "1").parquet(newDocsDir)
-    val writer0 = reader.writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val sv = survivors(b).cache()
-        try {
-          admitRecords(sv).write.mode("append").parquet(sinkDir)
-          graft.sources.IndexStore.appendPipelineIndexVersioned(
-            sv.select(col("doc_id").as("id"),
-              TextAnalysis.tokens(col("text")).as("toks")),
-            indexTable, numHashes, bands, k): Unit
-          if (autoCompactGens > 0)
-            graft.sources.IndexStore
-              .maybeCompactPipelineIndexVersioned(spark, indexTable,
-                autoCompactGens): Unit
-          if (autoVacuumRetain > 0)
-            graft.sources.BucketedManifest.vacuum(spark, indexTable,
-              retain = autoVacuumRetain,
-              orphanMinAgeMs = vacuumOrphanAgeMs)
-        } finally { sv.unpersist(blocking = false); () }
-      }
-    val writer = if (checkpointDir == null) writer0
-      else writer0.option("checkpointLocation", checkpointDir)
-    val q = writer.trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable()
-    q.stop()
   }
 
   /** The SUBSTRING twin of [[nearDupIngestStream]]: a stream of
@@ -1447,16 +1401,10 @@ object StreamingValidate {
     // (they'd ride the aggregate twice). Callers re-ADMITTING the same
     // stream still owe a rebuilt index per invocation — resumable
     // ingestion is [[uniqueIngestRun]] with a checkpoint.
-    deleteDir(new java.io.File(sinkDir))
+    graft.sources.Scratch.deleteRecursively(new java.io.File(sinkDir))
     uniqueIngestRun(spark, newKeysDir, indexTable, keys,
       checkpointDir = null, sinkDir = sinkDir)
     uniqueViolationTotals(spark, sinkDir, keys)
-  }
-
-  private def deleteDir(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      .foreach(deleteDir)
-    f.delete(): Unit
   }
 
   /** One AvailableNow RUN of the check-then-admit loop against

@@ -379,22 +379,30 @@ class ValidateSpec extends SparkSpec {
     // string (never invalid); the inputs run them row-parsed, with a
     // dictionary-parsed field, with a dictionary field that falls back
     // to row parsing past its cardinality cap (5 distinct n values over
-    // a cap of 2), and under a date format that cannot compile
-    // (schema-error path: no parse expression, raw column kept).
-    val csv = "d,n,s\n2024-01-31,1.5,a\nnot-a-date,2.5,b\n,xx,c\n" +
-      "2024-01-31,7,\n9999-99,0,d\n"
+    // a cap of 2), under a date format that cannot compile
+    // (schema-error path: no parse expression, raw column kept), and
+    // over a table where 39 of the 40 row-parsed cells are invalid.
+    // The fused frame persists at MEMORY_AND_DISK (Spark's
+    // `spark.sql.defaultCacheStorageLevel`), so a table whose bad cells
+    // all ride along as raw strings spills instead of growing the heap.
+    val path = write("fused.csv", "d,n,s\n2024-01-31,1.5,a\n" +
+      "not-a-date,2.5,b\n,xx,c\n2024-01-31,7,\n9999-99,0,d\n")
+    val badPath = write("fused_bad.csv", "d,n,s\n" + (0 until 20).map(i =>
+      s"bad$i,${if (i == 0) "1.5" else s"x$i"},s$i\n").mkString)
     def schema(d: Field) = TableSchema(fields = Seq(d, Field("n", "number"),
       Field("s", "string")), missingValues = Seq(""))
     val plain = schema(Field("d", "date"))
     val inputs = Seq(
-      ("row-parsed", plain, Set.empty[String], Validate.MaxDictValues),
-      ("dictionary", plain, Set("d"), Validate.MaxDictValues),
-      ("dictionary fallback", plain, Set("n"), 2L),
+      ("row-parsed", plain, Set.empty[String], Validate.MaxDictValues,
+        path),
+      ("dictionary", plain, Set("d"), Validate.MaxDictValues, path),
+      ("dictionary fallback", plain, Set("n"), 2L, path),
       ("schema-error", schema(Field("d", "date", format = "%G-%V-%u")),
-        Set.empty[String], Validate.MaxDictValues))
-    val path = write("fused.csv", csv)
-    for ((label, sch, dictFields, cap) <- inputs) {
-      val raw = Validate.readResource(spark, Resource("t", path, sch))
+        Set.empty[String], Validate.MaxDictValues, path),
+      ("mostly invalid", plain, Set.empty[String], Validate.MaxDictValues,
+        badPath))
+    for ((label, sch, dictFields, cap, csv) <- inputs) {
+      val raw = Validate.readResource(spark, Resource("t", csv, sch))
       val (typedL, errsL, failedL) =
         Validate.parseTable(raw, sch, dictFields, cap)
       val buf = scala.collection.mutable.ListBuffer[
@@ -416,6 +424,12 @@ class ValidateSpec extends SparkSpec {
             .toSeq.sorted
         assert(rows(typedL) === rows(typedF), label)
         assert(buf.size === 1, s"$label: fused mode must register its one cache")
+        assert(buf.head.storageLevel ===
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, label)
+        if (label == "mostly invalid")
+          assert(errsF.filterNot(_.passed)
+            .map(e => (e.field, e.violations)).toSet ===
+            Set(("d", 20L), ("n", 19L)), errsF.mkString("; "))
       } finally buf.foreach(_.unpersist(blocking = false))
     }
   }

@@ -424,6 +424,76 @@ class BucketedManifestSpec extends SparkSpec {
       BucketedManifest.drop(spark, fam, Seq(kt, s"${fam}_meta"))
   }
 
+  test("every versioned family's _meta guard fails loudly on read and " +
+      "append, naming the table, and the refused append commits nothing") {
+    import graft.ext.Multimodal
+    val docs = graft.Tables.load(spark, "/root/testdata/sf0.001",
+      "documents").filter(col("doc_id") % 25 === 0)
+    val toks = docs.select(col("doc_id").as("id"),
+      graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
+    val strs = docs.select(col("doc_id").as("id"), col("text").as("s"))
+    val hashes = Multimodal.perceptualHash(
+        Multimodal.synthesizeNearDupImages(docs, "doc_id", every = 5))
+      .select(col("id"), col("dhash"))
+    val keyed = docs.select("doc_id", "n_chars")
+    // (family, members, build, read with a wrong parameter, append
+    // with a wrong parameter)
+    val families: Seq[(String, Seq[String], () => Unit, () => Any,
+        () => Any)] = Seq(
+      ("bm_mm_dedup", Seq("_sh", "_bands"),
+        () => IndexStore.writeDedupIndexBucketedVersioned(toks,
+          "bm_mm_dedup", 4),
+        () => IndexStore.readDedupIndexBucketedVersioned(spark,
+          "bm_mm_dedup", numHashes = 16),
+        () => IndexStore.appendDedupIndexBucketedVersioned(toks,
+          "bm_mm_dedup", bands = 8)),
+      ("bm_mm_substr", Seq("_grams"),
+        () => IndexStore.writeSubstringIndexBucketedVersioned(toks,
+          "bm_mm_substr", 4, k = 8),
+        () => IndexStore.readSubstringIndexBucketedVersioned(spark,
+          "bm_mm_substr", k = 6),
+        () => IndexStore.appendSubstringIndexBucketedVersioned(toks,
+          "bm_mm_substr", k = 6)),
+      ("bm_mm_edit", Seq("_segs", "_str", "_bylen"),
+        () => IndexStore.writeEditIndexBucketedVersioned(strs,
+          "bm_mm_edit", 4, d = 3),
+        () => IndexStore.readEditIndexBucketedVersioned(spark,
+          "bm_mm_edit", d = 2),
+        () => IndexStore.appendEditIndexBucketedVersioned(strs,
+          "bm_mm_edit", d = 2)),
+      ("bm_mm_phash", Seq("_bands"),
+        () => IndexStore.writePhashIndexBucketedVersioned(hashes,
+          "bm_mm_phash", 4, bands = 8),
+        () => IndexStore.readPhashIndexBucketedVersioned(spark,
+          "bm_mm_phash", bands = 4),
+        () => IndexStore.appendPhashIndexBucketedVersioned(hashes,
+          "bm_mm_phash", bands = 4)),
+      ("bm_mm_key", Seq("_keys"),
+        () => IndexStore.writeKeyIndexBucketedVersioned(keyed, "bm_mm_key",
+          Seq("doc_id"), 4),
+        () => IndexStore.readKeyIndexBucketedVersioned(spark, "bm_mm_key",
+          Seq("doc_id", "n_chars")),
+        () => IndexStore.appendKeyIndexBucketedVersioned(keyed,
+          "bm_mm_key", Seq("doc_id", "n_chars"))))
+    for ((fam, members, build, badRead, badAppend) <- families)
+      try {
+        build()
+        def counts = members.map(m => spark.table(fam + m).count())
+        val before = counts
+        assert(before.forall(_ > 0), s"$fam must be built non-empty")
+        for ((op, call) <- Seq("read" -> badRead, "append" -> badAppend)) {
+          val e = intercept[IllegalArgumentException](call())
+          assert(e.getMessage.contains(s"at $fam was built with"),
+            s"$fam $op: ${e.getMessage}")
+        }
+        assert(BucketedManifest.currentVersion(spark, fam) === 1,
+          s"$fam: a refused append committed a version")
+        assert(counts == before, s"$fam: a refused append wrote rows")
+      } finally
+        BucketedManifest.drop(spark, fam, members.map(fam + _) :+
+          s"${fam}_meta")
+  }
+
   test("attach: a fresh catalog re-derives the family from the " +
       "manifest chain and files alone — reads, time travel, new " +
       "commits, and the exchange-free plan all survive catalog loss") {

@@ -989,6 +989,69 @@ class BucketingSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS ktier_spec$s")
   }
 
+  test("every family's _meta guard fails loudly on read and append, " +
+      "naming the table, and the refused append writes nothing") {
+    import graft.ext.Multimodal
+    val docs = Tables.load(spark, dir, "documents")
+      .filter(col("doc_id") % 25 === 0)
+    val toks = docs.select(col("doc_id").as("id"),
+      graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
+    val strs = docs.select(col("doc_id").as("id"), col("text").as("s"))
+    val hashes = Multimodal.perceptualHash(
+        Multimodal.synthesizeNearDupImages(docs, "doc_id", every = 5))
+      .select(col("id"), col("dhash"))
+    val keyed = docs.select("doc_id", "n_chars")
+    // (table, members, build, read with a wrong parameter, append with
+    // a wrong parameter)
+    val families: Seq[(String, Seq[String], () => Unit, () => Any,
+        () => Any)] = Seq(
+      ("mm_dedup", Seq("_sh", "_bands"),
+        () => IndexStore.writeDedupIndexBucketed(toks, "mm_dedup", 4),
+        () => IndexStore.readDedupIndexBucketed(spark, "mm_dedup",
+          bands = 8),
+        () => IndexStore.appendDedupIndexBucketed(toks, "mm_dedup",
+          k = 5)),
+      ("mm_substr", Seq("_grams"),
+        () => IndexStore.writeSubstringIndexBucketed(toks, "mm_substr", 4,
+          k = 8),
+        () => IndexStore.readSubstringIndexBucketed(spark, "mm_substr",
+          k = 6),
+        () => IndexStore.appendSubstringIndexBucketed(toks, "mm_substr",
+          k = 6)),
+      ("mm_edit", Seq("_segs", "_str", "_bylen"),
+        () => IndexStore.writeEditIndexBucketed(strs, "mm_edit", 4, d = 3),
+        () => IndexStore.readEditIndexBucketed(spark, "mm_edit", d = 2),
+        () => IndexStore.appendEditIndexBucketed(strs, "mm_edit", d = 2)),
+      ("mm_phash", Seq("_bands"),
+        () => IndexStore.writePhashIndexBucketed(hashes, "mm_phash", 4,
+          bands = 8),
+        () => IndexStore.readPhashIndexBucketed(spark, "mm_phash",
+          bands = 4),
+        () => IndexStore.appendPhashIndexBucketed(hashes, "mm_phash",
+          bands = 4)),
+      ("mm_key", Seq("_keys"),
+        () => IndexStore.writeKeyIndexBucketed(keyed, "mm_key",
+          Seq("doc_id"), 4),
+        () => IndexStore.readKeyIndexBucketed(spark, "mm_key",
+          Seq("doc_id", "n_chars")),
+        () => IndexStore.appendKeyIndexBucketed(keyed, "mm_key",
+          Seq("doc_id", "n_chars"))))
+    for ((table, members, build, badRead, badAppend) <- families)
+      try {
+        build()
+        def counts = members.map(m => spark.table(table + m).count())
+        val before = counts
+        assert(before.forall(_ > 0), s"$table must be built non-empty")
+        for ((op, call) <- Seq("read" -> badRead, "append" -> badAppend)) {
+          val e = intercept[IllegalArgumentException](call())
+          assert(e.getMessage.contains(s"at $table was built with"),
+            s"$table $op: ${e.getMessage}")
+        }
+        assert(counts == before, s"$table: a refused append wrote rows")
+      } finally for (m <- members :+ "_meta")
+        spark.sql(s"DROP TABLE IF EXISTS $table$m")
+  }
+
   test("bucketed aggregation on the bucket key skips the shuffle") {
     val li = Tables.load(spark, dir, "lineitem")
       .select("l_orderkey", "l_linenumber")
