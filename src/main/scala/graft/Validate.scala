@@ -20,6 +20,10 @@ import graft.schema._
   *   - [[validateTyped]]: checks over already-typed DataFrames (the
   *     parquet harness path — parsing is a no-op there).
   *
+  * Both run the package as one task graph ([[validatePackage]]): every
+  * resource loads concurrently, and each check starts as soon as the
+  * tables it reads are loaded (and, on the CSV path, cached).
+  *
   * Scale notes (100 TB): each table is scanned once for the fused
   * constraint pass ([[Checks.constraintSummary]]); each key/unique check
   * is one hash-aggregate shuffle; each fk is one anti join with the parent
@@ -408,27 +412,27 @@ object Validate {
       df: DataFrame,
       schema: TableSchema,
       skipFields: Set[String] = Set.empty
-  ): Seq[CheckResult] = checkTableTasks(df, schema, skipFields).flatMap(_())
+  ): Seq[CheckResult] = checkTableTasks(schema, skipFields).flatMap(_(df))
 
   /** [[checkTable]] as independently-submittable tasks, one Spark
-    * action each (round-12 directive #5): [[validateTyped]] submits
-    * EVERY table's tasks to one pool, so a one-big-table package
+    * action each (round-12 directive #5): [[validatePackage]] submits
+    * every table's tasks to one pool, so a one-big-table package
     * overlaps its own key/unique/constraint actions instead of
-    * serializing on per-action latency — the report is a pure
-    * reassembly (task order = the old sequential order), so the JSON
-    * stays byte-identical.
+    * serializing on per-action latency. Built from the schema alone, so
+    * the graph can be laid out before any table is loaded; the report
+    * is a pure reassembly in task order, so the JSON stays
+    * byte-identical.
     */
   private def checkTableTasks(
-      df: DataFrame,
       schema: TableSchema,
       skipFields: Set[String] = Set.empty
-  ): Seq[() => Seq[CheckResult]] = {
-    val tasks = Seq.newBuilder[() => Seq[CheckResult]]
+  ): Seq[DataFrame => Seq[CheckResult]] = {
+    val tasks = Seq.newBuilder[DataFrame => Seq[CheckResult]]
     val checked = schema.copy(fields =
       schema.fields.filterNot(f => skipFields(f.name)))
 
     // fused single-scan pass for C1, C3-C8
-    if (checked.fields.exists(!_.constraints.isEmpty)) tasks += { () =>
+    if (checked.fields.exists(!_.constraints.isEmpty)) tasks += { df =>
       val summary = Checks.constraintSummary(df, checked)
       if (summary.columns.isEmpty) Nil
       else {
@@ -451,11 +455,11 @@ object Validate {
 
     // C2 unique — one shuffle per declared unique field
     checked.fields.filter(_.constraints.unique.contains(true)).foreach { f =>
-      tasks += (() => Seq(keyResult(Checks.unique(df, Seq(f.name)),
+      tasks += (df => Seq(keyResult(Checks.unique(df, Seq(f.name)),
         ErrorCodes.Unique, f.name)))
     }
     // K1 primary key (uniqueness + implied required on every part)
-    if (schema.primaryKey.nonEmpty) tasks += { () =>
+    if (schema.primaryKey.nonEmpty) tasks += { df =>
       val v = Checks.unique(df, schema.primaryKey)
       val kr = keyResult(v, ErrorCodes.PrimaryKey,
         schema.primaryKey.mkString(","))
@@ -466,7 +470,7 @@ object Validate {
     }
     // K2 uniqueKeys
     schema.uniqueKeys.foreach { keys =>
-      tasks += (() => Seq(keyResult(Checks.unique(df, keys),
+      tasks += (df => Seq(keyResult(Checks.unique(df, keys),
         ErrorCodes.UniqueKey, keys.mkString(","))))
     }
     tasks.result()
@@ -501,113 +505,123 @@ object Validate {
   }
 
   // ------------------------------------------------------------------- E1
-  /** Validate pre-loaded (typed or parsed) tables against a package.
-    *
-    * Independent tables are checked from parallel driver threads
-    * (SURVEY.md §4.3 decision 3): each check is a small Spark job, and
-    * the scheduler interleaves them across the cluster instead of
-    * running the fan-out serially.
+  /** Driver threads one validation call submits Spark jobs from: each
+    * check is one small job, and more submitters than this only queue
+    * on the scheduler.
+    */
+  private val MaxDriverThreads = 8
+
+  /** A resource ready for its checks: its typed frame, the results its
+    * load produced (header and parse) and the fields whose parse failed.
+    */
+  private final case class Loaded(
+      df: DataFrame, errors: Seq[CheckResult], failed: Set[String])
+
+  /** Validate pre-loaded (typed or parsed) tables against a package: the
+    * package task graph ([[validatePackage]]) with each resource's load
+    * the identity.
     */
   def validateTyped(
       tables: Map[String, DataFrame],
       pkg: Package
-  ): PackageReport = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // EVERY check task across EVERY table rides one pool (round-12
-    // directive #5): the old shape parallelized across tables only, so
-    // a one-big-table package serialized on per-action latency. Tasks
-    // are submitted up front (the `named` map is eager) and reassembled
-    // per table in submission order — report byte-identical.
-    val named = pkg.resources.map(res => res.name -> resourceTasks(tables, res))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, named.map(_._2.size).sum.max(1)))
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    val futures = named.map { case (n, ts) => n -> ts.map(t => Future(t())) }
-    try {
-      val perTable = futures.map { case (n, fs) =>
-        TableReport(n,
-          Await.result(Future.sequence(fs), Duration.Inf).flatten)
-      }
-      PackageReport(perTable)
-    } finally {
-      // on a failed check, let the checks already submitted finish
-      // before returning: a caller releasing the caches they read
-      // (validateCsv) must not race a check that would rebuild one
-      pool.shutdown()
-      pool.awaitTermination(Long.MaxValue,
-        java.util.concurrent.TimeUnit.NANOSECONDS)
-    }
-  }
+  ): PackageReport =
+    validatePackage(pkg)((res, _) => Loaded(tables(res.name), Nil, Set.empty))
 
-  /** One task per check action for a resource: the table's own checks
-    * ([[checkTableTasks]]) then its foreign keys, in the exact order
-    * the old sequential path emitted them.
-    */
-  private[graft] def resourceTasks(
-      tables: Map[String, DataFrame],
-      res: Resource
-  ): Seq[() => Seq[CheckResult]] = {
-    val df = tables(res.name)
-    val tableTasks = checkTableTasks(df, res.schema)
-      .map(t => () => t().map(_.copy(table = res.name)))
-    // K3/K4 foreign keys — parent resolved across the package
-    val fkTasks = res.schema.foreignKeys.map { fk => () => {
-      val parentName =
-        if (fk.refResource.isEmpty) res.name else fk.refResource
-      val parent = tables(parentName)
-      val v = Checks.foreignKey(df, fk.fields, parent, fk.refFields)
-      // round-11 fuse: count + bounded sample in ONE action
-      val (n, sample) = countAndSample(v, sum(col("cnt")))
-      Seq(CheckResult(res.name, ErrorCodes.ForeignKey,
-        s"${fk.fields.mkString(",")}->$parentName.${fk.refFields.mkString(",")}",
-        n, sample))
-    }}
-    tableTasks ++ fkTasks
-  }
-
-  /** Full reference lifecycle over CSV resources (E1): per resource,
-    * read the CSV header once (it feeds both [[headerCheck]] and the
-    * by-name bind of the all-string read), then ONE fused scan
+  /** Full reference lifecycle over CSV resources (E1). Each resource's
+    * load reads its CSV header once (it feeds both [[headerCheck]] and
+    * the by-name bind of the all-string read), then ONE fused scan
     * ([[parseTable]]'s single-scan mode) computes the
-    * `type-or-format-error` results and persists the typed frame; the
-    * aggregate that yields those results has scanned every partition,
-    * so the caches are complete before [[validateTyped]]'s concurrent
-    * checks read them (concurrent first readers of a COLD cache
-    * serialize on BlockManager partition locks — PLANS.md round 12).
-    * Constraint results of fields that failed to parse are dropped
-    * (skip semantics). Every persisted frame is released on return,
-    * normal or exceptional.
+    * `type-or-format-error` results and persists the typed frame. The
+    * loads run concurrently, and each resource's checks start as soon as
+    * its own load (and, for a foreign key, its parent's) has finished:
+    * the aggregate behind the parse results has scanned every partition
+    * by then, so no check is ever a first reader of a COLD cache
+    * (concurrent first readers serialize on BlockManager partition
+    * locks — PLANS.md round 12). Constraint results of fields that failed
+    * to parse are dropped (skip semantics). Every persisted frame is
+    * released on return, normal or exceptional, after every load and
+    * check of the call has finished.
     */
   def validateCsv(spark: SparkSession, pkg: Package): PackageReport = {
-    val fused = scala.collection.mutable.ListBuffer[DataFrame]()
+    // once, before the fan-out (each load's parseTable registers too)
+    graft.functions.GraftFunctions.register(spark)
+    val fused = pkg.resources.map(_ =>
+      scala.collection.mutable.ListBuffer[DataFrame]())
+    try validatePackage(pkg) { (res, i) =>
+      val (raw, headerErrs) =
+        if (res.inlineData.isDefined) // no header row to reconcile
+          (readInline(spark, res), Nil)
+        else {
+          val header = actualCsvHeader(spark, res)
+          (readCsv(spark, res, header), headerCheck(header, res.schema))
+        }
+      val (typed, parseErrs, failed) = parseTable(raw, res.schema,
+        Set.empty, MaxDictValues, Some(fused(i)))
+      Loaded(typed, headerErrs ++ parseErrs, failed)
+    } finally fused.flatten.foreach(_.unpersist())
+  }
+
+  /** The package as one task graph on one bounded driver pool: a load
+    * node per resource (`load(res, position)`), one node per check action
+    * of a resource ([[checkTableTasks]]) started when its load finishes,
+    * and one node per foreign key started when both its child and its
+    * parent are loaded. Nodes are chained by `Future` composition, so no
+    * node blocks on another and the pool cannot deadlock. Each table's
+    * report is assembled in declared order (own checks, then foreign
+    * keys; load results first, constraint results of fields that failed
+    * to parse dropped), so the JSON does not depend on the schedule.
+    *
+    * Returns or throws only once every node has finished, so a caller
+    * may release what the loads cached. On failure it throws the error
+    * of the first failed load in declared order, else of the first
+    * failed check.
+    */
+  private def validatePackage(pkg: Package)(
+      load: (Resource, Int) => Loaded): PackageReport = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    // the check closures are built before any node starts, so nothing
+    // below can throw while a load is in flight
+    val tableTasks = pkg.resources.map(res => checkTableTasks(res.schema))
+    val pool = java.util.concurrent.Executors
+      .newFixedThreadPool(MaxDriverThreads)
+    implicit val ec: ExecutionContext =
+      ExecutionContext.fromExecutorService(pool)
     try {
-      val parsed: Map[String, (DataFrame, Seq[CheckResult], Set[String])] =
-        pkg.resources.map { res =>
-          val (raw, headerErrs) =
-            if (res.inlineData.isDefined) // no header row to reconcile
-              (readInline(spark, res), Nil)
-            else {
-              val header = actualCsvHeader(spark, res)
-              (readCsv(spark, res, header),
-                headerCheck(header, res.schema).map(_.copy(table = res.name)))
+      val loads = pkg.resources.zipWithIndex.map { case (res, i) =>
+        Future(load(res, i))
+      }
+      // a foreign key to an undeclared resource fails its own node
+      val loaded = pkg.resources.map(_.name).zip(loads).toMap
+        .withDefault(n =>
+          Future.failed(new NoSuchElementException(s"key not found: $n")))
+      val checks = pkg.resources.zip(tableTasks).map { case (res, tasks) =>
+        val own = loaded(res.name)
+        tasks.map(t => own.map(l => t(l.df))) ++
+          res.schema.foreignKeys.map { fk =>
+            // K3/K4 foreign keys — parent resolved across the package
+            val parentName =
+              if (fk.refResource.isEmpty) res.name else fk.refResource
+            own.zip(loaded(parentName)).map { case (child, parent) =>
+              val v = Checks.foreignKey(child.df, fk.fields, parent.df,
+                fk.refFields)
+              // round-11 fuse: count + bounded sample in ONE action
+              val (n, sample) = countAndSample(v, sum(col("cnt")))
+              Seq(CheckResult("", ErrorCodes.ForeignKey,
+                s"${fk.fields.mkString(",")}->$parentName." +
+                  fk.refFields.mkString(","), n, sample))
             }
-          val (typed, parseErrs, failed) = parseTable(raw, res.schema,
-            Set.empty, MaxDictValues, Some(fused))
-          res.name ->
-            ((typed, headerErrs ++ parseErrs.map(_.copy(table = res.name)),
-              failed))
-        }.toMap
-      val base = validateTyped(parsed.map { case (k, (df, _, _)) => k -> df },
-        pkg)
-      PackageReport(base.tables.map { t =>
-        val (_, parseErrs, failed) = parsed(t.table)
-        // drop constraint results for fields whose parse failed
-        val kept = t.errors.filterNot(e => failed(e.field))
-        TableReport(t.table, parseErrs ++ kept)
+          }
+      }
+      val nodes = loads ++ checks.flatten
+      nodes.foreach(Await.ready(_, Duration.Inf))
+      nodes.foreach(_.value.get.get) // rethrows the first failure
+      PackageReport(pkg.resources.zip(checks).map { case (res, results) =>
+        val l = loaded(res.name).value.get.get
+        TableReport(res.name, (l.errors ++ results.flatMap(_.value.get.get)
+          .filterNot(e => l.failed(e.field))).map(_.copy(table = res.name)))
       })
-    } finally fused.foreach(_.unpersist())
+    } finally pool.shutdown()
   }
 
   /** Report as a DataFrame — one row per executed check (passing or not);

@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point: registers graft's native functions.
   *
@@ -11,43 +13,35 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier("bounded_distinct"), BoundedDistinct.info,
-        BoundedDistinct.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("dot_double"), DotProduct.info,
-        DotProduct.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("bounded_top_k"), BoundedTopK.info,
-        BoundedTopK.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("bounded_min_k"), BoundedMinK.info,
-        BoundedMinK.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("minhash_sigs"), MinHashSig.info,
-        MinHashSig.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("array_top_count"), ArrayCounts.topInfo,
-        ArrayCounts.topBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier("array_distinct_count"),
-        ArrayCounts.distinctInfo, ArrayCounts.distinctBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier("array_entropy"), ArrayCounts.entropyInfo,
-        ArrayCounts.entropyBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier("jaccard_long"), JaccardLong.info,
-        JaccardLong.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("containment_long"), ContainmentLong.info,
-        ContainmentLong.builder))
-    ext.injectFunction(
-      (FunctionIdentifier("latest_by"), LatestBy.info, LatestBy.builder))
+    GraftFunctions.natives.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => LowerQuadraticArrayOps)
   }
 }
 
 object GraftFunctions {
+  /** graft's native functions, as both registration paths take them. */
+  private[functions] val natives: Seq[
+    (FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    (FunctionIdentifier("bounded_distinct"), BoundedDistinct.info,
+      BoundedDistinct.builder),
+    (FunctionIdentifier("dot_double"), DotProduct.info, DotProduct.builder),
+    (FunctionIdentifier("bounded_top_k"), BoundedTopK.info,
+      BoundedTopK.builder),
+    (FunctionIdentifier("bounded_min_k"), BoundedMinK.info,
+      BoundedMinK.builder),
+    (FunctionIdentifier("minhash_sigs"), MinHashSig.info, MinHashSig.builder),
+    (FunctionIdentifier("array_top_count"), ArrayCounts.topInfo,
+      ArrayCounts.topBuilder),
+    (FunctionIdentifier("array_distinct_count"), ArrayCounts.distinctInfo,
+      ArrayCounts.distinctBuilder),
+    (FunctionIdentifier("array_entropy"), ArrayCounts.entropyInfo,
+      ArrayCounts.entropyBuilder),
+    (FunctionIdentifier("jaccard_long"), JaccardLong.info,
+      JaccardLong.builder),
+    (FunctionIdentifier("containment_long"), ContainmentLong.info,
+      ContainmentLong.builder),
+    (FunctionIdentifier("latest_by"), LatestBy.info, LatestBy.builder))
+
   /** Imperative registration on an existing session (tests, harness).
     * Registers the native functions AND activates
     * [[LowerQuadraticArrayOps]]: `sessionState.optimizer` is frozen
@@ -57,44 +51,20 @@ object GraftFunctions {
     * conf) yield the same session behavior. The rule self-gates on
     * `spark.graft.lowerArrayOps` (see its scaladoc) for parity/debug
     * sessions that need the un-lowered HOF plan.
+    *
+    * Idempotent, also from concurrent threads: the rule is appended
+    * under the session's `experimental` lock, so it is added exactly
+    * once, and the function registry is itself synchronized.
     */
   def register(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations
-        .contains(LowerQuadraticArrayOps)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LowerQuadraticArrayOps
+    val exp = spark.experimental
+    exp.synchronized {
+      if (!exp.extraOptimizations.contains(LowerQuadraticArrayOps))
+        exp.extraOptimizations = exp.extraOptimizations :+
+          LowerQuadraticArrayOps
     }
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bounded_distinct"), BoundedDistinct.info,
-      BoundedDistinct.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dot_double"), DotProduct.info,
-      DotProduct.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bounded_top_k"), BoundedTopK.info,
-      BoundedTopK.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bounded_min_k"), BoundedMinK.info,
-      BoundedMinK.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash_sigs"), MinHashSig.info,
-      MinHashSig.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("array_top_count"), ArrayCounts.topInfo,
-      ArrayCounts.topBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("array_distinct_count"), ArrayCounts.distinctInfo,
-      ArrayCounts.distinctBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("array_entropy"), ArrayCounts.entropyInfo,
-      ArrayCounts.entropyBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("jaccard_long"), JaccardLong.info,
-      JaccardLong.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("containment_long"), ContainmentLong.info,
-      ContainmentLong.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("latest_by"), LatestBy.info, LatestBy.builder)
+    natives.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
   }
 }

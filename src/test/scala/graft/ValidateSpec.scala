@@ -466,17 +466,107 @@ class ValidateSpec extends SparkSpec {
   }
 
   test("validateCsv releases its caches when it fails mid-package") {
-    // the first resource's fused frame is persisted and built before
-    // the second resource's read throws (its file does not exist)
-    val good = Resource("good", write("leak_good.csv", "a\n1\n2\n"),
-      TableSchema(Seq(Field("a", "integer"))))
-    val missing = Resource("missing", dir.resolve("absent.csv").toString,
-      TableSchema(Seq(Field("a", "integer"))))
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    intercept[Exception](
-      Validate.validateCsv(spark, Package("p", Seq(good, missing))))
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+    val schema = TableSchema(Seq(Field("a", "integer"), Field("b")))
+    def missing(name: String) =
+      Resource(name, dir.resolve(s"$name.csv").toString, schema)
+    // large enough that both good loads are still reading and parsing
+    // when the missing files fail their header read
+    def good(name: String) = Resource(name, write(s"$name.csv",
+      (0 until 200000).map(i => s"$i,v$i").mkString("a,b\n", "\n", "\n")),
+      schema)
+    val small = Resource("good", write("leak_good.csv", "a,b\n1,x\n2,y\n"),
+      schema)
+    // a good resource then a missing one; and a missing file declared
+    // first, failing while two good resources are still in flight, with
+    // a second missing file declared last
+    val packages = Seq(
+      Seq(small, missing("absent")) -> "absent.csv",
+      Seq(missing("absent_first"), good("leak_big1"), good("leak_big2"),
+        missing("absent_last")) -> "absent_first.csv")
+    val sc = spark.sparkContext
+    for (((resources, firstFailing), run) <- packages.zipWithIndex) {
+      val group = s"leak-$run"
+      val before = sc.getPersistentRDDs.keySet
+      sc.setJobGroup(group, "validateCsv failure path")
+      val e = try intercept[Exception](
+        Validate.validateCsv(spark, Package("p", resources)))
+      finally sc.clearJobGroup()
+      // a load still running after the call returned would only cache
+      // its frame now: wait until the call's jobs stop coming
+      var seen = -1
+      while (seen != sc.statusTracker.getJobIdsForGroup(group).length) {
+        seen = sc.statusTracker.getJobIdsForGroup(group).length
+        Thread.sleep(2000)
+      }
+      val leaked = sc.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+      // the error of the first failing resource in declared order
+      assert(e.getMessage.contains(firstFailing), e.getMessage)
+    }
+  }
+
+  test("validateCsv report ≡ the serial per-resource composition") {
+    // cross-resource and self-referencing foreign keys, a header error
+    // (a permuted header, bound by name), and a parse failure whose
+    // field's constraint and primary-key results are dropped (skip
+    // semantics): the task graph must assemble exactly the report the
+    // serial composition does, on every run
+    val region = Resource("region", write("id_region.csv",
+      "name,rid\nnorth,1\nsouth,2\neast,3\n"),
+      TableSchema(Seq(Field("rid", "integer"), Field("name",
+        constraints = Constraints(unique = Some(true)))),
+        primaryKey = Seq("rid")))
+    val staff = Resource("staff", write("id_staff.csv",
+      "sid,rid,boss,pay\n1,1,,10\n2,1,1,x\n3,9,2,-5\n4,2,7,3\n" +
+        "4,3,1,2\n"),
+      TableSchema(
+        Seq(Field("sid", "integer"), Field("rid", "integer"),
+          Field("boss", "integer"), Field("pay", "number",
+            constraints = Constraints(minimum = Some("0")))),
+        primaryKey = Seq("sid"),
+        foreignKeys = Seq(
+          ForeignKey(Seq("rid"), "region", Seq("rid")),
+          ForeignKey(Seq("boss"), "", Seq("sid")))))
+    val shift = Resource("shift", write("id_shift.csv",
+      "shid,sid,day\nA,1,2024-01-01\nB,2,someday\nC,5,2024-01-01\n"),
+      TableSchema(
+        Seq(Field("shid", constraints = Constraints(pattern = Some("[A-Z]"))),
+          Field("sid", "integer"), Field("day", "date",
+            constraints = Constraints(required = Some(true)))),
+        primaryKey = Seq("day"),
+        foreignKeys = Seq(ForeignKey(Seq("sid"), "staff", Seq("sid")))))
+    val p = Package("graph", Seq(region, staff, shift))
+
+    val buf = scala.collection.mutable.ListBuffer[
+      org.apache.spark.sql.DataFrame]()
+    val want = try {
+      val parsed = p.resources.map { res =>
+        val header = Validate.headerCheck(
+          Validate.actualCsvHeader(spark, res), res.schema)
+        val (typed, errs, failed) = Validate.parseTable(
+          Validate.readCsv(spark, res), res.schema, Set.empty,
+          Validate.MaxDictValues, Some(buf))
+        res.name -> ((typed, header ++ errs, failed))
+      }.toMap
+      val base = Validate.validateTyped(
+        parsed.map { case (n, (df, _, _)) => n -> df }, p)
+      report.PackageReport(base.tables.map { t =>
+        val (_, loadErrs, failed) = parsed(t.table)
+        report.TableReport(t.table, loadErrs.map(_.copy(table = t.table)) ++
+          t.errors.filterNot(e => failed(e.field)))
+      }).toJson
+    } finally buf.foreach(_.unpersist())
+
+    // the fixture really exercises each path it names
+    assert(want.contains("non-matching-header"), want)
+    assert(want.contains(ErrorCodes.TypeOrFormat), want)
+    assert(want.contains("boss->staff.sid") && want.contains("rid->region.rid"),
+      want)
+    assert(!want.contains(s"\"${ErrorCodes.Minimum}\""), want)
+    assert(!want.contains(s"\"${ErrorCodes.PrimaryKey}\",\"field\":\"day\""),
+      want)
+    for (run <- 1 to 5)
+      assert(Validate.validateCsv(spark, p).toJson === want, s"run $run")
   }
 
   test("dict parse falls back to row parse past the cardinality cap") {

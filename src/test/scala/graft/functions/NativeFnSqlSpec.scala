@@ -12,6 +12,26 @@ import graft.ext.Dedup
 class NativeFnSqlSpec extends SparkSpec {
   import spark.implicits._
 
+  test("register is idempotent from concurrent threads") {
+    // validateCsv's concurrent loads each register on the same session;
+    // a fresh session per round, 8 threads released at once
+    val sessions = (1 to 10).map(_ => spark.newSession())
+    for (s <- sessions) {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val threads = (1 to 8).map { _ =>
+        val t = new Thread(() => { start.await(); GraftFunctions.register(s) })
+        t.start(); t
+      }
+      start.countDown()
+      threads.foreach(_.join())
+      assert(s.experimental.extraOptimizations
+        .count(_ == LowerQuadraticArrayOps) === 1)
+    }
+    val r = sessions.last.sql("SELECT bounded_distinct(x, 2) FROM VALUES ('b'), ('a'), " +
+      "('c'), ('a') AS t(x)").collect()(0).getSeq[String](0)
+    assert(r === Seq("a", "b"))
+  }
+
   test("minhash_sigs in SQL matches the Column API and the HOF spec") {
     GraftFunctions.register(spark)
     Seq("the quick brown fox jumps over it", "another doc entirely")
