@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import scala.collection.mutable.ListBuffer
+
 import graft.check.Checks
 import graft.parse.Parsers
 import graft.report._
@@ -34,12 +36,8 @@ object Validate {
 
   val MaxErrorValues = 100
 
-  /** Per-field cardinality ceiling for the dictionary-parse path: a
-    * dictionary past this many distinct values is no longer a cheap
-    * broadcast (and the per-value win over per-row regex has already
-    * evaporated), so the field falls back to row parsing. 2¹⁸ keeps
-    * every realistically-enumerable domain (dates ≈ 3.7 k/decade,
-    * flags, enums) and excludes key-like columns.
+  /** Has no effect: kept only for the benchmark harness's call of the
+    * five-argument [[parseTable]] adapter, and goes with it.
     */
   val MaxDictValues = 262144L
 
@@ -180,93 +178,39 @@ object Validate {
   }
 
   // ----------------------------------------------------------------- parse
-  /** E2 `parse_table`: one projection applying every field's parseExpr;
-    * returns the typed frame plus per-field `type-or-format-error`
-    * results (distinct invalid values, bounded).
+  /** E2 `parse_table`: the typed frame, per-field `type-or-format-error`
+    * results (violation count and the [[MaxErrorValues]] smallest
+    * distinct invalid values), and the fields that failed, from ONE scan
+    * of `df`.
     *
-    * A field that fails to parse *anywhere* is excluded from downstream
-    * constraint checks (its typed column still exists, with nulls at the
-    * bad cells) — matching the reference's skip semantics.
-    */
-  def parseTable(
-      df: DataFrame,
-      schema: TableSchema
-  ): (DataFrame, Seq[CheckResult], Set[String]) =
-    parseTable(df, schema, Set.empty)
-
-  /** E2 with an optional DICTIONARY-PARSE path (the upstream
-    * dedup-before-parse trick re-expressed for Spark; round-7
-    * directive #6): fields named in `dictFields` are validated and
-    * parsed per DISTINCT VALUE instead of per row —
+    * The typed frame is built with one extra column per row-parsed field
+    * that holds the raw value of its invalid cells:
+    * `when(raw.isNotNull && typed.isNull, raw)`, which is
+    * [[Parsers.invalidExpr]] derived from the typed value, so each cell
+    * is parsed once. That frame is persisted and appended to `release`
+    * BEFORE the aggregate runs, so the caller releases it even when the
+    * aggregate throws. One aggregate over it counts and samples
+    * (`bounded_distinct`) the invalid-cell columns. It always runs (a
+    * trailing row count keeps it when no field is row-parsed), and as an
+    * aggregate it scans every partition: the frame is fully cached when
+    * this returns, so concurrent downstream checks never race each other
+    * to build it. The returned typed frame is a column-pruning projection
+    * over that cache.
     *
-    *  1. ONE exchange builds (field, value, cnt) for all dict fields
-    *     together (explode a small map literal, hash-aggregate: the
-    *     shuffle carries ≈ Σ field cardinalities after map-side
-    *     combine, not rows);
-    *  2. validity counts/samples come from that tiny cached frame
-    *     (regex runs once per distinct value);
-    *  3. the typed projection maps values back via one broadcast
-    *     null-safe equi-join per dict field (a hash probe per row
-    *     replaces the regex-gate + cast per row).
-    *
-    * Worth it only when parse cost ≫ probe cost and cardinality ≪
-    * rows; for near-unique columns it is strictly worse, so callers
-    * opt in per field and the broadcast stays bounded. Measured
-    * (PLANS.md round 7): an order-controlled A/B on the sf0.1
-    * star-schema CSV flagship put dict dates WITHIN NOISE of the row
-    * path on a warm JVM (~12.5 s both; the first row-first A/B's 21%
-    * "win" was JIT position bias, exposed by reversing the variant
-    * order), and slightly SLOWER in-suite (+24 jobs); wider type sets
-    * measured clearly slower (key-like columns have corpus-sized
-    * dictionaries — [[MaxDictValues]] guards that hazard
-    * structurally). Spark's codegen'd regex gates are not the
-    * bottleneck the upstream trick assumes, so [[validateCsv]] parses
-    * every field per row; this path stays for genuinely expensive
-    * parses (exotic strptime patterns, huge enums).
-    */
-  def parseTable(
-      df: DataFrame,
-      schema: TableSchema,
-      dictFields: Set[String],
-      maxDictValues: Long = MaxDictValues
-  ): (DataFrame, Seq[CheckResult], Set[String]) =
-    parseTable(df, schema, dictFields, maxDictValues, None)
-
-  /** E2 with an optional FUSED single-scan mode (r18, guide §6 — one
-    * parse instead of two): when `fuseScan` is given, the validity
-    * aggregate and the typed projection share ONE scan of the source.
-    * The typed frame is built WITH one extra column per row-parsed
-    * field carrying the raw value of invalid cells
-    * (`invalidExpr ≡ raw IS NOT NULL AND parsed IS NULL`, so
-    * `when(raw.isNotNull && typed.isNull, raw)` is non-null exactly on
-    * the invalid cells), persisted, and the validity aggregate runs
-    * over THAT cache — `count(bad_f)` ≡ the old
-    * `count(when(invalid, 1))` and `bounded_distinct(bad_f)` ≡ the old
-    * `bounded_distinct(when(invalid, raw))` (bounded_distinct is the
-    * k SMALLEST distinct strings — order-free), so every CheckResult
-    * is value-identical while the source (for CSV: read + text parse,
-    * the dominant cost) is scanned once instead of twice. The persisted
-    * frame is appended to `fuseScan` for the caller to release; the
-    * returned typed frame is a column-pruning projection over it, so
-    * downstream checks read the same cache. The aggregate always runs
-    * (it carries a row count even when no field is row-parsed), and as
-    * an aggregate it scans every partition: the registered frame is
-    * fully cached when this returns, so concurrent downstream checks
-    * never race each other to build it.
+    * A field that fails to parse *anywhere* is failed and excluded from
+    * downstream constraint checks (its typed column still exists, with
+    * nulls at the bad cells) — the reference's skip semantics. A field
+    * whose descriptor cannot compile to a parse expression (untranslatable
+    * strptime directive, format 'any', unknown type) is a `schema-error`,
+    * not a data error: its raw column is kept and it is failed too — the
+    * reference's abort-the-field behavior, never a crash.
     */
   private[graft] def parseTable(
       df: DataFrame,
       schema: TableSchema,
-      dictFields: Set[String],
-      maxDictValues: Long,
-      fuseScan: Option[scala.collection.mutable.ListBuffer[DataFrame]]
+      release: ListBuffer[DataFrame]
   ): (DataFrame, Seq[CheckResult], Set[String]) = {
     graft.functions.GraftFunctions.register(df.sparkSession)
-    // Fields whose descriptor cannot compile to a parse expression
-    // (untranslatable strptime directive, format 'any', unknown type)
-    // are SCHEMA errors, not data errors: report `schema-error`, keep
-    // the raw column, exclude the field from downstream checks —
-    // the reference's abort-the-field behavior, never a crash.
     val buildErrors: Map[String, String] = schema.fields.flatMap { f =>
       try { Parsers.parseExpr(f, df(f.name)); None }
       catch {
@@ -277,131 +221,50 @@ object Validate {
     val schemaErrs = schema.fields.flatMap(f =>
       buildErrors.get(f.name).map(msg =>
         CheckResult("", ErrorCodes.SchemaError, f.name, 1, Seq(msg))))
-    val okFields = schema.fields.filterNot(f => buildErrors.contains(f.name))
-    val (dictWanted, rowF) = okFields.partition(f => dictFields(f.name))
+    val rowParsed = schema.fields.filterNot(f => buildErrors.contains(f.name))
 
-    // dict path FIRST: one exchange for ALL dict fields (field, value,
-    // cnt), then per-field validity verdicts and parse dictionaries
-    // over the tiny cached frame — the corpus is never regex-scanned
-    // for these. A field whose observed cardinality exceeds
-    // [[MaxDictValues]] silently falls back to the per-row path (its
-    // broadcast dictionary would not be "tiny"; correctness is
-    // unaffected, the one exchange it already paid is the documented
-    // price of nominating a near-unique column).
-    val (dictResults, dicts, fellBack) =
-      if (dictWanted.isEmpty)
-        (Seq.empty[CheckResult], Map.empty[String, DataFrame],
-          Set.empty[String])
-      else {
-        val pairs = dictWanted.flatMap(f =>
-          Seq(lit(f.name), df(f.name).cast("string")))
-        val vc = df
-          .select(explode(map(pairs: _*)).as(Seq("__f", "__raw")))
-          .groupBy("__f", "__raw").agg(count(lit(1)).as("__c"))
-          .cache()
-        try {
-          val cards = vc.groupBy("__f").agg(count(lit(1)).as("__d"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          val over = dictWanted.map(_.name)
-            .filter(n => cards.getOrElse(n, 0L) > maxDictValues).toSet
-          val dictF = dictWanted.filterNot(f => over(f.name))
-          val res = dictF.map { f =>
-            val bad = Parsers.invalidExpr(f, col("__raw"))
-            val row = vc.where(col("__f") === f.name).agg(
-              coalesce(sum(when(bad, col("__c"))), lit(0L)).as("n"),
-              call_function("bounded_distinct", when(bad, col("__raw")),
-                lit(MaxErrorValues)).as("v")).collect()(0)
-            CheckResult("", ErrorCodes.TypeOrFormat, f.name,
-              row.getLong(0), row.getSeq[String](1))
-          }
-          val ds = dictF.map { f =>
-            f.name -> vc.where(col("__f") === f.name)
-              .select(col("__raw").as(s"__dk_${f.name}"),
-                Parsers.parseExpr(f, col("__raw"))
-                  .as(s"__dv_${f.name}"))
-              // the dictionary is an eager bounded artifact; checkpoint
-              // releases the vc cache dependency before vc unpersists
-              .localCheckpoint(true)
-          }.toMap
-          (res, ds, over)
-        } finally vc.unpersist(blocking = false)
-      }
-
-    // one fused agg pass: per row-parsed field (including cardinality
-    // fallbacks), count of invalid cells + bounded distinct samples via
-    // the native bounded_distinct aggregate (O(maxErrorValues) buffer —
-    // collect_set would be unbounded)
-    val rowParsed = rowF ++ dictWanted.filter(f => fellBack(f.name))
-    val joined = dicts.foldLeft(df) { case (d, (n, dict)) =>
-      d.join(broadcast(dict), d(n) <=> dict(s"__dk_$n"), "left")
+    val stage1 = df.select(
+      rowParsed.map(f => df(f.name).as(s"__graft_raw_${f.name}")) ++
+      schema.fields.map(f =>
+        if (buildErrors.contains(f.name)) df(f.name)
+        else Parsers.parseExpr(f, df(f.name)).as(f.name)): _*)
+    val typedPlus = stage1.select(
+      schema.fields.map(f => col(f.name)) ++
+      rowParsed.map(f =>
+        when(col(s"__graft_raw_${f.name}").isNotNull &&
+            col(f.name).isNull, col(s"__graft_raw_${f.name}"))
+          .as(s"__graft_bad_${f.name}")): _*)
+      .persist()
+    release += typedPlus
+    val aggs: Seq[Column] = rowParsed.flatMap { f =>
+      Seq(
+        count(col(s"__graft_bad_${f.name}")).as(s"${f.name}__n"),
+        call_function("bounded_distinct", col(s"__graft_bad_${f.name}"),
+          lit(MaxErrorValues)).as(s"${f.name}__v")
+      )
+    } :+ count(lit(1)).as("__graft_rows")
+    val row = typedPlus.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val results = rowParsed.zipWithIndex.map { case (f, i) =>
+      CheckResult("", ErrorCodes.TypeOrFormat, f.name,
+        row.getLong(2 * i), row.getSeq[String](2 * i + 1))
     }
-    def typedCol(f: Field): Column =
-      if (buildErrors.contains(f.name)) joined(f.name)
-      else if (dicts.contains(f.name)) col(s"__dv_${f.name}").as(f.name)
-      else Parsers.parseExpr(f, joined(f.name)).as(f.name)
-    def unpack(row: Row): Seq[CheckResult] =
-      rowParsed.zipWithIndex.map { case (f, i) =>
-        CheckResult(
-          table = "",
-          code = ErrorCodes.TypeOrFormat,
-          field = f.name,
-          violations = row.getLong(2 * i),
-          sampleValues = row.getSeq[String](2 * i + 1)
-        )
-      }
-    val (rowResults, typed) = fuseScan match {
-      case None =>
-        // legacy two-scan shape: validity aggregate over the raw frame,
-        // typed projection consumed (and usually cached) by the caller
-        val aggs: Seq[Column] = rowParsed.flatMap { f =>
-          val bad = Parsers.invalidExpr(f, df(f.name))
-          Seq(
-            count(when(bad, lit(1))).as(s"${f.name}__n"),
-            call_function("bounded_distinct", when(bad, df(f.name)),
-              lit(MaxErrorValues)).as(s"${f.name}__v")
-          )
-        }
-        val rr =
-          if (aggs.isEmpty) Seq.empty[CheckResult]
-          else unpack(df.agg(aggs.head, aggs.tail: _*).collect()(0))
-        (rr, joined.select(schema.fields.map(typedCol): _*))
-      case Some(release) =>
-        // fused single-scan shape (scaladoc above): stage1 carries the
-        // raw value beside every typed column; stage2 derives the
-        // invalid-cell column from the TYPED value (no second
-        // parseExpr evaluation), and the validity aggregate's action
-        // doubles as the cache build — the source is scanned once.
-        val stage1 = joined.select(
-          rowParsed.map(f =>
-            joined(f.name).as(s"__graft_raw_${f.name}")) ++
-          schema.fields.map(typedCol): _*)
-        val typedPlus = stage1.select(
-          schema.fields.map(f => col(f.name)) ++
-          rowParsed.map(f =>
-            when(col(s"__graft_raw_${f.name}").isNotNull &&
-                col(f.name).isNull, col(s"__graft_raw_${f.name}"))
-              .as(s"__graft_bad_${f.name}")): _*)
-          .persist()
-        release += typedPlus
-        val aggs: Seq[Column] = rowParsed.flatMap { f =>
-          Seq(
-            count(col(s"__graft_bad_${f.name}")).as(s"${f.name}__n"),
-            call_function("bounded_distinct",
-              col(s"__graft_bad_${f.name}"),
-              lit(MaxErrorValues)).as(s"${f.name}__v")
-          )
-        }
-        // the trailing row count keeps the aggregate's action (and so the
-        // full cache build) when no field is row-parsed
-        val all = aggs :+ count(lit(1)).as("__graft_rows")
-        val rr = unpack(typedPlus.agg(all.head, all.tail: _*).collect()(0))
-        (rr, typedPlus.select(schema.fields.map(f => col(f.name)): _*))
-    }
-    val results = schema.fields.flatMap(f =>
-      (rowResults ++ dictResults).find(_.field == f.name))
     val failed = results.filterNot(_.passed).map(_.field).toSet ++
       buildErrors.keySet
-    (typed, schemaErrs ++ results, failed)
+    (typedPlus.select(schema.fields.map(f => col(f.name)): _*),
+      schemaErrs ++ results, failed)
+  }
+
+  /** The former five-argument signature, kept only because the benchmark
+    * harness (`perfbench/src/PerfBench.scala`) compiles against it: no
+    * dictionary fields and a release buffer are required, and the cap is
+    * ignored. Goes with the next benchmark change.
+    */
+  private[graft] def parseTable(
+      df: DataFrame, schema: TableSchema, dict: Set[String], cap: Long,
+      release: Option[ListBuffer[DataFrame]]
+  ): (DataFrame, Seq[CheckResult], Set[String]) = {
+    require(dict.isEmpty && release.isDefined)
+    parseTable(df, schema, release.get)
   }
 
   // ---------------------------------------------------------------- checks
@@ -529,8 +392,8 @@ object Validate {
 
   /** Full reference lifecycle over CSV resources (E1). Each resource's
     * load reads its CSV header once (it feeds both [[headerCheck]] and
-    * the by-name bind of the all-string read), then ONE fused scan
-    * ([[parseTable]]'s single-scan mode) computes the
+    * the by-name bind of the all-string read), then ONE scan
+    * ([[parseTable]]) computes the
     * `type-or-format-error` results and persists the typed frame. The
     * loads run concurrently, and each resource's checks start as soon as
     * its own load (and, for a foreign key, its parent's) has finished:
@@ -545,8 +408,7 @@ object Validate {
   def validateCsv(spark: SparkSession, pkg: Package): PackageReport = {
     // once, before the fan-out (each load's parseTable registers too)
     graft.functions.GraftFunctions.register(spark)
-    val fused = pkg.resources.map(_ =>
-      scala.collection.mutable.ListBuffer[DataFrame]())
+    val fused = pkg.resources.map(_ => ListBuffer[DataFrame]())
     try validatePackage(pkg) { (res, i) =>
       val (raw, headerErrs) =
         if (res.inlineData.isDefined) // no header row to reconcile
@@ -555,8 +417,7 @@ object Validate {
           val header = actualCsvHeader(spark, res)
           (readCsv(spark, res, header), headerCheck(header, res.schema))
         }
-      val (typed, parseErrs, failed) = parseTable(raw, res.schema,
-        Set.empty, MaxDictValues, Some(fused(i)))
+      val (typed, parseErrs, failed) = parseTable(raw, res.schema, fused(i))
       Loaded(typed, headerErrs ++ parseErrs, failed)
     } finally fused.flatten.foreach(_.unpersist())
   }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.schema.{Field, ForeignKey, TableSchema}
-import graft.parse.Parsers
 
 /** Constraint / key / foreign-key checks (SURVEY.md §2.4–2.5, C1–C8 +
   * K1–K3). Each check returns a **violation DataFrame** — empty means the
@@ -343,13 +342,4 @@ object Checks {
       .filter(col(c).isNotNull && bad)
       .orderBy(col("row_nr"))
       .limit(maxRows)
-
-  /** Parse-error surfacing (shared across P1–P9): distinct raw values that
-    * fail to parse for a field, + counts — the `type-or-format-error`
-    * payload (SURVEY.md §2.3).
-    */
-  def parseErrors(df: DataFrame, f: Field): DataFrame =
-    df.filter(Parsers.invalidExpr(f, df(f.name)))
-      .groupBy(df(f.name))
-      .agg(count(lit(1)).as("cnt"))
 }

@@ -2,9 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import scala.collection.mutable.ListBuffer
 
-import graft.report.ErrorCodes
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.functions._
+
+import graft.parse.Parsers
+import graft.report.{CheckResult, ErrorCodes}
 import graft.schema._
 
 /** End-to-end E1 on generated CSV datapackages (FIXTURES.md §B3/§B4):
@@ -341,76 +346,79 @@ class ValidateSpec extends SparkSpec {
       }
   }
 
-  test("dictionary parse path is verdict- and value-identical") {
-    // one good date, one bad date, a missing token, and a duplicated
-    // value: the dict path must report the same violation counts and
-    // produce the same typed cells as the per-row path
-    val csv = "d,n\n2024-01-31,1.5\nnot-a-date,2.5\n,1.5\n2024-01-31,x\n"
-    val res = Resource("t", write("dict.csv", csv),
-      TableSchema(fields = Seq(Field("d", "date"), Field("n", "number")),
-        missingValues = Seq("")))
-    val raw = Validate.readResource(spark, res)
-    val (typedRow, errsRow, failedRow) =
-      Validate.parseTable(raw, res.schema)
-    val (typedDict, errsDict, failedDict) =
-      Validate.parseTable(raw, res.schema, Set("d", "n"))
-    assert(failedRow === failedDict)
-    def em(e: Seq[graft.report.CheckResult]) =
-      e.map(r => (r.code, r.field) -> r.violations).toMap
-    assert(em(errsRow) === em(errsDict))
-    // sample VALUES may legitimately arrive in a different order
-    // (row stream vs distinct stream); the sets must agree
-    def sm(e: Seq[graft.report.CheckResult]) =
-      e.map(r => (r.code, r.field) -> r.sampleValues.toSet).toMap
-    assert(sm(errsRow) === sm(errsDict))
-    assert(typedRow.schema === typedDict.schema)
-    val rows = (df: org.apache.spark.sql.DataFrame) =>
-      df.collect().map(_.toSeq.map(String.valueOf).mkString("|"))
-        .toSeq.sorted
-    assert(rows(typedRow) === rows(typedDict))
+  /** The two-scan parse composition that [[Validate.parseTable]] fuses
+    * into one scan: a validity aggregate over the raw frame
+    * ([[graft.parse.Parsers.invalidExpr]], `bounded_distinct`), then a
+    * [[graft.parse.Parsers.parseExpr]] projection. A field whose parse
+    * expression cannot compile keeps its raw column and reports a
+    * schema-error.
+    */
+  private def twoScanParse(df: DataFrame, schema: TableSchema)
+      : (DataFrame, Seq[CheckResult], Set[String]) = {
+    val buildErrors = schema.fields.flatMap { f =>
+      try { Parsers.parseExpr(f, df(f.name)); None }
+      catch {
+        case e: graft.parse.PatternError => Some(f.name -> e.msg)
+        case e: IllegalArgumentException => Some(f.name -> e.getMessage)
+      }
+    }.toMap
+    val rowParsed = schema.fields.filterNot(f => buildErrors.contains(f.name))
+    val aggs = rowParsed.flatMap { f =>
+      val bad = Parsers.invalidExpr(f, df(f.name))
+      Seq(count(when(bad, lit(1))), call_function("bounded_distinct",
+        when(bad, df(f.name)), lit(Validate.MaxErrorValues)))
+    } :+ count(lit(1))
+    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val results = rowParsed.zipWithIndex.map { case (f, i) =>
+      CheckResult("", ErrorCodes.TypeOrFormat, f.name, row.getLong(2 * i),
+        row.getSeq[String](2 * i + 1))
+    }
+    val schemaErrs = schema.fields.flatMap(f => buildErrors.get(f.name)
+      .map(msg => CheckResult("", ErrorCodes.SchemaError, f.name, 1,
+        Seq(msg))))
+    val typed = df.select(schema.fields.map(f =>
+      if (buildErrors.contains(f.name)) df(f.name)
+      else Parsers.parseExpr(f, df(f.name)).as(f.name)): _*)
+    (typed, schemaErrs ++ results,
+      results.filterNot(_.passed).map(_.field).toSet ++ buildErrors.keySet)
   }
 
   test("fused single-scan parse ≡ legacy two-scan parse, result for result") {
-    // r18 (guide §6): the fused mode derives the invalid-cell column
-    // from the typed value inside ONE scan — every violation count,
-    // every bounded sample, the failed set, and every typed cell must
-    // be identical to the legacy raw-scan aggregate. The rows hold a
-    // good date, a bad date, a missing token, a bad number and a plain
-    // string (never invalid); the inputs run them row-parsed, with a
-    // dictionary-parsed field, with a dictionary field that falls back
-    // to row parsing past its cardinality cap (5 distinct n values over
-    // a cap of 2), under a date format that cannot compile
-    // (schema-error path: no parse expression, raw column kept), and
-    // over a table where 39 of the 40 row-parsed cells are invalid.
+    // the fused parse derives the invalid-cell column from the typed
+    // value inside ONE scan — every violation count, every bounded
+    // sample, the failed set, and every typed cell must be identical to
+    // the two-scan reference above. The rows hold a good date, a bad
+    // date, a missing token, a bad number and a plain string (never
+    // invalid); the inputs run them row-parsed, under a date format that
+    // cannot compile (schema-error path: no parse expression, raw column
+    // kept), with every field a schema-error (only the trailing row
+    // count is aggregated), and over a table where 239 of the 240
+    // row-parsed cells are invalid: more distinct bad values per field
+    // than the sample bound, so the bound itself is pinned.
     // The fused frame persists at MEMORY_AND_DISK (Spark's
     // `spark.sql.defaultCacheStorageLevel`), so a table whose bad cells
     // all ride along as raw strings spills instead of growing the heap.
     val path = write("fused.csv", "d,n,s\n2024-01-31,1.5,a\n" +
       "not-a-date,2.5,b\n,xx,c\n2024-01-31,7,\n9999-99,0,d\n")
-    val badPath = write("fused_bad.csv", "d,n,s\n" + (0 until 20).map(i =>
+    val badPath = write("fused_bad.csv", "d,n,s\n" + (0 until 120).map(i =>
       s"bad$i,${if (i == 0) "1.5" else s"x$i"},s$i\n").mkString)
+    val noParse = Field("d", "date", format = "%G-%V-%u")
     def schema(d: Field) = TableSchema(fields = Seq(d, Field("n", "number"),
       Field("s", "string")), missingValues = Seq(""))
     val plain = schema(Field("d", "date"))
     val inputs = Seq(
-      ("row-parsed", plain, Set.empty[String], Validate.MaxDictValues,
-        path),
-      ("dictionary", plain, Set("d"), Validate.MaxDictValues, path),
-      ("dictionary fallback", plain, Set("n"), 2L, path),
-      ("schema-error", schema(Field("d", "date", format = "%G-%V-%u")),
-        Set.empty[String], Validate.MaxDictValues, path),
-      ("mostly invalid", plain, Set.empty[String], Validate.MaxDictValues,
-        badPath))
-    for ((label, sch, dictFields, cap, csv) <- inputs) {
+      ("row-parsed", plain, path),
+      ("schema-error", schema(noParse), path),
+      ("all schema-error", TableSchema(fields = Seq(noParse,
+        noParse.copy(name = "n"), noParse.copy(name = "s"))), path),
+      ("mostly invalid", plain, badPath))
+    for ((label, sch, csv) <- inputs) {
       val raw = Validate.readResource(spark, Resource("t", csv, sch))
-      val (typedL, errsL, failedL) =
-        Validate.parseTable(raw, sch, dictFields, cap)
-      val buf = scala.collection.mutable.ListBuffer[
-        org.apache.spark.sql.DataFrame]()
-      val (typedF, errsF, failedF) =
-        Validate.parseTable(raw, sch, dictFields, cap, Some(buf))
+      val (typedL, errsL, failedL) = twoScanParse(raw, sch)
+      val buf = ListBuffer[DataFrame]()
+      val (typedF, errsF, failedF) = Validate.parseTable(raw, sch, buf)
       try {
-        if (label == "schema-error")
+        if (label.endsWith("schema-error"))
           assert(errsF.exists(e => e.code == ErrorCodes.SchemaError &&
             e.field == "d"), errsF.mkString("; "))
         assert(failedL === failedF, label)
@@ -419,17 +427,21 @@ class ValidateSpec extends SparkSpec {
           errsF.map(e => (e.code, e.field, e.violations, e.sampleValues)),
           label)
         assert(typedL.schema === typedF.schema, label)
-        val rows = (df: org.apache.spark.sql.DataFrame) =>
+        val rows = (df: DataFrame) =>
           df.collect().map(_.toSeq.map(String.valueOf).mkString("|"))
             .toSeq.sorted
         assert(rows(typedL) === rows(typedF), label)
-        assert(buf.size === 1, s"$label: fused mode must register its one cache")
+        assert(buf.size === 1, s"$label: the parse must register its one cache")
         assert(buf.head.storageLevel ===
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, label)
-        if (label == "mostly invalid")
+        if (label == "mostly invalid") {
           assert(errsF.filterNot(_.passed)
             .map(e => (e.field, e.violations)).toSet ===
-            Set(("d", 20L), ("n", 19L)), errsF.mkString("; "))
+            Set(("d", 120L), ("n", 119L)), errsF.mkString("; "))
+          assert(errsF.forall(_.sampleValues.size <= Validate.MaxErrorValues)
+            && errsF.exists(_.sampleValues.size == Validate.MaxErrorValues),
+            label)
+        }
       } finally buf.foreach(_.unpersist(blocking = false))
     }
   }
@@ -448,10 +460,8 @@ class ValidateSpec extends SparkSpec {
     for ((label, sch) <- inputs) {
       val raw = Validate.readResource(spark, Resource("t", path, sch))
         .repartition(3)
-      val buf = scala.collection.mutable.ListBuffer[
-        org.apache.spark.sql.DataFrame]()
-      val (typed, _, _) = Validate.parseTable(raw, sch, Set.empty,
-        Validate.MaxDictValues, Some(buf))
+      val buf = ListBuffer[DataFrame]()
+      val (typed, _, _) = Validate.parseTable(raw, sch, buf)
       try {
         assert(buf.size === 1, label)
         val rdd = typed.queryExecution.withCachedData
@@ -463,6 +473,26 @@ class ValidateSpec extends SparkSpec {
         assert(cached === 3 && rdd.getNumPartitions === 3, label)
       } finally buf.foreach(_.unpersist(blocking = false))
     }
+  }
+
+  test("a parse whose aggregate fails leaves its frame for the caller") {
+    // the persisted frame is registered before the aggregate runs, so a
+    // throwing aggregate still hands it to the caller to release
+    // (validateCsv's `finally`)
+    val boom = udf((i: Long) =>
+      if (i == 2) throw new IllegalStateException("boom") else i.toString)
+    val raw = spark.range(0, 4, 1, 2).select(boom(col("id")).as("a"))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val buf = ListBuffer[DataFrame]()
+    val e = intercept[Exception](Validate.parseTable(raw,
+      TableSchema(Seq(Field("a", "integer"))), buf))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "boom"), e.toString)
+    assert(buf.size === 1)
+    buf.foreach(_.unpersist(blocking = true))
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
   }
 
   test("validateCsv releases its caches when it fails mid-package") {
@@ -567,21 +597,5 @@ class ValidateSpec extends SparkSpec {
       want)
     for (run <- 1 to 5)
       assert(Validate.validateCsv(spark, p).toJson === want, s"run $run")
-  }
-
-  test("dict parse falls back to row parse past the cardinality cap") {
-    // 3 distinct dates under a cap of 2: field must silently take the
-    // per-row path — same verdicts, same typed cells, no error
-    val csv = "d\n2024-01-01\n2024-01-02\n2024-01-03\nbad\n"
-    val res = Resource("t", write("dictcap.csv", csv),
-      TableSchema(fields = Seq(Field("d", "date"))))
-    val raw = Validate.readResource(spark, res)
-    val (typedD, errsD, _) =
-      Validate.parseTable(raw, res.schema, Set("d"), maxDictValues = 2L)
-    val (typedR, errsR, _) = Validate.parseTable(raw, res.schema)
-    assert(errsD.map(e => (e.code, e.field, e.violations)) ===
-      errsR.map(e => (e.code, e.field, e.violations)))
-    assert(typedD.collect().map(String.valueOf).sorted.toSeq ===
-      typedR.collect().map(String.valueOf).sorted.toSeq)
   }
 }
