@@ -1497,7 +1497,8 @@ object SparkEntry {
       Similarity.firstIdCentroids(e, 16), idx)
     graft.sources.IndexStore.appendIvfIndexVersioned(
       e.filter(col("vec_id") % 2 === 1), idx)
-    val clean = graft.sources.VersionedFlat.currentVersion(s"$idx/enc")
+    val clean = graft.sources.VersionedFlat.currentVersion(
+      graft.sources.IndexStore.Ivf.versioned(idx))
     graft.sources.IndexStore.appendIvfIndexVersioned(
       e.filter(col("vec_id") < 5)
         .select((col("vec_id") + 900000L).as("vec_id"),
@@ -1777,7 +1778,8 @@ object SparkEntry {
       e.filter(col("vec_id") % 2 === 0), idx)
     graft.sources.IndexStore.appendInt8IndexVersioned(
       e.filter(col("vec_id") % 2 === 1), idx)
-    graft.sources.VersionedFlat.compact(s, idx)
+    graft.sources.VersionedFlat.compact(s,
+      graft.sources.IndexStore.Int8.versioned(idx))
     Similarity.quantizedTopKFromIndex(e.filter(col("vec_id") < 5),
         graft.sources.IndexStore.readInt8IndexVersioned(s, idx), 10)
       .withColumn("rank", col("rank").cast(LongType))

@@ -20,9 +20,14 @@ import graft.ext.{Dedup, Multimodal, Similarity}
   * Artifact schemas (all columns engine-portable primitives):
   *  - dedup:  `shingles.parquet` (id long, sh array<long>) and
   *            `bands.parquet` (id long, band int, bucket long)
-  *  - ivf:    `centroids.parquet` (list_id long, cvec array<double>)
-  *            and `ivf.parquet` (id long, nvec array<double>,
-  *            list_id long)
+  *  - flat similarity families: the write-once model leaves
+  *            `centroids.parquet` (list_id long, cvec array<double>)
+  *            and `codebooks.parquet` (j int, code int, cvec
+  *            array<double>, bias double), and one row per corpus
+  *            vector: IVF (id long, nvec array<double>, list_id long),
+  *            int8 (id long, q array<tinyint>, scale double), PQ (id
+  *            long, codes array<int>) and IVF-PQ (id long, list_id
+  *            long, codes array<int>)
   *
   * At 100 TB: the dedup band frame is the per-batch join's build side
   * — persist it bucketed by `bucket` ([[Bucketing]]) and the serve
@@ -38,6 +43,18 @@ import graft.ext.{Dedup, Multimodal, Similarity}
   * written once per store: the plain store ([[Bucketing]] catalog
   * tables) and the versioned store ([[BucketedManifest]] gen
   * manifests). The public methods below name a family and a store.
+  *
+  * The flat similarity families (IVF, int8, PQ, IVF-PQ) are likewise
+  * each one [[Flat]] value: where its per-vector rows live in each
+  * store, its model leaves (centroids, codebooks, both or none), its
+  * encode and its serving decode. Every lifecycle step is written once
+  * per store: the plain store (a parquet leaf under `dir` —
+  * `ivf.parquet`, `int8.parquet`, `codes.parquet`, `ivfpq.parquet` —
+  * rewritten in place by purge and compact) and the versioned store (a
+  * [[VersionedFlat]] manifest chain — `dir/enc` for IVF and IVF-PQ,
+  * `dir/codes` for PQ, `dir` itself for int8 — whose purges and
+  * compactions publish versions).
+  * Both keep deleted ids in `dir/dead.parquet` until a purge.
   */
 object IndexStore {
 
@@ -1111,739 +1128,544 @@ object IndexStore {
     Versioned.compactTiered(spark, table, KeyFamily, maxGens)
 
 
-  /** Build + persist the IVF index under an explicit centroid frame
-    * (pass [[Similarity.firstIdCentroids]] output for the
-    * deterministic plumbing path or [[Similarity.kmeansCentroids]]
-    * for the quality path — the artifact records whichever was used,
-    * since serving MUST probe with the same centroids the index was
-    * built with).
+  // ----------------------------------------- flat similarity artifacts
+  /** The write-once model leaves of a flat family under `dir`: written
+    * by the build from the caller's model, read back by every append —
+    * serving must probe and score with the model the index was built
+    * with, so admission never re-fits it or takes a caller frame.
+    * Deleting vectors never removes a model row either (a refit is a
+    * rebuild decision, like any trained model).
     */
-  def writeIvfIndex(corpus: DataFrame, centroids: DataFrame,
-      dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    Scratch.sweepOnce(corpus.sparkSession)
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    Similarity.ivfIndexWith(corpus, centroids, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$dir/ivf.parquet")
+  private[graft] final case class Model[M](
+      write: (SparkSession, M, String) => Unit,
+      read: (SparkSession, String) => M)
+
+  private val Centroids = Model[DataFrame](
+    (_, c, dir) => c.write.mode("overwrite").parquet(s"$dir/centroids.parquet"),
+    (spark, dir) => spark.read.parquet(s"$dir/centroids.parquet"))
+
+  /** `codebooks.parquet` (j int, code int, cvec array<double>, bias
+    * double): m·ks rows, the whole PQ model.
+    */
+  private val Codebooks = Model[Similarity.PqModel](
+    (spark, model, dir) => {
+      import spark.implicits._
+      (for (j <- 0 until model.m; c <- 0 until model.ks)
+        yield (j, c, model.codebooks(j)(c).toSeq, model.biases(j)(c)))
+        .toDF("j", "code", "cvec", "bias").coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
+    }, readPqModel)
+
+  /** A flat similarity family: one row per corpus vector, keyed by
+    * `id`. `plain(dir)` is where the plain store keeps the rows (a
+    * parquet leaf) and `versioned(dir)` where the versioned store keeps
+    * them (`dir` itself when the family has no model leaves to sit
+    * beside). `encode` maps `(vectors, model, idCol, vecCol)` to the
+    * stored rows, a pure per-vector function of the static model, so
+    * append(build(base), delta) ≡ build(base ∪ delta) row-for-row;
+    * `decode` maps stored rows to the serving frame. The raw stored
+    * rows type the empty tombstone set and are what purges and
+    * compactions rewrite, so a packed schema survives them byte-exact.
+    * `name` spells the public build method, `write<name>Index`.
+    */
+  private[graft] final case class Flat[M](name: String,
+      plain: String => String, versioned: String => String, model: Model[M],
+      encode: (DataFrame, M, String, String) => DataFrame,
+      decode: DataFrame => DataFrame = identity[DataFrame] _)
+
+  private[graft] val Ivf = Flat[DataFrame]("Ivf", _ + "/ivf.parquet",
+    _ + "/enc", Centroids, Similarity.ivfIndexWith(_, _, _, _))
+
+  /** Quantized values are exact integers in [-127, 127], so the tinyint
+    * pack on write and the double cast on read both round-trip exactly.
+    */
+  private[graft] val Int8 = Flat[Unit]("Int8", _ + "/int8.parquet", identity,
+    Model((_, _, _) => (), (_, _) => ()), (df, _, idCol, vecCol) =>
+      retype(Similarity.int8Index(df, idCol, vecCol), "tinyint"),
+    retype(_, "double"))
+
+  private def retype(df: DataFrame, q: String): DataFrame =
+    df.select(col("id"), transform(col("q"), _.cast(q)).as("q"), col("scale"))
+
+  private[graft] val Pq = Flat[Similarity.PqModel]("Pq", _ + "/codes.parquet",
+    _ + "/codes", Codebooks, (df, model, idCol, vecCol) =>
+      Similarity.pqEncode(df, model, idCol, vecCol).select("id", "codes"))
+
+  private[graft] val IvfPq = Flat[(Similarity.PqModel, DataFrame)]("IvfPq",
+    _ + "/ivfpq.parquet", _ + "/enc", Model(
+      { case (s, (model, c), dir) =>
+        Centroids.write(s, c, dir); Codebooks.write(s, model, dir) },
+      (s, dir) => (Codebooks.read(s, dir), Centroids.read(s, dir))),
+    { case (df, (model, c), idCol, vecCol) =>
+      Similarity.ivfPqIndex(df, model, c, idCol, vecCol) })
+
+  /** One of the two places a flat family's stored rows can live, given
+    * as where the rows of family `f` sit under `dir` (`at`) and four
+    * primitives over that path. Both stores keep tombstones in
+    * `dir/dead.parquet` and anti-join them BEFORE ranking: a dropped
+    * neighbor is replaced by the next-best, so exclusion cannot wait
+    * for the output.
+    */
+  private abstract class FlatStore(suffix: String,
+      at: Flat[_] => String => String, built: String => Boolean,
+      create: (DataFrame, String) => Unit, append: (DataFrame, String) => Unit,
+      raw: (SparkSession, String) => DataFrame) {
+    def build[M](f: Flat[M], corpus: DataFrame, model: M, dir: String,
+        idCol: String, vecCol: String): Unit = {
+      Scratch.sweepOnce(corpus.sparkSession) // age out dead-pid scratch
+      f.model.write(corpus.sparkSession, model, dir)
+      create(f.encode(corpus, model, idCol, vecCol), at(f)(dir))
+    }
+
+    /** Encode `delta` against the artifact's own model and append it.
+      * An unbuilt store fails before anything is read or written: an
+      * append into it would silently create a partial corpus.
+      */
+    def admit[M](f: Flat[M], delta: DataFrame, dir: String,
+        idCol: String, vecCol: String): Unit = {
+      require(built(at(f)(dir)), s"no ${f.name} artifact at $dir — " +
+        s"build with write${f.name}Index$suffix first")
+      append(f.encode(delta, f.model.read(delta.sparkSession, dir), idCol,
+        vecCol), at(f)(dir))
+    }
+
+    def read(spark: SparkSession, f: Flat[_], dir: String): DataFrame =
+      f.decode(raw(spark, at(f)(dir)))
+
+    /** The tombstones, or an empty set typed by the stored rows. */
+    def dead(spark: SparkSession, f: Flat[_], dir: String): DataFrame =
+      if (new java.io.File(s"$dir/dead.parquet").exists())
+        spark.read.parquet(s"$dir/dead.parquet")
+      else raw(spark, at(f)(dir)).select(col("id")).limit(0)
+
+    def live(spark: SparkSession, f: Flat[_], dir: String): DataFrame =
+      read(spark, f, dir).join(dead(spark, f, dir), Seq("id"), "left_anti")
   }
 
-  /** Re-read the IVF artifacts: (index, centroids). */
-  def readIvfIndex(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$dir/ivf.parquet"),
-      spark.read.parquet(s"$dir/centroids.parquet"))
-
-  /** Admit a vector batch into the standing IVF artifact: only the
-    * delta is normalized and assigned (against the ARTIFACT's own
-    * centroids — serving must probe with the centroids the index was
-    * built with, so the append reads them back rather than taking a
-    * caller frame), landing as appended files under `ivf.parquet`.
-    * Assignment is a pure per-vector function of the static centroids,
-    * so append(build(base), delta) ≡ build(base ∪ delta) row-for-row —
-    * x_sim_ivf_append proves it by sharing the full-corpus serve
-    * oracle verbatim.
+  /** The plain store: the rows are the leaf `plain(dir)`, appends land
+    * as files beside the standing ones, and purge and compaction rewrite
+    * it in place.
     */
-  def appendIvfIndex(delta: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = delta.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids.parquet")
-    Similarity.ivfIndexWith(delta, cents, idCol, vecCol)
-      .write.mode("append").parquet(s"$dir/ivf.parquet")
+  private object FlatPlain extends FlatStore("", _.plain,
+      p => new java.io.File(p).exists(),
+      (rows, p) => rows.write.mode("overwrite").parquet(p),
+      (rows, p) => rows.write.mode("append").parquet(p),
+      (spark, p) => spark.read.parquet(p)) {
+    /** Rewrite the leaf minus the tombstoned ids, then clear them. A
+      * purge keeps the write's natural partitioning (`targetFiles` 0);
+      * a compaction coalesces the one-file-per-batch appends and folds
+      * pending tombstones in (the bucketed compacts' purge-on-compact
+      * discipline). The original is renamed aside first, so it survives
+      * under SOME name at every crash point (the
+      * [[Bucketing.compactBucketed]] discipline). Local File ops, the
+      * harness shape; an object-store deployment swaps in its
+      * FileSystem.
+      */
+    def rewrite(spark: SparkSession, f: Flat[_], dir: String,
+        targetFiles: Int = 0): Unit = {
+      val cur = new java.io.File(f.plain(dir))
+      val tmp = new java.io.File(s"${cur}__purge")
+      val old = new java.io.File(s"${cur}__old")
+      val live = spark.read.parquet(cur.getPath)
+        .join(dead(spark, f, dir), Seq("id"), "left_anti")
+      (if (targetFiles > 0) live.coalesce(targetFiles) else live)
+        .write.mode("overwrite").parquet(tmp.getPath)
+      Scratch.deleteRecursively(old)
+      java.nio.file.Files.move(cur.toPath, old.toPath)
+      java.nio.file.Files.move(tmp.toPath, cur.toPath)
+      Scratch.deleteRecursively(old)
+      Scratch.deleteRecursively(new java.io.File(s"$dir/dead.parquet"))
+    }
   }
 
-  /** Tombstone DELETION for the dir-based IVF artifact (round-13 —
-    * the similarity family's right-to-be-forgotten path, completing
-    * the per-document families'): dead vector ids append to
-    * `dead.parquet`, the standing (id, nvec, list_id) rows untouched.
-    * Unlike the pair-output families, exclusion must happen BEFORE
-    * ranking — a dropped neighbor is replaced by the next-best, so
-    * serving anti-joins the ENC frame ([[readIvfIndexLive]]), never
-    * the output. Centroids are the routing MODEL, not corpus content:
-    * deleting a vector never removes a centroid (re-fitting is a
-    * rebuild decision, exactly like any trained model). The
-    * tombstone-presence check and the purge swap use local File ops
-    * (the harness shape, like [[Bucketing.compactBucketedTiered]]);
-    * an object-store deployment swaps them for its FileSystem.
+  /** The versioned store: the rows are a [[VersionedFlat]] manifest
+    * chain at `versioned(dir)`, so appends and compactions publish new
+    * versions instead of mutating what a concurrent reader holds, and
+    * every version stays readable until vacuumed. The model leaves are
+    * written once and never rewritten, so they stay plain. Tombstones
+    * mask serving at once, but the bytes persist in older versions
+    * until a purge publishes the excluded frame AND
+    * [[VersionedFlat.vacuum]] drops the versions that still hold them:
+    * physical erasure is purge + vacuum, by construction of time travel.
     */
-  def deleteFromIvfIndex(ids: DataFrame, dir: String): Unit =
-    appendDeadFile(ids, dir)
+  private object FlatVersioned extends FlatStore("Versioned",
+      _.versioned, VersionedFlat.currentVersion(_) > 0,
+      VersionedFlat.write(_, _), VersionedFlat.append(_, _),
+      VersionedFlat.read(_, _)) {
+    /** Version `asOf` decoded; 0 = current. */
+    def readAsOf(spark: SparkSession, f: Flat[_], dir: String,
+        asOf: Int): DataFrame =
+      if (asOf > 0)
+        f.decode(VersionedFlat.readVersion(spark, f.versioned(dir), asOf))
+      else read(spark, f, dir)
 
-  /** The IVF artifact's standing tombstone set; the empty fallback's
-    * id type comes from the artifact itself.
-    */
-  def readIvfDeadIds(spark: SparkSession, dir: String): DataFrame =
-    readDeadFile(spark, dir, spark.read.parquet(s"$dir/ivf.parquet"))
+    /** The merged batch is PUBLISHED as a new version. By default this
+      * is LAYOUT-ONLY — tombstones keep masking and the dead bytes stay
+      * until a purge — because in a store whose versions are immutable
+      * snapshots, silently erasing rows during a compact would
+      * contradict what time travel promises. That deliberately DIVERGES
+      * from the plain store's compact, which folds and clears pending
+      * tombstones, so the divergence is a call-site-visible flag:
+      * `purgeTombstones = true` opts into fold-and-clear.
+      */
+    def compact(spark: SparkSession, f: Flat[_], dir: String,
+        targetFiles: Int, purgeTombstones: Boolean): Unit =
+      if (purgeTombstones) purge(spark, f, dir, targetFiles)
+      else VersionedFlat.compact(spark, f.versioned(dir), targetFiles)
 
-  /** (index minus tombstoned ids, centroids) — the frame serving must
-    * rank over while tombstones are pending.
-    */
-  def readIvfIndexLive(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val (enc, cents) = readIvfIndex(spark, dir)
-    (enc.join(readIvfDeadIds(spark, dir), Seq("id"), "left_anti"), cents)
-  }
+    /** Publish the rows minus the tombstoned ids as the next version,
+      * then clear the tombstones — publish STRICTLY BEFORE the clear,
+      * so a crash between the two leaves pending tombstones whose
+      * anti-join over the already-purged rows is a harmless no-op. The
+      * base version is captured FIRST and passed to
+      * [[VersionedFlat.replace]] as `basedOn`: an append that commits
+      * between the capture and the CAS raises
+      * ConcurrentModificationException instead of being silently erased
+      * by a purge built from a now-stale snapshot.
+      */
+    def purge(spark: SparkSession, f: Flat[_], dir: String,
+        targetFiles: Int): Unit = {
+      val (gone, at) = (dead(spark, f, dir), f.versioned(dir))
+      val v = VersionedFlat.currentVersion(at)
+      VersionedFlat.replace(VersionedFlat.readVersion(spark, at, v)
+        .join(gone, Seq("id"), "left_anti"), at, targetFiles, basedOn = v)
+      Scratch.deleteRecursively(new java.io.File(s"$dir/dead.parquet"))
+    }
 
-  /** Physically remove tombstoned vectors from `ivf.parquet` (rewrite
-    * + the rename-aside swap — the original survives under some name
-    * at every crash point, the [[Bucketing.compactBucketed]]
-    * discipline) and clear the tombstones. Serve answer invariant
-    * (IvfDeleteSpec: live serve ≡ rebuild-without-deleted ≡
-    * post-purge serve).
-    */
-  def purgeIvfIndex(spark: SparkSession, dir: String): Unit =
-    rewriteFlatArtifact(spark, dir, "ivf.parquet",
-      readIvfDeadIds(spark, dir))
-
-  /** FILE compaction for the dir-based IVF artifact: every admitted
-    * batch ([[appendIvfIndex]]) lands as its own file set under
-    * `ivf.parquet`, so a long-lived ingest loop accumulates
-    * one-file-per-batch fragmentation exactly like the bucketed LSM
-    * families — this rewrites the LIVE rows into `targetFiles` files
-    * (pending tombstones fold in and clear, the bucketed compacts'
-    * purge-on-compact discipline) with the same rename-aside swap.
-    * Pure layout change: x_sim_ivf_compact shares x_sim_ivf_topk's
-    * oracle verbatim through a build-half / append-half / compact
-    * cycle, and SimArtifactLifecycleSpec asserts the file count
-    * actually dropped.
-    */
-  def compactIvfIndex(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit =
-    rewriteFlatArtifact(spark, dir, "ivf.parquet",
-      readIvfDeadIds(spark, dir), targetFiles)
-
-  /** The IVF artifact on [[VersionedFlat]] manifests instead of an
-    * in-place leaf: the enc frame lives under `dir/enc` as immutable
-    * batch dirs behind an atomically-swapped version pointer, so
-    * appends and compactions never mutate what a concurrent reader
-    * holds and every version stays time-travelable until vacuumed.
-    * Centroids remain a plain leaf — the routing model is written once
-    * and never rewritten, so it needs no versioning. Serving any
-    * version must equal building from that version's corpus directly
-    * (assignment is a pure per-vector function of the static
-    * centroids): x_sim_ivf_versioned shares x_sim_ivf_topk's oracle
-    * through a write/append/compact cycle and x_sim_ivf_time_travel
-    * pins version 1's serve to an evens-only recompute.
-    */
-  def writeIvfIndexVersioned(corpus: DataFrame, centroids: DataFrame,
-      dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    Scratch.sweepOnce(corpus.sparkSession)
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    VersionedFlat.write(
-      Similarity.ivfIndexWith(corpus, centroids, idCol, vecCol),
-      s"$dir/enc")
-  }
-
-  /** [[appendIvfIndex]] on the versioned store: the delta is assigned
-    * against the artifact's own persisted centroids and published as a
-    * new version (previous batches referenced, not rewritten).
-    */
-  def appendIvfIndexVersioned(delta: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val cents = delta.sparkSession.read
-      .parquet(s"$dir/centroids.parquet")
-    VersionedFlat.append(
-      Similarity.ivfIndexWith(delta, cents, idCol, vecCol), s"$dir/enc")
-  }
-
-  /** File compaction on the versioned store: the merged batch is
-    * PUBLISHED as a new version rather than swapped in place — readers
-    * holding any older version keep their files until vacuum. By
-    * default this is LAYOUT-ONLY — tombstones keep masking at serve
-    * time and the dead bytes stay until a purge publishes the excluded
-    * frame, because in a store whose versions are immutable snapshots,
-    * silently erasing rows during a compact would contradict what time
-    * travel promises. That deliberately DIVERGES from
-    * [[compactIvfIndex]] (the flat twin folds and clears pending
-    * tombstones), so the divergence is a call-site-visible FLAG
-    * (round-13 ADVICE): `purgeTombstones = true` opts into the flat
-    * twin's fold-and-clear semantics (≡ [[purgeIvfIndexVersioned]]
-    * with coalescing) for callers that want one verb for both stores.
-    */
-  def compactIvfIndexVersioned(spark: SparkSession, dir: String,
-      targetFiles: Int = 1, purgeTombstones: Boolean = false): Unit =
-    if (purgeTombstones) purgeIvfIndexVersioned(spark, dir, targetFiles)
-    else VersionedFlat.compact(spark, s"$dir/enc", targetFiles)
-
-  /** (enc of version `asOf` — 0 = current, centroids). */
-  def readIvfIndexVersioned(spark: SparkSession, dir: String,
-      asOf: Int = 0): (DataFrame, DataFrame) =
-    ((if (asOf > 0) VersionedFlat.readVersion(spark, s"$dir/enc", asOf)
-      else VersionedFlat.read(spark, s"$dir/enc")),
-      spark.read.parquet(s"$dir/centroids.parquet"))
-
-  /** ROLLBACK of the versioned IVF artifact's enc family
-    * ([[VersionedFlat.rollback]] — round-16): revert a poisoned
-    * admission by reference; the bad version stays time-travelable,
-    * the centroids (the artifact's immutable model) are untouched,
-    * and serving the current version afterwards equals serving the
-    * rolled-back-to version.
-    */
-  def rollbackIvfIndexVersioned(spark: SparkSession, dir: String,
-      v: Int): Int =
-    VersionedFlat.rollback(s"$dir/enc", v)
-
-  /** The tombstone algebra composed onto the versioned store — same
-    * `dead.parquet` + anti-join-before-ranking as the flat artifact
-    * ([[deleteFromIvfIndex]]), with one honest difference a
-    * right-to-be-forgotten pipeline must know: tombstones mask SERVING
-    * immediately (any version, via [[readIvfIndexVersionedLive]]), but
-    * the bytes persist in older versions' batch dirs until
-    * [[purgeIvfIndexVersioned]] publishes the excluded frame AND
-    * [[VersionedFlat.vacuum]] drops the versions that still hold them
-    * — physical erasure is purge + vacuum, by construction of
-    * time travel.
-    */
-  def deleteFromIvfIndexVersioned(ids: DataFrame, dir: String): Unit =
-    appendDeadFile(ids, dir)
-
-  def readIvfVersionedDeadIds(spark: SparkSession,
-      dir: String): DataFrame =
-    readDeadFile(spark, dir, VersionedFlat.read(spark, s"$dir/enc"))
-
-  /** (current enc minus tombstoned ids, centroids). */
-  def readIvfIndexVersionedLive(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val (enc, cents) = readIvfIndexVersioned(spark, dir)
-    (enc.join(readIvfVersionedDeadIds(spark, dir), Seq("id"),
-      "left_anti"), cents)
-  }
-
-  /** Publish the tombstone-excluded frame as the next version and
-    * clear the tombstones ([[purgeVersionedFlat]]: publish before the
-    * clear, CAS against the captured base version). Older versions
-    * still hold the dead rows until vacuum (see
-    * [[deleteFromIvfIndexVersioned]]).
-    */
-  def purgeIvfIndexVersioned(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit =
-    purgeVersionedFlat(spark, dir, "enc", readIvfVersionedDeadIds(spark, dir),
-      targetFiles)
-
-
-  /** The int8 artifact on [[VersionedFlat]] manifests — the second
-    * wiring, showing the store is artifact-agnostic: int8 has NO model
-    * leaf at all (per-vector scales), so the whole artifact IS the
-    * versioned frame and `write` owns the directory outright. Batches
-    * land PACKED (tinyint q, the [[writeInt8Index]] discipline) and
-    * [[VersionedFlat.compact]]'s raw rewrite preserves the packed
-    * schema through the merged batch — asserted in
-    * SimArtifactLifecycleSpec. Serving any version decodes exactly as
-    * the flat reader does; x_sim_quantized_versioned shares
-    * x_sim_quantized's oracle through a write/append/compact cycle.
-    */
-  def writeInt8IndexVersioned(corpus: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    Scratch.sweepOnce(corpus.sparkSession)
-    VersionedFlat.write(packedInt8(corpus, idCol, vecCol), dir)
-  }
-
-  def appendInt8IndexVersioned(delta: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    VersionedFlat.append(packedInt8(delta, idCol, vecCol), dir)
-
-  /** The current (or `asOf`) version decoded for serving — tinyint →
-    * double is exact, so versioned serves hash-match the flat path.
-    */
-  def readInt8IndexVersioned(spark: SparkSession, dir: String,
-      asOf: Int = 0): DataFrame =
-    (if (asOf > 0) VersionedFlat.readVersion(spark, dir, asOf)
-     else VersionedFlat.read(spark, dir))
-      .select(col("id"),
-        transform(col("q"), x => x.cast("double")).as("q"),
-        col("scale"))
-
-  /** One quantize+pack projection shared by the flat and versioned
-    * int8 writers.
-    */
-  private def packedInt8(df: DataFrame, idCol: String,
-      vecCol: String): DataFrame =
-    Similarity.int8Index(df, idCol, vecCol)
-      .select(col("id"),
-        transform(col("q"), x => x.cast("tinyint")).as("q"),
-        col("scale"))
-
-  /** Rewrite a flat (per-vector) artifact leaf minus `dead` ids with
-    * the rename-aside swap — the original survives under SOME name at
-    * every crash point, the [[Bucketing.compactBucketed]] discipline —
-    * then clear the tombstones. `targetFiles > 0` coalesces the
-    * rewrite (compaction); 0 keeps the write's natural partitioning
-    * (purge). The read is RAW (no decode/re-encode), so packed schemas
-    * — the int8 leaf's tinyint q — survive the rewrite byte-exact.
-    */
-  private def rewriteFlatArtifact(spark: SparkSession, dir: String,
-      leaf: String, dead: DataFrame, targetFiles: Int = 0): Unit = {
-    val tmp = new java.io.File(s"$dir/${leaf}__purge")
-    val cur = new java.io.File(s"$dir/$leaf")
-    val old = new java.io.File(s"$dir/${leaf}__old")
-    val live = spark.read.parquet(cur.getPath)
-      .join(dead, Seq("id"), "left_anti")
-    (if (targetFiles > 0) live.coalesce(targetFiles) else live)
-      .write.mode("overwrite").parquet(tmp.getPath)
-    Scratch.deleteRecursively(old)
-    java.nio.file.Files.move(cur.toPath, old.toPath)
-    java.nio.file.Files.move(tmp.toPath, cur.toPath)
-    Scratch.deleteRecursively(old)
-    Scratch.deleteRecursively(new java.io.File(s"$dir/dead.parquet"))
+    /** Revert to version `v` by reference ([[VersionedFlat.rollback]]);
+      * the reverted-from versions stay time-travelable and the model
+      * leaves are untouched. Returns the committed version.
+      */
+    def rollback(f: Flat[_], dir: String, v: Int): Int =
+      VersionedFlat.rollback(f.versioned(dir), v)
   }
 
   /** The flat artifacts' one tombstone writer: deleted ids append to
     * `dir/dead.parquet`, the standing artifact untouched.
     */
   private def appendDeadFile(ids: DataFrame, dir: String): Unit =
-    ids.select(col("id"))
-      .write.mode("append").parquet(s"$dir/dead.parquet")
+    ids.select(col("id")).write.mode("append").parquet(s"$dir/dead.parquet")
 
-  /** The flat artifacts' one tombstone reader: `dir/dead.parquet`, or
-    * an empty frame whose id type comes from the artifact itself
-    * (`typedFrom`, read only when there are no tombstones).
+  // ------------------------------------------------------- IVF, plain
+  /** Build the IVF index (`ivf.parquet`: id long, nvec array<double>,
+    * list_id long) under an explicit centroid frame
+    * ([[Similarity.firstIdCentroids]] for the deterministic plumbing
+    * path, [[Similarity.kmeansCentroids]] for the quality path); the
+    * artifact records whichever was used.
     */
-  private def readDeadFile(spark: SparkSession, dir: String,
-      typedFrom: => DataFrame): DataFrame =
-    if (new java.io.File(s"$dir/dead.parquet").exists())
-      spark.read.parquet(s"$dir/dead.parquet")
-    else typedFrom.select(col("id")).limit(0)
+  def writeIvfIndex(corpus: DataFrame, centroids: DataFrame, dir: String,
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    FlatPlain.build(Ivf, corpus, centroids, dir, idCol, vecCol)
 
-  /** Publish the versioned frame under `dir/sub` minus `dead` as its
-    * next version, then clear the tombstones — publish STRICTLY BEFORE
-    * the clear, so a crash between the two leaves pending tombstones
-    * whose anti-join over the already-purged rows is a harmless no-op.
-    * The base version is captured FIRST and passed to
-    * [[VersionedFlat.replace]] as `basedOn`: an append that commits
-    * between the capture and the CAS raises
-    * ConcurrentModificationException instead of being silently erased
-    * by a purge built from a now-stale snapshot.
+  /** (index, centroids). */
+  def readIvfIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (FlatPlain.read(spark, Ivf, dir), Centroids.read(spark, dir))
+
+  /** Admit a vector batch, assigned against the artifact's own
+    * centroids; x_sim_ivf_append shares x_sim_ivf_topk's full-corpus
+    * oracle verbatim.
     */
-  private def purgeVersionedFlat(spark: SparkSession, dir: String,
-      sub: String, dead: DataFrame, targetFiles: Int): Unit = {
-    val v = VersionedFlat.currentVersion(s"$dir/$sub")
-    VersionedFlat.replace(
-      VersionedFlat.readVersion(spark, s"$dir/$sub", v)
-        .join(dead, Seq("id"), "left_anti"),
-      s"$dir/$sub", targetFiles, basedOn = v)
-    Scratch.deleteRecursively(new java.io.File(s"$dir/dead.parquet"))
-  }
+  def appendIvfIndex(delta: DataFrame, dir: String, idCol: String = "vec_id",
+      vecCol: String = "embedding"): Unit =
+    FlatPlain.admit(Ivf, delta, dir, idCol, vecCol)
 
-  /** Persist the int8-quantized corpus: `int8.parquet` (id long,
-    * q array<tinyint> in [-127, 127], scale double). THE quantized
-    * serving artifact a 100 TB corpus persists — and since round 13
-    * the artifact REALIZES the packing on disk instead of deferring it
-    * to "a production sink": q is stored as one-byte TINYINTs (4×
-    * smaller than float32, 8× than the doubles the pre-round-13
-    * artifact wrote; Int8PackSpec measures the on-disk ratio).
-    * Quantized values are exact integers in [-127, 127], so the
-    * tinyint cast on write and the double cast on read
-    * ([[readInt8Index]]) both round-trip EXACTLY — index-served
-    * rankings stay hash-equal to the in-memory path
-    * (x_sim_quantized_served shares x_sim_quantized's oracle
-    * verbatim).
+  /** Tombstone deletion: dead ids append to `dead.parquet`;
+    * [[readIvfIndexLive]] excludes them before ranking and
+    * [[purgeIvfIndex]] removes them physically.
     */
-  def writeInt8Index(corpus: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    Scratch.sweepOnce(corpus.sparkSession)
-    packedInt8(corpus, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$dir/int8.parquet")
-  }
+  def deleteFromIvfIndex(ids: DataFrame, dir: String): Unit =
+    appendDeadFile(ids, dir)
 
-  /** LSM APPEND for the int8 artifact: only the delta is normalized,
-    * quantized, and packed — per-vector quantization has NO fitted
-    * state (each row's scale is its own max-abs), so
-    * append(build(base), delta) ≡ build(base ∪ delta) row-for-row and
-    * x_sim_quantized_append shares x_sim_quantized's oracle verbatim.
+  def readIvfDeadIds(spark: SparkSession, dir: String): DataFrame =
+    FlatPlain.dead(spark, Ivf, dir)
+
+  /** (index minus tombstoned ids, centroids): the frame serving must
+    * rank over while tombstones are pending.
     */
-  def appendInt8Index(delta: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    // fail loudly on an unbuilt store (round-13 ADVICE): int8 is the
-    // one artifact whose append needs no model read-back, so without
-    // this check mode("append") would silently CREATE a partial
-    // artifact where every other family's append fails
-    require(new java.io.File(s"$dir/int8.parquet").exists(),
-      s"no int8 artifact at $dir — build with writeInt8Index first " +
-        "(appending into a never-built store would silently create a " +
-        "partial corpus)")
-    packedInt8(delta, idCol, vecCol)
-      .write.mode("append").parquet(s"$dir/int8.parquet")
-  }
+  def readIvfIndexLive(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame) =
+    (FlatPlain.live(spark, Ivf, dir), Centroids.read(spark, dir))
 
-  /** Re-read the int8 artifact as (id, q array<double>, scale) — the
-    * exact frame [[graft.ext.Similarity.quantizedTopKFromIndex]]
-    * consumes: every tinyint is an exactly-representable double, so
-    * the widening cast reconstructs the in-memory quantized frame
-    * bit-for-bit.
+  /** IvfDeleteSpec: live serve ≡ rebuild-without-deleted ≡ post-purge
+    * serve.
+    */
+  def purgeIvfIndex(spark: SparkSession, dir: String): Unit =
+    FlatPlain.rewrite(spark, Ivf, dir)
+
+  /** Rewrite the live rows into `targetFiles` files, folding and
+    * clearing pending tombstones; x_sim_ivf_compact shares
+    * x_sim_ivf_topk's oracle verbatim.
+    */
+  def compactIvfIndex(spark: SparkSession, dir: String,
+      targetFiles: Int = 1): Unit =
+    FlatPlain.rewrite(spark, Ivf, dir, targetFiles)
+
+  // --------------------------------------------------- IVF, versioned
+  /** Serving any version equals building from that version's corpus:
+    * x_sim_ivf_versioned shares x_sim_ivf_topk's oracle through a
+    * write/append/compact cycle, and x_sim_ivf_time_travel pins
+    * version 1's serve to an evens-only recompute.
+    */
+  def writeIvfIndexVersioned(corpus: DataFrame, centroids: DataFrame,
+      dir: String, idCol: String = "vec_id",
+      vecCol: String = "embedding"): Unit =
+    FlatVersioned.build(Ivf, corpus, centroids, dir, idCol, vecCol)
+
+  def appendIvfIndexVersioned(delta: DataFrame, dir: String,
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    FlatVersioned.admit(Ivf, delta, dir, idCol, vecCol)
+
+  /** Layout-only unless `purgeTombstones`. */
+  def compactIvfIndexVersioned(spark: SparkSession, dir: String,
+      targetFiles: Int = 1, purgeTombstones: Boolean = false): Unit =
+    FlatVersioned.compact(spark, Ivf, dir, targetFiles, purgeTombstones)
+
+  /** (enc of version `asOf` — 0 = current, centroids). */
+  def readIvfIndexVersioned(spark: SparkSession, dir: String,
+      asOf: Int = 0): (DataFrame, DataFrame) =
+    (FlatVersioned.readAsOf(spark, Ivf, dir, asOf), Centroids.read(spark, dir))
+
+  /** Revert a poisoned admission: serving the current version then
+    * equals serving version `v` (x_sim_ivf_rollback).
+    */
+  def rollbackIvfIndexVersioned(spark: SparkSession, dir: String, v: Int): Int =
+    FlatVersioned.rollback(Ivf, dir, v)
+
+  def deleteFromIvfIndexVersioned(ids: DataFrame, dir: String): Unit =
+    appendDeadFile(ids, dir)
+
+  def readIvfVersionedDeadIds(spark: SparkSession, dir: String): DataFrame =
+    FlatVersioned.dead(spark, Ivf, dir)
+
+  /** (current enc minus tombstoned ids, centroids). */
+  def readIvfIndexVersionedLive(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame) =
+    (FlatVersioned.live(spark, Ivf, dir), Centroids.read(spark, dir))
+
+  def purgeIvfIndexVersioned(spark: SparkSession, dir: String,
+      targetFiles: Int = 1): Unit =
+    FlatVersioned.purge(spark, Ivf, dir, targetFiles)
+
+  // -------------------------------------------------- int8, versioned
+  /** Batches land packed and [[VersionedFlat.compact]]'s raw rewrite
+    * keeps the tinyint schema; x_sim_quantized_versioned shares
+    * x_sim_quantized's oracle through a write/append/compact cycle.
+    */
+  def writeInt8IndexVersioned(corpus: DataFrame, dir: String,
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    FlatVersioned.build(Int8, corpus, (), dir, idCol, vecCol)
+
+  def appendInt8IndexVersioned(delta: DataFrame, dir: String,
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    FlatVersioned.admit(Int8, delta, dir, idCol, vecCol)
+
+  /** Version `asOf` (0 = current) decoded for serving. */
+  def readInt8IndexVersioned(spark: SparkSession, dir: String,
+      asOf: Int = 0): DataFrame =
+    FlatVersioned.readAsOf(spark, Int8, dir, asOf)
+
+  // ------------------------------------------------------ int8, plain
+  /** Persist the int8-quantized corpus as `int8.parquet` (id long,
+    * q array<tinyint> in [-127, 127], scale double), 4× smaller than
+    * float32 (Int8PackSpec measures the on-disk ratio);
+    * x_sim_quantized_served shares x_sim_quantized's oracle verbatim.
+    */
+  def writeInt8Index(corpus: DataFrame, dir: String, idCol: String = "vec_id",
+      vecCol: String = "embedding"): Unit =
+    FlatPlain.build(Int8, corpus, (), dir, idCol, vecCol)
+
+  /** Per-vector quantization has no fitted state (each row's scale is
+    * its own max-abs), so the delta is only quantized and packed.
+    */
+  def appendInt8Index(delta: DataFrame, dir: String, idCol: String = "vec_id",
+      vecCol: String = "embedding"): Unit =
+    FlatPlain.admit(Int8, delta, dir, idCol, vecCol)
+
+  /** (id, q array<double>, scale): the exact frame
+    * [[graft.ext.Similarity.quantizedTopKFromIndex]] consumes.
     */
   def readInt8Index(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/int8.parquet")
-      .select(col("id"),
-        transform(col("q"), x => x.cast("double")).as("q"),
-        col("scale"))
+    FlatPlain.read(spark, Int8, dir)
 
-  /** Tombstone DELETION for the int8 artifact — the IVF pattern on
-    * the flat (id, q, scale) corpus: dead ids append to
-    * `dead.parquet`; [[readInt8IndexLive]] anti-joins BEFORE ranking
-    * (exclusion must precede top-k); [[purgeInt8Index]] rewrites the
-    * artifact minus dead rows (tinyint schema preserved — the rewrite
-    * never decodes q) with the rename-aside swap and clears the
-    * tombstones. The same ten lines transplant to the PQ/IVF-PQ code
-    * tables when needed — all the similarity artifacts are flat
-    * per-vector frames.
-    */
   def deleteFromInt8Index(ids: DataFrame, dir: String): Unit =
     appendDeadFile(ids, dir)
 
   def readInt8DeadIds(spark: SparkSession, dir: String): DataFrame =
-    readDeadFile(spark, dir, spark.read.parquet(s"$dir/int8.parquet"))
+    FlatPlain.dead(spark, Int8, dir)
 
   /** The int8 corpus minus tombstoned ids, decoded for serving. */
   def readInt8IndexLive(spark: SparkSession, dir: String): DataFrame =
-    readInt8Index(spark, dir)
-      .join(readInt8DeadIds(spark, dir), Seq("id"), "left_anti")
+    FlatPlain.live(spark, Int8, dir)
 
   def purgeInt8Index(spark: SparkSession, dir: String): Unit =
-    // raw read inside the helper: q stays tinyint through the rewrite
-    rewriteFlatArtifact(spark, dir, "int8.parquet",
-      readInt8DeadIds(spark, dir))
+    FlatPlain.rewrite(spark, Int8, dir)
 
-  /** [[compactIvfIndex]] for the int8 artifact (appends fragment
-    * `int8.parquet` the same way); the raw rewrite preserves the
-    * packed tinyint schema.
-    */
   def compactInt8Index(spark: SparkSession, dir: String,
       targetFiles: Int = 1): Unit =
-    rewriteFlatArtifact(spark, dir, "int8.parquet",
-      readInt8DeadIds(spark, dir), targetFiles)
+    FlatPlain.rewrite(spark, Int8, dir, targetFiles)
 
-  /** Persist a PQ index: `codebooks.parquet` (j int, code int,
-    * cvec array<double>, bias double — m·ks rows, the whole model) and
-    * `codes.parquet` (id long, codes array<int> — m small codes per
+  // -------------------------------------------------------- PQ, plain
+  /** Persist a PQ index: `codebooks.parquet` (the model) and
+    * `codes.parquet` (id long, codes array<int>: m small codes per
     * corpus vector, the state that stays in executor memory when float
-    * vectors cannot). Plain parquet an external engine can consume;
-    * the codebook doubles round-trip bit-identically, so
-    * [[readPqModel]] + [[graft.ext.Similarity.pqTopKFromCodes]]
-    * reproduce the in-memory ranking exactly.
+    * vectors cannot).
     */
-  private def codebookFrame(spark: SparkSession,
-      model: Similarity.PqModel): DataFrame = {
-    import spark.implicits._
-    (for (j <- 0 until model.m; c <- 0 until model.ks)
-      yield (j, c, model.codebooks(j)(c).toSeq, model.biases(j)(c)))
-      .toDF("j", "code", "cvec", "bias")
-      .coalesce(1)
-  }
-
-  def writePqIndex(corpus: DataFrame, model: Similarity.PqModel,
-      dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    Scratch.sweepOnce(corpus.sparkSession)
-    codebookFrame(corpus.sparkSession, model)
-      .write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
-    Similarity.pqEncode(corpus, model, idCol, vecCol)
-      .select(col("id"), col("codes"))
-      .write.mode("overwrite").parquet(s"$dir/codes.parquet")
-  }
-
-  /** LSM APPEND for the PQ code table: the delta is encoded against
-    * the artifact's OWN persisted codebooks ([[readPqModel]] — the
-    * fitted model is read back, never re-fitted or taken from the
-    * caller, the [[appendIvfIndex]] discipline) and its code rows land
-    * as appended files. Encoding is a pure per-vector function of the
-    * static model, so append(build(base), delta) ≡ build(base ∪ delta)
-    * and x_sim_pq_append shares x_sim_pq's fitted-literal dynamic
-    * oracle verbatim.
-    */
-  def appendPqIndex(delta: DataFrame, dir: String,
+  def writePqIndex(corpus: DataFrame, model: Similarity.PqModel, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    Similarity.pqEncode(delta, readPqModel(delta.sparkSession, dir),
-        idCol, vecCol)
-      .select(col("id"), col("codes"))
-      .write.mode("append").parquet(s"$dir/codes.parquet")
+    FlatPlain.build(Pq, corpus, model, dir, idCol, vecCol)
 
-  /** Tombstone DELETION for the PQ code table — the documented
-    * ten-line transplant of the flat-artifact pattern: dead ids append
-    * to `dead.parquet`; [[readPqCodesLive]] anti-joins the codes
-    * BEFORE ranking; [[purgePqIndex]] rewrites `codes.parquet` minus
-    * dead rows with the rename-aside swap. The codebooks — the fitted
-    * model — stay, like the IVF centroids.
+  /** Encode the delta against the artifact's own codebooks;
+    * x_sim_pq_append shares x_sim_pq's fitted-literal oracle verbatim.
     */
+  def appendPqIndex(delta: DataFrame, dir: String, idCol: String = "vec_id",
+      vecCol: String = "embedding"): Unit =
+    FlatPlain.admit(Pq, delta, dir, idCol, vecCol)
+
   def deleteFromPqIndex(ids: DataFrame, dir: String): Unit =
     appendDeadFile(ids, dir)
 
   def readPqDeadIds(spark: SparkSession, dir: String): DataFrame =
-    readDeadFile(spark, dir, spark.read.parquet(s"$dir/codes.parquet"))
+    FlatPlain.dead(spark, Pq, dir)
 
   /** The PQ corpus codes minus tombstoned ids. */
   def readPqCodesLive(spark: SparkSession, dir: String): DataFrame =
-    readPqCodes(spark, dir)
-      .join(readPqDeadIds(spark, dir), Seq("id"), "left_anti")
+    FlatPlain.live(spark, Pq, dir)
 
   def purgePqIndex(spark: SparkSession, dir: String): Unit =
-    rewriteFlatArtifact(spark, dir, "codes.parquet",
-      readPqDeadIds(spark, dir))
+    FlatPlain.rewrite(spark, Pq, dir)
 
-  /** [[compactIvfIndex]] for the PQ code table. */
   def compactPqIndex(spark: SparkSession, dir: String,
       targetFiles: Int = 1): Unit =
-    rewriteFlatArtifact(spark, dir, "codes.parquet",
-      readPqDeadIds(spark, dir), targetFiles)
+    FlatPlain.rewrite(spark, Pq, dir, targetFiles)
 
-  // ------------------------------------------- PQ versioned (round-14)
-  /** The PQ artifact on [[VersionedFlat]] manifests — round-14
-    * directive #1, the third wiring (int8 at [[writeInt8IndexVersioned]]
-    * was the template): the (id, codes) frame lives under `dir/codes`
-    * as immutable batch dirs behind the manifest chain, so appends and
-    * compactions never mutate what a concurrent reader holds and every
-    * version stays time-travelable until vacuumed. The codebooks — the
-    * fitted MODEL — remain a plain write-once leaf exactly like the
-    * IVF centroids: deleting or admitting vectors never refits a model
-    * (a refit is a rebuild decision). Encoding is a pure per-vector
-    * function of the static model, so serving any version equals
-    * building from that version's corpus directly — x_sim_pq_versioned
-    * shares x_sim_pq's fitted-literal dynamic oracle through a
-    * write/append/compact cycle.
+  // ---------------------------------------------------- PQ, versioned
+  /** x_sim_pq_versioned shares x_sim_pq's fitted-literal oracle through
+    * a write/append/compact cycle.
     */
   def writePqIndexVersioned(corpus: DataFrame, model: Similarity.PqModel,
       dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    Scratch.sweepOnce(corpus.sparkSession)
-    codebookFrame(corpus.sparkSession, model)
-      .write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
-    VersionedFlat.write(
-      Similarity.pqEncode(corpus, model, idCol, vecCol)
-        .select(col("id"), col("codes")),
-      s"$dir/codes")
-  }
+      vecCol: String = "embedding"): Unit =
+    FlatVersioned.build(Pq, corpus, model, dir, idCol, vecCol)
 
-  /** [[appendPqIndex]] on the versioned store: the delta is encoded
-    * against the artifact's OWN persisted codebooks and published as a
-    * new version (previous batches referenced, not rewritten).
-    */
   def appendPqIndexVersioned(delta: DataFrame, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    VersionedFlat.append(
-      Similarity.pqEncode(delta, readPqModel(delta.sparkSession, dir),
-          idCol, vecCol)
-        .select(col("id"), col("codes")),
-      s"$dir/codes")
+    FlatVersioned.admit(Pq, delta, dir, idCol, vecCol)
 
-  /** [[compactIvfIndexVersioned]]'s contract for the PQ code table:
-    * layout-only by default (tombstones keep masking; time travel
-    * keeps its bytes), fold-and-clear under the explicit flag.
-    */
+  /** Layout-only unless `purgeTombstones`. */
   def compactPqIndexVersioned(spark: SparkSession, dir: String,
       targetFiles: Int = 1, purgeTombstones: Boolean = false): Unit =
-    if (purgeTombstones) purgePqIndexVersioned(spark, dir, targetFiles)
-    else VersionedFlat.compact(spark, s"$dir/codes", targetFiles)
+    FlatVersioned.compact(spark, Pq, dir, targetFiles, purgeTombstones)
 
   /** The code frame of version `asOf` (0 = current). */
   def readPqCodesVersioned(spark: SparkSession, dir: String,
       asOf: Int = 0): DataFrame =
-    if (asOf > 0) VersionedFlat.readVersion(spark, s"$dir/codes", asOf)
-    else VersionedFlat.read(spark, s"$dir/codes")
+    FlatVersioned.readAsOf(spark, Pq, dir, asOf)
 
-  /** The tombstone algebra on the versioned PQ store — same
-    * `dead.parquet` + anti-join-before-ranking as the flat twin, with
-    * the versioned stores' honest difference: tombstones mask serving
-    * immediately, the bytes persist in older versions until purge +
-    * vacuum (see [[deleteFromIvfIndexVersioned]]).
-    */
   def deleteFromPqIndexVersioned(ids: DataFrame, dir: String): Unit =
     appendDeadFile(ids, dir)
 
-  def readPqVersionedDeadIds(spark: SparkSession,
-      dir: String): DataFrame =
-    readDeadFile(spark, dir, readPqCodesVersioned(spark, dir))
+  def readPqVersionedDeadIds(spark: SparkSession, dir: String): DataFrame =
+    FlatVersioned.dead(spark, Pq, dir)
 
-  /** The current code frame minus tombstoned ids — exclusion BEFORE
-    * ADC ranking, so next-best neighbors promote in.
-    */
-  def readPqCodesVersionedLive(spark: SparkSession,
-      dir: String): DataFrame =
-    readPqCodesVersioned(spark, dir)
-      .join(readPqVersionedDeadIds(spark, dir), Seq("id"), "left_anti")
+  /** The current code frame minus tombstoned ids. */
+  def readPqCodesVersionedLive(spark: SparkSession, dir: String): DataFrame =
+    FlatVersioned.live(spark, Pq, dir)
 
-  /** Publish the tombstone-excluded code frame as the next version and
-    * clear the tombstones — publish STRICTLY BEFORE the clear
-    * ([[purgeIvfIndexVersioned]]'s crash discipline, including its
-    * captured `basedOn` stale-frame guard).
-    */
   def purgePqIndexVersioned(spark: SparkSession, dir: String,
       targetFiles: Int = 1): Unit =
-    purgeVersionedFlat(spark, dir, "codes", readPqVersionedDeadIds(spark, dir),
-      targetFiles)
+    FlatVersioned.purge(spark, Pq, dir, targetFiles)
 
-
-  /** Persist the COMPOSED IVF-PQ index — the 100 TB ANN architecture
-    * end to end on disk: `centroids.parquet` (probe routing),
-    * `codebooks.parquet` (the model), `ivfpq.parquet` (id, list_id,
-    * codes — one row of a list id plus m small codes per corpus
-    * vector, built in one normalized pass). Serving reads all three
-    * and never touches the float corpus again
-    * ([[graft.ext.Similarity.ivfPqTopKFromIndex]]); doubles
-    * round-trip parquet bit-identically, so x_sim_ivf_pq_served
+  // ---------------------------------------------------- IVF-PQ, plain
+  /** Persist the composed IVF-PQ index: `centroids.parquet` (probe
+    * routing), `codebooks.parquet` (the model) and `ivfpq.parquet` (id,
+    * list_id, codes). Serving never touches the float corpus again
+    * ([[graft.ext.Similarity.ivfPqTopKFromIndex]]); x_sim_ivf_pq_served
     * shares x_sim_ivf_pq's oracle verbatim.
     */
   def writeIvfPqIndex(corpus: DataFrame, model: Similarity.PqModel,
       centroids: DataFrame, dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    Scratch.sweepOnce(corpus.sparkSession)
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    codebookFrame(corpus.sparkSession, model)
-      .write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
-    Similarity.ivfPqIndex(corpus, model, centroids, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$dir/ivfpq.parquet")
-  }
+      vecCol: String = "embedding"): Unit =
+    FlatPlain.build(IvfPq, corpus, (model, centroids), dir, idCol, vecCol)
 
-  /** Re-read the IVF-PQ artifacts: (enc, centroids); the model comes
-    * from [[readPqModel]] on the same dir.
-    */
-  def readIvfPqIndex(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$dir/ivfpq.parquet"),
-      spark.read.parquet(s"$dir/centroids.parquet"))
+  /** (enc, centroids); the model comes from [[readPqModel]]. */
+  def readIvfPqIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (FlatPlain.read(spark, IvfPq, dir), Centroids.read(spark, dir))
 
-  /** LSM APPEND for the composed IVF-PQ artifact: the delta is
-    * assigned AND encoded against the artifact's own persisted
-    * centroids + codebooks (both model halves read back — admission
-    * never re-fits either), landing as appended (id, list_id, codes)
-    * files. Both steps are pure per-vector functions of the static
-    * model, so append ≡ full rebuild and x_sim_ivf_pq_append shares
-    * x_sim_ivf_pq's fitted-literal dynamic oracle verbatim.
-    */
-  def appendIvfPqIndex(delta: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = delta.sparkSession
-    Similarity.ivfPqIndex(delta, readPqModel(spark, dir),
-        spark.read.parquet(s"$dir/centroids.parquet"), idCol, vecCol)
-      .write.mode("append").parquet(s"$dir/ivfpq.parquet")
-  }
+  /** Assign AND encode the delta against both persisted model halves. */
+  def appendIvfPqIndex(delta: DataFrame, dir: String, idCol: String = "vec_id",
+      vecCol: String = "embedding"): Unit =
+    FlatPlain.admit(IvfPq, delta, dir, idCol, vecCol)
 
-  /** Tombstone DELETION for the composed IVF-PQ artifact — the same
-    * flat-artifact pattern ([[deleteFromPqIndex]]); centroids AND
-    * codebooks (both model halves) stay.
-    */
   def deleteFromIvfPqIndex(ids: DataFrame, dir: String): Unit =
     appendDeadFile(ids, dir)
 
   def readIvfPqDeadIds(spark: SparkSession, dir: String): DataFrame =
-    readDeadFile(spark, dir, spark.read.parquet(s"$dir/ivfpq.parquet"))
+    FlatPlain.dead(spark, IvfPq, dir)
 
   /** (enc minus tombstoned ids, centroids). */
   def readIvfPqIndexLive(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val (enc, cents) = readIvfPqIndex(spark, dir)
-    (enc.join(readIvfPqDeadIds(spark, dir), Seq("id"), "left_anti"),
-      cents)
-  }
+      : (DataFrame, DataFrame) =
+    (FlatPlain.live(spark, IvfPq, dir), Centroids.read(spark, dir))
 
   def purgeIvfPqIndex(spark: SparkSession, dir: String): Unit =
-    rewriteFlatArtifact(spark, dir, "ivfpq.parquet",
-      readIvfPqDeadIds(spark, dir))
+    FlatPlain.rewrite(spark, IvfPq, dir)
 
-  /** [[compactIvfIndex]] for the composed IVF-PQ code table. */
   def compactIvfPqIndex(spark: SparkSession, dir: String,
       targetFiles: Int = 1): Unit =
-    rewriteFlatArtifact(spark, dir, "ivfpq.parquet",
-      readIvfPqDeadIds(spark, dir), targetFiles)
+    FlatPlain.rewrite(spark, IvfPq, dir, targetFiles)
 
-  // --------------------------------------- IVF-PQ versioned (round-14)
-  /** The composed IVF-PQ artifact on [[VersionedFlat]] manifests — the
-    * last similarity artifact onto the store (round-14 directive #1):
-    * the (id, list_id, codes) frame lives under `dir/enc` behind the
-    * manifest chain; BOTH model halves (centroids for probe routing,
-    * codebooks for ADC) stay plain write-once leaves. Assignment and
-    * encoding are pure per-vector functions of the static models, so
-    * serving any version equals building from that version's corpus —
-    * x_sim_ivf_pq_versioned shares x_sim_ivf_pq's fitted-literal
-    * dynamic oracle through a write/append/compact cycle. With this,
-    * every flat similarity artifact (IVF, int8, PQ, IVF-PQ) has a
-    * reader-snapshot-safe versioned twin; the bucketed catalog
-    * families' versioning lives on [[BucketedManifest]].
+  // ------------------------------------------------ IVF-PQ, versioned
+  /** x_sim_ivf_pq_versioned shares x_sim_ivf_pq's fitted-literal oracle
+    * through a write/append/compact cycle.
     */
-  def writeIvfPqIndexVersioned(corpus: DataFrame,
-      model: Similarity.PqModel, centroids: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    Scratch.sweepOnce(corpus.sparkSession)
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    codebookFrame(corpus.sparkSession, model)
-      .write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
-    VersionedFlat.write(
-      Similarity.ivfPqIndex(corpus, model, centroids, idCol, vecCol),
-      s"$dir/enc")
-  }
+  def writeIvfPqIndexVersioned(corpus: DataFrame, model: Similarity.PqModel,
+      centroids: DataFrame, dir: String, idCol: String = "vec_id",
+      vecCol: String = "embedding"): Unit =
+    FlatVersioned.build(IvfPq, corpus, (model, centroids), dir, idCol, vecCol)
 
-  /** [[appendIvfPqIndex]] on the versioned store: the delta is
-    * assigned AND encoded against the artifact's own persisted model
-    * halves, published as a new version.
-    */
   def appendIvfPqIndexVersioned(delta: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = delta.sparkSession
-    VersionedFlat.append(
-      Similarity.ivfPqIndex(delta, readPqModel(spark, dir),
-        spark.read.parquet(s"$dir/centroids.parquet"), idCol, vecCol),
-      s"$dir/enc")
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    FlatVersioned.admit(IvfPq, delta, dir, idCol, vecCol)
 
-  /** [[compactIvfIndexVersioned]]'s contract for the IVF-PQ enc
-    * table: layout-only by default, fold-and-clear under the flag.
-    */
+  /** Layout-only unless `purgeTombstones`. */
   def compactIvfPqIndexVersioned(spark: SparkSession, dir: String,
       targetFiles: Int = 1, purgeTombstones: Boolean = false): Unit =
-    if (purgeTombstones) purgeIvfPqIndexVersioned(spark, dir,
-      targetFiles)
-    else VersionedFlat.compact(spark, s"$dir/enc", targetFiles)
+    FlatVersioned.compact(spark, IvfPq, dir, targetFiles, purgeTombstones)
 
   /** (enc of version `asOf` — 0 = current, centroids). */
   def readIvfPqIndexVersioned(spark: SparkSession, dir: String,
       asOf: Int = 0): (DataFrame, DataFrame) =
-    ((if (asOf > 0) VersionedFlat.readVersion(spark, s"$dir/enc", asOf)
-      else VersionedFlat.read(spark, s"$dir/enc")),
-      spark.read.parquet(s"$dir/centroids.parquet"))
+    (FlatVersioned.readAsOf(spark, IvfPq, dir, asOf),
+      Centroids.read(spark, dir))
 
-  /** Versioned IVF-PQ tombstones — [[deleteFromPqIndexVersioned]]'s
-    * contract; both model halves stay.
-    */
   def deleteFromIvfPqIndexVersioned(ids: DataFrame, dir: String): Unit =
     appendDeadFile(ids, dir)
 
-  def readIvfPqVersionedDeadIds(spark: SparkSession,
-      dir: String): DataFrame =
-    readDeadFile(spark, dir, VersionedFlat.read(spark, s"$dir/enc"))
+  def readIvfPqVersionedDeadIds(spark: SparkSession, dir: String): DataFrame =
+    FlatVersioned.dead(spark, IvfPq, dir)
 
-  /** (current enc minus tombstoned ids, centroids) — exclusion before
-    * probe-join and ranking.
-    */
+  /** (current enc minus tombstoned ids, centroids). */
   def readIvfPqIndexVersionedLive(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val (enc, cents) = readIvfPqIndexVersioned(spark, dir)
-    (enc.join(readIvfPqVersionedDeadIds(spark, dir), Seq("id"),
-      "left_anti"), cents)
-  }
+      : (DataFrame, DataFrame) =
+    (FlatVersioned.live(spark, IvfPq, dir), Centroids.read(spark, dir))
 
-  /** Publish the tombstone-excluded enc frame as the next version and
-    * clear the tombstones (publish strictly before the clear, with
-    * [[purgeIvfIndexVersioned]]'s captured `basedOn` stale-frame
-    * guard).
-    */
   def purgeIvfPqIndexVersioned(spark: SparkSession, dir: String,
       targetFiles: Int = 1): Unit =
-    purgeVersionedFlat(spark, dir, "enc", readIvfPqVersionedDeadIds(spark, dir),
-      targetFiles)
+    FlatVersioned.purge(spark, IvfPq, dir, targetFiles)
 
-
+  // ----------------------------------------------------------- PQ model
   /** Reconstruct the PqModel from the codebook artifact (bounded:
     * m·ks rows of ds doubles — driver-side by the same contract as
     * the fit that produced it).
     */
   def readPqModel(spark: SparkSession, dir: String): Similarity.PqModel = {
     val rows = spark.read.parquet(s"$dir/codebooks.parquet")
-      .select(col("j"), col("code"), col("cvec"), col("bias"))
-      .collect()
+      .select("j", "code", "cvec", "bias").collect()
     require(rows.nonEmpty, s"empty PQ codebook artifact at $dir")
     val m = rows.iterator.map(_.getInt(0)).max + 1
     val ks = rows.iterator.map(_.getInt(1)).max + 1
-    require(rows.length == m * ks,
-      s"PQ codebook artifact at $dir has ${rows.length} rows, " +
-        s"expected $m×$ks")
+    require(rows.length == m * ks, s"PQ codebook artifact at $dir has " +
+      s"${rows.length} rows, expected $m×$ks")
     val codebooks = Array.ofDim[Array[Double]](m, ks)
     val biases = Array.ofDim[Double](m, ks)
     rows.foreach { r =>
@@ -1855,5 +1677,5 @@ object IndexStore {
 
   /** Re-read the PQ corpus codes: (id, codes). */
   def readPqCodes(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/codes.parquet")
+    FlatPlain.read(spark, Pq, dir)
 }

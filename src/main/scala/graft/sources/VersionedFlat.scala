@@ -5,10 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Version-pointer manifests for the flat (per-vector) artifacts — the
   * missing half of the dir-artifact story at object-store scale.
   *
-  * The rename-aside swap ([[IndexStore.compactIvfIndex]] and friends)
-  * is crash-safe for the WRITER, but it mutates the artifact in place:
-  * between the two renames the leaf briefly has no current directory,
-  * and a long-running reader that captured the old file listing has its
+  * The rename-aside swap of the plain flat store (its purges and
+  * compactions, e.g. [[IndexStore.compactIvfIndex]]) is crash-safe for
+  * the WRITER, but it mutates the artifact in place: between the two
+  * renames the leaf briefly has no current directory, and a
+  * long-running reader that captured the old file listing has its
   * files deleted out from under it the moment the swap completes. Both
   * are tolerable in a single-process harness and fatal on a 1000-reader
   * cluster. This store removes the mutation entirely:

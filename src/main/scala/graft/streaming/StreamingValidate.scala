@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.check.Checks
+import graft.ext.Similarity
 import graft.schema.TableSchema
+import graft.sources.{IndexStore, VersionedFlat}
 
 /** Sessionization records (see [[StreamingValidate.sessionize]]).
   * Times travel as epoch MICROseconds — java.sql.Timestamp.getTime is
@@ -1098,19 +1100,19 @@ object StreamingValidate {
         indexTable, bands),
       refreshTables = Seq(s"${indexTable}_bands"))
 
-  /** Check-then-admit VECTOR ingestion — the similarity family's
-    * stateful streaming arc (the [[uniqueIngestRun]] shape over the
-    * dir-based IVF artifact): per micro-batch the arriving vectors are
-    * first CHECKED against the standing LIVE index (probe-routed
-    * cosine top-k — the embedding near-dup gate a training-data
-    * pipeline runs before admitting new documents), the check
-    * materialized to the sink STRICTLY BEFORE the batch is ADMITTED
-    * ([[graft.sources.IndexStore.appendIvfIndex]]: only the delta is
-    * normalized and assigned, against the artifact's own persisted
-    * centroids). The artifact is re-read inside the check closure, so
-    * each batch's fresh path read lists the files earlier batches
-    * appended — admissions are visible to the next batch with no
-    * catalog to refresh. With a checkpoint the run is RESUMABLE: a
+  /** Check-then-admit VECTOR ingestion for the flat similarity
+    * artifacts (the [[uniqueIngestRun]] shape over a dir-based
+    * artifact), one run per family × store, all on [[flatIngestRun]].
+    * Per micro-batch the arriving vectors are first CHECKED against the
+    * standing live artifact (probe-routed cosine top-k here — the
+    * embedding near-dup gate a training-data pipeline runs before
+    * admitting new documents) and the check is sunk STRICTLY BEFORE
+    * the batch is ADMITTED ([[graft.sources.IndexStore.appendIvfIndex]]:
+    * only the delta is normalized and assigned, against the artifact's
+    * own persisted centroids). The artifact is re-read inside the
+    * check, so each batch's fresh path read lists the files earlier
+    * batches appended — admissions are visible to the next batch with
+    * no catalog to refresh. With a checkpoint the run is RESUMABLE: a
     * re-processed batch would append duplicate (id, nvec, list_id)
     * rows whose doubled scored candidates occupy two bounded-top-k
     * slots and push the true k-th neighbor out — x_stream_ivf_resume
@@ -1120,196 +1122,148 @@ object StreamingValidate {
   def ivfIngestRun(spark: org.apache.spark.sql.SparkSession,
       newVecsDir: String, indexDir: String, k: Int, nProbe: Int,
       checkpointDir: String, sinkDir: String): Unit =
-    checkAdmitRun(spark, newVecsDir, checkpointDir, sinkDir,
+    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir)(
       check = b => {
-        val (index, cents) = graft.sources.IndexStore
-          .readIvfIndexLive(spark, indexDir)
-        graft.ext.Similarity.ivfTopKWith(b, index, cents, k, nProbe)
+        val (index, cents) = IndexStore.readIvfIndexLive(spark, indexDir)
+        Similarity.ivfTopKWith(b, index, cents, k, nProbe)
       },
-      admit = b => graft.sources.IndexStore.appendIvfIndex(b, indexDir),
-      refreshTables = Seq.empty)
+      admit = IndexStore.appendIvfIndex(_, indexDir))
 
   /** [[ivfIngestRun]] over the VERSIONED IVF artifact: every admitted
-    * micro-batch PUBLISHES a new manifest version
-    * ([[graft.sources.IndexStore.appendIvfIndexVersioned]]) instead of
-    * appending files into a mutable leaf — so the ingest history
-    * itself becomes time-travelable (version N = the corpus after
-    * batch N−1 admitted; as-of reads replay any point of the stream)
+    * micro-batch PUBLISHES a new manifest version instead of appending
+    * files into a mutable leaf, so the ingest history itself becomes
+    * time-travelable (version N = the corpus after batch N−1 admitted)
     * and concurrent serving readers keep consistent snapshots while
-    * the stream runs. Check semantics, restart safety, and the
-    * admit-exactly-once proof are identical to the flat run's; the
-    * versioned twist is proven in SimArtifactLifecycleSpec (version
-    * count = 1 + admitted batches, as-of replay equals the prefix
-    * corpus).
-    */
-  /** `autoCompactBatches > 0` bounds manifest growth (round-14
-    * directive #6): after an admit, when the current manifest
-    * references more than that many batch dirs,
-    * [[graft.sources.VersionedFlat.maybeCompact]] publishes one merged
-    * batch — so a long-lived ingest stream's read plans keep O(1)
-    * multi-path roots instead of one per ever-admitted batch (the
-    * measured planning-cost table is in PLANS.md §Round 14). 0 = off.
+    * the stream runs (SimArtifactLifecycleSpec: version count = 1 +
+    * admitted batches, as-of replay equals the prefix corpus).
+    * `autoCompactBatches > 0` bounds manifest growth: after an admit,
+    * when the current manifest references more than that many batch
+    * dirs, [[graft.sources.VersionedFlat.maybeCompact]] publishes one
+    * merged batch — so a long-lived stream's read plans keep O(1)
+    * multi-path roots instead of one per ever-admitted batch (PLANS.md
+    * §Round 14 has the planning-cost table). 0 = off.
     */
   def ivfIngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
       newVecsDir: String, indexDir: String, k: Int, nProbe: Int,
       checkpointDir: String, sinkDir: String,
       autoCompactBatches: Int = 0): Unit =
-    checkAdmitRun(spark, newVecsDir, checkpointDir, sinkDir,
+    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir,
+        IndexStore.Ivf.versioned(indexDir), autoCompactBatches)(
       check = b => {
-        val (index, cents) = graft.sources.IndexStore
+        val (index, cents) = IndexStore
           .readIvfIndexVersionedLive(spark, indexDir)
-        graft.ext.Similarity.ivfTopKWith(b, index, cents, k, nProbe)
+        Similarity.ivfTopKWith(b, index, cents, k, nProbe)
       },
-      admit = b => {
-        graft.sources.IndexStore.appendIvfIndexVersioned(b, indexDir)
-        if (autoCompactBatches > 0)
-          graft.sources.VersionedFlat.maybeCompact(spark,
-            s"$indexDir/enc", autoCompactBatches): Unit
-      },
-      refreshTables = Seq.empty)
+      admit = IndexStore.appendIvfIndexVersioned(_, indexDir))
 
-  /** [[pqIngestRun]] over the VERSIONED PQ store — with
-    * [[int8IngestRunVersioned]] and [[ivfPqIngestRunVersioned]] this
-    * closes the ingest matrix completely (round-15): every flat
-    * similarity artifact now has BOTH a flat and a versioned
-    * check-then-admit arc. Each admitted micro-batch publishes a
-    * manifest version (the ingest history time-travels); checks
-    * ADC-score against the current version's codes re-read per batch;
-    * the codebooks are re-read, never re-fitted. `autoCompactBatches`
-    * is [[ivfIngestRunVersioned]]'s manifest-growth cadence.
+  /** [[pqIngestRun]] over the VERSIONED PQ store: checks ADC-score
+    * against the current version's live codes; the codebooks are
+    * re-read, never re-fitted. `autoCompactBatches` is
+    * [[ivfIngestRunVersioned]]'s manifest-growth cadence, as in the
+    * other versioned runs.
     */
   def pqIngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
       newVecsDir: String, indexDir: String, k: Int,
       checkpointDir: String, sinkDir: String,
       autoCompactBatches: Int = 0): Unit =
-    checkAdmitRun(spark, newVecsDir, checkpointDir, sinkDir,
-      check = b => graft.ext.Similarity.pqTopKFromCodes(b,
-        graft.sources.IndexStore.readPqCodesVersionedLive(spark,
-          indexDir), k,
-        graft.sources.IndexStore.readPqModel(spark, indexDir)),
-      admit = b => {
-        graft.sources.IndexStore.appendPqIndexVersioned(b, indexDir)
-        if (autoCompactBatches > 0)
-          graft.sources.VersionedFlat.maybeCompact(spark,
-            s"$indexDir/codes", autoCompactBatches): Unit
-      },
-      refreshTables = Seq.empty)
+    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir,
+        IndexStore.Pq.versioned(indexDir), autoCompactBatches)(
+      check = b => Similarity.pqTopKFromCodes(b,
+        IndexStore.readPqCodesVersionedLive(spark, indexDir), k,
+        IndexStore.readPqModel(spark, indexDir)),
+      admit = IndexStore.appendPqIndexVersioned(_, indexDir))
 
-  /** [[int8IngestRun]] over the VERSIONED int8 store — no model leaf;
-    * each batch quantizes and publishes a manifest version.
+  /** [[int8IngestRun]] over the VERSIONED int8 store. That store has
+    * no tombstones, so the check scores against the current version.
     */
   def int8IngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
       newVecsDir: String, indexDir: String, k: Int,
       checkpointDir: String, sinkDir: String,
       autoCompactBatches: Int = 0): Unit =
-    checkAdmitRun(spark, newVecsDir, checkpointDir, sinkDir,
-      check = b => graft.ext.Similarity.quantizedTopKFromIndex(b,
-        graft.sources.IndexStore.readInt8IndexVersioned(spark,
-          indexDir), k),
-      admit = b => {
-        graft.sources.IndexStore.appendInt8IndexVersioned(b, indexDir)
-        if (autoCompactBatches > 0)
-          graft.sources.VersionedFlat.maybeCompact(spark, indexDir,
-            autoCompactBatches): Unit
-      },
-      refreshTables = Seq.empty)
+    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir,
+        IndexStore.Int8.versioned(indexDir), autoCompactBatches)(
+      check = b => Similarity.quantizedTopKFromIndex(b,
+        IndexStore.readInt8IndexVersioned(spark, indexDir), k),
+      admit = IndexStore.appendInt8IndexVersioned(_, indexDir))
 
-  /** [[ivfPqIngestRun]] over the VERSIONED composed store — checks
-    * probe-route and ADC-score against the current version; admits
-    * assign AND encode against both persisted model halves and publish
-    * a manifest version.
-    */
+  /** [[ivfPqIngestRun]] over the VERSIONED composed store. */
   def ivfPqIngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
       newVecsDir: String, indexDir: String, k: Int, nProbe: Int,
       checkpointDir: String, sinkDir: String,
       autoCompactBatches: Int = 0): Unit =
-    checkAdmitRun(spark, newVecsDir, checkpointDir, sinkDir,
+    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir,
+        IndexStore.IvfPq.versioned(indexDir), autoCompactBatches)(
       check = b => {
-        val (enc, cents) = graft.sources.IndexStore
+        val (enc, cents) = IndexStore
           .readIvfPqIndexVersionedLive(spark, indexDir)
-        graft.ext.Similarity.ivfPqTopKFromIndex(b, enc, cents,
-          graft.sources.IndexStore.readPqModel(spark, indexDir), k,
-          nProbe)
+        Similarity.ivfPqTopKFromIndex(b, enc, cents,
+          IndexStore.readPqModel(spark, indexDir), k, nProbe)
       },
-      admit = b => {
-        graft.sources.IndexStore.appendIvfPqIndexVersioned(b, indexDir)
-        if (autoCompactBatches > 0)
-          graft.sources.VersionedFlat.maybeCompact(spark,
-            s"$indexDir/enc", autoCompactBatches): Unit
-      },
-      refreshTables = Seq.empty)
+      admit = IndexStore.appendIvfPqIndexVersioned(_, indexDir))
 
-  /** Check-then-admit ingestion for the PQ code artifact (round-14
-    * directive #5 — the [[ivfIngestRun]] shape for the product-
-    * quantized family, previously the only similarity artifact without
-    * a streaming admission arc): per micro-batch the arriving vectors
-    * are ADC-scored against the standing LIVE code table (codes re-read
-    * per batch so earlier admissions are visible; the codebook MODEL is
-    * re-read too — bounded m·ks rows — and never re-fitted), the check
-    * sunk STRICTLY BEFORE the batch is admitted
-    * ([[graft.sources.IndexStore.appendPqIndex]]: the delta encoded
-    * against the artifact's own persisted codebooks). With a checkpoint
-    * the run is RESUMABLE: a re-processed batch would append duplicate
-    * code rows whose doubled candidates occupy two bounded-top-k slots
-    * — x_stream_pq_ingest catches that by hash-matching the final
-    * artifact's serve against x_sim_pq's full-corpus fitted-literal
-    * oracle.
+  /** Check-then-admit ingestion for the PQ code artifact: arriving
+    * vectors are ADC-scored against the standing live code table (the
+    * codebook model is re-read too — bounded m·ks rows — and never
+    * re-fitted). x_stream_pq_ingest hash-matches the final artifact's
+    * serve against x_sim_pq's full-corpus fitted-literal oracle.
     */
   def pqIngestRun(spark: org.apache.spark.sql.SparkSession,
       newVecsDir: String, indexDir: String, k: Int,
       checkpointDir: String, sinkDir: String): Unit =
-    checkAdmitRun(spark, newVecsDir, checkpointDir, sinkDir,
-      check = b => graft.ext.Similarity.pqTopKFromCodes(b,
-        graft.sources.IndexStore.readPqCodesLive(spark, indexDir), k,
-        graft.sources.IndexStore.readPqModel(spark, indexDir)),
-      admit = b => graft.sources.IndexStore.appendPqIndex(b, indexDir),
-      refreshTables = Seq.empty)
+    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir)(
+      check = b => Similarity.pqTopKFromCodes(b,
+        IndexStore.readPqCodesLive(spark, indexDir), k,
+        IndexStore.readPqModel(spark, indexDir)),
+      admit = IndexStore.appendPqIndex(_, indexDir))
 
-  /** Check-then-admit ingestion for the int8 artifact (round-15
-    * directive #5 — with [[ivfPqIngestRun]] the last two similarity
-    * artifacts without streaming admission arcs): int8 has NO model
-    * leaf at all, so admission just quantizes the batch (pure
-    * per-vector scales — [[graft.sources.IndexStore.appendInt8Index]])
-    * and the check scores against the standing LIVE decoded frame,
-    * re-read per batch so earlier admissions are visible. Check sunk
-    * STRICTLY BEFORE the admit; resumable via checkpoint
-    * (x_stream_int8_ingest hash-matches the final artifact's serve
-    * against x_sim_quantized's full-corpus oracle — a dropped or
-    * doubled admission misses it).
+  /** Check-then-admit ingestion for the int8 artifact: int8 has no
+    * model, so admission just quantizes the batch, and the check scores
+    * against the standing live decoded frame. x_stream_int8_ingest
+    * hash-matches the final artifact's serve against x_sim_quantized's
+    * full-corpus oracle — a dropped or doubled admission misses it.
     */
   def int8IngestRun(spark: org.apache.spark.sql.SparkSession,
       newVecsDir: String, indexDir: String, k: Int,
       checkpointDir: String, sinkDir: String): Unit =
-    checkAdmitRun(spark, newVecsDir, checkpointDir, sinkDir,
-      check = b => graft.ext.Similarity.quantizedTopKFromIndex(b,
-        graft.sources.IndexStore.readInt8IndexLive(spark, indexDir), k),
-      admit = b => graft.sources.IndexStore.appendInt8Index(b, indexDir),
-      refreshTables = Seq.empty)
+    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir)(
+      check = b => Similarity.quantizedTopKFromIndex(b,
+        IndexStore.readInt8IndexLive(spark, indexDir), k),
+      admit = IndexStore.appendInt8Index(_, indexDir))
 
   /** Check-then-admit ingestion for the composed IVF-PQ artifact:
-    * per micro-batch the arriving vectors are probe-routed and
-    * ADC-scored against the standing live (id, list_id, codes) table
-    * (re-read per batch), then admitted assigned AND encoded against
-    * the artifact's own persisted model halves — centroids and
-    * codebooks re-read, never re-fitted
-    * ([[graft.sources.IndexStore.appendIvfPqIndex]]). Check sunk
-    * strictly before the admit; resumable via checkpoint
-    * (x_stream_ivfpq_ingest shares x_sim_ivf_pq's fitted-literal
-    * dynamic oracle).
+    * arriving vectors are probe-routed and ADC-scored against the
+    * standing live (id, list_id, codes) table, then admitted assigned
+    * AND encoded against both persisted model halves.
+    * x_stream_ivfpq_ingest shares x_sim_ivf_pq's fitted-literal oracle.
     */
   def ivfPqIngestRun(spark: org.apache.spark.sql.SparkSession,
       newVecsDir: String, indexDir: String, k: Int, nProbe: Int,
       checkpointDir: String, sinkDir: String): Unit =
-    checkAdmitRun(spark, newVecsDir, checkpointDir, sinkDir,
+    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir)(
       check = b => {
-        val (enc, cents) = graft.sources.IndexStore
-          .readIvfPqIndexLive(spark, indexDir)
-        graft.ext.Similarity.ivfPqTopKFromIndex(b, enc, cents,
-          graft.sources.IndexStore.readPqModel(spark, indexDir), k,
-          nProbe)
+        val (enc, cents) = IndexStore.readIvfPqIndexLive(spark, indexDir)
+        Similarity.ivfPqTopKFromIndex(b, enc, cents,
+          IndexStore.readPqModel(spark, indexDir), k, nProbe)
       },
-      admit = b =>
-        graft.sources.IndexStore.appendIvfPqIndex(b, indexDir),
+      admit = IndexStore.appendIvfPqIndex(_, indexDir))
+
+  /** The flat families' one check-then-admit step: [[checkAdmitRun]]
+    * with no catalog tables to refresh (each check re-reads the
+    * artifact's path). On the versioned store, `versioned` is where
+    * the family's frame lives and a positive `autoCompactBatches` runs
+    * the manifest-growth cadence after every admit.
+    */
+  private def flatIngestRun(spark: org.apache.spark.sql.SparkSession,
+      newVecsDir: String, checkpointDir: String, sinkDir: String,
+      versioned: String = "", autoCompactBatches: Int = 0)(
+      check: DataFrame => DataFrame, admit: DataFrame => Unit): Unit =
+    checkAdmitRun(spark, newVecsDir, checkpointDir, sinkDir, check,
+      admit = b => {
+        admit(b)
+        if (autoCompactBatches > 0)
+          VersionedFlat.maybeCompact(spark, versioned, autoCompactBatches)
+            : Unit
+      },
       refreshTables = Seq.empty)
 
   def editDistanceIngestRun(spark: org.apache.spark.sql.SparkSession,
