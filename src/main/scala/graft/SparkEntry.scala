@@ -14,6 +14,7 @@ import graft.ext.{Behavior, Cdc, Dedup, Joins, Linkage, Multimodal,
   TextAnalysis}
 import graft.parse.Parsers
 import graft.schema.{Constraints, Field}
+import graft.sources.{IndexStore, VersionedFlat}
 import graft.streaming.StreamingValidate
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -1093,14 +1094,7 @@ object SparkEntry {
     val streamDir = indexDir(dir, "ukeys_resume")
     val ckpt = indexDir(dir, "ukeys_resume_ckpt")
     val sink = indexDir(dir, "ukeys_resume_sink")
-    def wipe(p: String): Unit = {
-      def rec(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rec)
-        f.delete(); ()
-      }
-      rec(new java.io.File(p))
-    }
-    Seq(streamDir, ckpt, sink).foreach(wipe)
+    Seq(streamDir, ckpt, sink).foreach(wipeDir)
     val tbl = indexTable(dir, "keyres")
     graft.sources.IndexStore.writeKeyIndexBucketed(base, tbl,
       Seq("o_orderkey"), numBuckets = 8)
@@ -1357,488 +1351,240 @@ object SparkEntry {
       Seq("c_custkey")).orderBy("o_custkey")
   }
 
-  /** The x_sim_ivf_topk contract served from a persisted IVF index:
-    * centroids + assignments written to parquet, re-read, probed.
-    * Doubles round-trip parquet bit-identically, so this shares
-    * x_sim_ivf_topk's oracle — hash-equality, not approximate recall.
+  // ------------------------------------- flat similarity lifecycle rows
+  /** A flat similarity family as its lifecycle rows drive it. `sim` and
+    * `stream` are the row stems (`x_sim_<sim>_*`, `x_stream_<stream>_*`;
+    * `stream` also prefixes the scratch dirs), `oracle` the oracle the
+    * rows share, and `scenarios` the rows it has. `fit` is the model the
+    * build takes (fitted per row, once, on the full corpus), `serve` the
+    * top-k over a read state `S`, and every other field one public call
+    * of the plain store or, suffixed `V`, the versioned one.
     */
-  private def xSimIvfServed(s: SparkSession, dir: String): DataFrame = {
+  private final case class FlatRows[M, S](sim: String, stream: String,
+      oracle: String, scenarios: Seq[FlatScenario], fit: DataFrame => M,
+      serve: (SparkSession, String, DataFrame, S) => DataFrame,
+      build: (DataFrame, M, String) => Unit,
+      append: (DataFrame, String) => Unit,
+      delete: (DataFrame, String) => Unit,
+      read: (SparkSession, String) => S, live: (SparkSession, String) => S,
+      ingest: (SparkSession, String, String, String, String) => Unit,
+      buildV: (DataFrame, M, String) => Unit,
+      appendV: (DataFrame, String) => Unit,
+      readV: (SparkSession, String, Int) => S,
+      compactV: (SparkSession, String) => Unit,
+      ingestV: (SparkSession, String, String, String, String) => Unit,
+      more: Option[FlatMore[S]] = None)
+
+  /** The calls only IVF's rows make: the plain compact, and the versioned
+    * store's delete, live read, current version and rollback.
+    */
+  private final case class FlatMore[S](compact: (SparkSession, String) => Unit,
+      deleteV: (DataFrame, String) => Unit,
+      liveV: (SparkSession, String) => S, version: String => Int,
+      rollback: (SparkSession, String, Int) => Int)
+
+  /** One lifecycle scenario: the row-name suffix, the scratch-dir suffix,
+    * and whether the row hangs off the `x_stream_` stem. A row shares its
+    * family's oracle unless it owns one (`ownOracle`) or overrides
+    * [[oracle]].
+    */
+  private sealed abstract class FlatScenario(suffix: String,
+      val dir: String, stream: Boolean = false,
+      ownOracle: Boolean = false) {
+    def row(f: FlatRows[_, _]): String =
+      if (stream) s"x_stream_${f.stream}_$suffix" else s"x_sim_${f.sim}_$suffix"
+
+    /** The row whose oracle this row shares, if it shares one. */
+    def oracle(f: FlatRows[_, _]): Option[String] =
+      if (ownOracle) None else Some(f.oracle)
+  }
+  private case object Served extends FlatScenario("served", "")
+  private case object Append extends FlatScenario("append", "app")
+  private case object Delete
+      extends FlatScenario("delete", "del", ownOracle = true)
+  private case object Compact extends FlatScenario("compact", "cmp")
+  private case object Versioned extends FlatScenario("versioned", "ver")
+  private case object Rollback extends FlatScenario("rollback", "rb")
+  private case object TimeTravel
+      extends FlatScenario("time_travel", "tt", ownOracle = true)
+  private case object VersionedDelete
+      extends FlatScenario("versioned_delete", "verdel") {
+    override def oracle(f: FlatRows[_, _]): Option[String] =
+      Some(Delete.row(f))
+  }
+  private case object StreamIngest
+      extends FlatScenario("ingest", "_ingest", stream = true)
+  private case object StreamResume
+      extends FlatScenario("resume", "_resume", stream = true)
+  private case object StreamVersioned
+      extends FlatScenario("versioned", "_ver_stream", stream = true)
+
+  private val FlatFamilies: Seq[FlatRows[_, _]] = Seq(
+    FlatRows[DataFrame, (DataFrame, DataFrame)]("ivf", "ivf",
+      "x_sim_ivf_topk", Seq(Served, Append, Delete, Compact, Versioned,
+        Rollback, TimeTravel, VersionedDelete, StreamIngest, StreamResume,
+        StreamVersioned),
+      Similarity.firstIdCentroids(_, 16),
+      (_, _, q, st) => Similarity.ivfTopKWith(q, st._1, st._2, 10,
+        nProbe = 4),
+      IndexStore.writeIvfIndex(_, _, _), IndexStore.appendIvfIndex(_, _),
+      IndexStore.deleteFromIvfIndex, IndexStore.readIvfIndex,
+      IndexStore.readIvfIndexLive,
+      StreamingValidate.ivfIngestRun(_, _, _, 10, 4, _, _),
+      IndexStore.writeIvfIndexVersioned(_, _, _),
+      IndexStore.appendIvfIndexVersioned(_, _),
+      IndexStore.readIvfIndexVersioned,
+      IndexStore.compactIvfIndexVersioned(_, _),
+      StreamingValidate.ivfIngestRunVersioned(_, _, _, 10, 4, _, _),
+      Some(FlatMore(IndexStore.compactIvfIndex(_, _),
+        IndexStore.deleteFromIvfIndexVersioned,
+        IndexStore.readIvfIndexVersionedLive,
+        d => VersionedFlat.currentVersion(IndexStore.Ivf.versioned(d)),
+        IndexStore.rollbackIvfIndexVersioned))),
+    FlatRows[Similarity.PqModel, DataFrame]("pq", "pq", "x_sim_pq",
+      Seq(Served, Delete, Append, Versioned, StreamIngest, StreamVersioned),
+      Similarity.pqFit(_, m = 16, ks = 16),
+      (s, idx, q, codes) => Similarity.pqTopKFromCodes(q, codes, 10,
+        IndexStore.readPqModel(s, idx)),
+      IndexStore.writePqIndex(_, _, _), IndexStore.appendPqIndex(_, _),
+      IndexStore.deleteFromPqIndex, IndexStore.readPqCodes,
+      IndexStore.readPqCodesLive,
+      StreamingValidate.pqIngestRun(_, _, _, 10, _, _),
+      IndexStore.writePqIndexVersioned(_, _, _),
+      IndexStore.appendPqIndexVersioned(_, _),
+      IndexStore.readPqCodesVersioned,
+      IndexStore.compactPqIndexVersioned(_, _),
+      StreamingValidate.pqIngestRunVersioned(_, _, _, 10, _, _)),
+    FlatRows[(Similarity.PqModel, DataFrame), (DataFrame, DataFrame)](
+      "ivf_pq", "ivfpq", "x_sim_ivf_pq",
+      Seq(Served, Delete, Append, Versioned, StreamIngest, StreamVersioned),
+      e => (Similarity.pqFit(e, m = 16, ks = 16),
+        Similarity.kmeansCentroids(e, nLists = 16)),
+      (s, idx, q, st) => Similarity.ivfPqTopKFromIndex(q, st._1, st._2,
+        IndexStore.readPqModel(s, idx), 10, nProbe = 4),
+      (df, m, d) => IndexStore.writeIvfPqIndex(df, m._1, m._2, d),
+      IndexStore.appendIvfPqIndex(_, _), IndexStore.deleteFromIvfPqIndex,
+      IndexStore.readIvfPqIndex, IndexStore.readIvfPqIndexLive,
+      StreamingValidate.ivfPqIngestRun(_, _, _, 10, 4, _, _),
+      (df, m, d) => IndexStore.writeIvfPqIndexVersioned(df, m._1, m._2, d),
+      IndexStore.appendIvfPqIndexVersioned(_, _),
+      IndexStore.readIvfPqIndexVersioned,
+      IndexStore.compactIvfPqIndexVersioned(_, _),
+      StreamingValidate.ivfPqIngestRunVersioned(_, _, _, 10, 4, _, _)),
+    FlatRows[Unit, DataFrame]("quantized", "int8", "x_sim_quantized",
+      Seq(Served, Delete, Append, Versioned, StreamIngest, StreamVersioned),
+      _ => (), (_, _, q, st) => Similarity.quantizedTopKFromIndex(q, st, 10),
+      (df, _, d) => IndexStore.writeInt8Index(df, d),
+      IndexStore.appendInt8Index(_, _), IndexStore.deleteFromInt8Index,
+      IndexStore.readInt8Index, IndexStore.readInt8IndexLive,
+      StreamingValidate.int8IngestRun(_, _, _, 10, _, _),
+      (df, _, d) => IndexStore.writeInt8IndexVersioned(df, d),
+      IndexStore.appendInt8IndexVersioned(_, _),
+      IndexStore.readInt8IndexVersioned,
+      (s, d) => VersionedFlat.compact(s, IndexStore.Int8.versioned(d)),
+      StreamingValidate.int8IngestRunVersioned(_, _, _, 10, _, _)))
+
+  /** Row `sc` of family `f`: the scenario's build → mutate → read steps
+    * over the embeddings, then the one shared tail — the 5 queries
+    * (vec_id < 5) served top-10 over the read state, `rank` cast to long,
+    * ordered by (query_id, rank). Each scenario's comment says why its
+    * answer is its oracle's.
+    */
+  private def flatRow[M, S](f: FlatRows[M, S], sc: FlatScenario)(
+      s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "ivf")
-    graft.sources.IndexStore.writeIvfIndex(e,
-      Similarity.firstIdCentroids(e, 16), idx)
-    val (index, cents) = graft.sources.IndexStore.readIvfIndex(s, idx)
-    Similarity.ivfTopKWith(e.filter(col("vec_id") < 5), index, cents,
-        10, nProbe = 4)
+    val idx = indexDir(dir, f.stream + sc.dir)
+    def mod(n: Int, r: Int): DataFrame = e.filter(col("vec_id") % n === r)
+    def more: FlatMore[S] = f.more.getOrElse(
+      sys.error(s"${f.sim} has no compact, versioned delete or rollback row"))
+    /** The standing artifact is built on the % 3 = 0 third; the other two
+      * thirds arrive as files and are check-then-admitted by the ingest
+      * run, each micro-batch checked against the live artifact (re-read
+      * per batch, so batch 2 sees batch 1's admissions) strictly before
+      * it is admitted. The per-batch sink rows depend on arrival order,
+      * so the row hashes the order-invariant final state instead: a dead
+      * or doubled admission drops or duplicates top-k slots and misses
+      * the full-corpus oracle. `restart` splits the arrival over two runs
+      * on one checkpoint.
+      */
+    def streamed(versioned: Boolean, restart: Boolean): S = {
+      val Seq(src, ckpt, sink) = Seq("_src", "_ckpt", "_sink").map(idx + _)
+      Seq(idx, src, ckpt, sink).foreach(wipeDir)
+      val run = if (versioned) f.ingestV else f.ingest
+      (if (versioned) f.buildV else f.build)(mod(3, 0), f.fit(e), idx)
+      mod(3, 1).coalesce(1).write.mode("append").parquet(src)
+      if (restart) run(s, src, idx, ckpt, sink)
+      mod(3, 2).coalesce(1).write.mode("append").parquet(src)
+      run(s, src, idx, ckpt, sink)
+      if (versioned) f.readV(s, idx, 0) else f.read(s, idx)
+    }
+    def dead = mod(7, 3).select(col("vec_id").as("id"))
+    val state = sc match {
+      // the persisted artifact round-trips exactly: doubles (centroids,
+      // codebooks, vectors) are bit-identical through parquet, and int8's
+      // values are integers in [-127, 127], so its tinyint pack is exact
+      case Served => f.build(e, f.fit(e), idx); f.read(s, idx)
+      // built on the even half, the odd half admitted: encoding is a pure
+      // per-vector function of the static model, read back from the
+      // artifact (int8 reads none: its scales are per-vector), so
+      // append ≡ the full build
+      case Append =>
+        f.build(mod(2, 0), f.fit(e), idx); f.append(mod(2, 1), idx)
+        f.read(s, idx)
+      // every 7th vector tombstoned; the live read excludes it BEFORE
+      // ranking (the next-best neighbor promotes in) and the model stays,
+      // which is what the oracle recomputes
+      case Delete =>
+        f.build(e, f.fit(e), idx); f.delete(dead, idx); f.live(s, idx)
+      // the appended batches' files rewritten into one: layout only
+      case Compact =>
+        f.build(mod(2, 0), f.fit(e), idx); f.append(mod(2, 1), idx)
+        more.compact(s, idx); f.read(s, idx)
+      // build, admit and compact each publish a version; the versioned
+      // compact is layout-only, so current ≡ the full build
+      case Versioned =>
+        f.buildV(mod(2, 0), f.fit(e), idx); f.appendV(mod(2, 1), idx)
+        f.compactV(s, idx); f.readV(s, idx, 0)
+      // copies of the query vectors under fresh ids (cosine-1.0
+      // neighbors) are admitted, then rolled back by reference to the
+      // clean version: current ≡ the full build, the poison stays
+      // time-travelable
+      case Rollback =>
+        f.buildV(mod(2, 0), f.fit(e), idx); f.appendV(mod(2, 1), idx)
+        val clean = more.version(idx)
+        f.appendV(e.filter(col("vec_id") < 5).select(
+          (col("vec_id") + 900000L).as("vec_id"), col("embedding")), idx)
+        require(more.rollback(s, idx, clean) == clean + 2,
+          "rollback is an ordinary commit")
+        f.readV(s, idx, 0)
+      // version 1 (the even half, under the full-corpus model it
+      // persisted) is still served exactly as written after version 2
+      case TimeTravel =>
+        f.buildV(mod(2, 0), f.fit(e), idx); f.appendV(mod(2, 1), idx)
+        f.readV(s, idx, 1)
+      // tombstones mask the current version before ranking exactly as
+      // they mask the plain artifact, so the delete row's oracle holds
+      case VersionedDelete =>
+        f.buildV(e, f.fit(e), idx); more.deleteV(dead, idx)
+        more.liveV(s, idx)
+      case StreamIngest => streamed(versioned = false, restart = false)
+      // run 2 must process only the file that arrived after run 1: a
+      // re-processed first file is admitted twice, and its doubled
+      // candidates take two top-k slots
+      case StreamResume => streamed(versioned = false, restart = true)
+      // each admitted micro-batch publishes a version, over the restart arc
+      case StreamVersioned => streamed(versioned = true, restart = true)
+    }
+    f.serve(s, idx, e.filter(col("vec_id") < 5), state)
       .withColumn("rank", col("rank").cast(LongType))
       .orderBy("query_id", "rank")
   }
 
-  /** LSM APPEND for the IVF artifact: the index is built on half the
-    * corpus (vec_id % 2 = 0), the other half is APPENDED — only the
-    * delta is normalized and assigned, against the artifact's own
-    * persisted centroids — and the 5 queries are served over the
-    * result. Assignment is a pure per-vector function of the static
-    * centroids, so the served ranking must equal the full-corpus
-    * build's: this row shares x_sim_ivf_topk's oracle VERBATIM (dead
-    * appended rows would drop every promoted odd-id neighbor and miss
-    * the hash). Centroids come from the FULL corpus (the model is
-    * fitted once; admission never re-fits it).
-    */
-  private def xSimIvfAppend(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "ivfapp")
-    graft.sources.IndexStore.writeIvfIndex(
-      e.filter(col("vec_id") % 2 === 0),
-      Similarity.firstIdCentroids(e, 16), idx)
-    graft.sources.IndexStore.appendIvfIndex(
-      e.filter(col("vec_id") % 2 === 1), idx)
-    val (index, cents) = graft.sources.IndexStore.readIvfIndex(s, idx)
-    Similarity.ivfTopKWith(e.filter(col("vec_id") < 5), index, cents,
-        10, nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Tombstone deletion for the IVF artifact: every 7th vector
-    * (vec_id % 7 = 3) is DELETED — one id-list append, standing
-    * (id, nvec, list_id) rows untouched — and the same 5 queries are
-    * served over the LIVE frame (exclusion BEFORE ranking: a dropped
-    * neighbor is replaced by the next-best, so output-side anti-joins
-    * would be wrong here). Centroids stay: the routing model is not
-    * corpus content. The oracle recomputes the probe-restricted top-10
-    * with the deleted ids excluded from the assigned corpus; physical
-    * purge is proven serve-invariant in IvfDeleteSpec.
-    */
-  private def xSimIvfDelete(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "ivfdel")
-    graft.sources.IndexStore.writeIvfIndex(e,
-      Similarity.firstIdCentroids(e, 16), idx)
-    graft.sources.IndexStore.deleteFromIvfIndex(
-      e.filter(col("vec_id") % 7 === 3).select(col("vec_id").as("id")),
-      idx)
-    val (live, cents) = graft.sources.IndexStore.readIvfIndexLive(s, idx)
-    Similarity.ivfTopKWith(e.filter(col("vec_id") < 5), live, cents,
-        10, nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** The IVF artifact through the full LSM file cycle — build on the
-    * even half → APPEND the odd half (one file set per admitted batch,
-    * the fragmentation a long-lived ingest loop accumulates) →
-    * COMPACT ([[graft.sources.IndexStore.compactIvfIndex]]: live rows
-    * rewritten into one file with the rename-aside swap) → serve the
-    * 5 queries. Compaction is a pure layout change, so this shares
-    * x_sim_ivf_topk's oracle VERBATIM — and SimArtifactLifecycleSpec
-    * asserts the file count actually dropped.
-    */
-  private def xSimIvfCompact(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "ivfcmp")
-    graft.sources.IndexStore.writeIvfIndex(
-      e.filter(col("vec_id") % 2 === 0),
-      Similarity.firstIdCentroids(e, 16), idx)
-    graft.sources.IndexStore.appendIvfIndex(
-      e.filter(col("vec_id") % 2 === 1), idx)
-    graft.sources.IndexStore.compactIvfIndex(s, idx)
-    val (index, cents) = graft.sources.IndexStore.readIvfIndex(s, idx)
-    Similarity.ivfTopKWith(e.filter(col("vec_id") < 5), index, cents,
-        10, nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** The IVF artifact behind VERSION-POINTER manifests
-    * (graft.sources.VersionedFlat) instead of in-place leaf mutation:
-    * build on the even half publishes version 1, appending the odd
-    * half publishes version 2 (v1's batch dirs referenced, not
-    * rewritten), compaction publishes version 3 as one merged batch —
-    * and a reader holding ANY version keeps a consistent snapshot
-    * through all of it (the property the rename-aside swap can't give
-    * a 1000-reader cluster). Serving CURRENT after the full cycle must
-    * equal the full-corpus build: x_sim_ivf_topk's oracle VERBATIM.
-    */
-  private def xSimIvfVersioned(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "ivfver")
-    graft.sources.IndexStore.writeIvfIndexVersioned(
-      e.filter(col("vec_id") % 2 === 0),
-      Similarity.firstIdCentroids(e, 16), idx)
-    graft.sources.IndexStore.appendIvfIndexVersioned(
-      e.filter(col("vec_id") % 2 === 1), idx)
-    graft.sources.IndexStore.compactIvfIndexVersioned(s, idx)
-    val (index, cents) = graft.sources.IndexStore
-      .readIvfIndexVersioned(s, idx)
-    Similarity.ivfTopKWith(e.filter(col("vec_id") < 5), index, cents,
-        10, nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** UNDO on the versioned IVF artifact
-    * (graft.sources.IndexStore.rollbackIvfIndexVersioned — round-16,
-    * the flat-store twin of x_dedup_index_rollback): the corpus is
-    * built normally (evens, then odds — version 2 = the full corpus),
-    * a POISONED batch is admitted — byte-exact copies of the query
-    * vectors under fresh ids, which would surface as cosine-1.0 top
-    * neighbors and corrupt every ranking — and the artifact rolls
-    * back to version 2 by reference. Serving the CURRENT version then
-    * equals the clean full-corpus build: x_sim_ivf_topk's oracle
-    * verbatim. The poisoned version stays time-travelable for the
-    * incident audit until vacuum.
-    */
-  private def xSimIvfRollback(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "ivfrb")
-    graft.sources.IndexStore.writeIvfIndexVersioned(
-      e.filter(col("vec_id") % 2 === 0),
-      Similarity.firstIdCentroids(e, 16), idx)
-    graft.sources.IndexStore.appendIvfIndexVersioned(
-      e.filter(col("vec_id") % 2 === 1), idx)
-    val clean = graft.sources.VersionedFlat.currentVersion(
-      graft.sources.IndexStore.Ivf.versioned(idx))
-    graft.sources.IndexStore.appendIvfIndexVersioned(
-      e.filter(col("vec_id") < 5)
-        .select((col("vec_id") + 900000L).as("vec_id"),
-          col("embedding")), idx)
-    require(graft.sources.IndexStore.rollbackIvfIndexVersioned(s, idx,
-      clean) == clean + 2, "rollback is an ordinary commit")
-    val (index, cents) = graft.sources.IndexStore
-      .readIvfIndexVersioned(s, idx)
-    Similarity.ivfTopKWith(e.filter(col("vec_id") < 5), index, cents,
-        10, nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** TIME TRAVEL on the versioned IVF artifact: after the odd half is
-    * admitted (version 2), version 1 — the evens-only snapshot — is
-    * still served EXACTLY as written: the oracle recomputes the
-    * probe-restricted top-10 with the corpus assigned from even ids
-    * only (centroids stay the full-corpus model, exactly what v1
-    * persisted). The row pins the reproducibility claim a training
-    * pipeline builds on: "the corpus as of version N" is a stable,
-    * re-servable object, not a best-effort reconstruction.
-    */
-  private def xSimIvfTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "ivftt")
-    graft.sources.IndexStore.writeIvfIndexVersioned(
-      e.filter(col("vec_id") % 2 === 0),
-      Similarity.firstIdCentroids(e, 16), idx)
-    graft.sources.IndexStore.appendIvfIndexVersioned(
-      e.filter(col("vec_id") % 2 === 1), idx)
-    val (v1, cents) = graft.sources.IndexStore
-      .readIvfIndexVersioned(s, idx, asOf = 1)
-    Similarity.ivfTopKWith(e.filter(col("vec_id") < 5), v1, cents,
-        10, nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Tombstone deletion composed onto the VERSIONED IVF store: the
-    * full corpus is published as version 1, every 7th vector is
-    * tombstoned, and the 5 queries are served over the LIVE frame
-    * (current version anti-joined before ranking — next-best
-    * neighbors promote in, exactly the flat artifact's contract, so
-    * this shares x_sim_ivf_delete's oracle VERBATIM). Physical
-    * erasure under time travel is purge + vacuum
-    * (VersionedFlatSpec proves that arc); this row pins the serving
-    * semantics while tombstones are pending.
-    */
-  private def xSimIvfVersionedDelete(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "ivfverdel")
-    graft.sources.IndexStore.writeIvfIndexVersioned(e,
-      Similarity.firstIdCentroids(e, 16), idx)
-    // versioned write never touches dead.parquet — clear any prior
-    // invocation's tombstones (write() wipes only the enc store)
-    wipeDir(s"$idx/dead.parquet")
-    graft.sources.IndexStore.deleteFromIvfIndexVersioned(
-      e.filter(col("vec_id") % 7 === 3).select(col("vec_id").as("id")),
-      idx)
-    val (live, cents) = graft.sources.IndexStore
-      .readIvfIndexVersionedLive(s, idx)
-    Similarity.ivfTopKWith(e.filter(col("vec_id") < 5), live, cents,
-        10, nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** The x_sim_pq contract served from a PERSISTED PQ index: the
-    * 16×16 codebook model and the per-vector code arrays written as
-    * plain parquet, re-read (model reconstructed from the artifact),
-    * and the same 5 queries ADC-scored against the re-read codes —
-    * the quantized artifact a 100 TB corpus actually persists (m
-    * small codes per vector instead of the float vector). Codebook
-    * doubles round-trip parquet bit-identically, so this shares
-    * x_sim_pq's dynamic oracle — hash-equality, not approximate.
-    */
-  private def xSimPqServed(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val model = Similarity.pqFit(e, m = 16, ks = 16)
-    val idx = indexDir(dir, "pq")
-    graft.sources.IndexStore.writePqIndex(e, model, idx)
-    Similarity.pqTopKFromCodes(e.filter(col("vec_id") < 5),
-        graft.sources.IndexStore.readPqCodes(s, idx), 10,
-        graft.sources.IndexStore.readPqModel(s, idx))
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Tombstone deletion for the PQ code table: every 7th vector
-    * deleted via dead.parquet, the 5 queries ADC-scored over the LIVE
-    * codes (exclusion before ranking). The codebooks — the fitted
-    * model — stay, like the IVF centroids. The oracle is the fitted-
-    * literal x_sim_pq SQL with the deleted ids excluded from the
-    * encoded corpus (dynamic, rendered per dump).
-    */
-  private def xSimPqDelete(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val model = Similarity.pqFit(e, m = 16, ks = 16)
-    val idx = indexDir(dir, "pqdel")
-    graft.sources.IndexStore.writePqIndex(e, model, idx)
-    graft.sources.IndexStore.deleteFromPqIndex(
-      e.filter(col("vec_id") % 7 === 3).select(col("vec_id").as("id")),
-      idx)
-    Similarity.pqTopKFromCodes(e.filter(col("vec_id") < 5),
-        graft.sources.IndexStore.readPqCodesLive(s, idx), 10,
-        graft.sources.IndexStore.readPqModel(s, idx))
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** LSM APPEND for the PQ code table: the model is fitted ONCE on
-    * the full corpus, the index is built on the even half, and the odd
-    * half is ADMITTED via [[graft.sources.IndexStore.appendPqIndex]] —
-    * which encodes the delta against the artifact's OWN re-read
-    * codebooks, never the caller's model object. Encoding is a pure
-    * per-vector function of the static model, so the served ADC
-    * ranking must equal the full-corpus build's: shares x_sim_pq's
-    * fitted-literal dynamic oracle VERBATIM (dead appended code rows
-    * would drop every odd-id neighbor and miss the hash).
-    */
-  private def xSimPqAppend(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val model = Similarity.pqFit(e, m = 16, ks = 16)
-    val idx = indexDir(dir, "pqapp")
-    graft.sources.IndexStore.writePqIndex(
-      e.filter(col("vec_id") % 2 === 0), model, idx)
-    graft.sources.IndexStore.appendPqIndex(
-      e.filter(col("vec_id") % 2 === 1), idx)
-    Similarity.pqTopKFromCodes(e.filter(col("vec_id") < 5),
-        graft.sources.IndexStore.readPqCodes(s, idx), 10,
-        graft.sources.IndexStore.readPqModel(s, idx))
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** The x_sim_ivf_pq contract served ENTIRELY from persisted
-    * artifacts — centroids (probe routing), codebooks (the model),
-    * and the (id, list_id, codes) corpus state all round-trip parquet
-    * and the float corpus is never touched at serve time: the
-    * composed 100 TB ANN architecture, end to end on disk. Shares
-    * x_sim_ivf_pq's dynamic oracle verbatim.
-    */
-  private def xSimIvfPqServed(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val model = Similarity.pqFit(e, m = 16, ks = 16)
-    val cents = Similarity.kmeansCentroids(e, nLists = 16)
-    val idx = indexDir(dir, "ivfpq")
-    graft.sources.IndexStore.writeIvfPqIndex(e, model, cents, idx)
-    val (enc, rcents) = graft.sources.IndexStore.readIvfPqIndex(s, idx)
-    Similarity.ivfPqTopKFromIndex(e.filter(col("vec_id") < 5), enc,
-        rcents, graft.sources.IndexStore.readPqModel(s, idx), 10,
-        nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Tombstone deletion for the composed IVF-PQ artifact: every 7th
-    * vector deleted via dead.parquet, the 5 queries ADC-scored over
-    * the LIVE (id, list_id, codes) frame (exclusion before ranking);
-    * centroids AND codebooks — both model halves — stay. The oracle
-    * is the fitted-literal x_sim_ivf_pq SQL with the deleted ids
-    * excluded from the assigned corpus.
-    */
-  private def xSimIvfPqDelete(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val model = Similarity.pqFit(e, m = 16, ks = 16)
-    val cents = Similarity.kmeansCentroids(e, nLists = 16)
-    val idx = indexDir(dir, "ivfpqdel")
-    graft.sources.IndexStore.writeIvfPqIndex(e, model, cents, idx)
-    graft.sources.IndexStore.deleteFromIvfPqIndex(
-      e.filter(col("vec_id") % 7 === 3).select(col("vec_id").as("id")),
-      idx)
-    val (enc, rcents) = graft.sources.IndexStore.readIvfPqIndexLive(s, idx)
-    Similarity.ivfPqTopKFromIndex(e.filter(col("vec_id") < 5), enc,
-        rcents, graft.sources.IndexStore.readPqModel(s, idx), 10,
-        nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** LSM APPEND for the composed IVF-PQ artifact: centroids AND
-    * codebooks are fitted once on the full corpus, the index is built
-    * on the even half, and the odd half is admitted via
-    * [[graft.sources.IndexStore.appendIvfPqIndex]] — assignment and
-    * encoding both against the artifact's own re-read model halves.
-    * Shares x_sim_ivf_pq's fitted-literal dynamic oracle VERBATIM.
-    */
-  private def xSimIvfPqAppend(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val model = Similarity.pqFit(e, m = 16, ks = 16)
-    val cents = Similarity.kmeansCentroids(e, nLists = 16)
-    val idx = indexDir(dir, "ivfpqapp")
-    graft.sources.IndexStore.writeIvfPqIndex(
-      e.filter(col("vec_id") % 2 === 0), model, cents, idx)
-    graft.sources.IndexStore.appendIvfPqIndex(
-      e.filter(col("vec_id") % 2 === 1), idx)
-    val (enc, rcents) = graft.sources.IndexStore.readIvfPqIndex(s, idx)
-    Similarity.ivfPqTopKFromIndex(e.filter(col("vec_id") < 5), enc,
-        rcents, graft.sources.IndexStore.readPqModel(s, idx), 10,
-        nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** The x_sim_quantized contract served from the PERSISTED int8
-    * corpus: (id, q, scale) written once — q packed as one-byte
-    * TINYINTs on disk since round 13 — re-read, and scored against
-    * in-memory-quantized queries. Quantized values are exact integers
-    * in [-127, 127], so the tinyint→double round-trip is exact and
-    * this shares x_sim_quantized's oracle verbatim.
-    */
-  private def xSimQuantizedServed(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "int8")
-    graft.sources.IndexStore.writeInt8Index(e, idx)
-    Similarity.quantizedTopKFromIndex(e.filter(col("vec_id") < 5),
-        graft.sources.IndexStore.readInt8Index(s, idx), 10)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Tombstone deletion for the int8 artifact: every 7th vector
-    * deleted via dead.parquet, the 5 queries scored over the LIVE
-    * decoded frame (exclusion before ranking — next-best neighbors
-    * promote in). The oracle recomputes the quantized top-10 with the
-    * deleted ids excluded from the corpus side; physical purge
-    * (tinyint schema preserved through the rewrite) is proven
-    * serve-invariant in Int8PackSpec.
-    */
-  private def xSimQuantizedDelete(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "int8del")
-    graft.sources.IndexStore.writeInt8Index(e, idx)
-    graft.sources.IndexStore.deleteFromInt8Index(
-      e.filter(col("vec_id") % 7 === 3).select(col("vec_id").as("id")),
-      idx)
-    Similarity.quantizedTopKFromIndex(e.filter(col("vec_id") < 5),
-        graft.sources.IndexStore.readInt8IndexLive(s, idx), 10)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** LSM APPEND for the int8 artifact: built on the even half, the
-    * odd half admitted via
-    * [[graft.sources.IndexStore.appendInt8Index]]. Per-vector
-    * quantization has NO fitted state (each row's scale is its own
-    * max-abs), so append ≡ full rebuild unconditionally — the only
-    * artifact in the similarity family whose admission needs no model
-    * read-back. Shares x_sim_quantized's oracle VERBATIM.
-    */
-  private def xSimQuantizedAppend(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "int8app")
-    graft.sources.IndexStore.writeInt8Index(
-      e.filter(col("vec_id") % 2 === 0), idx)
-    graft.sources.IndexStore.appendInt8Index(
-      e.filter(col("vec_id") % 2 === 1), idx)
-    Similarity.quantizedTopKFromIndex(e.filter(col("vec_id") < 5),
-        graft.sources.IndexStore.readInt8Index(s, idx), 10)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** The int8 artifact behind VERSION-POINTER manifests — the second
-    * wiring of graft.sources.VersionedFlat, proving the store is
-    * artifact-agnostic: int8 has no model leaf (per-vector scales), so
-    * the whole artifact is the versioned frame. Build on the even half
-    * (v1, packed tinyint batches) → append the odd half (v2) → compact
-    * (v3, the raw merge preserving the packed schema) → serve CURRENT
-    * decoded. Shares x_sim_quantized's oracle VERBATIM.
-    */
-  private def xSimQuantizedVersioned(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "int8ver")
-    graft.sources.IndexStore.writeInt8IndexVersioned(
-      e.filter(col("vec_id") % 2 === 0), idx)
-    graft.sources.IndexStore.appendInt8IndexVersioned(
-      e.filter(col("vec_id") % 2 === 1), idx)
-    graft.sources.VersionedFlat.compact(s,
-      graft.sources.IndexStore.Int8.versioned(idx))
-    Similarity.quantizedTopKFromIndex(e.filter(col("vec_id") < 5),
-        graft.sources.IndexStore.readInt8IndexVersioned(s, idx), 10)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** The PQ artifact behind VERSION-POINTER manifests (round-14
-    * directive #1 — the third graft.sources.VersionedFlat wiring): the
-    * model is fitted once on the full corpus, the even half's codes
-    * publish version 1, the odd half is ADMITTED (encoded against the
-    * artifact's own persisted codebooks) as version 2, compaction
-    * publishes version 3 as one merged batch — and a reader holding
-    * any version keeps a consistent snapshot throughout. Serving
-    * CURRENT after the cycle must equal the full-corpus build: shares
-    * x_sim_pq's fitted-literal dynamic oracle VERBATIM.
-    */
-  private def xSimPqVersioned(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val model = Similarity.pqFit(e, m = 16, ks = 16)
-    val idx = indexDir(dir, "pqver")
-    graft.sources.IndexStore.writePqIndexVersioned(
-      e.filter(col("vec_id") % 2 === 0), model, idx)
-    graft.sources.IndexStore.appendPqIndexVersioned(
-      e.filter(col("vec_id") % 2 === 1), idx)
-    graft.sources.IndexStore.compactPqIndexVersioned(s, idx)
-    Similarity.pqTopKFromCodes(e.filter(col("vec_id") < 5),
-        graft.sources.IndexStore.readPqCodesVersioned(s, idx), 10,
-        graft.sources.IndexStore.readPqModel(s, idx))
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** The composed IVF-PQ artifact behind VERSION-POINTER manifests —
-    * the LAST similarity artifact onto the versioned store: both model
-    * halves (k-means centroids, PQ codebooks) fitted once and persisted
-    * as plain write-once leaves, the (id, list_id, codes) corpus state
-    * going through the build-evens → admit-odds → compact version
-    * cycle. Shares x_sim_ivf_pq's fitted-literal dynamic oracle
-    * VERBATIM; with this row green every flat similarity artifact has
-    * a reader-snapshot-safe versioned twin.
-    */
-  private def xSimIvfPqVersioned(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val model = Similarity.pqFit(e, m = 16, ks = 16)
-    val cents = Similarity.kmeansCentroids(e, nLists = 16)
-    val idx = indexDir(dir, "ivfpqver")
-    graft.sources.IndexStore.writeIvfPqIndexVersioned(
-      e.filter(col("vec_id") % 2 === 0), model, cents, idx)
-    graft.sources.IndexStore.appendIvfPqIndexVersioned(
-      e.filter(col("vec_id") % 2 === 1), idx)
-    graft.sources.IndexStore.compactIvfPqIndexVersioned(s, idx)
-    val (enc, rcents) = graft.sources.IndexStore
-      .readIvfPqIndexVersioned(s, idx)
-    Similarity.ivfPqTopKFromIndex(e.filter(col("vec_id") < 5), enc,
-        rcents, graft.sources.IndexStore.readPqModel(s, idx), 10,
-        nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
+  /** Every flat lifecycle row: name → (row, the oracle it shares). */
+  private def flatRows: Seq[(String, (SparkSession, String) => DataFrame,
+      Option[String])] =
+    for (f <- FlatFamilies; sc <- f.scenarios)
+      yield (sc.row(f), flatRow(f, sc) _, sc.oracle(f))
 
   /** Ranking-quality eval (Experiment.rankingMetrics): the brute-force
     * cosine top-10 run scored against label-derived graded judgments
@@ -1935,179 +1681,6 @@ object SparkEntry {
     e.filter(col("vec_id") < 5).repartition(3)
       .write.mode("overwrite").parquet(qDir)
     StreamingValidate.annServeStream(s, qDir, idx, 10, nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Check-then-admit VECTOR ingestion
-    * (StreamingValidate.ivfIngestRun) — the similarity family's
-    * STATEFUL streaming arc, closing its column of the lifecycle
-    * matrix: the IVF artifact is built on a third of the corpus
-    * (centroids fitted once, on the full corpus — admission never
-    * re-fits the model), the remaining two thirds arrive as TWO
-    * micro-batches, and each batch is cosine-top-k CHECKED against the
-    * standing live artifact (the embedding near-dup gate) strictly
-    * before being ADMITTED into it. The artifact re-reads per batch,
-    * so batch 2's check sees batch 1's admissions. Per-batch sink rows
-    * depend on arrival order (history-so-far, like
-    * x_stream_unique_index's), so the ROW hashes the order-invariant
-    * final state instead: the post-ingest artifact serves the 5
-    * queries and must equal the full-corpus build — x_sim_ivf_topk's
-    * oracle VERBATIM (a dead or double admission drops or duplicates
-    * top-k slots and misses the hash).
-    */
-  private def xStreamIvfIngest(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "ivf_ingest")
-    val streamDir = indexDir(dir, "ivf_ingest_src")
-    val ckpt = indexDir(dir, "ivf_ingest_ckpt")
-    val sink = indexDir(dir, "ivf_ingest_sink")
-    Seq(idx, streamDir, ckpt, sink).foreach(wipeDir)
-    graft.sources.IndexStore.writeIvfIndex(
-      e.filter(col("vec_id") % 3 === 0),
-      Similarity.firstIdCentroids(e, 16), idx)
-    e.filter(col("vec_id") % 3 === 1).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    e.filter(col("vec_id") % 3 === 2).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.ivfIngestRun(s, streamDir, idx, 10, 4, ckpt, sink)
-    val (index, cents) = graft.sources.IndexStore.readIvfIndex(s, idx)
-    Similarity.ivfTopKWith(e.filter(col("vec_id") < 5), index, cents,
-        10, nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** RESTART-SAFE vector ingestion — the x_stream_unique_resume arc
-    * for the IVF artifact: run 1 checks + ADMITS the % 3 = 1 third
-    * (file A); file B (% 3 = 2) arrives only before run 2, which
-    * resumes from the same checkpoint and processes ONLY B. A
-    * re-processed file A would append duplicate (id, nvec, list_id)
-    * rows whose doubled candidates occupy two bounded-top-k slots and
-    * push the true k-th neighbor out — so hash-matching the final
-    * artifact's serve against x_sim_ivf_topk's full-corpus oracle
-    * proves admit-exactly-once across the restart.
-    */
-  private def xStreamIvfResume(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "ivf_resume")
-    val streamDir = indexDir(dir, "ivf_resume_src")
-    val ckpt = indexDir(dir, "ivf_resume_ckpt")
-    val sink = indexDir(dir, "ivf_resume_sink")
-    Seq(idx, streamDir, ckpt, sink).foreach(wipeDir)
-    graft.sources.IndexStore.writeIvfIndex(
-      e.filter(col("vec_id") % 3 === 0),
-      Similarity.firstIdCentroids(e, 16), idx)
-    e.filter(col("vec_id") % 3 === 1).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.ivfIngestRun(s, streamDir, idx, 10, 4, ckpt, sink)
-    e.filter(col("vec_id") % 3 === 2).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.ivfIngestRun(s, streamDir, idx, 10, 4, ckpt, sink)
-    val (index, cents) = graft.sources.IndexStore.readIvfIndex(s, idx)
-    Similarity.ivfTopKWith(e.filter(col("vec_id") < 5), index, cents,
-        10, nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Check-then-admit PQ ingestion (StreamingValidate.pqIngestRun —
-    * round-14 directive #5, closing the one similarity artifact
-    * without a streaming admission arc): the model is fitted once on
-    * the full corpus, the index built on the % 3 = 0 third, and the
-    * other two thirds arrive as two files of one AvailableNow run —
-    * each micro-batch ADC-checked against the standing live codes
-    * (earlier admissions visible via the per-batch re-read), sunk, and
-    * then admitted against the artifact's own persisted codebooks.
-    * Serving the final code table must equal the full-corpus build:
-    * shares x_sim_pq's fitted-literal dynamic oracle VERBATIM (a
-    * dropped or doubled admission misses the hash).
-    */
-  private def xStreamPqIngest(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val model = Similarity.pqFit(e, m = 16, ks = 16)
-    val idx = indexDir(dir, "pq_ingest")
-    val streamDir = indexDir(dir, "pq_ingest_src")
-    val ckpt = indexDir(dir, "pq_ingest_ckpt")
-    val sink = indexDir(dir, "pq_ingest_sink")
-    Seq(idx, streamDir, ckpt, sink).foreach(wipeDir)
-    graft.sources.IndexStore.writePqIndex(
-      e.filter(col("vec_id") % 3 === 0), model, idx)
-    e.filter(col("vec_id") % 3 === 1).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    e.filter(col("vec_id") % 3 === 2).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.pqIngestRun(s, streamDir, idx, 10, ckpt, sink)
-    Similarity.pqTopKFromCodes(e.filter(col("vec_id") < 5),
-        graft.sources.IndexStore.readPqCodes(s, idx), 10,
-        graft.sources.IndexStore.readPqModel(s, idx))
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Check-then-admit int8 ingestion (StreamingValidate.int8IngestRun
-    * — round-15 directive #5, with [[xStreamIvfPqIngest]] closing the
-    * last two similarity artifacts without streaming admission arcs):
-    * the index built on the % 3 = 0 third, the other two thirds
-    * arriving as two files of one AvailableNow run — each micro-batch
-    * scored against the standing live decoded frame (earlier
-    * admissions visible via the per-batch re-read), sunk, then
-    * quantized and admitted (no model leaf to read back — int8's
-    * scales are per-vector). Serving the final artifact must equal
-    * the full-corpus build: shares x_sim_quantized's oracle VERBATIM.
-    */
-  private def xStreamInt8Ingest(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "int8_ingest")
-    val streamDir = indexDir(dir, "int8_ingest_src")
-    val ckpt = indexDir(dir, "int8_ingest_ckpt")
-    val sink = indexDir(dir, "int8_ingest_sink")
-    Seq(idx, streamDir, ckpt, sink).foreach(wipeDir)
-    graft.sources.IndexStore.writeInt8Index(
-      e.filter(col("vec_id") % 3 === 0), idx)
-    e.filter(col("vec_id") % 3 === 1).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    e.filter(col("vec_id") % 3 === 2).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.int8IngestRun(s, streamDir, idx, 10, ckpt, sink)
-    Similarity.quantizedTopKFromIndex(e.filter(col("vec_id") < 5),
-        graft.sources.IndexStore.readInt8Index(s, idx), 10)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Check-then-admit IVF-PQ ingestion
-    * (StreamingValidate.ivfPqIngestRun): both model halves fitted once
-    * on the full corpus and persisted, the composed index built on the
-    * % 3 = 0 third, the other two thirds arriving as two files of one
-    * AvailableNow run — each micro-batch probe-routed and ADC-checked
-    * against the standing live enc table, sunk, then admitted assigned
-    * AND encoded against the artifact's own persisted centroids +
-    * codebooks (admission never re-fits either). Serving the final
-    * artifact must equal the full-corpus build: shares x_sim_ivf_pq's
-    * fitted-literal dynamic oracle VERBATIM.
-    */
-  private def xStreamIvfPqIngest(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val model = Similarity.pqFit(e, m = 16, ks = 16)
-    val cents = Similarity.kmeansCentroids(e, nLists = 16)
-    val idx = indexDir(dir, "ivfpq_ingest")
-    val streamDir = indexDir(dir, "ivfpq_ingest_src")
-    val ckpt = indexDir(dir, "ivfpq_ingest_ckpt")
-    val sink = indexDir(dir, "ivfpq_ingest_sink")
-    Seq(idx, streamDir, ckpt, sink).foreach(wipeDir)
-    graft.sources.IndexStore.writeIvfPqIndex(
-      e.filter(col("vec_id") % 3 === 0), model, cents, idx)
-    e.filter(col("vec_id") % 3 === 1).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    e.filter(col("vec_id") % 3 === 2).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.ivfPqIngestRun(s, streamDir, idx, 10, 4, ckpt,
-      sink)
-    val (enc, rcents) = graft.sources.IndexStore.readIvfPqIndex(s, idx)
-    Similarity.ivfPqTopKFromIndex(e.filter(col("vec_id") < 5), enc,
-        rcents, graft.sources.IndexStore.readPqModel(s, idx), 10,
-        nProbe = 4)
       .withColumn("rank", col("rank").cast(LongType))
       .orderBy("query_id", "rank")
   }
@@ -4897,134 +4470,6 @@ object SparkEntry {
       .orderBy("shard")
   }
 
-  /** The check-then-admit vector stream over the VERSIONED artifact
-    * (StreamingValidate.ivfIngestRunVersioned) — streaming and
-    * versioning composed: each admitted micro-batch PUBLISHES a
-    * manifest version, so the ingest history itself time-travels
-    * (as-of version N replays the corpus after batch N−1) while
-    * concurrent readers keep snapshots. Two runs against one
-    * checkpoint (the restart arc); the final CURRENT serve must equal
-    * the full-corpus build — x_sim_ivf_topk's oracle VERBATIM, with
-    * the same duplicate-slot detection as x_stream_ivf_resume.
-    */
-  private def xStreamIvfVersioned(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "ivf_ver_stream")
-    val streamDir = indexDir(dir, "ivf_ver_stream_src")
-    val ckpt = indexDir(dir, "ivf_ver_stream_ckpt")
-    val sink = indexDir(dir, "ivf_ver_stream_sink")
-    Seq(idx, streamDir, ckpt, sink).foreach(wipeDir)
-    graft.sources.IndexStore.writeIvfIndexVersioned(
-      e.filter(col("vec_id") % 3 === 0),
-      Similarity.firstIdCentroids(e, 16), idx)
-    e.filter(col("vec_id") % 3 === 1).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.ivfIngestRunVersioned(s, streamDir, idx, 10, 4,
-      ckpt, sink)
-    e.filter(col("vec_id") % 3 === 2).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.ivfIngestRunVersioned(s, streamDir, idx, 10, 4,
-      ckpt, sink)
-    val (index, cents) = graft.sources.IndexStore
-      .readIvfIndexVersioned(s, idx)
-    Similarity.ivfTopKWith(e.filter(col("vec_id") < 5), index, cents,
-        10, nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** [[xStreamIvfVersioned]]'s arc for the PQ artifact
-    * (StreamingValidate.pqIngestRunVersioned — round-15, completing
-    * the versioned ingest matrix): two checkpointed runs publish one
-    * manifest version per admitted batch, checks ADC-score against
-    * the current version's codes, and the final serve must equal the
-    * full-corpus build — x_sim_pq's fitted-literal dynamic oracle
-    * VERBATIM.
-    */
-  private def xStreamPqVersioned(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val model = Similarity.pqFit(e, m = 16, ks = 16)
-    val idx = indexDir(dir, "pq_ver_stream")
-    val streamDir = indexDir(dir, "pq_ver_stream_src")
-    val ckpt = indexDir(dir, "pq_ver_stream_ckpt")
-    val sink = indexDir(dir, "pq_ver_stream_sink")
-    Seq(idx, streamDir, ckpt, sink).foreach(wipeDir)
-    graft.sources.IndexStore.writePqIndexVersioned(
-      e.filter(col("vec_id") % 3 === 0), model, idx)
-    e.filter(col("vec_id") % 3 === 1).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.pqIngestRunVersioned(s, streamDir, idx, 10, ckpt,
-      sink)
-    e.filter(col("vec_id") % 3 === 2).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.pqIngestRunVersioned(s, streamDir, idx, 10, ckpt,
-      sink)
-    Similarity.pqTopKFromCodes(e.filter(col("vec_id") < 5),
-        graft.sources.IndexStore.readPqCodesVersioned(s, idx), 10,
-        graft.sources.IndexStore.readPqModel(s, idx))
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** [[xStreamIvfVersioned]]'s arc for the int8 artifact
-    * (StreamingValidate.int8IngestRunVersioned) — shares
-    * x_sim_quantized's oracle VERBATIM.
-    */
-  private def xStreamInt8Versioned(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val idx = indexDir(dir, "int8_ver_stream")
-    val streamDir = indexDir(dir, "int8_ver_stream_src")
-    val ckpt = indexDir(dir, "int8_ver_stream_ckpt")
-    val sink = indexDir(dir, "int8_ver_stream_sink")
-    Seq(idx, streamDir, ckpt, sink).foreach(wipeDir)
-    graft.sources.IndexStore.writeInt8IndexVersioned(
-      e.filter(col("vec_id") % 3 === 0), idx)
-    e.filter(col("vec_id") % 3 === 1).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.int8IngestRunVersioned(s, streamDir, idx, 10,
-      ckpt, sink)
-    e.filter(col("vec_id") % 3 === 2).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.int8IngestRunVersioned(s, streamDir, idx, 10,
-      ckpt, sink)
-    Similarity.quantizedTopKFromIndex(e.filter(col("vec_id") < 5),
-        graft.sources.IndexStore.readInt8IndexVersioned(s, idx), 10)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
-  /** [[xStreamIvfVersioned]]'s arc for the composed IVF-PQ artifact
-    * (StreamingValidate.ivfPqIngestRunVersioned) — shares
-    * x_sim_ivf_pq's fitted-literal dynamic oracle VERBATIM.
-    */
-  private def xStreamIvfPqVersioned(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val model = Similarity.pqFit(e, m = 16, ks = 16)
-    val cents = Similarity.kmeansCentroids(e, nLists = 16)
-    val idx = indexDir(dir, "ivfpq_ver_stream")
-    val streamDir = indexDir(dir, "ivfpq_ver_stream_src")
-    val ckpt = indexDir(dir, "ivfpq_ver_stream_ckpt")
-    val sink = indexDir(dir, "ivfpq_ver_stream_sink")
-    Seq(idx, streamDir, ckpt, sink).foreach(wipeDir)
-    graft.sources.IndexStore.writeIvfPqIndexVersioned(
-      e.filter(col("vec_id") % 3 === 0), model, cents, idx)
-    e.filter(col("vec_id") % 3 === 1).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.ivfPqIngestRunVersioned(s, streamDir, idx, 10, 4,
-      ckpt, sink)
-    e.filter(col("vec_id") % 3 === 2).coalesce(1)
-      .write.mode("append").parquet(streamDir)
-    StreamingValidate.ivfPqIngestRunVersioned(s, streamDir, idx, 10, 4,
-      ckpt, sink)
-    val (enc, rcents) = graft.sources.IndexStore
-      .readIvfPqIndexVersioned(s, idx)
-    Similarity.ivfPqTopKFromIndex(e.filter(col("vec_id") < 5), enc,
-        rcents, graft.sources.IndexStore.readPqModel(s, idx), 10,
-        nProbe = 4)
-      .withColumn("rank", col("rank").cast(LongType))
-      .orderBy("query_id", "rank")
-  }
-
   /** The MULTI-INDEX gated pipeline
     * (StreamingValidate.gatedIngestRunMulti over
     * graft.sources.IndexStore.writePipelineIndexVersioned — round-15
@@ -6240,9 +5685,6 @@ object SparkEntry {
     "x_sim_pairs" -> (xSimPairs _),
     "x_sim_lsh_pairs" -> (xSimLshPairs _),
     "x_sim_ivf_topk" -> (xSimIvfTopk _),
-    "x_sim_ivf_delete" -> (xSimIvfDelete _),
-    "x_sim_ivf_append" -> (xSimIvfAppend _),
-    "x_sim_quantized_delete" -> (xSimQuantizedDelete _),
     "x_sim_ivf_recall" -> (xSimIvfRecall _),
     "x_text_tokens" -> (xTextTokens _),
     "x_text_quality" -> (xTextQuality _),
@@ -6308,7 +5750,6 @@ object SparkEntry {
     "x_dedup_source_matrix" -> (xDedupSourceMatrix _),
     "x_dedup_incremental" -> (xDedupIncremental _),
     "x_dedup_index_served" -> (xDedupIndexServed _),
-    "x_sim_ivf_served" -> (xSimIvfServed _),
     "x_sample_exact_n" -> (xSampleExactN _),
     "x_stream_join" -> (xStreamJoin _),
     "x_dedup_containment" -> (xDedupContainment _),
@@ -6446,14 +5887,9 @@ object SparkEntry {
     "x_ts_autocorr" -> (xTsAutocorr _),
     "x_ts_seasonality" -> (xTsSeasonality _),
     "x_stream_dedup_index" -> (xStreamDedupIndex _),
-    "x_sim_pq_served" -> (xSimPqServed _),
-    "x_sim_pq_delete" -> (xSimPqDelete _),
-    "x_sim_ivf_pq_delete" -> (xSimIvfPqDelete _),
-    "x_sim_quantized_served" -> (xSimQuantizedServed _),
     "x_zipf_ppjoin" -> (xZipfPpjoin _),
     "x_zipf_substring" -> (xZipfSubstring _),
     "x_zipf_bm25" -> (xZipfBm25 _),
-    "x_sim_ivf_pq_served" -> (xSimIvfPqServed _),
     "x_eval_ranking" -> (xEvalRanking _),
     "x_sim_rrf" -> (xSimRrf _),
     "x_stream_ann_serve" -> (xStreamAnnServe _),
@@ -6505,29 +5941,9 @@ object SparkEntry {
     "x_profile_spearman" -> (xProfileSpearman _),
     "x_profile_gini" -> (xProfileGini _),
     "x_sample_match_dist" -> (xSampleMatchDist _),
-    "x_sim_ivf_compact" -> (xSimIvfCompact _),
-    "x_sim_pq_append" -> (xSimPqAppend _),
-    "x_sim_ivf_pq_append" -> (xSimIvfPqAppend _),
-    "x_sim_quantized_append" -> (xSimQuantizedAppend _),
-    "x_stream_ivf_ingest" -> (xStreamIvfIngest _),
-    "x_stream_ivf_resume" -> (xStreamIvfResume _),
-    "x_sim_ivf_versioned" -> (xSimIvfVersioned _),
-    "x_sim_ivf_rollback" -> (xSimIvfRollback _),
-    "x_sim_ivf_time_travel" -> (xSimIvfTimeTravel _),
-    "x_sim_ivf_versioned_delete" -> (xSimIvfVersionedDelete _),
     "x_pipeline_train" -> (xPipelineTrain _),
     "x_stream_pipeline" -> (xStreamPipeline _),
-    "x_stream_ivf_versioned" -> (xStreamIvfVersioned _),
-    "x_stream_pq_versioned" -> (xStreamPqVersioned _),
-    "x_stream_int8_versioned" -> (xStreamInt8Versioned _),
-    "x_stream_ivfpq_versioned" -> (xStreamIvfPqVersioned _),
     "x_stream_pipeline_admit" -> (xStreamPipelineAdmit _),
-    "x_sim_quantized_versioned" -> (xSimQuantizedVersioned _),
-    "x_sim_pq_versioned" -> (xSimPqVersioned _),
-    "x_sim_ivf_pq_versioned" -> (xSimIvfPqVersioned _),
-    "x_stream_pq_ingest" -> (xStreamPqIngest _),
-    "x_stream_int8_ingest" -> (xStreamInt8Ingest _),
-    "x_stream_ivfpq_ingest" -> (xStreamIvfPqIngest _),
     "x_dedup_index_versioned" -> (xDedupIndexVersioned _),
     "x_dedup_index_attach" -> (xDedupIndexAttach _),
     "x_dedup_index_versioned_put" -> (xDedupIndexVersionedPut _),
@@ -6546,7 +5962,7 @@ object SparkEntry {
     "x_dedup_index_rollback" -> (xDedupIndexRollback _),
     "x_stream_pipeline_admit_versioned" ->
       (xStreamPipelineAdmitVersioned _)
-  )
+  ) ++ flatRows.map { case (name, row, _) => name -> row }
 
   // ------------------------------------------------------------- oracles
   // The DuckDB oracle maps live in graft.oracle (round-5 split): shared
@@ -6555,133 +5971,84 @@ object SparkEntry {
   // These delegations keep the driver contract (SparkEntry.oracleSql)
   // and Verify's call sites unchanged.
 
-  /** DuckDB twins of `queries` — identical column names and ordering.
-    * The index-served round-trip queries share their in-memory twins'
-    * oracles VERBATIM: the round-trip's whole claim is hash-identity
-    * with the in-memory path, so aliasing the oracle is the contract,
-    * not a shortcut.
+  /** Every "this row shares that row's oracle" decision, row → the row
+    * that owns the oracle (static or dynamic). The index-served,
+    * appended, compacted, versioned and streamed rows share their
+    * in-memory twins' oracles VERBATIM: the claim is hash-identity with
+    * the in-memory path, so sharing the oracle is the contract, not a
+    * shortcut. The flat similarity rows' entries come from their table.
     */
+  private[graft] def sharedOracle: Map[String, String] = Map(
+    "x_dedup_index_served" -> "x_dedup_incremental",
+    "x_stream_dedup_index" -> "x_dedup_incremental",
+    "x_stream_ann_serve" -> "x_sim_ivf_topk",
+    "x_dedup_index_compact" -> "x_dedup_index_append",
+    "k3_fk_index_served" -> "k3_fk_orders_customer",
+    "x_dedup_substring_compact" -> "x_dedup_substring_append",
+    "x_dedup_substring_compact_tiered" -> "x_dedup_substring_append",
+    "x_dedup_substring_tiered_versioned" -> "x_dedup_substring_append",
+    "x_dedup_substring_snapshot_versioned" -> "x_dedup_substring_served",
+    "x_stream_editdist" -> "x_dedup_editdist_served",
+    "x_stream_phash" -> "x_mm_phash_served",
+    "k3_fk_index_delete" -> "k3_fk_orders_customer",
+    "x_stream_dedup_resume" -> "x_dedup_index_append",
+    "x_stream_editdist_resume" -> "x_dedup_editdist_append",
+    "x_text_bpe_learn_dist" -> "x_text_bpe_learn",
+    "x_mm_phash_append" -> "x_mm_phash_served",
+    "x_mm_phash_compact" -> "x_mm_phash_served",
+    "x_dedup_editdist_compact" -> "x_dedup_editdist_append",
+    "x_stream_substring" -> "x_dedup_substring_served",
+    "x_stream_substring_resume" -> "x_dedup_substring_append",
+    "x_stream_substring_versioned" -> "x_dedup_substring_append",
+    "x_stream_phash_resume" -> "x_mm_phash_served",
+    "x_stream_phash_versioned" -> "x_mm_phash_served",
+    "x_stream_editdist_versioned" -> "x_dedup_editdist_append",
+    "x_stream_unique_versioned" -> "x_stream_unique_resume",
+    "x_dedup_index_versioned" -> "x_dedup_index_append",
+    "x_dedup_index_attach" -> "x_dedup_index_append",
+    "x_dedup_index_versioned_put" -> "x_dedup_index_append",
+    "x_dedup_index_concurrent" -> "x_dedup_index_append",
+    "x_dedup_index_concurrent_mixed" -> "x_dedup_index_append",
+    "x_stream_dedup_versioned" -> "x_dedup_index_append",
+    "x_unique_index_versioned" -> "x_unique_index_append",
+    "x_dedup_substring_versioned" -> "x_dedup_substring_append",
+    "x_dedup_editdist_versioned" -> "x_dedup_editdist_append",
+    "x_mm_phash_versioned" -> "x_mm_phash_served",
+    "x_dedup_index_snapshot" -> "x_dedup_incremental",
+    "x_dedup_index_rollback" -> "x_dedup_incremental",
+    "x_stream_pipeline_admit_versioned" -> "x_stream_pipeline_admit",
+    "x_stream_pipeline_multi_bounded" -> "x_stream_pipeline_multi",
+    "x_stream_pipeline_evolve" -> "x_stream_pipeline_multi") ++
+    flatRows.flatMap { case (name, _, shared) => shared.map(name -> _) }
+
+  /** DuckDB twins of `queries` — identical column names and ordering. */
   def oracleSql: Map[String, String] = graft.oracle.StaticOracles.sql ++
-    Map(
-      "x_dedup_index_served" ->
-        graft.oracle.StaticOracles.sql("x_dedup_incremental"),
-      "x_stream_dedup_index" ->
-        graft.oracle.StaticOracles.sql("x_dedup_incremental"),
-      "x_sim_ivf_served" ->
-        graft.oracle.StaticOracles.sql("x_sim_ivf_topk"),
-      "x_stream_ann_serve" ->
-        graft.oracle.StaticOracles.sql("x_sim_ivf_topk"),
-      "x_sim_quantized_served" ->
-        graft.oracle.StaticOracles.sql("x_sim_quantized"),
-      "x_dedup_index_compact" ->
-        graft.oracle.StaticOracles.sql("x_dedup_index_append"),
-      "k3_fk_index_served" ->
-        graft.oracle.StaticOracles.sql("k3_fk_orders_customer"),
-      "x_dedup_substring_compact" ->
-        graft.oracle.StaticOracles.sql("x_dedup_substring_append"),
-      "x_dedup_substring_compact_tiered" ->
-        graft.oracle.StaticOracles.sql("x_dedup_substring_append"),
-      "x_dedup_substring_tiered_versioned" ->
-        graft.oracle.StaticOracles.sql("x_dedup_substring_append"),
-      "x_dedup_substring_snapshot_versioned" ->
-        graft.oracle.StaticOracles.sql("x_dedup_substring_served"),
-      "x_stream_editdist" ->
-        graft.oracle.StaticOracles.sql("x_dedup_editdist_served"),
-      "x_stream_phash" ->
-        graft.oracle.StaticOracles.sql("x_mm_phash_served"),
-      "k3_fk_index_delete" ->
-        graft.oracle.StaticOracles.sql("k3_fk_orders_customer"),
-      "x_stream_dedup_resume" ->
-        graft.oracle.StaticOracles.sql("x_dedup_index_append"),
-      "x_stream_editdist_resume" ->
-        graft.oracle.StaticOracles.sql("x_dedup_editdist_append"),
-      "x_text_bpe_learn_dist" ->
-        graft.oracle.StaticOracles.sql("x_text_bpe_learn"),
-      "x_mm_phash_append" ->
-        graft.oracle.StaticOracles.sql("x_mm_phash_served"),
-      "x_sim_ivf_append" ->
-        graft.oracle.StaticOracles.sql("x_sim_ivf_topk"),
-      "x_mm_phash_compact" ->
-        graft.oracle.StaticOracles.sql("x_mm_phash_served"),
-      "x_dedup_editdist_compact" ->
-        graft.oracle.StaticOracles.sql("x_dedup_editdist_append"),
-      "x_stream_substring" ->
-        graft.oracle.StaticOracles.sql("x_dedup_substring_served"),
-      "x_stream_substring_resume" ->
-        graft.oracle.StaticOracles.sql("x_dedup_substring_append"),
-      "x_stream_substring_versioned" ->
-        graft.oracle.StaticOracles.sql("x_dedup_substring_append"),
-      "x_stream_phash_resume" ->
-        graft.oracle.StaticOracles.sql("x_mm_phash_served"),
-      "x_stream_phash_versioned" ->
-        graft.oracle.StaticOracles.sql("x_mm_phash_served"),
-      "x_stream_editdist_versioned" ->
-        graft.oracle.StaticOracles.sql("x_dedup_editdist_append"),
-      "x_stream_unique_versioned" ->
-        graft.oracle.StaticOracles.sql("x_stream_unique_resume"),
-      "x_sim_ivf_compact" ->
-        graft.oracle.StaticOracles.sql("x_sim_ivf_topk"),
-      "x_sim_quantized_append" ->
-        graft.oracle.StaticOracles.sql("x_sim_quantized"),
-      "x_stream_ivf_ingest" ->
-        graft.oracle.StaticOracles.sql("x_sim_ivf_topk"),
-      "x_stream_ivf_resume" ->
-        graft.oracle.StaticOracles.sql("x_sim_ivf_topk"),
-      "x_sim_ivf_versioned" ->
-        graft.oracle.StaticOracles.sql("x_sim_ivf_topk"),
-      "x_sim_ivf_rollback" ->
-        graft.oracle.StaticOracles.sql("x_sim_ivf_topk"),
-      "x_sim_ivf_versioned_delete" ->
-        graft.oracle.StaticOracles.sql("x_sim_ivf_delete"),
-      "x_stream_ivf_versioned" ->
-        graft.oracle.StaticOracles.sql("x_sim_ivf_topk"),
-      "x_sim_quantized_versioned" ->
-        graft.oracle.StaticOracles.sql("x_sim_quantized"),
-      "x_stream_int8_ingest" ->
-        graft.oracle.StaticOracles.sql("x_sim_quantized"),
-      "x_stream_int8_versioned" ->
-        graft.oracle.StaticOracles.sql("x_sim_quantized"),
-      "x_dedup_index_versioned" ->
-        graft.oracle.StaticOracles.sql("x_dedup_index_append"),
-      "x_dedup_index_attach" ->
-        graft.oracle.StaticOracles.sql("x_dedup_index_append"),
-      "x_dedup_index_versioned_put" ->
-        graft.oracle.StaticOracles.sql("x_dedup_index_append"),
-      "x_dedup_index_concurrent" ->
-        graft.oracle.StaticOracles.sql("x_dedup_index_append"),
-      "x_dedup_index_concurrent_mixed" ->
-        graft.oracle.StaticOracles.sql("x_dedup_index_append"),
-      "x_stream_dedup_versioned" ->
-        graft.oracle.StaticOracles.sql("x_dedup_index_append"),
-      "x_unique_index_versioned" ->
-        graft.oracle.StaticOracles.sql("x_unique_index_append"),
-      "x_dedup_substring_versioned" ->
-        graft.oracle.StaticOracles.sql("x_dedup_substring_append"),
-      "x_dedup_editdist_versioned" ->
-        graft.oracle.StaticOracles.sql("x_dedup_editdist_append"),
-      "x_mm_phash_versioned" ->
-        graft.oracle.StaticOracles.sql("x_mm_phash_served"),
-      "x_dedup_index_snapshot" ->
-        graft.oracle.StaticOracles.sql("x_dedup_incremental"),
-      "x_dedup_index_rollback" ->
-        graft.oracle.StaticOracles.sql("x_dedup_incremental"),
-      "x_stream_pipeline_admit_versioned" ->
-        graft.oracle.StaticOracles.sql("x_stream_pipeline_admit"),
-      "x_stream_pipeline_multi_bounded" ->
-        graft.oracle.StaticOracles.sql("x_stream_pipeline_multi"),
-      "x_stream_pipeline_evolve" ->
-        graft.oracle.StaticOracles.sql("x_stream_pipeline_multi"))
+    sharedOracle.collect { case (row, owner)
+        if graft.oracle.StaticOracles.sql.contains(owner) =>
+      row -> graft.oracle.StaticOracles.sql(owner) }
 
   /** Names with data-dependent oracles ([[dynamicOracleSql]]) — lets
     * Verify skip the generation work when a name filter excludes them.
     */
-  val dynamicQueryNames: Set[String] = graft.oracle.DynamicOracles.names
+  val dynamicQueryNames: Set[String] = graft.oracle.DynamicOracles.names ++
+    sharedDynamic.keySet
+
+  private def sharedDynamic: Map[String, String] =
+    sharedOracle.filter { case (_, owner) =>
+      graft.oracle.DynamicOracles.names(owner) }
 
   /** Oracle SQL that depends on the DATA, not just the query — rendered
     * per sfDir by Verify at dump time and merged into oracle_sql.json.
+    * A requested row that shares an oracle asks for its owner's fit.
     */
   def dynamicOracleSql(
       spark: SparkSession, sfDir: String,
-      only: Set[String] = Set.empty): Map[String, String] =
-    graft.oracle.DynamicOracles.sql(spark, sfDir, only)
+      only: Set[String] = Set.empty): Map[String, String] = {
+    val shared = sharedDynamic
+    val m = graft.oracle.DynamicOracles.sql(spark, sfDir,
+      only ++ only.flatMap(shared.get))
+    m ++ shared.collect { case (row, owner)
+        if (only.isEmpty || only(row)) && m.contains(owner) =>
+      row -> m(owner) }
+  }
 }

@@ -14,6 +14,16 @@ import Fixtures.{skewedDocs, t}
   */
 private[graft] object DynamicOracles {
 
+  /** The names that own a data-dependent oracle (a fit of their own);
+    * rows sharing one are resolved through SparkEntry.sharedOracle.
+    */
+  val names: Set[String] =
+    Set("x_sim_ivf_kmeans", "x_sim_kmeans_full", "x_sim_pq",
+      "x_sim_pq_delete", "x_sim_ivf_pq", "x_sim_ivf_pq_delete",
+      "x_sample_temperature", "x_embed_pca", "x_embed_drift",
+      "x_zipf_ppjoin", "x_zipf_bm25", "x_zipf_substring",
+      "x_sim_silhouette")
+
   /** Oracle SQL that depends on the DATA, not just the query — rendered
     * per sfDir by Verify at dump time and merged into oracle_sql.json.
     *
@@ -26,22 +36,6 @@ private[graft] object DynamicOracles {
     * Double.toString round-trips, so both engines compute dots over
     * bit-identical centroid values.
     */
-  /** Names with data-dependent oracles ([[dynamicOracleSql]]) — lets
-    * Verify skip the generation work when a name filter excludes them.
-    */
-  val names: Set[String] =
-    Set("x_sim_ivf_kmeans", "x_sim_kmeans_full", "x_sim_pq",
-      "x_sim_pq_served", "x_sim_pq_delete", "x_sim_pq_append",
-      "x_sim_pq_versioned", "x_stream_pq_ingest",
-      "x_stream_pq_versioned", "x_stream_ivfpq_versioned",
-      "x_sim_ivf_pq",
-      "x_sim_ivf_pq_served", "x_sim_ivf_pq_delete",
-      "x_sim_ivf_pq_append", "x_sim_ivf_pq_versioned",
-      "x_stream_ivfpq_ingest",
-      "x_sample_temperature", "x_embed_pca", "x_embed_drift",
-      "x_zipf_ppjoin", "x_zipf_bm25", "x_zipf_substring",
-      "x_sim_silhouette")
-
   def sql(
       spark: SparkSession, sfDir: String,
       only: Set[String] = Set.empty): Map[String, String] = {
@@ -68,9 +62,7 @@ private[graft] object DynamicOracles {
       .kmeansCentroids(t(spark, sfDir, "embeddings"), nLists = 16))
     // x_sim_pq: re-fit the deterministic codebooks, embed (j, code,
     // centroid, bias) literals; codes/tables/score fold re-derive in SQL
-    // with the same subspace-ordered arithmetic. The persisted-index
-    // round-trip twin (x_sim_pq_served) shares this SQL VERBATIM —
-    // hash-identity with the in-memory path is its whole claim.
+    // with the same subspace-ordered arithmetic.
     // templated over a corpus filter so the tombstone-deletion row
     // (x_sim_pq_delete) reuses the identical fitted-literal body with
     // the deleted ids excluded from the ENCODED corpus before ranking
@@ -114,9 +106,7 @@ private[graft] object DynamicOracles {
         |      FROM scored)
         |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank FROM r
         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
-    if (want("x_sim_pq") || want("x_sim_pq_served") ||
-        want("x_sim_pq_append") || want("x_sim_pq_versioned") ||
-        want("x_stream_pq_ingest") || want("x_stream_pq_versioned"))
+    if (want("x_sim_pq"))
       b += ("x_sim_pq" -> pqSql(""))
     if (want("x_sim_pq_delete"))
       b += ("x_sim_pq_delete" -> pqSql(" AND ec.id % 7 <> 3"))
@@ -211,9 +201,7 @@ private[graft] object DynamicOracles {
         |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank FROM r
         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
     }
-    if (want("x_sim_ivf_pq") || want("x_sim_ivf_pq_served") ||
-        want("x_sim_ivf_pq_append") || want("x_sim_ivf_pq_versioned") ||
-        want("x_stream_ivfpq_ingest") || want("x_stream_ivfpq_versioned"))
+    if (want("x_sim_ivf_pq"))
       b += ("x_sim_ivf_pq" -> ivfPqSql(""))
     if (want("x_sim_ivf_pq_delete"))
       b += ("x_sim_ivf_pq_delete" -> ivfPqSql(" AND a.id % 7 <> 3"))
@@ -457,23 +445,6 @@ private[graft] object DynamicOracles {
           |WHERE inter * 10 >= (sa.s + sb.s - inter) * 7
           |ORDER BY id_a, id_b""".stripMargin)
     }
-    val m = b.result()
-    // served round-trip twins alias their in-memory queries' oracles
-    // verbatim (the round-trip claims hash-identity, so aliasing the
-    // oracle IS the contract); filtered like every other entry
-    Seq("x_sim_pq_served" -> "x_sim_pq",
-        "x_sim_pq_append" -> "x_sim_pq",
-        "x_sim_pq_versioned" -> "x_sim_pq",
-        "x_stream_pq_ingest" -> "x_sim_pq",
-        "x_stream_pq_versioned" -> "x_sim_pq",
-        "x_stream_ivfpq_versioned" -> "x_sim_ivf_pq",
-        "x_sim_ivf_pq_served" -> "x_sim_ivf_pq",
-        "x_sim_ivf_pq_append" -> "x_sim_ivf_pq",
-        "x_sim_ivf_pq_versioned" -> "x_sim_ivf_pq",
-        "x_stream_ivfpq_ingest" -> "x_sim_ivf_pq")
-      .foldLeft(m) { case (acc, (served, src)) =>
-        if (want(served) && acc.contains(src)) acc + (served -> acc(src))
-        else acc
-      }
+    b.result()
   }
 }

@@ -321,6 +321,8 @@ object IndexStore {
       table: String, numBuckets: Int): Unit = {
     val spark = in.sparkSession
     Scratch.sweepOnce(spark) // age out dead-pid scratch
+    // a build replaces the whole corpus: the replaced one's tombstones go
+    spark.sql(s"DROP TABLE IF EXISTS `${table}_dead`")
     withRows(f, p, in, table)(store.create(spark, table, _, numBuckets))
     writeMeta(spark, table, f.meta(p))
   }
@@ -1213,6 +1215,8 @@ object IndexStore {
     def build[M](f: Flat[M], corpus: DataFrame, model: M, dir: String,
         idCol: String, vecCol: String): Unit = {
       Scratch.sweepOnce(corpus.sparkSession) // age out dead-pid scratch
+      // a build replaces the whole corpus: the replaced one's tombstones go
+      Scratch.deleteRecursively(new java.io.File(s"$dir/dead.parquet"))
       f.model.write(corpus.sparkSession, model, dir)
       create(f.encode(corpus, model, idCol, vecCol), at(f)(dir))
     }

@@ -851,6 +851,53 @@ class BucketingSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS $t$s")
   }
 
+  test("a rebuild starts with no tombstones: delete, rebuild, and the " +
+      "live ids are the rebuilt corpus for every _dead family") {
+    val docs = Tables.load(spark, dir, "documents")
+      .filter(col("doc_id") < 40 && col("n_chars") <= 250)
+    val toks = docs.select(col("doc_id").as("id"),
+      graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
+    val strs = docs.select(col("doc_id").as("id"), col("text").as("s"))
+    val hashes = graft.ext.Multimodal.perceptualHash(
+      graft.ext.Multimodal.synthesizeNearDupImages(docs, "doc_id",
+        every = 5)).select(col("id"), col("dhash"))
+    // (table, build, delete, the member holding every indexed id, dead ids)
+    val families = Seq[(String, String => Unit,
+        (org.apache.spark.sql.DataFrame, String) => Unit, String,
+        String => org.apache.spark.sql.DataFrame)](
+      ("rb_dedup", IndexStore.writeDedupIndexBucketed(toks, _,
+        numBuckets = 4, k = 5), IndexStore.deleteFromDedupIndexBucketed,
+        "_sh", IndexStore.readDedupDeadIds(spark, _)),
+      ("rb_sub", IndexStore.writeSubstringIndexBucketed(toks, _,
+        numBuckets = 4, k = 8), IndexStore.deleteFromSubstringIndexBucketed,
+        "_grams", IndexStore.readSubstringDeadIds(spark, _)),
+      ("rb_edit", IndexStore.writeEditIndexBucketed(strs, _,
+        numBuckets = 4, d = 4), IndexStore.deleteFromEditIndexBucketed,
+        "_str", IndexStore.readEditDeadIds(spark, _)),
+      ("rb_phash", IndexStore.writePhashIndexBucketed(hashes, _,
+        numBuckets = 4, bands = 8), IndexStore.deleteFromPhashIndexBucketed,
+        "_bands", IndexStore.readPhashDeadIds(spark, _)))
+    def idSet(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select(col("id")).collect().map(_.getLong(0)).toSet
+    try {
+      val stale = families.filterNot { case (t, build, delete, member,
+          dead) =>
+        build(t)
+        val corpus = idSet(spark.table(t + member))
+        delete(spark.table(t + member).select("id").distinct().limit(3), t)
+        assert(idSet(dead(t)).size == 3, t)
+        build(t)
+        val rebuilt = idSet(spark.table(t + member))
+        rebuilt == corpus && rebuilt -- idSet(dead(t)) == corpus
+      }.map(_._1)
+      assert(stale.isEmpty,
+        s"a rebuild must drop the replaced index's tombstones: $stale")
+    } finally for (t <- families.map(_._1);
+        s <- Seq("_sh", "_bands", "_grams", "_segs", "_str", "_bylen",
+          "_meta", "_dead"))
+      spark.sql(s"DROP TABLE IF EXISTS $t$s")
+  }
+
   test("tiered compaction rewrites ONLY buckets over the file " +
       "threshold; untouched files byte-identical, serve invariant, " +
       "crashed attempts recover") {

@@ -143,6 +143,19 @@ class FlatLifecycleSpec extends SparkSpec {
     }
   }
 
+  test("every flat cell: a rebuild starts with no tombstones — delete, " +
+      "rebuild, and the live frame is the whole corpus") {
+    val stale = cells.filterNot { c =>
+      val dir = tmp(c.name.replace(' ', '_'))
+      c.build(dir)
+      c.delete(idFrame(3L, 7L), dir)
+      c.build(dir)
+      ids(c.live(dir)) == (0L until 24L).toSet
+    }.map(_.name)
+    assert(stale.isEmpty,
+      s"a rebuild must drop the replaced artifact's tombstones: $stale")
+  }
+
   test("IVF versioned rollback: the head reverts to the rolled-back-to " +
       "version by a new commit; the reverted version stays readable") {
     val dir = tmp("rollback")
