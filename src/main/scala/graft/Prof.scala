@@ -1,10 +1,57 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scratch single-query profiler (not part of the harness contract). */
+/** Scratch single-query profiler (not part of the harness contract).
+  * Each `[prof]` line gives the query's wall time, its row count, its
+  * Spark jobs (including the final `count()`) and the generated classes
+  * it compiled. Naming a query twice shows its warm recompiles: a call
+  * whose code fits Spark's codegen cache compiles nothing the second
+  * time.
+  */
 object Prof {
+  private val BarrierGroup = "prof-barrier"
+
+  /** Counts the session's jobs outside [[BarrierGroup]]. */
+  private final class JobCounter(spark: SparkSession) extends SparkListener {
+    private val jobs = new AtomicLong
+    private val barriers = ConcurrentHashMap.newKeySet[Int]()
+    private var barriersDone, barriersIssued = 0L
+    spark.sparkContext.addSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .contains(BarrierGroup)) barriers.add(e.jobId)
+      else jobs.incrementAndGet()
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (barriers.contains(e.jobId)) synchronized {
+        barriersDone += 1
+        notifyAll()
+      }
+
+    /** The job count once every event posted so far is delivered: a
+      * one-task job in the barrier group ends after all of them.
+      */
+    def drained(): Long = {
+      val sc = spark.sparkContext
+      sc.setJobGroup(BarrierGroup, "listener barrier", false)
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.clearJobGroup()
+      synchronized {
+        barriersIssued += 1
+        while (barriersDone < barriersIssued) wait(100)
+      }
+      jobs.get()
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -43,11 +90,16 @@ object Prof {
                 f"tasks=${i.numTasks}%4d  ${i.name.take(60)}%s")
           }
         })
+    val jobs = new JobCounter(spark)
     val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
     // internal-execution bookkeeping: dump only THIS query's
     // executions, not everything since process start
     var lastExecId = -1L
     names.foreach { name =>
+      // every query's Spark jobs and generated classes compiled (the
+      // codegen cache's misses), counted outside the timed region
+      val jobs0 = jobs.drained()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       // the builder call is INSIDE the timed region: eager operators
       // (duplicateClusters' propagation loop, ivf index builds) do their
       // work at plan-build time, exactly as Bench accounts them
@@ -96,7 +148,10 @@ object Prof {
               .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
       val n = df.count()
-      println(f"[prof] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  (rows=$n)")
+      val secs = (System.nanoTime() - t0) / 1e9
+      println(f"[prof] $name%-28s $secs%8.2f s  (rows=$n) " +
+        s"jobs=${jobs.drained() - jobs0} " +
+        s"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0}")
       lastExecId = spark.sharedState.statusStore.executionsList()
         .lastOption.map(_.executionId).getOrElse(-1L)
       // SPARK_GRAFT_SQLMETRICS=1: per-operator metrics of EVERY SQL

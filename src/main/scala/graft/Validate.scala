@@ -1,12 +1,18 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+
+import com.univocity.parsers.csv.{CsvParser, CsvParserSettings, UnescapedQuoteHandling}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 import scala.collection.mutable.ListBuffer
 
 import graft.check.Checks
+import graft.functions.BoundedDistinctEach
 import graft.parse.Parsers
 import graft.report._
 import graft.schema._
@@ -26,11 +32,15 @@ import graft.schema._
   * resource loads concurrently, and each check starts as soon as the
   * tables it reads are loaded (and, on the CSV path, cached).
   *
-  * Scale notes (100 TB): each table is scanned once for the fused
-  * constraint pass ([[Checks.constraintSummary]]); each key/unique check
-  * is one hash-aggregate shuffle; each fk is one anti join with the parent
-  * reduced to distinct keys first. Offending-value samples are bounded by
-  * `maxErrorValues` — nothing unbounded is ever collected to the driver.
+  * Scale notes (100 TB): each table is scanned once to load it. That
+  * scan parses every field and adds one check column: per row, the
+  * checks the row fails (invalid cells, constraint violations, a null
+  * primary-key part). One aggregate over that column alone
+  * ([[summary]]) yields all of the table's parse and constraint results.
+  * Each key/unique check is one hash-aggregate shuffle; each fk is one
+  * anti join with the parent reduced to distinct keys first.
+  * Offending-value samples are bounded by `maxErrorValues` — nothing
+  * unbounded is ever collected to the driver.
   */
 object Validate {
 
@@ -108,21 +118,71 @@ object Validate {
   }
 
   /** The CSV file's own header row (the declared schema overrides column
-    * naming on read, so reconciliation must look at the raw first line).
-    * Parsed by the CSV reader under the full dialect — NOT a bare
-    * `split` on the delimiter, which would break a quoted header cell
-    * containing the delimiter apart and defeat the name-multiset
-    * permutation check that readCsv's by-name binding relies on.
+    * naming on read, so reconciliation must look at the raw first
+    * record): the trimmed cells of the first record of the resource's
+    * first file, or of the first non-empty data file when that path is a
+    * directory, and empty for an empty file. Read on the driver, without
+    * a Spark job, through the Hadoop file system (so compressed files
+    * decompress by extension) and univocity's `CsvParser` under the
+    * settings [[csvOptions]] gives Spark's reader — NOT a bare `split` on
+    * the delimiter, which would break a quoted header cell containing the
+    * delimiter apart and defeat the name-multiset permutation check that
+    * readCsv's by-name binding relies on. A headerless dialect has no
+    * header to read: the declared names are returned.
     */
   def actualCsvHeader(spark: SparkSession, res: Resource): Seq[String] = {
     if (!res.dialect.header) return res.schema.fieldNames // nothing to check
-    val firstRow = spark.read
-      .options(csvOptions(res.dialect) + ("header" -> "false"))
-      .csv(res.allPaths.head)
-      .head(1).headOption
-    firstRow.map(_.toSeq.map(v =>
-      Option(v).map(_.toString.trim).getOrElse("")))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val first = new Path(res.allPaths.head)
+    val fs = first.getFileSystem(conf)
+    val file =
+      if (!fs.getFileStatus(first).isDirectory) Some(first)
+      else fs.listStatus(first).filter(s => s.isFile && s.getLen > 0 &&
+          !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith("."))
+        .map(_.getPath).sortBy(_.getName).headOption
+    file.flatMap { p =>
+      val raw = fs.open(p)
+      val in = Option(new CompressionCodecFactory(conf).getCodec(p))
+        .map(_.createInputStream(raw)).getOrElse(raw)
+      try {
+        val parser = new CsvParser(headerSettings(res.dialect))
+        parser.beginParsing(in, StandardCharsets.UTF_8)
+        Option(parser.parseNext())
+      } finally in.close()
+    }.map(_.toSeq.map(v => Option(v).map(_.trim).getOrElse("")))
       .getOrElse(Seq.empty)
+  }
+
+  /** Univocity settings equal to what Spark's CSV reader builds from
+    * [[csvOptions]]: its delimiter, quote, escape, comment and line
+    * separator, comment processing off without a comment character, no
+    * column-width limit and unescaped quotes handled as Spark does.
+    */
+  private def headerSettings(d: Dialect): CsvParserSettings = {
+    val o = csvOptions(d)
+    val s = new CsvParserSettings()
+    val f = s.getFormat
+    f.setDelimiter(o("sep"))
+    f.setQuote(o("quote").headOption.getOrElse('\u0000'))
+    f.setQuoteEscape(o("escape").head)
+    o.get("comment") match {
+      case Some(c) => f.setComment(c.head)
+      case None => s.setCommentProcessingEnabled(false)
+    }
+    o.get("lineSep") match {
+      case Some(sep) =>
+        f.setLineSeparator(sep)
+        s.setNormalizeLineEndingsWithinQuotes(false)
+      case None => s.setLineSeparatorDetectionEnabled(true)
+    }
+    s.setIgnoreLeadingWhitespaces(d.skipInitialSpace)
+    s.setIgnoreTrailingWhitespaces(false)
+    s.setReadInputOnSeparateThread(false)
+    s.setMaxColumns(20480) // Spark's maxColumns default
+    s.setMaxCharsPerColumn(-1)
+    s.setUnescapedQuoteHandling(UnescapedQuoteHandling.STOP_AT_DELIMITER)
+    s
   }
 
   /** S3: inline-data resource → all-string DataFrame (+ missing tokens),
@@ -177,25 +237,107 @@ object Validate {
     buf.result()
   }
 
+  // --------------------------------------------------------------- summary
+  /** The check column of a table: one string element per [[Check]], in
+    * order, null where the row passes that check. The whole column is
+    * null on a row that fails nothing, so a clean table's cache holds
+    * nothing for it.
+    */
+  private[graft] val ChecksCol = "__graft_checks"
+
+  /** One element of a table's check column: the result it counts and its
+    * value. A `sampled` check also reports the [[MaxErrorValues]]
+    * smallest distinct values it took (a field's invalid raw cells); the
+    * others report their count only.
+    */
+  private final case class Check(
+      code: String, field: String, value: Column, sampled: Boolean = false)
+
+  private val ConstraintCodes = Map(
+    "required" -> ErrorCodes.Required,
+    "minLength" -> ErrorCodes.MinLength,
+    "maxLength" -> ErrorCodes.MaxLength,
+    "minimum" -> ErrorCodes.Minimum,
+    "maximum" -> ErrorCodes.Maximum,
+    "pattern" -> ErrorCodes.Pattern,
+    "enum" -> ErrorCodes.Enum)
+
+  /** The constraint checks (C1, C3–C8) of `fields`, then the primary
+    * key's implied `required` (K1), over the typed columns `typed`.
+    */
+  private def tableChecks(schema: TableSchema, fields: Seq[Field],
+      typed: String => Column): Seq[Check] = {
+    def marker(bad: Column) = when(bad, lit(""))
+    val constraints = fields.flatMap(f =>
+      Checks.constraintViolations(f, typed(f.name)).map { case (tag, bad) =>
+        Check(ConstraintCodes(tag), f.name, marker(bad))
+      })
+    val pk = schema.primaryKey
+    if (pk.isEmpty) constraints
+    else constraints :+ Check(ErrorCodes.Required, pk.mkString(","),
+      marker(Checks.anyNull(pk.map(typed))))
+  }
+
+  private def checksColumn(checks: Seq[Check]): Column =
+    (if (checks.isEmpty) lit(null).cast(ArrayType(StringType))
+    else {
+      val values = checks.map(_.value)
+      when(coalesce(values: _*).isNotNull, array(values: _*))
+    }).as(ChecksCol)
+
+  /** The summary aggregate of a frame with a check column: one
+    * `bounded_distinct_each` over that column alone. Its input has the
+    * same type for every table, so all tables share its generated code.
+    */
+  private[graft] def summary(df: DataFrame): DataFrame =
+    df.agg(BoundedDistinctEach.each(col(ChecksCol), MaxErrorValues))
+
+  /** The result of each of `checks` from one [[summary]] action. */
+  private def summarize(df: DataFrame, checks: Seq[Check]): Seq[CheckResult] = {
+    val slots = summary(df).collect()(0).getSeq[Row](0)
+    checks.zipWithIndex.map { case (c, i) =>
+      val (n, values) = slots.lift(i)
+        .fold((0L, Seq.empty[String]))(s => (s.getLong(0), s.getSeq[String](1)))
+      CheckResult("", c.code, c.field, n, if (c.sampled) values else Nil)
+    }
+  }
+
+  /** A resource ready for its key checks: its typed frame, the results
+    * its load produced (header and parse), the fields whose parse failed,
+    * and its summary's results: the field constraints', then the primary
+    * key's `required` (none without a primary key).
+    */
+  private final case class Loaded(df: DataFrame, errors: Seq[CheckResult],
+      failed: Set[String], constraints: Seq[CheckResult],
+      pkNulls: Seq[CheckResult])
+
+  private object Loaded {
+    /** Split `summary` (the results of [[tableChecks]]) in two. */
+    def apply(df: DataFrame, errors: Seq[CheckResult], failed: Set[String],
+        schema: TableSchema, summary: Seq[CheckResult]): Loaded = {
+      val (constraints, pkNulls) =
+        summary.splitAt(summary.size - schema.primaryKey.size.min(1))
+      Loaded(df, errors, failed, constraints, pkNulls)
+    }
+  }
+
+  /** `df` with the summary of its constraint checks on `fields` and its
+    * primary key's nulls: one action over `df` projected to its check
+    * column, none when there is nothing to check.
+    */
+  private def summarized(
+      df: DataFrame, schema: TableSchema, fields: Seq[Field]): Loaded = {
+    val checks = tableChecks(schema, fields, df(_))
+    Loaded(df, Nil, Set.empty, schema,
+      if (checks.isEmpty) Nil
+      else summarize(df.select(checksColumn(checks)), checks))
+  }
+
   // ----------------------------------------------------------------- parse
   /** E2 `parse_table`: the typed frame, per-field `type-or-format-error`
     * results (violation count and the [[MaxErrorValues]] smallest
     * distinct invalid values), and the fields that failed, from ONE scan
-    * of `df`.
-    *
-    * The typed frame is built with one extra column per row-parsed field
-    * that holds the raw value of its invalid cells:
-    * `when(raw.isNotNull && typed.isNull, raw)`, which is
-    * [[Parsers.invalidExpr]] derived from the typed value, so each cell
-    * is parsed once. That frame is persisted and appended to `release`
-    * BEFORE the aggregate runs, so the caller releases it even when the
-    * aggregate throws. One aggregate over it counts and samples
-    * (`bounded_distinct`) the invalid-cell columns. It always runs (a
-    * trailing row count keeps it when no field is row-parsed), and as an
-    * aggregate it scans every partition: the frame is fully cached when
-    * this returns, so concurrent downstream checks never race each other
-    * to build it. The returned typed frame is a column-pruning projection
-    * over that cache.
+    * of `df`. [[validateCsv]]'s load: see [[load]] for how.
     *
     * A field that fails to parse *anywhere* is failed and excluded from
     * downstream constraint checks (its typed column still exists, with
@@ -210,6 +352,42 @@ object Validate {
       schema: TableSchema,
       release: ListBuffer[DataFrame]
   ): (DataFrame, Seq[CheckResult], Set[String]) = {
+    val l = load(df, schema, release)
+    (l.df, l.errors, l.failed)
+  }
+
+  /** The former five-argument signature, kept only because the benchmark
+    * harness (`perfbench/src/PerfBench.scala`) compiles against it: no
+    * dictionary fields and a release buffer are required, and the cap is
+    * ignored. Goes with the next benchmark change.
+    */
+  private[graft] def parseTable(
+      df: DataFrame, schema: TableSchema, dict: Set[String], cap: Long,
+      release: Option[ListBuffer[DataFrame]]
+  ): (DataFrame, Seq[CheckResult], Set[String]) = {
+    require(dict.isEmpty && release.isDefined)
+    parseTable(df, schema, release.get)
+  }
+
+  /** [[parseTable]] together with the table's summary, from one scan.
+    *
+    * The scan parses each field once and adds the check column: per
+    * row-parsed field its invalid raw cell (`when(raw.isNotNull &&
+    * typed.isNull, raw)`, which is [[Parsers.invalidExpr]] derived from
+    * the typed value), then a marker per violated constraint of a
+    * row-parsed field, then one when a primary-key part is null. That
+    * frame is persisted and appended to `release` BEFORE the aggregate
+    * runs, so the caller releases it even when the aggregate throws. The
+    * one [[summary]] aggregate over it yields every parse and summary
+    * result; as an aggregate it scans every partition, so the frame is
+    * fully cached when this returns and concurrent downstream checks
+    * never race each other to build it. The returned typed frame is a
+    * column-pruning projection over that cache, without the check
+    * column. Constraint results of fields that fail to parse are computed
+    * as well and dropped when the report is assembled.
+    */
+  private def load(df: DataFrame, schema: TableSchema,
+      release: ListBuffer[DataFrame]): Loaded = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     val buildErrors: Map[String, String] = schema.fields.flatMap { f =>
       try { Parsers.parseExpr(f, df(f.name)); None }
@@ -228,43 +406,22 @@ object Validate {
       schema.fields.map(f =>
         if (buildErrors.contains(f.name)) df(f.name)
         else Parsers.parseExpr(f, df(f.name)).as(f.name)): _*)
+    val parseChecks = rowParsed.map { f =>
+      val raw = col(s"__graft_raw_${f.name}")
+      Check(ErrorCodes.TypeOrFormat, f.name,
+        when(raw.isNotNull && col(f.name).isNull, raw), sampled = true)
+    }
+    val checks = parseChecks ++ tableChecks(schema, rowParsed, col)
     val typedPlus = stage1.select(
-      schema.fields.map(f => col(f.name)) ++
-      rowParsed.map(f =>
-        when(col(s"__graft_raw_${f.name}").isNotNull &&
-            col(f.name).isNull, col(s"__graft_raw_${f.name}"))
-          .as(s"__graft_bad_${f.name}")): _*)
+      schema.fields.map(f => col(f.name)) :+ checksColumn(checks): _*)
       .persist()
     release += typedPlus
-    val aggs: Seq[Column] = rowParsed.flatMap { f =>
-      Seq(
-        count(col(s"__graft_bad_${f.name}")).as(s"${f.name}__n"),
-        call_function("bounded_distinct", col(s"__graft_bad_${f.name}"),
-          lit(MaxErrorValues)).as(s"${f.name}__v")
-      )
-    } :+ count(lit(1)).as("__graft_rows")
-    val row = typedPlus.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val results = rowParsed.zipWithIndex.map { case (f, i) =>
-      CheckResult("", ErrorCodes.TypeOrFormat, f.name,
-        row.getLong(2 * i), row.getSeq[String](2 * i + 1))
-    }
-    val failed = results.filterNot(_.passed).map(_.field).toSet ++
+    val (parsed, summary) =
+      summarize(typedPlus, checks).splitAt(parseChecks.size)
+    val failed = parsed.filterNot(_.passed).map(_.field).toSet ++
       buildErrors.keySet
-    (typedPlus.select(schema.fields.map(f => col(f.name)): _*),
-      schemaErrs ++ results, failed)
-  }
-
-  /** The former five-argument signature, kept only because the benchmark
-    * harness (`perfbench/src/PerfBench.scala`) compiles against it: no
-    * dictionary fields and a release buffer are required, and the cap is
-    * ignored. Goes with the next benchmark change.
-    */
-  private[graft] def parseTable(
-      df: DataFrame, schema: TableSchema, dict: Set[String], cap: Long,
-      release: Option[ListBuffer[DataFrame]]
-  ): (DataFrame, Seq[CheckResult], Set[String]) = {
-    require(dict.isEmpty && release.isDefined)
-    parseTable(df, schema, release.get)
+    Loaded(typedPlus.select(schema.fields.map(f => col(f.name)): _*),
+      schemaErrs ++ parsed, failed, schema, summary)
   }
 
   // ---------------------------------------------------------------- checks
@@ -275,65 +432,40 @@ object Validate {
       df: DataFrame,
       schema: TableSchema,
       skipFields: Set[String] = Set.empty
-  ): Seq[CheckResult] = checkTableTasks(schema, skipFields).flatMap(_(df))
+  ): Seq[CheckResult] = {
+    val l = summarized(df, schema,
+      schema.fields.filterNot(f => skipFields(f.name)))
+    l.constraints ++ checkTableTasks(schema, skipFields).flatMap(_(l))
+  }
 
-  /** [[checkTable]] as independently-submittable tasks, one Spark
-    * action each (round-12 directive #5): [[validatePackage]] submits
-    * every table's tasks to one pool, so a one-big-table package
-    * overlaps its own key/unique/constraint actions instead of
-    * serializing on per-action latency. Built from the schema alone, so
-    * the graph can be laid out before any table is loaded; the report
-    * is a pure reassembly in task order, so the JSON stays
-    * byte-identical.
+  /** The key checks of [[checkTable]] as independently-submittable tasks,
+    * one Spark action each (round-12 directive #5): [[validatePackage]]
+    * submits every table's tasks to one pool, so a one-big-table package
+    * overlaps its own key actions instead of serializing on per-action
+    * latency. Built from the schema alone, so the graph can be laid out
+    * before any table is loaded; the report is a pure reassembly in task
+    * order, so the JSON stays byte-identical. The constraint results and
+    * the primary key's nulls come from the table's summary.
     */
   private def checkTableTasks(
       schema: TableSchema,
       skipFields: Set[String] = Set.empty
-  ): Seq[DataFrame => Seq[CheckResult]] = {
-    val tasks = Seq.newBuilder[DataFrame => Seq[CheckResult]]
-    val checked = schema.copy(fields =
-      schema.fields.filterNot(f => skipFields(f.name)))
-
-    // fused single-scan pass for C1, C3-C8
-    if (checked.fields.exists(!_.constraints.isEmpty)) tasks += { df =>
-      val summary = Checks.constraintSummary(df, checked)
-      if (summary.columns.isEmpty) Nil
-      else {
-        val row = summary.collect()(0)
-        summary.columns.zipWithIndex.map { case (name, i) =>
-          val Array(field, tag) = name.split("__", 2)
-          val code = tag match {
-            case "required"  => ErrorCodes.Required
-            case "minLength" => ErrorCodes.MinLength
-            case "maxLength" => ErrorCodes.MaxLength
-            case "minimum"   => ErrorCodes.Minimum
-            case "maximum"   => ErrorCodes.Maximum
-            case "pattern"   => ErrorCodes.Pattern
-            case "enum"      => ErrorCodes.Enum
-          }
-          CheckResult("", code, field, row.getLong(i), Nil)
-        }
-      }
-    }
-
+  ): Seq[Loaded => Seq[CheckResult]] = {
+    val tasks = Seq.newBuilder[Loaded => Seq[CheckResult]]
     // C2 unique — one shuffle per declared unique field
-    checked.fields.filter(_.constraints.unique.contains(true)).foreach { f =>
-      tasks += (df => Seq(keyResult(Checks.unique(df, Seq(f.name)),
+    schema.fields.filter(f => !skipFields(f.name) &&
+        f.constraints.unique.contains(true)).foreach { f =>
+      tasks += (l => Seq(keyResult(Checks.unique(l.df, Seq(f.name)),
         ErrorCodes.Unique, f.name)))
     }
-    // K1 primary key (uniqueness + implied required on every part)
-    if (schema.primaryKey.nonEmpty) tasks += { df =>
-      val v = Checks.unique(df, schema.primaryKey)
-      val kr = keyResult(v, ErrorCodes.PrimaryKey,
-        schema.primaryKey.mkString(","))
-      val nulls = Checks.primaryKeyNulls(df, schema.primaryKey)
-        .collect().headOption.map(_.getLong(0)).getOrElse(0L)
-      Seq(kr, CheckResult("", ErrorCodes.Required,
-        schema.primaryKey.mkString(","), nulls, Nil))
+    // K1 primary key: uniqueness, then the summary's implied required
+    if (schema.primaryKey.nonEmpty) tasks += { l =>
+      keyResult(Checks.unique(l.df, schema.primaryKey),
+        ErrorCodes.PrimaryKey, schema.primaryKey.mkString(",")) +: l.pkNulls
     }
     // K2 uniqueKeys
     schema.uniqueKeys.foreach { keys =>
-      tasks += (df => Seq(keyResult(Checks.unique(df, keys),
+      tasks += (l => Seq(keyResult(Checks.unique(l.df, keys),
         ErrorCodes.UniqueKey, keys.mkString(","))))
     }
     tasks.result()
@@ -374,40 +506,34 @@ object Validate {
     */
   private val MaxDriverThreads = 8
 
-  /** A resource ready for its checks: its typed frame, the results its
-    * load produced (header and parse) and the fields whose parse failed.
-    */
-  private final case class Loaded(
-      df: DataFrame, errors: Seq[CheckResult], failed: Set[String])
-
   /** Validate pre-loaded (typed or parsed) tables against a package: the
     * package task graph ([[validatePackage]]) with each resource's load
-    * the identity.
+    * the summary of its constraint and primary-key-null checks over a
+    * projection of the given frame.
     */
   def validateTyped(
       tables: Map[String, DataFrame],
       pkg: Package
   ): PackageReport =
-    validatePackage(pkg)((res, _) => Loaded(tables(res.name), Nil, Set.empty))
+    validatePackage(pkg)((res, _) =>
+      summarized(tables(res.name), res.schema, res.schema.fields))
 
   /** Full reference lifecycle over CSV resources (E1). Each resource's
-    * load reads its CSV header once (it feeds both [[headerCheck]] and
-    * the by-name bind of the all-string read), then ONE scan
-    * ([[parseTable]]) computes the
-    * `type-or-format-error` results and persists the typed frame. The
-    * loads run concurrently, and each resource's checks start as soon as
+    * load reads its CSV header once on the driver, without a Spark job
+    * (it feeds both [[headerCheck]] and the by-name bind of the
+    * all-string read), then ONE scan and ONE aggregate ([[load]])
+    * compute the `type-or-format-error` results, the constraint results
+    * and the primary key's nulls, and persist the typed frame. The loads
+    * run concurrently, and each resource's key checks start as soon as
     * its own load (and, for a foreign key, its parent's) has finished:
-    * the aggregate behind the parse results has scanned every partition
-    * by then, so no check is ever a first reader of a COLD cache
-    * (concurrent first readers serialize on BlockManager partition
-    * locks — PLANS.md round 12). Constraint results of fields that failed
-    * to parse are dropped (skip semantics). Every persisted frame is
-    * released on return, normal or exceptional, after every load and
-    * check of the call has finished.
+    * the aggregate has scanned every partition by then, so no check is
+    * ever a first reader of a COLD cache (concurrent first readers
+    * serialize on BlockManager partition locks — PLANS.md round 12).
+    * Constraint results of fields that failed to parse are dropped (skip
+    * semantics). Every persisted frame is released on return, normal or
+    * exceptional, after every load and check of the call has finished.
     */
   def validateCsv(spark: SparkSession, pkg: Package): PackageReport = {
-    // once, before the fan-out (each load's parseTable registers too)
-    graft.functions.GraftFunctions.register(spark)
     val fused = pkg.resources.map(_ => ListBuffer[DataFrame]())
     try validatePackage(pkg) { (res, i) =>
       val (raw, headerErrs) =
@@ -417,20 +543,22 @@ object Validate {
           val header = actualCsvHeader(spark, res)
           (readCsv(spark, res, header), headerCheck(header, res.schema))
         }
-      val (typed, parseErrs, failed) = parseTable(raw, res.schema, fused(i))
-      Loaded(typed, headerErrs ++ parseErrs, failed)
+      val l = load(raw, res.schema, fused(i))
+      l.copy(errors = headerErrs ++ l.errors)
     } finally fused.flatten.foreach(_.unpersist())
   }
 
   /** The package as one task graph on one bounded driver pool: a load
-    * node per resource (`load(res, position)`), one node per check action
-    * of a resource ([[checkTableTasks]]) started when its load finishes,
-    * and one node per foreign key started when both its child and its
-    * parent are loaded. Nodes are chained by `Future` composition, so no
-    * node blocks on another and the pool cannot deadlock. Each table's
-    * report is assembled in declared order (own checks, then foreign
-    * keys; load results first, constraint results of fields that failed
-    * to parse dropped), so the JSON does not depend on the schedule.
+    * node per resource (`load(res, position)`, which also yields the
+    * resource's summary), one node per key check of a resource
+    * ([[checkTableTasks]]) started when its load finishes, and one node
+    * per foreign key started when both its child and its parent are
+    * loaded. Nodes are chained by `Future` composition, so no node blocks
+    * on another and the pool cannot deadlock. Each table's report is
+    * assembled in declared order (load results, constraint results, key
+    * checks, then foreign keys; constraint and key results of fields
+    * that failed to parse dropped), so the JSON does not depend on the
+    * schedule.
     *
     * Returns or throws only once every node has finished, so a caller
     * may release what the loads cached. On failure it throws the error
@@ -458,7 +586,7 @@ object Validate {
           Future.failed(new NoSuchElementException(s"key not found: $n")))
       val checks = pkg.resources.zip(tableTasks).map { case (res, tasks) =>
         val own = loaded(res.name)
-        tasks.map(t => own.map(l => t(l.df))) ++
+        tasks.map(own.map(_)) ++
           res.schema.foreignKeys.map { fk =>
             // K3/K4 foreign keys — parent resolved across the package
             val parentName =
@@ -479,8 +607,9 @@ object Validate {
       nodes.foreach(_.value.get.get) // rethrows the first failure
       PackageReport(pkg.resources.zip(checks).map { case (res, results) =>
         val l = loaded(res.name).value.get.get
-        TableReport(res.name, (l.errors ++ results.flatMap(_.value.get.get)
-          .filterNot(e => l.failed(e.field))).map(_.copy(table = res.name)))
+        TableReport(res.name, (l.errors ++ (l.constraints ++
+          results.flatMap(_.value.get.get)).filterNot(e => l.failed(e.field)))
+          .map(_.copy(table = res.name)))
       })
     } finally pool.shutdown()
   }

@@ -70,8 +70,11 @@ object Checks {
     * Like [[required]], always one count row.
     */
   def primaryKeyNulls(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.filter(keys.map(df(_).isNull).reduce(_ || _))
+    df.filter(anyNull(keys.map(df(_))))
       .agg(count(lit(1)).as("violations"))
+
+  /** K1's implied required: true on a row with any null key part. */
+  def anyNull(keys: Seq[Column]): Column = keys.map(_.isNull).reduce(_ || _)
 
   /** Distinct offending values + counts for a boolean violation predicate
     * over one column — shared shape of C3–C8.
@@ -240,31 +243,36 @@ object Checks {
   }
 
   // ------------------------------------------------- fused single-scan pass
+  /** Each declared field constraint of `f` (C1, C3–C8) as its tag and
+    * its violation predicate over the field's typed column `c`, in a
+    * fixed order. The one definition that [[constraintSummary]] and the
+    * validator's per-row check column both count. (`unique` needs a
+    * shuffle per key-set and is handled separately.)
+    */
+  def constraintViolations(f: Field, c: Column): Seq[(String, Column)] = {
+    val k = f.constraints
+    Seq(
+      k.required.filter(identity).map(_ => "required" -> c.isNull),
+      k.minLength.map(n =>
+        "minLength" -> (c.isNotNull && lengthOf(f, c) < n)),
+      k.maxLength.map(n =>
+        "maxLength" -> (c.isNotNull && lengthOf(f, c) > n)),
+      k.minimum.map(m => "minimum" -> (c < typedBound(f, m))),
+      k.maximum.map(m => "maximum" -> (c > typedBound(f, m))),
+      k.pattern.map(p => "pattern" -> (c.isNotNull && !fullMatch(c, p))),
+      k.enum.map(vs => "enum" -> (c.isNotNull && !enumHit(f, vs, c)))
+    ).flatten
+  }
+
   /** Compile every field constraint of a table into ONE aggregate pass
     * (SURVEY.md §4.3 decision 1): a single scan emitting one row with a
     * `<field>__<constraint>` violation-count column per declared check.
-    * (`unique` needs a shuffle per key-set and is handled separately.)
     */
   def constraintSummary(df: DataFrame, schema: TableSchema): DataFrame = {
     val aggs: Seq[Column] = schema.fields.flatMap { f =>
-      val c = df(f.name)
-      val k = f.constraints
-      def cnt(bad: Column, tag: String): Column =
-        coalesce(count(when(bad, lit(1))), lit(0L))
-          .as(s"${f.name}__$tag")
-      val typedMin = k.minimum.map(m => cnt(c < typedBound(f, m), "minimum"))
-      val typedMax = k.maximum.map(m => cnt(c > typedBound(f, m), "maximum"))
-      Seq(
-        k.required.filter(identity).map(_ => cnt(c.isNull, "required")),
-        k.minLength.map(n =>
-          cnt(c.isNotNull && lengthOf(f, c) < n, "minLength")),
-        k.maxLength.map(n =>
-          cnt(c.isNotNull && lengthOf(f, c) > n, "maxLength")),
-        typedMin,
-        typedMax,
-        k.pattern.map(p => cnt(c.isNotNull && !fullMatch(c, p), "pattern")),
-        k.enum.map(vs => cnt(c.isNotNull && !enumHit(f, vs, c), "enum"))
-      ).flatten
+      constraintViolations(f, df(f.name)).map { case (tag, bad) =>
+        coalesce(count(when(bad, lit(1))), lit(0L)).as(s"${f.name}__$tag")
+      }
     }
     if (aggs.isEmpty) df.sparkSession.emptyDataFrame
     else df.agg(aggs.head, aggs.tail: _*)

@@ -251,9 +251,6 @@ object Dedup {
     transform(sequence(lit(0), lit(numHashes - 1)),
       i => array_min(transform(sh, h => permHash(h, i))))
 
-  def minhashSignature(c: Column, numHashes: Int = 32, k: Int = 3): Column =
-    minhashFromHashes(shingleHashes(c, k), numHashes)
-
   /** LSH banding: split the signature into `bands` bands of
     * `numHashes/bands` rows each; the bucket key is the band's joined
     * signature slice (a plain string — no extra hash, engine-portable).

@@ -133,14 +133,4 @@ object Linkage {
     * columns.
     */
   def firstTokenKey(c: Column): Column = split(c, "\\s+").getItem(0)
-
-  /** First `n` whitespace tokens joined by one space — a finer block
-    * key when single tokens come from a small vocabulary (Σ|L_b|·|R_b|
-    * shrinks roughly with the block-count increase). Recall contract:
-    * pairs whose edits fall INSIDE the first `n` tokens are not
-    * candidates — pick `n` from where the noise lives, exactly like
-    * choosing LSH bands.
-    */
-  def firstTokensKey(c: Column, n: Int): Column =
-    concat_ws(" ", slice(split(c, "\\s+"), 1, n))
 }

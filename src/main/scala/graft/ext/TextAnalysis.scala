@@ -662,16 +662,6 @@ object TextAnalysis {
   def fingerprint(c: Column): Column =
     md5(lower(regexp_replace(trim(c), "\\s+", " ")))
 
-  /** Rolling-hash fingerprint: minimum xxhash64 over sliding word
-    * k-grams — a single 64-bit sketch of the document's shingle set
-    * (MinHash with one permutation). Spark-only (xxhash64).
-    */
-  def minShingleHash(c: Column, k: Int = 5): Column = {
-    val sh = Dedup.shingles(c, k)
-    when(size(sh) > 0, array_min(transform(sh, s => xxhash64(s))))
-      .otherwise(lit(null).cast("long"))
-  }
-
   /** Corpus-unigram log-probability per document — the CCNet-style
     * perplexity-proxy quality signal (docs of rare gibberish score very
     * negative; docs of common words score near the corpus ceiling).

@@ -30,6 +30,7 @@ case class BoundedDistinct(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[mutable.TreeSet[UTF8String]] {
+  import BoundedDistinct.{add, read, write}
 
   def this(child: Expression, max: Expression) =
     this(child, BoundedDistinct.extractMax(max))
@@ -45,28 +46,18 @@ case class BoundedDistinct(
   override def createAggregationBuffer(): mutable.TreeSet[UTF8String] =
     mutable.TreeSet.empty[UTF8String]
 
-  /** Insert keeping only the `maxValues` smallest distinct values. */
-  private def add(buf: mutable.TreeSet[UTF8String], v: UTF8String): Unit =
-    if (buf.size < maxValues) {
-      // clone: the UTF8String may point into a reused buffer
-      buf += v.clone()
-    } else if (v.compareTo(buf.last) < 0 && !buf.contains(v)) {
-      buf -= buf.last
-      buf += v.clone()
-    }
-
   override def update(
       buf: mutable.TreeSet[UTF8String],
       input: InternalRow): mutable.TreeSet[UTF8String] = {
     val v = child.eval(input)
-    if (v != null) add(buf, v.asInstanceOf[UTF8String])
+    if (v != null) add(buf, v.asInstanceOf[UTF8String], maxValues)
     buf
   }
 
   override def merge(
       buf: mutable.TreeSet[UTF8String],
       other: mutable.TreeSet[UTF8String]): mutable.TreeSet[UTF8String] = {
-    other.foreach(add(buf, _))
+    other.foreach(add(buf, _, maxValues))
     buf
   }
 
@@ -76,30 +67,13 @@ case class BoundedDistinct(
   override def serialize(buf: mutable.TreeSet[UTF8String]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach { s =>
-      val b = s.getBytes
-      out.writeInt(b.length)
-      out.write(b)
-    }
+    write(out, buf)
     out.flush()
     bos.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): mutable.TreeSet[UTF8String] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = mutable.TreeSet.empty[UTF8String]
-    var i = 0
-    while (i < n) {
-      val len = in.readInt()
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      buf += UTF8String.fromBytes(b)
-      i += 1
-    }
-    buf
-  }
+  override def deserialize(bytes: Array[Byte]): mutable.TreeSet[UTF8String] =
+    read(new DataInputStream(new ByteArrayInputStream(bytes)))
 
   override def withNewMutableAggBufferOffset(offset: Int): BoundedDistinct =
     copy(mutableAggBufferOffset = offset)
@@ -113,6 +87,41 @@ case class BoundedDistinct(
 }
 
 object BoundedDistinct {
+  /** Insert `v` into `buf`, keeping only the `k` smallest distinct values. */
+  private[functions] def add(
+      buf: mutable.TreeSet[UTF8String], v: UTF8String, k: Int): Unit =
+    if (buf.size < k) {
+      // clone: the UTF8String may point into a reused buffer
+      buf += v.clone()
+    } else if (v.compareTo(buf.last) < 0 && !buf.contains(v)) {
+      buf -= buf.last
+      buf += v.clone()
+    }
+
+  private[functions] def write(
+      out: DataOutputStream, buf: mutable.TreeSet[UTF8String]): Unit = {
+    out.writeInt(buf.size)
+    buf.foreach { s =>
+      val b = s.getBytes
+      out.writeInt(b.length)
+      out.write(b)
+    }
+  }
+
+  private[functions] def read(in: DataInputStream): mutable.TreeSet[UTF8String] = {
+    val n = in.readInt()
+    val buf = mutable.TreeSet.empty[UTF8String]
+    var i = 0
+    while (i < n) {
+      val len = in.readInt()
+      val b = new Array[Byte](len)
+      in.readFully(b)
+      buf += UTF8String.fromBytes(b)
+      i += 1
+    }
+    buf
+  }
+
   private[functions] def extractMax(e: Expression): Int = e match {
     case Literal(v: Int, IntegerType) => v
     case Literal(v: Long, LongType) => v.toInt

@@ -24,6 +24,8 @@ object GraftFunctions {
     (FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
     (FunctionIdentifier("bounded_distinct"), BoundedDistinct.info,
       BoundedDistinct.builder),
+    (FunctionIdentifier("bounded_distinct_each"), BoundedDistinctEach.info,
+      BoundedDistinctEach.builder),
     (FunctionIdentifier("dot_double"), DotProduct.info, DotProduct.builder),
     (FunctionIdentifier("bounded_top_k"), BoundedTopK.info,
       BoundedTopK.builder),

@@ -276,22 +276,6 @@ object Parsers {
   }
 
   // ----------------------------------------------------------------- public
-  /** Spark type of the parsed column for a field. */
-  def parsedType(f: Field): DataType = f.ftype match {
-    case "number"    => DoubleType
-    case "integer"   => LongType
-    case "boolean"   => BooleanType
-    case "date"      => DateType
-    case "datetime"  => TimestampType
-    case "year"      => IntegerType
-    case "yearmonth" => DateType
-    case "geopoint" =>
-      StructType(Seq(StructField("lon", DoubleType),
-        StructField("lat", DoubleType)))
-    case _ => StringType // string/time/object/array/duration/geojson
-                          // (canonical string)
-  }
-
   /** Typed value, or null when the raw string fails to parse.
     * For `string` fields the value passes through unchanged; a failed
     * format check yields null here and true in [[invalidExpr]].

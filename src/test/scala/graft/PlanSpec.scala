@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 
 import graft.check.Checks
 import graft.ext.{Profile, Similarity}
-import graft.schema.{Constraints, Field, TableSchema}
+import graft.schema.{Constraints, Field, Package, Resource, TableSchema}
 
 /** Physical-plan contracts — the properties that make the operators
   * scale are asserted, not assumed (PLANS.md): predicate pushdown,
@@ -1128,5 +1128,87 @@ class PlanSpec extends SparkSpec {
     assert(shuffles(df).size <= 3,
       s"expected dedup + rollup + sort exchanges only, got " +
         s"${shuffles(df).size}")
+  }
+
+  /** The query executions `body` runs, in the order their listener
+    * events arrive. A marker action afterwards (its events arrive after
+    * all earlier ones) bounds the capture.
+    */
+  private def executions(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.put(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = seen.put(qe)
+    }
+    val marker = "__plan_spec_marker"
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      val out = Seq.newBuilder[QueryExecution]
+      var qe = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      while (qe != null && !qe.analyzed.output.exists(_.name == marker)) {
+        out += qe
+        qe = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(qe != null, "the marker execution never arrived")
+      out.result()
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("summary aggregate reads only the check column, one type for all") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import graft.functions.BoundedDistinctEach
+    // two resources with different schemas and checks: each summary
+    // scans its cache for the one check column, of one type, so the two
+    // tables share the aggregate's generated code
+    val tmp = java.nio.file.Files.createTempDirectory("plan_summary")
+    def write(name: String, body: String): String =
+      java.nio.file.Files.writeString(tmp.resolve(name), body).toString
+    val pkg = Package("two", Seq(
+      Resource("a", write("a.csv", "id,n\n1,2.5\n2,x\n"),
+        TableSchema(Seq(Field("id", "integer"), Field("n", "number",
+          constraints = Constraints(minimum = Some("0")))),
+          primaryKey = Seq("id"))),
+      Resource("b", write("b.csv", "d,s,k\n2024-01-01,ab,1\n"),
+        TableSchema(Seq(Field("d", "date",
+          constraints = Constraints(required = Some(true))),
+          Field("s", constraints = Constraints(pattern = Some("[a-z]+"),
+            maxLength = Some(5))), Field("k", "integer"))))))
+    val summaries = executions(Validate.validateCsv(spark, pkg))
+      .map(qe => flatten(qe.executedPlan))
+      .filter(_.exists {
+        case a: ObjectHashAggregateExec => a.aggregateExpressions
+          .exists(_.aggregateFunction.isInstanceOf[BoundedDistinctEach])
+        case _ => false
+      })
+    assert(summaries.size == 2, "one summary per resource")
+    val read = summaries.map { n =>
+      val scans = n.collect { case s: InMemoryTableScanExec => s }
+      assert(scans.size == 1, "the summary reads its table's cache once")
+      scans.head.output.map(a => (a.name, a.dataType))
+    }
+    assert(read.distinct == Seq(Seq((Validate.ChecksCol,
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.StringType)))), read)
+  }
+
+  test("validateCsv runs one SQL execution per resource and per key check") {
+    val tmp = java.nio.file.Files.createTempDirectory("plan_execs")
+    val pkg = ValidateFixtures.crossResource((name, body) =>
+      java.nio.file.Files.writeString(tmp.resolve(name), body).toString)
+    // header reads run no job, and each load's parse, constraint and
+    // primary-key-null results come from its one summary action
+    val want = pkg.resources.map { r =>
+      val s = r.schema
+      1 + s.fields.count(_.constraints.unique.contains(true)) +
+        s.primaryKey.size.min(1) + s.uniqueKeys.size + s.foreignKeys.size
+    }.sum
+    assert(executions(Validate.validateCsv(spark, pkg)).size == want)
   }
 }

@@ -268,6 +268,71 @@ class ValidateSpec extends SparkSpec {
     assert(r.getString(0) == "1" && r.getString(1) == "2")
   }
 
+  test("header of a gzip-compressed CSV decompresses by extension") {
+    val p = dir.resolve("gz_header.csv.gz")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(p))
+    try out.write("b,\"a,x\"\n1,2\n".getBytes("UTF-8")) finally out.close()
+    val res = Resource("t", p.toString,
+      TableSchema(Seq(Field("a,x", "integer"), Field("b", "integer"))))
+    assert(Validate.actualCsvHeader(spark, res) == Seq("b", "a,x"))
+    assert(Validate.readCsv(spark, res).collect().map(r =>
+      (r.getString(0), r.getString(1))).toSeq == Seq(("2", "1")))
+  }
+
+  test("header of an empty CSV file is empty") {
+    val res = Resource("t", write("empty_header.csv", ""),
+      TableSchema(Seq(Field("a", "integer"))))
+    assert(Validate.actualCsvHeader(spark, res) == Seq.empty)
+    assert(Validate.headerCheck(Validate.actualCsvHeader(spark, res),
+      res.schema).map(_.code) == Seq("missing-header"))
+  }
+
+  test("header of a multi-path resource is its first file's") {
+    val p1 = write("hdr_chunk1.csv", "b , a\n1,2\n")
+    val p2 = write("hdr_chunk2.csv", "a,b\n3,4\n")
+    val res = Resource("t", p1,
+      TableSchema(Seq(Field("a", "integer"), Field("b", "integer"))),
+      paths = Seq(p1, p2))
+    assert(Validate.actualCsvHeader(spark, res) == Seq("b", "a"))
+  }
+
+  test("reading a CSV header submits no Spark job") {
+    val group = "header-barrier"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val barrierDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      private def groupOf(p: java.util.Properties) =
+        Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(String.valueOf(groupOf(e.properties)))
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (started.contains(group)) barrierDone.countDown()
+    }
+    val sc = spark.sparkContext
+    val gz = dir.resolve("nojob.csv.gz")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+    try out.write("a,b\n1,2\n".getBytes("UTF-8")) finally out.close()
+    val schema = TableSchema(Seq(Field("a"), Field("b")))
+    val resources = Seq(
+      Resource("plain", write("nojob.csv", "a,b\n1,2\n"), schema),
+      Resource("gz", gz.toString, schema),
+      Resource("empty", write("nojob_empty.csv", ""), schema))
+    sc.addSparkListener(listener)
+    try {
+      val headers = resources.map(Validate.actualCsvHeader(spark, _))
+      assert(headers == Seq(Seq("a", "b"), Seq("a", "b"), Seq.empty))
+      // a job after the header reads; its end event is delivered after
+      // every event posted before it
+      sc.setJobGroup(group, "listener barrier")
+      try sc.parallelize(Seq(0), 1).count() finally sc.clearJobGroup()
+      assert(barrierDone.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(started.toArray.toSeq == Seq(group),
+        "the header reads must not start a Spark job")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("dialect descriptor JSON parses all spec fields") {
     val json =
       """{"name":"p","resources":[{"name":"t","path":"t.csv",
@@ -541,31 +606,7 @@ class ValidateSpec extends SparkSpec {
     // field's constraint and primary-key results are dropped (skip
     // semantics): the task graph must assemble exactly the report the
     // serial composition does, on every run
-    val region = Resource("region", write("id_region.csv",
-      "name,rid\nnorth,1\nsouth,2\neast,3\n"),
-      TableSchema(Seq(Field("rid", "integer"), Field("name",
-        constraints = Constraints(unique = Some(true)))),
-        primaryKey = Seq("rid")))
-    val staff = Resource("staff", write("id_staff.csv",
-      "sid,rid,boss,pay\n1,1,,10\n2,1,1,x\n3,9,2,-5\n4,2,7,3\n" +
-        "4,3,1,2\n"),
-      TableSchema(
-        Seq(Field("sid", "integer"), Field("rid", "integer"),
-          Field("boss", "integer"), Field("pay", "number",
-            constraints = Constraints(minimum = Some("0")))),
-        primaryKey = Seq("sid"),
-        foreignKeys = Seq(
-          ForeignKey(Seq("rid"), "region", Seq("rid")),
-          ForeignKey(Seq("boss"), "", Seq("sid")))))
-    val shift = Resource("shift", write("id_shift.csv",
-      "shid,sid,day\nA,1,2024-01-01\nB,2,someday\nC,5,2024-01-01\n"),
-      TableSchema(
-        Seq(Field("shid", constraints = Constraints(pattern = Some("[A-Z]"))),
-          Field("sid", "integer"), Field("day", "date",
-            constraints = Constraints(required = Some(true)))),
-        primaryKey = Seq("day"),
-        foreignKeys = Seq(ForeignKey(Seq("sid"), "staff", Seq("sid")))))
-    val p = Package("graph", Seq(region, staff, shift))
+    val p = ValidateFixtures.crossResource(write)
 
     val buf = scala.collection.mutable.ListBuffer[
       org.apache.spark.sql.DataFrame]()

@@ -42,4 +42,25 @@ class BoundedDistinctSpec extends SparkSpec {
       .collect()(0).getSeq[String](0)
     assert(got == Seq("x", "y"))
   }
+
+  test("bounded_distinct_each: per-position counts and samples, merged") {
+    GraftFunctions.register(spark)
+    // position 0 is bad on every third row, position 1 on rows 0 and 1
+    // only; row 5 is clean (a null array); 8 partitions merge partials
+    val arr = when(col("id") === 5, lit(null).cast("array<string>"))
+      .otherwise(array(
+        when(col("id") % 3 === 0, format_string("v%02d", col("id"))),
+        when(col("id") < 2, lit("x"))))
+    val got = spark.range(0, 40, 1, 8).select(arr.as("a"))
+      .agg(call_function("bounded_distinct_each", col("a"), lit(3)))
+      .collect()(0).getSeq[org.apache.spark.sql.Row](0)
+      .map(r => (r.getLong(0), r.getSeq[String](1)))
+    assert(got == Seq((14L, Seq("v00", "v03", "v06")), (2L, Seq("x"))))
+    // no non-null array: no positions at all
+    val none = spark.range(0, 4, 1, 2)
+      .select(lit(null).cast("array<string>").as("a"))
+      .agg(BoundedDistinctEach.each(col("a"), 3))
+      .collect()(0).getSeq[org.apache.spark.sql.Row](0)
+    assert(none.isEmpty)
+  }
 }
