@@ -456,8 +456,8 @@ class ValidateSpec extends SparkSpec {
     // date, a missing token, a bad number and a plain string (never
     // invalid); the inputs run them row-parsed, under a date format that
     // cannot compile (schema-error path: no parse expression, raw column
-    // kept), with every field a schema-error (only the trailing row
-    // count is aggregated), and over a table where 239 of the 240
+    // kept), with every field a schema-error (the aggregated check
+    // column has no elements), and over a table where 239 of the 240
     // row-parsed cells are invalid: more distinct bad values per field
     // than the sample bound, so the bound itself is pinned.
     // The fused frame persists at MEMORY_AND_DISK (Spark's
