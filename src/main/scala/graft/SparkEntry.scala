@@ -407,9 +407,9 @@ object SparkEntry {
     val base = t(s, dir, "documents").select(col("doc_id").as("id"),
       TextAnalysis.tokens(col("text")).as("toks"))
     val idx = indexDir(dir, "dedup")
-    graft.sources.IndexStore.writeDedupIndex(base, idx, k = 5)
-    val (sh, bands) =
-      graft.sources.IndexStore.readDedupIndex(s, idx, k = 5)
+    val index = IndexStore.Dedup.files(idx, k = 5)
+    index.write(base)
+    val (sh, bands) = index.read(s)
     val twins = base.select((col("id") + IncrementalTwinOffset).as("id"),
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.8).cast("int")).as("toks"))
@@ -443,8 +443,7 @@ object SparkEntry {
     val base = t(s, dir, "documents").select(col("doc_id").as("id"),
       TextAnalysis.tokens(col("text")).as("toks"))
     val tbl = indexTable(dir, "sidx")
-    graft.sources.IndexStore.writeDedupIndexBucketed(base, tbl,
-      numBuckets = 8, k = 5)
+    IndexStore.Dedup.plain(tbl, k = 5).write(base, numBuckets = 8)
     val twins = base.select((col("id") + IncrementalTwinOffset).as("id"),
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.8).cast("int")).as("toks"))
@@ -456,8 +455,8 @@ object SparkEntry {
       .orderBy("new_id", "corpus_id")
   }
 
-  /** INDEX MAINTENANCE closed end to end (IndexStore
-    * .appendDedupIndexBucketed): the bucketed corpus index is built
+  /** INDEX MAINTENANCE closed end to end (`IndexStore.Dedup.plain(…)
+    * .append`): the bucketed corpus index is built
     * from the documents, a DELTA of 80%-prefix twins is APPENDED into
     * the standing tables (only the delta shuffles; the base files are
     * untouched), and a probe batch of 60%-prefix twins is served
@@ -478,11 +477,10 @@ object SparkEntry {
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.6).cast("int")).as("toks"))
     val tbl = indexTable(dir, "sidx_app")
-    graft.sources.IndexStore.writeDedupIndexBucketed(base, tbl,
-      numBuckets = 8, k = 5)
-    graft.sources.IndexStore.appendDedupIndexBucketed(delta, tbl, k = 5)
-    val (sh, bands) =
-      graft.sources.IndexStore.readDedupIndexBucketed(s, tbl, k = 5)
+    val index = IndexStore.Dedup.plain(tbl, k = 5)
+    index.write(base, numBuckets = 8)
+    index.append(delta)
+    val (sh, bands) = index.read(s)
     Dedup.nearDuplicatesAgainstIndex(probes, sh, bands,
         threshold = 0.5, k = 5)
       .orderBy("new_id", "corpus_id")
@@ -512,13 +510,11 @@ object SparkEntry {
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.8).cast("int")).as("toks"))
     val tbl = indexTable(dir, "sidx_del")
-    graft.sources.IndexStore.writeDedupIndexBucketed(base, tbl,
-      numBuckets = 8, k = 5)
-    graft.sources.IndexStore.deleteFromDedupIndexBucketed(
-      base.filter(col("id") % 3 === 0).select("id"), tbl)
-    val (sh, bands) =
-      graft.sources.IndexStore.readDedupIndexBucketed(s, tbl, k = 5)
-    val dead = graft.sources.IndexStore.readDedupDeadIds(s, tbl)
+    val index = IndexStore.Dedup.plain(tbl, k = 5)
+    index.write(base, numBuckets = 8)
+    index.delete(base.filter(col("id") % 3 === 0).select("id"))
+    val (sh, bands) = index.read(s)
+    val dead = index.deadIds(s)
       .select(col("id").as("corpus_id"))
     Dedup.nearDuplicatesAgainstIndex(probes, sh, bands,
         threshold = 0.5, k = 5)
@@ -529,7 +525,7 @@ object SparkEntry {
 
   /** The LSM arc CLOSED: build → append → COMPACT → serve. Identical
     * data flow to [[xDedupIndexAppend]] with one
-    * [[graft.sources.IndexStore.compactDedupIndexBucketed]] between
+    * `IndexStore.Dedup.plain(…).compact` between
     * the append and the serve — compaction rewrites the multi-file
     * buckets back to one file each WITHOUT changing content, layout,
     * or the serve plan, so this row shares x_dedup_index_append's
@@ -549,12 +545,11 @@ object SparkEntry {
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.6).cast("int")).as("toks"))
     val tbl = indexTable(dir, "sidx_cmp")
-    graft.sources.IndexStore.writeDedupIndexBucketed(base, tbl,
-      numBuckets = 8, k = 5)
-    graft.sources.IndexStore.appendDedupIndexBucketed(delta, tbl, k = 5)
-    graft.sources.IndexStore.compactDedupIndexBucketed(s, tbl)
-    val (sh, bands) =
-      graft.sources.IndexStore.readDedupIndexBucketed(s, tbl, k = 5)
+    val index = IndexStore.Dedup.plain(tbl, k = 5)
+    index.write(base, numBuckets = 8)
+    index.append(delta)
+    index.compact(s)
+    val (sh, bands) = index.read(s)
     Dedup.nearDuplicatesAgainstIndex(probes, sh, bands,
         threshold = 0.5, k = 5)
       .orderBy("new_id", "corpus_id")
@@ -584,14 +579,11 @@ object SparkEntry {
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.8).cast("int")).as("toks"))
     val tbl = indexTable(dir, "sidx_snap")
-    graft.sources.IndexStore.writeDedupIndexBucketedVersioned(base, tbl,
-      numBuckets = 8, k = 5)
-    val frozen = graft.sources.IndexStore
-      .snapshotDedupIndexBucketedVersioned(s, tbl)
-    graft.sources.IndexStore.appendDedupIndexBucketedVersioned(delta,
-      tbl, k = 5)
-    val (sh, bands) = graft.sources.IndexStore
-      .readDedupIndexBucketedVersionedAsOf(s, tbl, frozen, k = 5)
+    val index = IndexStore.Dedup.versioned(tbl, k = 5)
+    index.write(base, numBuckets = 8)
+    val frozen = index.snapshot(s)
+    index.append(delta)
+    val (sh, bands) = index.readAsOf(s, frozen)
     Dedup.nearDuplicatesAgainstIndex(probes, sh, bands,
         threshold = 0.5, k = 5)
       .orderBy("new_id", "corpus_id")
@@ -619,16 +611,13 @@ object SparkEntry {
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.8).cast("int")).as("toks"))
     val tbl = indexTable(dir, "sidx_rb")
-    graft.sources.IndexStore.writeDedupIndexBucketedVersioned(base, tbl,
-      numBuckets = 8, k = 5)
-    val frozen = graft.sources.IndexStore
-      .snapshotDedupIndexBucketedVersioned(s, tbl)
-    graft.sources.IndexStore.appendDedupIndexBucketedVersioned(poison,
-      tbl, k = 5): Unit
+    val index = IndexStore.Dedup.versioned(tbl, k = 5)
+    index.write(base, numBuckets = 8)
+    val frozen = index.snapshot(s)
+    index.append(poison): Unit
     require(graft.sources.BucketedManifest.rollback(s, tbl, frozen)
       == 3, "the rollback is itself an ordinary auditable commit")
-    val (sh, bands) = graft.sources.IndexStore
-      .readDedupIndexBucketedVersioned(s, tbl, k = 5)
+    val (sh, bands) = index.read(s)
     Dedup.nearDuplicatesAgainstIndex(probes, sh, bands,
         threshold = 0.5, k = 5)
       .orderBy("new_id", "corpus_id")
@@ -657,13 +646,11 @@ object SparkEntry {
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.6).cast("int")).as("toks"))
     val tbl = indexTable(dir, "sidx_ver")
-    graft.sources.IndexStore.writeDedupIndexBucketedVersioned(base, tbl,
-      numBuckets = 8, k = 5)
-    graft.sources.IndexStore.appendDedupIndexBucketedVersioned(delta,
-      tbl, k = 5)
-    graft.sources.IndexStore.compactDedupIndexBucketedVersioned(s, tbl)
-    val (sh, bands) = graft.sources.IndexStore
-      .readDedupIndexBucketedVersioned(s, tbl, k = 5)
+    val index = IndexStore.Dedup.versioned(tbl, k = 5)
+    index.write(base, numBuckets = 8)
+    index.append(delta)
+    index.compact(s)
+    val (sh, bands) = index.read(s)
     Dedup.nearDuplicatesAgainstIndex(probes, sh, bands,
         threshold = 0.5, k = 5)
       .orderBy("new_id", "corpus_id")
@@ -692,13 +679,12 @@ object SparkEntry {
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.6).cast("int")).as("toks"))
     val tbl = indexTable(dir, "sidx_conc")
-    graft.sources.IndexStore.writeDedupIndexBucketedVersioned(base, tbl,
-      numBuckets = 8, k = 5)
+    val index = IndexStore.Dedup.versioned(tbl, k = 5)
+    index.write(base, numBuckets = 8)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val writers = (0 until 4).map { i =>
       new Thread(() =>
-        try graft.sources.IndexStore.appendDedupIndexBucketedVersioned(
-          delta.filter(pmod(col("id"), lit(4)) === i), tbl, k = 5): Unit
+        try index.append(delta.filter(pmod(col("id"), lit(4)) === i)): Unit
         catch { case t: Throwable => errs.add(t): Unit })
     }
     writers.foreach(_.start())
@@ -707,9 +693,8 @@ object SparkEntry {
       s"concurrent appenders must not fail: ${Option(errs.peek())}")
     require(graft.sources.BucketedManifest.currentVersion(s, tbl) == 5,
       "four appends over v1 must linearize to exactly v5")
-    graft.sources.IndexStore.compactDedupIndexBucketedVersioned(s, tbl)
-    val (sh, bands) = graft.sources.IndexStore
-      .readDedupIndexBucketedVersioned(s, tbl, k = 5)
+    index.compact(s)
+    val (sh, bands) = index.read(s)
     Dedup.nearDuplicatesAgainstIndex(probes, sh, bands,
         threshold = 0.5, k = 5)
       .orderBy("new_id", "corpus_id")
@@ -746,14 +731,13 @@ object SparkEntry {
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.6).cast("int")).as("toks"))
     val tbl = indexTable(dir, "sidx_mix")
-    graft.sources.IndexStore.writeDedupIndexBucketedVersioned(base, tbl,
-      numBuckets = 8, k = 5)
+    val index = IndexStore.Dedup.versioned(tbl, k = 5)
+    index.write(base, numBuckets = 8)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     def th(body: => Unit): Thread = new Thread(() =>
       try body catch { case t: Throwable => errs.add(t): Unit })
     val writers = (0 until 3).map { i =>
-      th(graft.sources.IndexStore.appendDedupIndexBucketedVersioned(
-        delta.filter(pmod(col("id"), lit(4)) === i), tbl, k = 5): Unit)
+      th(index.append(delta.filter(pmod(col("id"), lit(4)) === i)): Unit)
     } ++ Seq(
       th(graft.sources.BucketedManifest.addMember(s, tbl,
         s"${tbl}_audit",
@@ -769,11 +753,9 @@ object SparkEntry {
     // deterministic reconciliation: whatever interleaving won, revert
     // to the birth state and re-admit everything in one commit
     graft.sources.BucketedManifest.rollback(s, tbl, 1): Unit
-    graft.sources.IndexStore.appendDedupIndexBucketedVersioned(delta,
-      tbl, k = 5): Unit
-    graft.sources.IndexStore.compactDedupIndexBucketedVersioned(s, tbl)
-    val (sh, bands) = graft.sources.IndexStore
-      .readDedupIndexBucketedVersioned(s, tbl, k = 5)
+    index.append(delta): Unit
+    index.compact(s)
+    val (sh, bands) = index.read(s)
     Dedup.nearDuplicatesAgainstIndex(probes, sh, bands,
         threshold = 0.5, k = 5)
       .orderBy("new_id", "corpus_id")
@@ -801,10 +783,9 @@ object SparkEntry {
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.6).cast("int")).as("toks"))
     val tbl = indexTable(dir, "sidx_att")
-    graft.sources.IndexStore.writeDedupIndexBucketedVersioned(base, tbl,
-      numBuckets = 8, k = 5)
-    graft.sources.IndexStore.appendDedupIndexBucketedVersioned(delta,
-      tbl, k = 5): Unit
+    val index = IndexStore.Dedup.versioned(tbl, k = 5)
+    index.write(base, numBuckets = 8)
+    index.append(delta): Unit
     // the catalog loses both members; a deployment's config carries
     // exactly what attach needs (location, data schema, bucket spec)
     def loseAndAttach(member: String, keys: Seq[String]): Unit = {
@@ -819,9 +800,8 @@ object SparkEntry {
     }
     loseAndAttach(s"${tbl}_sh", Seq("id"))
     loseAndAttach(s"${tbl}_bands", Seq("band", "bucket"))
-    graft.sources.IndexStore.compactDedupIndexBucketedVersioned(s, tbl)
-    val (sh, bands) = graft.sources.IndexStore
-      .readDedupIndexBucketedVersioned(s, tbl, k = 5)
+    index.compact(s)
+    val (sh, bands) = index.read(s)
     Dedup.nearDuplicatesAgainstIndex(probes, sh, bands,
         threshold = 0.5, k = 5)
       .orderBy("new_id", "corpus_id")
@@ -848,15 +828,13 @@ object SparkEntry {
         floor(size(col("toks")) * 0.6).cast("int")).as("toks"))
     val tbl = indexTable(dir, "sidx_put")
     s.conf.set("spark.graft.genCommitter", "put")
+    val index = IndexStore.Dedup.versioned(tbl, k = 5)
     try {
-      graft.sources.IndexStore.writeDedupIndexBucketedVersioned(base,
-        tbl, numBuckets = 8, k = 5)
-      graft.sources.IndexStore.appendDedupIndexBucketedVersioned(delta,
-        tbl, k = 5): Unit
-      graft.sources.IndexStore.compactDedupIndexBucketedVersioned(s, tbl)
+      index.write(base, numBuckets = 8)
+      index.append(delta): Unit
+      index.compact(s)
     } finally s.conf.unset("spark.graft.genCommitter")
-    val (sh, bands) = graft.sources.IndexStore
-      .readDedupIndexBucketedVersioned(s, tbl, k = 5)
+    val (sh, bands) = index.read(s)
     Dedup.nearDuplicatesAgainstIndex(probes, sh, bands,
         threshold = 0.5, k = 5)
       .orderBy("new_id", "corpus_id")
@@ -898,14 +876,15 @@ object SparkEntry {
     val sink = indexDir(dir, "dedup_resume_sink")
     Seq(streamDir, ckpt, sink).foreach(wipeDir)
     val tbl = indexTable(dir, "sidxres")
-    graft.sources.IndexStore.writeDedupIndexBucketed(base, tbl,
-      numBuckets = 8, k = 5)
+    val index = IndexStore.Dedup.plain(tbl, k = 5)
+    index.write(base, numBuckets = 8)
+    def run(): Unit = StreamingValidate.ingestRun(s, streamDir, index, ckpt,
+      sink)((b, ix) => Dedup.nearDuplicatesAgainstIndex(b, ix._1, ix._2,
+        threshold = 0.5, k = 5))
     fileA.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.nearDupIngestRun(s, streamDir, tbl, ckpt, sink,
-      threshold = 0.5, k = 5)
+    run()
     fileB.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.nearDupIngestRun(s, streamDir, tbl, ckpt, sink,
-      threshold = 0.5, k = 5)
+    run()
     s.read.parquet(sink)
       .filter(col("new_id") >= IncrementalTwinOffset &&
         col("corpus_id") < IncrementalTwinOffset)
@@ -914,7 +893,7 @@ object SparkEntry {
   }
 
   /** [[xStreamDedupResume]]'s two-run restart arc over the VERSIONED
-    * MinHash family (StreamingValidate.nearDupIngestRunVersioned),
+    * MinHash family (StreamingValidate.ingestRun),
     * with a versioned COMPACTION interleaved between the runs — the
     * full cluster choreography: run 1 checks + admits file A into the
     * live version tables, the compaction publishes new version tables
@@ -939,15 +918,16 @@ object SparkEntry {
     val sink = indexDir(dir, "dedup_ver_sink")
     Seq(streamDir, ckpt, sink).foreach(wipeDir)
     val tbl = indexTable(dir, "sidxvst")
-    graft.sources.IndexStore.writeDedupIndexBucketedVersioned(base, tbl,
-      numBuckets = 8, k = 5)
+    val index = IndexStore.Dedup.versioned(tbl, k = 5)
+    index.write(base, numBuckets = 8)
+    def run(): Unit = StreamingValidate.ingestRun(s, streamDir, index, ckpt,
+      sink)((b, ix) => Dedup.nearDuplicatesAgainstIndex(b, ix._1, ix._2,
+        threshold = 0.5, k = 5))
     fileA.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.nearDupIngestRunVersioned(s, streamDir, tbl, ckpt,
-      sink, threshold = 0.5, k = 5)
-    graft.sources.IndexStore.compactDedupIndexBucketedVersioned(s, tbl)
+    run()
+    index.compact(s)
     fileB.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.nearDupIngestRunVersioned(s, streamDir, tbl, ckpt,
-      sink, threshold = 0.5, k = 5)
+    run()
     s.read.parquet(sink)
       .filter(col("new_id") >= IncrementalTwinOffset &&
         col("corpus_id") < IncrementalTwinOffset)
@@ -956,7 +936,7 @@ object SparkEntry {
   }
 
   /** Incremental C2/K1 served from a persisted bucketed KEY INDEX
-    * ([[graft.sources.IndexStore.writeKeyIndexBucketed]]) — the
+    * ([[graft.sources.IndexStore.Key]]) — the
     * validation-core twin of the dedup index arc: a growing table's
     * uniqueness check should only ask "does the BATCH collide with
     * history", never rescan history. The batch deliberately contains
@@ -979,10 +959,9 @@ object SparkEntry {
         .select("o_orderkey"))
       .unionByName(fresh).unionByName(fresh)
     val tbl = indexTable(dir, "keyidx")
-    graft.sources.IndexStore.writeKeyIndexBucketed(base, tbl,
-      Seq("o_orderkey"), numBuckets = 8)
-    val idx = graft.sources.IndexStore.readKeyIndexBucketed(s, tbl,
-      Seq("o_orderkey"))
+    val index = IndexStore.Key.plain(tbl, Seq("o_orderkey"))
+    index.write(base, numBuckets = 8)
+    val idx = index.read(s)
     Checks.uniqueAgainstIndex(batch, idx, Seq("o_orderkey"))
       .orderBy("o_orderkey")
   }
@@ -1014,8 +993,8 @@ object SparkEntry {
     val streamDir = indexDir(dir, "ukeys_stream")
     stream.repartition(4).write.mode("overwrite").parquet(streamDir)
     val tbl = indexTable(dir, "keyustr")
-    graft.sources.IndexStore.writeKeyIndexBucketed(base, tbl,
-      Seq("o_orderkey"), numBuckets = 8)
+    IndexStore.Key.plain(tbl, Seq("o_orderkey"))
+      .write(base, numBuckets = 8)
     StreamingValidate.uniqueIngestStream(s, streamDir, tbl,
         Seq("o_orderkey"))
       .orderBy("o_orderkey")
@@ -1038,13 +1017,11 @@ object SparkEntry {
       .unionByName(base.filter(col("o_orderkey") % 10 === 1)
         .select("o_orderkey"))
     val tbl = indexTable(dir, "keydel")
-    graft.sources.IndexStore.writeKeyIndexBucketed(base, tbl,
-      Seq("o_orderkey"), numBuckets = 8)
-    graft.sources.IndexStore.deleteFromKeyIndexBucketed(del, tbl,
-      Seq("o_orderkey"))
-    graft.sources.IndexStore.compactKeyIndexBucketed(s, tbl)
-    val idx = graft.sources.IndexStore.readKeyIndexBucketed(s, tbl,
-      Seq("o_orderkey"))
+    val index = IndexStore.Key.plain(tbl, Seq("o_orderkey"))
+    index.write(base, numBuckets = 8)
+    index.delete(del)
+    index.compact(s)
+    val idx = index.read(s)
     Checks.uniqueAgainstIndex(batch, idx, Seq("o_orderkey"))
       .orderBy("o_orderkey")
   }
@@ -1061,13 +1038,10 @@ object SparkEntry {
     val orders = t(s, dir, "orders")
     val customer = t(s, dir, "customer")
     val tbl = indexTable(dir, "fkdel")
-    graft.sources.IndexStore.writeKeyIndexBucketed(customer, tbl,
-      Seq("c_custkey"), numBuckets = 8)
-    graft.sources.IndexStore.deleteFromKeyIndexBucketed(
-      customer.filter(col("c_custkey") % 10 === 0), tbl,
-      Seq("c_custkey"))
-    val idx = graft.sources.IndexStore.readKeyIndexBucketed(s, tbl,
-      Seq("c_custkey"))
+    val index = IndexStore.Key.plain(tbl, Seq("c_custkey"))
+    index.write(customer, numBuckets = 8)
+    index.delete(customer.filter(col("c_custkey") % 10 === 0))
+    val idx = index.read(s)
     Checks.foreignKeyAgainstIndex(orders, Seq("o_custkey"), idx,
       Seq("c_custkey")).orderBy("o_custkey")
   }
@@ -1096,20 +1070,20 @@ object SparkEntry {
     val sink = indexDir(dir, "ukeys_resume_sink")
     Seq(streamDir, ckpt, sink).foreach(wipeDir)
     val tbl = indexTable(dir, "keyres")
-    graft.sources.IndexStore.writeKeyIndexBucketed(base, tbl,
-      Seq("o_orderkey"), numBuckets = 8)
+    val index = IndexStore.Key.plain(tbl, Seq("o_orderkey"))
+    index.write(base, numBuckets = 8)
+    def run(): Unit = StreamingValidate.ingestRun(s, streamDir, index, ckpt,
+      sink)(Checks.uniqueAgainstIndex(_, _, Seq("o_orderkey")))
     fileA.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.uniqueIngestRun(s, streamDir, tbl,
-      Seq("o_orderkey"), ckpt, sink)
+    run()
     fileB.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.uniqueIngestRun(s, streamDir, tbl,
-      Seq("o_orderkey"), ckpt, sink)
+    run()
     StreamingValidate.uniqueViolationTotals(s, sink, Seq("o_orderkey"))
       .orderBy("o_orderkey")
   }
 
   /** [[xStreamUniqueResume]]'s two-run arc over the VERSIONED key
-    * index (StreamingValidate.uniqueIngestRunVersioned — round-15,
+    * index (StreamingValidate.ingestRun — round-15,
     * closing the versioned streaming-arc matrix): same files, same
     * checkpoint restart, with a versioned MERGE-COMPACTION interleaved
     * between the runs — run 2's checks read the NEW live version
@@ -1130,15 +1104,15 @@ object SparkEntry {
     val sink = indexDir(dir, "ukeys_ver_sink")
     Seq(streamDir, ckpt, sink).foreach(wipeDir)
     val tbl = indexTable(dir, "keyver_s")
-    graft.sources.IndexStore.writeKeyIndexBucketedVersioned(base, tbl,
-      Seq("o_orderkey"), numBuckets = 8)
+    val index = IndexStore.Key.versioned(tbl, Seq("o_orderkey"))
+    index.write(base, numBuckets = 8)
+    def run(): Unit = StreamingValidate.ingestRun(s, streamDir, index, ckpt,
+      sink)(Checks.uniqueAgainstIndex(_, _, Seq("o_orderkey")))
     fileA.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.uniqueIngestRunVersioned(s, streamDir, tbl,
-      Seq("o_orderkey"), ckpt, sink)
-    graft.sources.IndexStore.compactKeyIndexBucketedVersioned(s, tbl)
+    run()
+    index.compact(s)
     fileB.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.uniqueIngestRunVersioned(s, streamDir, tbl,
-      Seq("o_orderkey"), ckpt, sink)
+    run()
     StreamingValidate.uniqueViolationTotals(s, sink, Seq("o_orderkey"))
       .orderBy("o_orderkey")
   }
@@ -1159,16 +1133,15 @@ object SparkEntry {
     val sink = indexDir(dir, "substring_ver_sink")
     Seq(streamDir, ckpt, sink).foreach(wipeDir)
     val tbl = indexTable(dir, "substr_v")
-    graft.sources.IndexStore.writeSubstringIndexBucketedVersioned(base,
-      tbl, numBuckets = 8, k = 8)
+    val index = IndexStore.Substring.versioned(tbl, k = 8)
+    index.write(base, numBuckets = 8)
+    def run(): Unit = StreamingValidate.ingestRun(s, streamDir, index, ckpt,
+      sink)(Dedup.sharedSubstringRunsAgainst(_, _, minRunLen = 30, k = 8))
     fileA.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.substringIngestRunVersioned(s, streamDir, tbl,
-      minRunLen = 30, k = 8, checkpointDir = ckpt, sinkDir = sink)
-    graft.sources.IndexStore.compactSubstringIndexBucketedVersioned(s,
-      tbl)
+    run()
+    index.compact(s)
     fileB.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.substringIngestRunVersioned(s, streamDir, tbl,
-      minRunLen = 30, k = 8, checkpointDir = ckpt, sinkDir = sink)
+    run()
     s.read.parquet(sink)
       .filter(col("new_id") >= 7000000L && col("new_id") < 8000000L)
       .select(col("new_id"), col("corpus_id"), col("n_runs"),
@@ -1194,15 +1167,16 @@ object SparkEntry {
     val sink = indexDir(dir, "edit_ver_stream_sink")
     Seq(streamDir, ckpt, sink).foreach(wipeDir)
     val tbl = indexTable(dir, "editver_s")
-    graft.sources.IndexStore.writeEditIndexBucketedVersioned(corpus,
-      tbl, numBuckets = 8, d = 4)
+    val index = IndexStore.Edit.versioned(tbl, d = 4)
+    index.write(corpus, numBuckets = 8)
+    def run(): Unit = StreamingValidate.ingestRun(s, streamDir, index, ckpt,
+      sink) { case (b, (segs, str, bylen)) =>
+      Dedup.editDistanceAgainst(b, "id", col("s"), segs, str, bylen, d = 4) }
     fileA.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.editDistanceIngestRunVersioned(s, streamDir, tbl,
-      d = 4, checkpointDir = ckpt, sinkDir = sink)
-    graft.sources.IndexStore.compactEditIndexBucketedVersioned(s, tbl)
+    run()
+    index.compact(s)
     fileB.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.editDistanceIngestRunVersioned(s, streamDir, tbl,
-      d = 4, checkpointDir = ckpt, sinkDir = sink)
+    run()
     s.read.parquet(sink)
       .filter(col("new_id") >= 7000000L && col("new_id") < 8000000L &&
         !(col("corpus_id") >= 7000000L && col("corpus_id") < 8000000L))
@@ -1227,15 +1201,17 @@ object SparkEntry {
     val sink = indexDir(dir, "phash_ver_stream_sink")
     Seq(streamDir, ckpt, sink).foreach(wipeDir)
     val tbl = indexTable(dir, "phver_s")
-    graft.sources.IndexStore.writePhashIndexBucketedVersioned(
-      baseHashes, tbl, numBuckets = 8, bands = 8)
+    val index = IndexStore.Phash.versioned(tbl, bands = 8)
+    index.write(baseHashes, numBuckets = 8)
+    def run(): Unit = StreamingValidate.ingestRun(s, streamDir, index, ckpt,
+      sink)((b, ix) => Multimodal.phashNearDuplicatesAgainst(
+        Multimodal.perceptualHash(b).select(col("id"), col("dhash")), ix,
+        bands = 8, maxDist = 7))
     fileA.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.phashIngestRunVersioned(s, streamDir, tbl,
-      bands = 8, maxDist = 7, checkpointDir = ckpt, sinkDir = sink)
-    graft.sources.IndexStore.compactPhashIndexBucketedVersioned(s, tbl)
+    run()
+    index.compact(s)
     fileB.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.phashIngestRunVersioned(s, streamDir, tbl,
-      bands = 8, maxDist = 7, checkpointDir = ckpt, sinkDir = sink)
+    run()
     s.read.parquet(sink)
       .filter(col("new_id") % 2 === 1)
       .select(col("new_id"), col("corpus_id"), col("hamming"))
@@ -1249,7 +1225,7 @@ object SparkEntry {
     * batch 1's %3 = 0 keys) — so a hash-match against the oracle's
     * scratch recompute over history ∪ batch1 proves appended keys are
     * live in the serve join AND that
-    * [[graft.sources.IndexStore.compactKeyIndexBucketed]]'s row-merge
+    * the plain key index's `compact` row-merge
     * rewrite changed nothing the serve can observe.
     */
   private def xUniqueIndexAppend(s: SparkSession, dir: String): DataFrame = {
@@ -1261,13 +1237,11 @@ object SparkEntry {
       .unionByName(base.filter(col("o_orderkey") % 10 === 1)
         .select("o_orderkey"))
     val tbl = indexTable(dir, "keyapp")
-    graft.sources.IndexStore.writeKeyIndexBucketed(base, tbl,
-      Seq("o_orderkey"), numBuckets = 8)
-    graft.sources.IndexStore.appendKeyIndexBucketed(batch1, tbl,
-      Seq("o_orderkey"))
-    graft.sources.IndexStore.compactKeyIndexBucketed(s, tbl)
-    val idx = graft.sources.IndexStore.readKeyIndexBucketed(s, tbl,
-      Seq("o_orderkey"))
+    val index = IndexStore.Key.plain(tbl, Seq("o_orderkey"))
+    index.write(base, numBuckets = 8)
+    index.append(batch1)
+    index.compact(s)
+    val idx = index.read(s)
     Checks.uniqueAgainstIndex(batch2, idx, Seq("o_orderkey"))
       .orderBy("o_orderkey")
   }
@@ -1291,13 +1265,11 @@ object SparkEntry {
       .unionByName(base.filter(col("o_orderkey") % 10 === 1)
         .select("o_orderkey"))
     val tbl = indexTable(dir, "keyver")
-    graft.sources.IndexStore.writeKeyIndexBucketedVersioned(base, tbl,
-      Seq("o_orderkey"), numBuckets = 8)
-    graft.sources.IndexStore.appendKeyIndexBucketedVersioned(batch1,
-      tbl, Seq("o_orderkey"))
-    graft.sources.IndexStore.compactKeyIndexBucketedVersioned(s, tbl)
-    val idx = graft.sources.IndexStore.readKeyIndexBucketedVersioned(s,
-      tbl, Seq("o_orderkey"))
+    val index = IndexStore.Key.versioned(tbl, Seq("o_orderkey"))
+    index.write(base, numBuckets = 8)
+    index.append(batch1)
+    index.compact(s)
+    val idx = index.read(s)
     Checks.uniqueAgainstIndex(batch2, idx, Seq("o_orderkey"))
       .orderBy("o_orderkey")
   }
@@ -1316,10 +1288,9 @@ object SparkEntry {
     val orders = t(s, dir, "orders")
     val parent = t(s, dir, "customer").filter(col("c_custkey") % 10 =!= 0)
     val tbl = indexTable(dir, "fkidx")
-    graft.sources.IndexStore.writeKeyIndexBucketed(parent, tbl,
-      Seq("c_custkey"), numBuckets = 8)
-    val idx = graft.sources.IndexStore.readKeyIndexBucketed(s, tbl,
-      Seq("c_custkey"))
+    val index = IndexStore.Key.plain(tbl, Seq("c_custkey"))
+    index.write(parent, numBuckets = 8)
+    val idx = index.read(s)
     Checks.foreignKeyAgainstIndex(orders, Seq("o_custkey"), idx,
       Seq("c_custkey")).orderBy("o_custkey")
   }
@@ -1341,12 +1312,10 @@ object SparkEntry {
     val late = customer.filter(col("c_custkey") % 10 === 0 &&
       col("c_custkey") % 20 === 0)
     val tbl = indexTable(dir, "fkapp")
-    graft.sources.IndexStore.writeKeyIndexBucketed(dim0, tbl,
-      Seq("c_custkey"), numBuckets = 8)
-    graft.sources.IndexStore.appendKeyIndexBucketed(late, tbl,
-      Seq("c_custkey"))
-    val idx = graft.sources.IndexStore.readKeyIndexBucketed(s, tbl,
-      Seq("c_custkey"))
+    val index = IndexStore.Key.plain(tbl, Seq("c_custkey"))
+    index.write(dim0, numBuckets = 8)
+    index.append(late)
+    val idx = index.read(s)
     Checks.foreignKeyAgainstIndex(orders, Seq("o_custkey"), idx,
       Seq("c_custkey")).orderBy("o_custkey")
   }
@@ -1357,31 +1326,14 @@ object SparkEntry {
     * `stream` also prefixes the scratch dirs), `oracle` the oracle the
     * rows share, and `scenarios` the rows it has. `fit` is the model the
     * build takes (fitted per row, once, on the full corpus), `serve` the
-    * top-k over a read state `S`, and every other field one public call
-    * of the plain store or, suffixed `V`, the versioned one.
+    * top-k over a read state `S` — also the check of the family's ingest
+    * rows — and `plain` and `versioned` the family's two handles.
     */
   private final case class FlatRows[M, S](sim: String, stream: String,
       oracle: String, scenarios: Seq[FlatScenario], fit: DataFrame => M,
       serve: (SparkSession, String, DataFrame, S) => DataFrame,
-      build: (DataFrame, M, String) => Unit,
-      append: (DataFrame, String) => Unit,
-      delete: (DataFrame, String) => Unit,
-      read: (SparkSession, String) => S, live: (SparkSession, String) => S,
-      ingest: (SparkSession, String, String, String, String) => Unit,
-      buildV: (DataFrame, M, String) => Unit,
-      appendV: (DataFrame, String) => Unit,
-      readV: (SparkSession, String, Int) => S,
-      compactV: (SparkSession, String) => Unit,
-      ingestV: (SparkSession, String, String, String, String) => Unit,
-      more: Option[FlatMore[S]] = None)
-
-  /** The calls only IVF's rows make: the plain compact, and the versioned
-    * store's delete, live read, current version and rollback.
-    */
-  private final case class FlatMore[S](compact: (SparkSession, String) => Unit,
-      deleteV: (DataFrame, String) => Unit,
-      liveV: (SparkSession, String) => S, version: String => Int,
-      rollback: (SparkSession, String, Int) => Int)
+      plain: String => IndexStore.FlatPlainIndex[M, S],
+      versioned: String => IndexStore.FlatVersionedIndex[M, S])
 
   /** One lifecycle scenario: the row-name suffix, the scratch-dir suffix,
     * and whether the row hangs off the `x_stream_` stem. A row shares its
@@ -1427,34 +1379,13 @@ object SparkEntry {
       Similarity.firstIdCentroids(_, 16),
       (_, _, q, st) => Similarity.ivfTopKWith(q, st._1, st._2, 10,
         nProbe = 4),
-      IndexStore.writeIvfIndex(_, _, _), IndexStore.appendIvfIndex(_, _),
-      IndexStore.deleteFromIvfIndex, IndexStore.readIvfIndex,
-      IndexStore.readIvfIndexLive,
-      StreamingValidate.ivfIngestRun(_, _, _, 10, 4, _, _),
-      IndexStore.writeIvfIndexVersioned(_, _, _),
-      IndexStore.appendIvfIndexVersioned(_, _),
-      IndexStore.readIvfIndexVersioned,
-      IndexStore.compactIvfIndexVersioned(_, _),
-      StreamingValidate.ivfIngestRunVersioned(_, _, _, 10, 4, _, _),
-      Some(FlatMore(IndexStore.compactIvfIndex(_, _),
-        IndexStore.deleteFromIvfIndexVersioned,
-        IndexStore.readIvfIndexVersionedLive,
-        d => VersionedFlat.currentVersion(IndexStore.Ivf.versioned(d)),
-        IndexStore.rollbackIvfIndexVersioned))),
+      IndexStore.Ivf.plain, IndexStore.Ivf.versioned),
     FlatRows[Similarity.PqModel, DataFrame]("pq", "pq", "x_sim_pq",
       Seq(Served, Delete, Append, Versioned, StreamIngest, StreamVersioned),
       Similarity.pqFit(_, m = 16, ks = 16),
       (s, idx, q, codes) => Similarity.pqTopKFromCodes(q, codes, 10,
         IndexStore.readPqModel(s, idx)),
-      IndexStore.writePqIndex(_, _, _), IndexStore.appendPqIndex(_, _),
-      IndexStore.deleteFromPqIndex, IndexStore.readPqCodes,
-      IndexStore.readPqCodesLive,
-      StreamingValidate.pqIngestRun(_, _, _, 10, _, _),
-      IndexStore.writePqIndexVersioned(_, _, _),
-      IndexStore.appendPqIndexVersioned(_, _),
-      IndexStore.readPqCodesVersioned,
-      IndexStore.compactPqIndexVersioned(_, _),
-      StreamingValidate.pqIngestRunVersioned(_, _, _, 10, _, _)),
+      IndexStore.Pq.plain, IndexStore.Pq.versioned),
     FlatRows[(Similarity.PqModel, DataFrame), (DataFrame, DataFrame)](
       "ivf_pq", "ivfpq", "x_sim_ivf_pq",
       Seq(Served, Delete, Append, Versioned, StreamIngest, StreamVersioned),
@@ -1462,41 +1393,26 @@ object SparkEntry {
         Similarity.kmeansCentroids(e, nLists = 16)),
       (s, idx, q, st) => Similarity.ivfPqTopKFromIndex(q, st._1, st._2,
         IndexStore.readPqModel(s, idx), 10, nProbe = 4),
-      (df, m, d) => IndexStore.writeIvfPqIndex(df, m._1, m._2, d),
-      IndexStore.appendIvfPqIndex(_, _), IndexStore.deleteFromIvfPqIndex,
-      IndexStore.readIvfPqIndex, IndexStore.readIvfPqIndexLive,
-      StreamingValidate.ivfPqIngestRun(_, _, _, 10, 4, _, _),
-      (df, m, d) => IndexStore.writeIvfPqIndexVersioned(df, m._1, m._2, d),
-      IndexStore.appendIvfPqIndexVersioned(_, _),
-      IndexStore.readIvfPqIndexVersioned,
-      IndexStore.compactIvfPqIndexVersioned(_, _),
-      StreamingValidate.ivfPqIngestRunVersioned(_, _, _, 10, 4, _, _)),
+      IndexStore.IvfPq.plain, IndexStore.IvfPq.versioned),
     FlatRows[Unit, DataFrame]("quantized", "int8", "x_sim_quantized",
       Seq(Served, Delete, Append, Versioned, StreamIngest, StreamVersioned),
       _ => (), (_, _, q, st) => Similarity.quantizedTopKFromIndex(q, st, 10),
-      (df, _, d) => IndexStore.writeInt8Index(df, d),
-      IndexStore.appendInt8Index(_, _), IndexStore.deleteFromInt8Index,
-      IndexStore.readInt8Index, IndexStore.readInt8IndexLive,
-      StreamingValidate.int8IngestRun(_, _, _, 10, _, _),
-      (df, _, d) => IndexStore.writeInt8IndexVersioned(df, d),
-      IndexStore.appendInt8IndexVersioned(_, _),
-      IndexStore.readInt8IndexVersioned,
-      (s, d) => VersionedFlat.compact(s, IndexStore.Int8.versioned(d)),
-      StreamingValidate.int8IngestRunVersioned(_, _, _, 10, _, _)))
+      IndexStore.Int8.plain, IndexStore.Int8.versioned))
 
   /** Row `sc` of family `f`: the scenario's build → mutate → read steps
     * over the embeddings, then the one shared tail — the 5 queries
     * (vec_id < 5) served top-10 over the read state, `rank` cast to long,
     * ordered by (query_id, rank). Each scenario's comment says why its
-    * answer is its oracle's.
+    * answer is its oracle's. The versioned delete and rollback rows
+    * match the versioned handle on the trait that has the step.
     */
   private def flatRow[M, S](f: FlatRows[M, S], sc: FlatScenario)(
       s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val idx = indexDir(dir, f.stream + sc.dir)
+    val (plain, versioned) = (f.plain(idx), f.versioned(idx))
     def mod(n: Int, r: Int): DataFrame = e.filter(col("vec_id") % n === r)
-    def more: FlatMore[S] = f.more.getOrElse(
-      sys.error(s"${f.sim} has no compact, versioned delete or rollback row"))
+    def missing = sys.error(s"${f.sim} has no versioned delete or rollback")
     /** The standing artifact is built on the % 3 = 0 third; the other two
       * thirds arrive as files and are check-then-admitted by the ingest
       * run, each micro-batch checked against the live artifact (re-read
@@ -1507,73 +1423,82 @@ object SparkEntry {
       * the full-corpus oracle. `restart` splits the arrival over two runs
       * on one checkpoint.
       */
-    def streamed(versioned: Boolean, restart: Boolean): S = {
+    def streamed(v: Boolean, restart: Boolean): S = {
       val Seq(src, ckpt, sink) = Seq("_src", "_ckpt", "_sink").map(idx + _)
       Seq(idx, src, ckpt, sink).foreach(wipeDir)
-      val run = if (versioned) f.ingestV else f.ingest
-      (if (versioned) f.buildV else f.build)(mod(3, 0), f.fit(e), idx)
+      val index = if (v) versioned else plain
+      def run(): Unit = StreamingValidate.ingestRun(s, src, index, ckpt,
+        sink)((b, st) => f.serve(s, idx, b, st))
+      index.write(mod(3, 0), f.fit(e))
       mod(3, 1).coalesce(1).write.mode("append").parquet(src)
-      if (restart) run(s, src, idx, ckpt, sink)
+      if (restart) run()
       mod(3, 2).coalesce(1).write.mode("append").parquet(src)
-      run(s, src, idx, ckpt, sink)
-      if (versioned) f.readV(s, idx, 0) else f.read(s, idx)
+      run()
+      if (v) versioned.read(s) else plain.read(s)
     }
     def dead = mod(7, 3).select(col("vec_id").as("id"))
     val state = sc match {
       // the persisted artifact round-trips exactly: doubles (centroids,
       // codebooks, vectors) are bit-identical through parquet, and int8's
       // values are integers in [-127, 127], so its tinyint pack is exact
-      case Served => f.build(e, f.fit(e), idx); f.read(s, idx)
+      case Served => plain.write(e, f.fit(e)); plain.read(s)
       // built on the even half, the odd half admitted: encoding is a pure
       // per-vector function of the static model, read back from the
       // artifact (int8 reads none: its scales are per-vector), so
       // append ≡ the full build
       case Append =>
-        f.build(mod(2, 0), f.fit(e), idx); f.append(mod(2, 1), idx)
-        f.read(s, idx)
+        plain.write(mod(2, 0), f.fit(e)); plain.append(mod(2, 1))
+        plain.read(s)
       // every 7th vector tombstoned; the live read excludes it BEFORE
       // ranking (the next-best neighbor promotes in) and the model stays,
       // which is what the oracle recomputes
       case Delete =>
-        f.build(e, f.fit(e), idx); f.delete(dead, idx); f.live(s, idx)
+        plain.write(e, f.fit(e)); plain.delete(dead); plain.live(s)
       // the appended batches' files rewritten into one: layout only
       case Compact =>
-        f.build(mod(2, 0), f.fit(e), idx); f.append(mod(2, 1), idx)
-        more.compact(s, idx); f.read(s, idx)
+        plain.write(mod(2, 0), f.fit(e)); plain.append(mod(2, 1))
+        plain.compact(s); plain.read(s)
       // build, admit and compact each publish a version; the versioned
       // compact is layout-only, so current ≡ the full build
       case Versioned =>
-        f.buildV(mod(2, 0), f.fit(e), idx); f.appendV(mod(2, 1), idx)
-        f.compactV(s, idx); f.readV(s, idx, 0)
+        versioned.write(mod(2, 0), f.fit(e)); versioned.append(mod(2, 1))
+        VersionedFlat.compact(s, versioned.at); versioned.read(s)
       // copies of the query vectors under fresh ids (cosine-1.0
       // neighbors) are admitted, then rolled back by reference to the
       // clean version: current ≡ the full build, the poison stays
       // time-travelable
       case Rollback =>
-        f.buildV(mod(2, 0), f.fit(e), idx); f.appendV(mod(2, 1), idx)
-        val clean = more.version(idx)
-        f.appendV(e.filter(col("vec_id") < 5).select(
-          (col("vec_id") + 900000L).as("vec_id"), col("embedding")), idx)
-        require(more.rollback(s, idx, clean) == clean + 2,
-          "rollback is an ordinary commit")
-        f.readV(s, idx, 0)
+        versioned.write(mod(2, 0), f.fit(e)); versioned.append(mod(2, 1))
+        val clean = VersionedFlat.currentVersion(versioned.at)
+        versioned.append(e.filter(col("vec_id") < 5).select(
+          (col("vec_id") + 900000L).as("vec_id"), col("embedding")))
+        val back = versioned match {
+          case r: IndexStore.Rollbacks => r.rollback(clean)
+          case _ => missing
+        }
+        require(back == clean + 2, "rollback is an ordinary commit")
+        versioned.read(s)
       // version 1 (the even half, under the full-corpus model it
       // persisted) is still served exactly as written after version 2
       case TimeTravel =>
-        f.buildV(mod(2, 0), f.fit(e), idx); f.appendV(mod(2, 1), idx)
-        f.readV(s, idx, 1)
+        versioned.write(mod(2, 0), f.fit(e)); versioned.append(mod(2, 1))
+        versioned.read(s, 1)
       // tombstones mask the current version before ranking exactly as
       // they mask the plain artifact, so the delete row's oracle holds
       case VersionedDelete =>
-        f.buildV(e, f.fit(e), idx); more.deleteV(dead, idx)
-        more.liveV(s, idx)
-      case StreamIngest => streamed(versioned = false, restart = false)
+        versioned.write(e, f.fit(e))
+        versioned match {
+          case v: IndexStore.VersionedTombstones[S @unchecked] =>
+            v.delete(dead); v.live(s)
+          case _ => missing
+        }
+      case StreamIngest => streamed(v = false, restart = false)
       // run 2 must process only the file that arrived after run 1: a
       // re-processed first file is admitted twice, and its doubled
       // candidates take two top-k slots
-      case StreamResume => streamed(versioned = false, restart = true)
+      case StreamResume => streamed(v = false, restart = true)
       // each admitted micro-batch publishes a version, over the restart arc
-      case StreamVersioned => streamed(versioned = true, restart = true)
+      case StreamVersioned => streamed(v = true, restart = true)
     }
     f.serve(s, idx, e.filter(col("vec_id") < 5), state)
       .withColumn("rank", col("rank").cast(LongType))
@@ -1675,8 +1600,8 @@ object SparkEntry {
   private def xStreamAnnServe(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val idx = indexDir(dir, "ivf_stream")
-    graft.sources.IndexStore.writeIvfIndex(e,
-      Similarity.firstIdCentroids(e, 16), idx)
+    IndexStore.Ivf.plain(idx)
+      .write(e, Similarity.firstIdCentroids(e, 16))
     val qDir = indexDir(dir, "ann_queries")
     e.filter(col("vec_id") < 5).repartition(3)
       .write.mode("overwrite").parquet(qDir)
@@ -2182,17 +2107,16 @@ object SparkEntry {
   private def xDedupSubstringServed(s: SparkSession, dir: String): DataFrame = {
     val base = substringBase(s, dir)
     val tbl = indexTable(dir, "subidx")
-    graft.sources.IndexStore.writeSubstringIndexBucketed(base, tbl,
-      numBuckets = 8, k = 8)
-    val grams = graft.sources.IndexStore.readSubstringIndexBucketed(
-      s, tbl, k = 8)
+    val index = IndexStore.Substring.plain(tbl, k = 8)
+    index.write(base, numBuckets = 8)
+    val grams = index.read(s)
     Dedup.sharedSubstringRunsAgainst(substringPlanted(base), grams,
         minRunLen = 30, k = 8)
       .orderBy("new_id", "corpus_id")
   }
 
-  /** LSM MAINTENANCE of the substring gram index (IndexStore
-    * .appendSubstringIndexBucketed): the corpus is gram-hashed once
+  /** LSM MAINTENANCE of the substring gram index (`IndexStore.Substring
+    * .plain(…).append`): the corpus is gram-hashed once
     * into the h-bucketed table, a DELTA of 80%-prefix twins of the
     * first 40 docs is APPENDED (only the delta shuffles; standing
     * files untouched), and the planted batch is screened against the
@@ -2210,11 +2134,10 @@ object SparkEntry {
         slice(col("toks"), lit(1),
           floor(size(col("toks")) * 0.8).cast("int")).as("toks"))
     val tbl = indexTable(dir, "subapp")
-    graft.sources.IndexStore.writeSubstringIndexBucketed(base, tbl,
-      numBuckets = 8, k = 8)
-    graft.sources.IndexStore.appendSubstringIndexBucketed(delta, tbl, k = 8)
-    val grams = graft.sources.IndexStore.readSubstringIndexBucketed(
-      s, tbl, k = 8)
+    val index = IndexStore.Substring.plain(tbl, k = 8)
+    index.write(base, numBuckets = 8)
+    index.append(delta)
+    val grams = index.read(s)
     Dedup.sharedSubstringRunsAgainst(substringPlanted(base), grams,
         minRunLen = 30, k = 8)
       .orderBy("new_id", "corpus_id")
@@ -2242,12 +2165,11 @@ object SparkEntry {
         slice(col("toks"), lit(1),
           floor(size(col("toks")) * 0.8).cast("int")).as("toks"))
     val tbl = indexTable(dir, "subcmp")
-    graft.sources.IndexStore.writeSubstringIndexBucketed(base, tbl,
-      numBuckets = 8, k = 8)
-    graft.sources.IndexStore.appendSubstringIndexBucketed(delta, tbl, k = 8)
-    graft.sources.IndexStore.compactSubstringIndexBucketed(s, tbl)
-    val grams = graft.sources.IndexStore.readSubstringIndexBucketed(
-      s, tbl, k = 8)
+    val index = IndexStore.Substring.plain(tbl, k = 8)
+    index.write(base, numBuckets = 8)
+    index.append(delta)
+    index.compact(s)
+    val grams = index.read(s)
     Dedup.sharedSubstringRunsAgainst(substringPlanted(base), grams,
         minRunLen = 30, k = 8)
       .orderBy("new_id", "corpus_id")
@@ -2270,14 +2192,11 @@ object SparkEntry {
         slice(col("toks"), lit(1),
           floor(size(col("toks")) * 0.8).cast("int")).as("toks"))
     val tbl = indexTable(dir, "subver")
-    graft.sources.IndexStore.writeSubstringIndexBucketedVersioned(base,
-      tbl, numBuckets = 8, k = 8)
-    graft.sources.IndexStore.appendSubstringIndexBucketedVersioned(
-      delta, tbl, k = 8)
-    graft.sources.IndexStore.compactSubstringIndexBucketedVersioned(s,
-      tbl)
-    val grams = graft.sources.IndexStore
-      .readSubstringIndexBucketedVersioned(s, tbl, k = 8)
+    val index = IndexStore.Substring.versioned(tbl, k = 8)
+    index.write(base, numBuckets = 8)
+    index.append(delta)
+    index.compact(s)
+    val grams = index.read(s)
     Dedup.sharedSubstringRunsAgainst(substringPlanted(base), grams,
         minRunLen = 30, k = 8)
       .orderBy("new_id", "corpus_id")
@@ -2305,17 +2224,13 @@ object SparkEntry {
         slice(col("toks"), lit(1),
           floor(size(col("toks")) * 0.8).cast("int")).as("toks"))
     val tbl = indexTable(dir, "subtierv")
-    graft.sources.IndexStore.writeSubstringIndexBucketedVersioned(base,
-      tbl, numBuckets = 8, k = 8)
-    graft.sources.IndexStore.appendSubstringIndexBucketedVersioned(
-      delta(0L, 20L), tbl, k = 8): Unit
-    graft.sources.IndexStore.appendSubstringIndexBucketedVersioned(
-      delta(20L, 40L), tbl, k = 8): Unit
-    require(graft.sources.IndexStore
-      .maybeCompactSubstringIndexBucketedVersioned(s, tbl, maxGens = 2),
+    val index = IndexStore.Substring.versioned(tbl, k = 8)
+    index.write(base, numBuckets = 8)
+    index.append(delta(0L, 20L)): Unit
+    index.append(delta(20L, 40L)): Unit
+    require(index.maybeCompact(s, maxGens = 2),
       "three generations over a cap of two must trigger a tiered merge")
-    val grams = graft.sources.IndexStore
-      .readSubstringIndexBucketedVersioned(s, tbl, k = 8)
+    val grams = index.read(s)
     Dedup.sharedSubstringRunsAgainst(substringPlanted(base), grams,
         minRunLen = 30, k = 8)
       .orderBy("new_id", "corpus_id")
@@ -2339,16 +2254,12 @@ object SparkEntry {
         slice(col("toks"), lit(1),
           floor(size(col("toks")) * 0.8).cast("int")).as("toks"))
     val tbl = indexTable(dir, "subsnap")
-    graft.sources.IndexStore.writeSubstringIndexBucketedVersioned(base,
-      tbl, numBuckets = 8, k = 8)
-    val frozen = graft.sources.IndexStore
-      .snapshotSubstringIndexBucketedVersioned(s, tbl)
-    graft.sources.IndexStore.appendSubstringIndexBucketedVersioned(
-      delta, tbl, k = 8): Unit
-    graft.sources.IndexStore.compactSubstringIndexBucketedVersioned(s,
-      tbl)
-    val grams = graft.sources.IndexStore
-      .readSubstringIndexBucketedVersionedAsOf(s, tbl, frozen, k = 8)
+    val index = IndexStore.Substring.versioned(tbl, k = 8)
+    index.write(base, numBuckets = 8)
+    val frozen = index.snapshot(s)
+    index.append(delta): Unit
+    index.compact(s)
+    val grams = index.readAsOf(s, frozen)
     Dedup.sharedSubstringRunsAgainst(substringPlanted(base), grams,
         minRunLen = 30, k = 8)
       .orderBy("new_id", "corpus_id")
@@ -2364,8 +2275,8 @@ object SparkEntry {
   private def xStreamSubstring(s: SparkSession, dir: String): DataFrame = {
     val base = substringBase(s, dir)
     val tbl = indexTable(dir, "substr_s")
-    graft.sources.IndexStore.writeSubstringIndexBucketed(base, tbl,
-      numBuckets = 8, k = 8)
+    IndexStore.Substring.plain(tbl, k = 8)
+      .write(base, numBuckets = 8)
     val batchDir = indexDir(dir, "substring_stream")
     substringPlanted(base).repartition(4)
       .write.mode("overwrite").parquet(batchDir)
@@ -2395,14 +2306,14 @@ object SparkEntry {
     val sink = indexDir(dir, "substring_resume_sink")
     Seq(streamDir, ckpt, sink).foreach(wipeDir)
     val tbl = indexTable(dir, "substr_r")
-    graft.sources.IndexStore.writeSubstringIndexBucketed(base, tbl,
-      numBuckets = 8, k = 8)
+    val index = IndexStore.Substring.plain(tbl, k = 8)
+    index.write(base, numBuckets = 8)
+    def run(): Unit = StreamingValidate.ingestRun(s, streamDir, index, ckpt,
+      sink)(Dedup.sharedSubstringRunsAgainst(_, _, minRunLen = 30, k = 8))
     fileA.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.substringIngestRun(s, streamDir, tbl,
-      minRunLen = 30, k = 8, checkpointDir = ckpt, sinkDir = sink)
+    run()
     fileB.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.substringIngestRun(s, streamDir, tbl,
-      minRunLen = 30, k = 8, checkpointDir = ckpt, sinkDir = sink)
+    run()
     s.read.parquet(sink)
       .filter(col("new_id") >= 7000000L && col("new_id") < 8000000L)
       .select(col("new_id"), col("corpus_id"), col("n_runs"),
@@ -2423,13 +2334,11 @@ object SparkEntry {
   private def xDedupSubstringDelete(s: SparkSession, dir: String): DataFrame = {
     val base = substringBase(s, dir)
     val tbl = indexTable(dir, "subdel")
-    graft.sources.IndexStore.writeSubstringIndexBucketed(base, tbl,
-      numBuckets = 8, k = 8)
-    graft.sources.IndexStore.deleteFromSubstringIndexBucketed(
-      base.filter(col("id") % 3 === 0).select("id"), tbl)
-    val grams = graft.sources.IndexStore.readSubstringIndexBucketed(
-      s, tbl, k = 8)
-    val dead = graft.sources.IndexStore.readSubstringDeadIds(s, tbl)
+    val index = IndexStore.Substring.plain(tbl, k = 8)
+    index.write(base, numBuckets = 8)
+    index.delete(base.filter(col("id") % 3 === 0).select("id"))
+    val grams = index.read(s)
+    val dead = index.deadIds(s)
       .select(col("id").as("corpus_id"))
     Dedup.sharedSubstringRunsAgainst(substringPlanted(base), grams,
         minRunLen = 30, k = 8)
@@ -2455,13 +2364,11 @@ object SparkEntry {
         slice(col("toks"), lit(1),
           floor(size(col("toks")) * 0.8).cast("int")).as("toks"))
     val tbl = indexTable(dir, "subtier")
-    graft.sources.IndexStore.writeSubstringIndexBucketed(base, tbl,
-      numBuckets = 8, k = 8)
-    graft.sources.IndexStore.appendSubstringIndexBucketed(delta, tbl, k = 8)
-    graft.sources.IndexStore.compactSubstringIndexTiered(s, tbl,
-      minFilesPerBucket = 2)
-    val grams = graft.sources.IndexStore.readSubstringIndexBucketed(
-      s, tbl, k = 8)
+    val index = IndexStore.Substring.plain(tbl, k = 8)
+    index.write(base, numBuckets = 8)
+    index.append(delta)
+    index.compactTiered(s, minFilesPerBucket = 2)
+    val grams = index.read(s)
     Dedup.sharedSubstringRunsAgainst(substringPlanted(base), grams,
         minRunLen = 30, k = 8)
       .orderBy("new_id", "corpus_id")
@@ -3243,7 +3150,7 @@ object SparkEntry {
   /** The image family's incremental-ingest arc closed: the corpus'
     * banded dHash frame persisted ONCE as a bucketed index on the
     * serve join's own (band, key)
-    * ([[graft.sources.IndexStore.writePhashIndexBucketed]]), a probe
+    * ([[graft.sources.IndexStore.Phash]]), a probe
     * batch (the perturbed twins) decoded/hashed/banded per ingest and
     * joined against it in place. Same pigeonhole completeness as the
     * self-join row; the oracle recomputes every luma byte, hash bit,
@@ -3259,10 +3166,9 @@ object SparkEntry {
     val probes = hashes.filter(col("id") % 2 === 1)
       .select(col("id"), col("dhash"))
     val tbl = indexTable(dir, "phidx")
-    graft.sources.IndexStore.writePhashIndexBucketed(corpus, tbl,
-      numBuckets = 8, bands = 8)
-    val idx = graft.sources.IndexStore.readPhashIndexBucketed(s, tbl,
-      bands = 8)
+    val index = IndexStore.Phash.plain(tbl, bands = 8)
+    index.write(corpus, numBuckets = 8)
+    val idx = index.read(s)
     Multimodal.phashNearDuplicatesAgainst(probes, idx, bands = 8,
         maxDist = 7)
       .orderBy("new_id", "corpus_id")
@@ -3289,12 +3195,10 @@ object SparkEntry {
     val probes = hashes.filter(col("id") % 2 === 1)
       .select(col("id"), col("dhash"))
     val tbl = indexTable(dir, "phapp")
-    graft.sources.IndexStore.writePhashIndexBucketed(base, tbl,
-      numBuckets = 8, bands = 8)
-    graft.sources.IndexStore.appendPhashIndexBucketed(delta, tbl,
-      bands = 8)
-    val idx = graft.sources.IndexStore.readPhashIndexBucketed(s, tbl,
-      bands = 8)
+    val index = IndexStore.Phash.plain(tbl, bands = 8)
+    index.write(base, numBuckets = 8)
+    index.append(delta)
+    val idx = index.read(s)
     Multimodal.phashNearDuplicatesAgainst(probes, idx, bands = 8,
         maxDist = 7)
       .orderBy("new_id", "corpus_id")
@@ -3322,14 +3226,16 @@ object SparkEntry {
     val sink = indexDir(dir, "phash_resume_sink")
     Seq(streamDir, ckpt, sink).foreach(wipeDir)
     val tbl = indexTable(dir, "phres")
-    graft.sources.IndexStore.writePhashIndexBucketed(baseHashes, tbl,
-      numBuckets = 8, bands = 8)
+    val index = IndexStore.Phash.plain(tbl, bands = 8)
+    index.write(baseHashes, numBuckets = 8)
+    def run(): Unit = StreamingValidate.ingestRun(s, streamDir, index, ckpt,
+      sink)((b, ix) => Multimodal.phashNearDuplicatesAgainst(
+        Multimodal.perceptualHash(b).select(col("id"), col("dhash")), ix,
+        bands = 8, maxDist = 7))
     fileA.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.phashIngestRun(s, streamDir, tbl, bands = 8,
-      maxDist = 7, checkpointDir = ckpt, sinkDir = sink)
+    run()
     fileB.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.phashIngestRun(s, streamDir, tbl, bands = 8,
-      maxDist = 7, checkpointDir = ckpt, sinkDir = sink)
+    run()
     s.read.parquet(sink)
       .filter(col("new_id") % 2 === 1)
       .select(col("new_id"), col("corpus_id"), col("hamming"))
@@ -3347,15 +3253,13 @@ object SparkEntry {
     val hashes = Multimodal.perceptualHash(
       Multimodal.synthesizeNearDupImages(d, "doc_id", every = 5))
     val tbl = indexTable(dir, "phcmp")
-    graft.sources.IndexStore.writePhashIndexBucketed(
-      hashes.filter(col("id") % 4 === 0).select(col("id"), col("dhash")),
-      tbl, numBuckets = 8, bands = 8)
-    graft.sources.IndexStore.appendPhashIndexBucketed(
-      hashes.filter(col("id") % 4 === 2).select(col("id"), col("dhash")),
-      tbl, bands = 8)
-    graft.sources.IndexStore.compactPhashIndexBucketed(s, tbl)
-    val idx = graft.sources.IndexStore.readPhashIndexBucketed(s, tbl,
-      bands = 8)
+    val index = IndexStore.Phash.plain(tbl, bands = 8)
+    index.write(hashes.filter(col("id") % 4 === 0)
+      .select(col("id"), col("dhash")), numBuckets = 8)
+    index.append(hashes.filter(col("id") % 4 === 2)
+      .select(col("id"), col("dhash")))
+    index.compact(s)
+    val idx = index.read(s)
     Multimodal.phashNearDuplicatesAgainst(
         hashes.filter(col("id") % 2 === 1).select(col("id"), col("dhash")),
         idx, bands = 8, maxDist = 7)
@@ -3370,15 +3274,13 @@ object SparkEntry {
     val hashes = Multimodal.perceptualHash(
       Multimodal.synthesizeNearDupImages(d, "doc_id", every = 5))
     val tbl = indexTable(dir, "phver")
-    graft.sources.IndexStore.writePhashIndexBucketedVersioned(
-      hashes.filter(col("id") % 4 === 0).select(col("id"), col("dhash")),
-      tbl, numBuckets = 8, bands = 8)
-    graft.sources.IndexStore.appendPhashIndexBucketedVersioned(
-      hashes.filter(col("id") % 4 === 2).select(col("id"), col("dhash")),
-      tbl, bands = 8)
-    graft.sources.IndexStore.compactPhashIndexBucketedVersioned(s, tbl)
-    val idx = graft.sources.IndexStore.readPhashIndexBucketedVersioned(
-      s, tbl, bands = 8)
+    val index = IndexStore.Phash.versioned(tbl, bands = 8)
+    index.write(hashes.filter(col("id") % 4 === 0)
+      .select(col("id"), col("dhash")), numBuckets = 8)
+    index.append(hashes.filter(col("id") % 4 === 2)
+      .select(col("id"), col("dhash")))
+    index.compact(s)
+    val idx = index.read(s)
     Multimodal.phashNearDuplicatesAgainst(
         hashes.filter(col("id") % 2 === 1).select(col("id"), col("dhash")),
         idx, bands = 8, maxDist = 7)
@@ -3402,13 +3304,11 @@ object SparkEntry {
     val probes = hashes.filter(col("id") % 2 === 1)
       .select(col("id"), col("dhash"))
     val tbl = indexTable(dir, "phdel")
-    graft.sources.IndexStore.writePhashIndexBucketed(corpus, tbl,
-      numBuckets = 8, bands = 8)
-    graft.sources.IndexStore.deleteFromPhashIndexBucketed(
-      corpus.filter(col("id") % 4 === 0).select("id"), tbl)
-    val idx = graft.sources.IndexStore.readPhashIndexBucketed(s, tbl,
-      bands = 8)
-    val dead = graft.sources.IndexStore.readPhashDeadIds(s, tbl)
+    val index = IndexStore.Phash.plain(tbl, bands = 8)
+    index.write(corpus, numBuckets = 8)
+    index.delete(corpus.filter(col("id") % 4 === 0).select("id"))
+    val idx = index.read(s)
+    val dead = index.deadIds(s)
       .select(col("id").as("corpus_id"))
     Multimodal.phashNearDuplicatesAgainst(probes, idx, bands = 8,
         maxDist = 7)
@@ -4472,7 +4372,7 @@ object SparkEntry {
 
   /** The MULTI-INDEX gated pipeline
     * (StreamingValidate.gatedIngestRunMulti over
-    * graft.sources.IndexStore.writePipelineIndexVersioned — round-15
+    * IndexStore.Pipeline.versioned — round-15
     * capstone): the MinHash halves AND a key member live in ONE
     * manifest chain, every batch is screened through BOTH gates —
     * near-dup CONTENT (MinHash) and duplicate-id IDENTITY (key) —
@@ -4494,8 +4394,8 @@ object SparkEntry {
       .select(col("doc_id").as("id"),
         TextAnalysis.tokens(col("text")).as("toks"))
     val tbl = indexTable(dir, "spmulti")
-    graft.sources.IndexStore.writePipelineIndexVersioned(corpus, tbl,
-      numBuckets = 8, k = 5)
+    val index = IndexStore.Pipeline.versioned(tbl, k = 5)
+    index.write(corpus, numBuckets = 8)
     val streamDir = indexDir(dir, "spmulti_src")
     val ckpt = indexDir(dir, "spmulti_ckpt")
     val sink = indexDir(dir, "spmulti_sink")
@@ -4519,7 +4419,7 @@ object SparkEntry {
     StreamingValidate.gatedIngestRunMulti(s, streamDir, tbl,
       threshold = 0.5, k = 5, minQuality = 0.7, minTokens = 10,
       salt = "spadm1", checkpointDir = ckpt, sinkDir = sink)
-    val total = graft.sources.IndexStore.readPipelineKeyIndex(s, tbl)
+    val total = index.readKeys(s)
       .agg(sum(col("n")).cast(LongType).as("idx_total"))
     s.read.parquet(sink)
       .groupBy("shard")
@@ -4550,8 +4450,8 @@ object SparkEntry {
       .select(col("doc_id").as("id"),
         TextAnalysis.tokens(col("text")).as("toks"))
     val tbl = indexTable(dir, "spmultib")
-    graft.sources.IndexStore.writePipelineIndexVersioned(corpus, tbl,
-      numBuckets = 8, k = 5)
+    val index = IndexStore.Pipeline.versioned(tbl, k = 5)
+    index.write(corpus, numBuckets = 8)
     val streamDir = indexDir(dir, "spmultib_src")
     val ckpt = indexDir(dir, "spmultib_ckpt")
     val sink = indexDir(dir, "spmultib_sink")
@@ -4580,7 +4480,7 @@ object SparkEntry {
     require(graft.sources.BucketedManifest.gensOf(s, tbl,
         s"${tbl}_keys").size <= 2,
       "the cadence knob must bound the key member's generation count")
-    val total = graft.sources.IndexStore.readPipelineKeyIndex(s, tbl)
+    val total = index.readKeys(s)
       .agg(sum(col("n")).cast(LongType).as("idx_total"))
     s.read.parquet(sink)
       .groupBy("shard")
@@ -4610,8 +4510,8 @@ object SparkEntry {
       .select(col("doc_id").as("id"),
         TextAnalysis.tokens(col("text")).as("toks"))
     val tbl = indexTable(dir, "spevol")
-    graft.sources.IndexStore.writeDedupIndexBucketedVersioned(corpus,
-      tbl, numBuckets = 8, k = 5)
+    IndexStore.Dedup.versioned(tbl, k = 5)
+      .write(corpus, numBuckets = 8)
     val streamDir = indexDir(dir, "spevol_src")
     val ckpt = indexDir(dir, "spevol_ckpt")
     val sink = indexDir(dir, "spevol_sink")
@@ -4624,8 +4524,8 @@ object SparkEntry {
       salt = "spadm1", checkpointDir = ckpt, sinkDir = sink)
     // the evolution point: the identity gate's member is born from
     // the admitted state, in one commit
-    graft.sources.IndexStore.addPipelineKeyMember(s, tbl,
-      numBuckets = 8): Unit
+    val index = IndexStore.Pipeline.versioned(tbl)
+    index.addKeyMember(s, numBuckets = 8): Unit
     val planted = d.filter(col("doc_id") % 4 === 0 &&
         col("doc_id") < 80)
       .select(col("doc_id"), (col("doc_id") + 3).as("src_id"))
@@ -4639,7 +4539,7 @@ object SparkEntry {
     StreamingValidate.gatedIngestRunMulti(s, streamDir, tbl,
       threshold = 0.5, k = 5, minQuality = 0.7, minTokens = 10,
       salt = "spadm1", checkpointDir = ckpt, sinkDir = sink)
-    val total = graft.sources.IndexStore.readPipelineKeyIndex(s, tbl)
+    val total = index.readKeys(s)
       .agg(sum(col("n")).cast(LongType).as("idx_total"))
     s.read.parquet(sink)
       .groupBy("shard")
@@ -4670,8 +4570,8 @@ object SparkEntry {
       .select(col("doc_id").as("id"),
         TextAnalysis.tokens(col("text")).as("toks"))
     val tbl = indexTable(dir, "spipe")
-    graft.sources.IndexStore.writeDedupIndexBucketed(corpus, tbl,
-      numBuckets = 8, k = 5)
+    IndexStore.Dedup.plain(tbl, k = 5)
+      .write(corpus, numBuckets = 8)
     val stream = d.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), col("text"))
       .unionByName(
@@ -4710,8 +4610,8 @@ object SparkEntry {
       .select(col("doc_id").as("id"),
         TextAnalysis.tokens(col("text")).as("toks"))
     val tbl = indexTable(dir, "spadm")
-    graft.sources.IndexStore.writeDedupIndexBucketed(corpus, tbl,
-      numBuckets = 8, k = 5)
+    IndexStore.Dedup.plain(tbl, k = 5)
+      .write(corpus, numBuckets = 8)
     val streamDir = indexDir(dir, "spadm_src")
     val ckpt = indexDir(dir, "spadm_ckpt")
     val sink = indexDir(dir, "spadm_sink")
@@ -4758,8 +4658,8 @@ object SparkEntry {
       .select(col("doc_id").as("id"),
         TextAnalysis.tokens(col("text")).as("toks"))
     val tbl = indexTable(dir, "spadmv")
-    graft.sources.IndexStore.writeDedupIndexBucketedVersioned(corpus,
-      tbl, numBuckets = 8, k = 5)
+    IndexStore.Dedup.versioned(tbl, k = 5)
+      .write(corpus, numBuckets = 8)
     val streamDir = indexDir(dir, "spadmv_src")
     val ckpt = indexDir(dir, "spadmv_ckpt")
     val sink = indexDir(dir, "spadmv_sink")
@@ -4891,10 +4791,9 @@ object SparkEntry {
       concat(substring(col("s"), 1, 9), lit("X"),
         col("s").substr(lit(11), length(col("s")))).as("s"))
     val tbl = indexTable(dir, "editidx")
-    graft.sources.IndexStore.writeEditIndexBucketed(corpus, tbl,
-      numBuckets = 8, d = 4)
-    val (segs, str, bylen) = graft.sources.IndexStore
-      .readEditIndexBucketed(s, tbl, d = 4)
+    val index = IndexStore.Edit.plain(tbl, d = 4)
+    index.write(corpus, numBuckets = 8)
+    val (segs, str, bylen) = index.read(s)
     Dedup.editDistanceAgainst(batch, "id", col("s"), segs, str, bylen,
         d = 4)
       .orderBy("new_id", "corpus_id")
@@ -4914,8 +4813,8 @@ object SparkEntry {
       concat(substring(col("s"), 1, 9), lit("X"),
         col("s").substr(lit(11), length(col("s")))).as("s"))
     val tbl = indexTable(dir, "editstr")
-    graft.sources.IndexStore.writeEditIndexBucketed(corpus, tbl,
-      numBuckets = 8, d = 4)
+    IndexStore.Edit.plain(tbl, d = 4)
+      .write(corpus, numBuckets = 8)
     val batchDir = indexDir(dir, "edit_stream")
     batch.repartition(4).write.mode("overwrite").parquet(batchDir)
     StreamingValidate.editDistanceIngestStream(s, batchDir, tbl, d = 4)
@@ -4935,8 +4834,8 @@ object SparkEntry {
         items.filter(col("id") % 2 === 0))
       .select(col("id"), col("dhash"))
     val tbl = indexTable(dir, "phstr")
-    graft.sources.IndexStore.writePhashIndexBucketed(corpusHashes, tbl,
-      numBuckets = 8, bands = 8)
+    IndexStore.Phash.plain(tbl, bands = 8)
+      .write(corpusHashes, numBuckets = 8)
     val probesDir = indexDir(dir, "phash_stream")
     items.filter(col("id") % 2 === 1).repartition(4)
       .write.mode("overwrite").parquet(probesDir)
@@ -4991,11 +4890,10 @@ object SparkEntry {
     val delta = mutated(8000000L, 20)
     val batch = mutated(7000000L, 10)
     val tbl = indexTable(dir, "editapp")
-    graft.sources.IndexStore.writeEditIndexBucketed(corpus, tbl,
-      numBuckets = 8, d = 4)
-    graft.sources.IndexStore.appendEditIndexBucketed(delta, tbl, d = 4)
-    val (segs, str, bylen) = graft.sources.IndexStore
-      .readEditIndexBucketed(s, tbl, d = 4)
+    val index = IndexStore.Edit.plain(tbl, d = 4)
+    index.write(corpus, numBuckets = 8)
+    index.append(delta)
+    val (segs, str, bylen) = index.read(s)
     Dedup.editDistanceAgainst(batch, "id", col("s"), segs, str, bylen,
         d = 4)
       .orderBy("new_id", "corpus_id")
@@ -5025,14 +4923,15 @@ object SparkEntry {
     val sink = indexDir(dir, "edit_resume_sink")
     Seq(streamDir, ckpt, sink).foreach(wipeDir)
     val tbl = indexTable(dir, "editres")
-    graft.sources.IndexStore.writeEditIndexBucketed(corpus, tbl,
-      numBuckets = 8, d = 4)
+    val index = IndexStore.Edit.plain(tbl, d = 4)
+    index.write(corpus, numBuckets = 8)
+    def run(): Unit = StreamingValidate.ingestRun(s, streamDir, index, ckpt,
+      sink) { case (b, (segs, str, bylen)) =>
+      Dedup.editDistanceAgainst(b, "id", col("s"), segs, str, bylen, d = 4) }
     fileA.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.editDistanceIngestRun(s, streamDir, tbl, d = 4,
-      checkpointDir = ckpt, sinkDir = sink)
+    run()
     fileB.coalesce(1).write.mode("append").parquet(streamDir)
-    StreamingValidate.editDistanceIngestRun(s, streamDir, tbl, d = 4,
-      checkpointDir = ckpt, sinkDir = sink)
+    run()
     s.read.parquet(sink)
       .filter(col("new_id") >= 7000000L && col("new_id") < 8000000L &&
         !(col("corpus_id") >= 7000000L && col("corpus_id") < 8000000L))
@@ -5055,12 +4954,11 @@ object SparkEntry {
     val delta = mutated(8000000L, 20)
     val batch = mutated(7000000L, 10)
     val tbl = indexTable(dir, "editcmp")
-    graft.sources.IndexStore.writeEditIndexBucketed(corpus, tbl,
-      numBuckets = 8, d = 4)
-    graft.sources.IndexStore.appendEditIndexBucketed(delta, tbl, d = 4)
-    graft.sources.IndexStore.compactEditIndexBucketed(s, tbl)
-    val (segs, str, bylen) = graft.sources.IndexStore
-      .readEditIndexBucketed(s, tbl, d = 4)
+    val index = IndexStore.Edit.plain(tbl, d = 4)
+    index.write(corpus, numBuckets = 8)
+    index.append(delta)
+    index.compact(s)
+    val (segs, str, bylen) = index.read(s)
     Dedup.editDistanceAgainst(batch, "id", col("s"), segs, str, bylen,
         d = 4)
       .orderBy("new_id", "corpus_id")
@@ -5080,13 +4978,11 @@ object SparkEntry {
     val delta = mutated(8000000L, 20)
     val batch = mutated(7000000L, 10)
     val tbl = indexTable(dir, "editver")
-    graft.sources.IndexStore.writeEditIndexBucketedVersioned(corpus,
-      tbl, numBuckets = 8, d = 4)
-    graft.sources.IndexStore.appendEditIndexBucketedVersioned(delta,
-      tbl, d = 4)
-    graft.sources.IndexStore.compactEditIndexBucketedVersioned(s, tbl)
-    val (segs, str, bylen) = graft.sources.IndexStore
-      .readEditIndexBucketedVersioned(s, tbl, d = 4)
+    val index = IndexStore.Edit.versioned(tbl, d = 4)
+    index.write(corpus, numBuckets = 8)
+    index.append(delta)
+    index.compact(s)
+    val (segs, str, bylen) = index.read(s)
     Dedup.editDistanceAgainst(batch, "id", col("s"), segs, str, bylen,
         d = 4)
       .orderBy("new_id", "corpus_id")
@@ -5108,13 +5004,11 @@ object SparkEntry {
       concat(substring(col("s"), 1, 9), lit("X"),
         col("s").substr(lit(11), length(col("s")))).as("s"))
     val tbl = indexTable(dir, "editdel")
-    graft.sources.IndexStore.writeEditIndexBucketed(corpus, tbl,
-      numBuckets = 8, d = 4)
-    graft.sources.IndexStore.deleteFromEditIndexBucketed(
-      corpus.filter(col("id") % 3 === 0).select("id"), tbl)
-    val (segs, str, bylen) = graft.sources.IndexStore
-      .readEditIndexBucketed(s, tbl, d = 4)
-    val dead = graft.sources.IndexStore.readEditDeadIds(s, tbl)
+    val index = IndexStore.Edit.plain(tbl, d = 4)
+    index.write(corpus, numBuckets = 8)
+    index.delete(corpus.filter(col("id") % 3 === 0).select("id"))
+    val (segs, str, bylen) = index.read(s)
+    val dead = index.deadIds(s)
       .select(col("id").as("corpus_id"))
     Dedup.editDistanceAgainst(batch, "id", col("s"), segs, str, bylen,
         d = 4)

@@ -180,7 +180,7 @@ object Checks {
   }
 
   /** Incremental C2/K1 served from a standing key index
-    * ([[graft.sources.IndexStore.writeKeyIndexBucketed]]): the
+    * ([[graft.sources.IndexStore.Key]]): the
     * uniqueness violations a NEW BATCH introduces — batch-internal
     * duplicate key tuples and batch keys the history already holds —
     * without rescanning history. Output one row per offending batch
@@ -216,9 +216,9 @@ object Checks {
     * bucketed index on its own bucket columns, so the parent side
     * reads in place and only the batch moves. The index's LSM rows
     * merge per key FIRST (`sum(n) > 0` — a groupBy on the index's own
-    * bucket columns, exchange-free), so keys erased by
-    * [[graft.sources.IndexStore.deleteFromKeyIndexBucketed]]
-    * tombstones correctly REOPEN as orphans instead of matching their
+    * bucket columns, exchange-free), so keys erased by the key index's
+    * `delete` ([[graft.sources.IndexStore.KeyDeletes]]: negated-count
+    * tombstones) correctly REOPEN as orphans instead of matching their
     * dead rows. Result contract identical to [[foreignKey]]: orphan
     * key tuples + counts.
     */

@@ -847,7 +847,7 @@ object Dedup {
     * portable 48-bit hash of the space-joined k-token slice. Documents
     * shorter than k emit nothing. Public as the SUBSTRING-INDEX
     * artifact schema: persist the corpus gram frame once (bucketed on
-    * `h` — [[graft.sources.IndexStore.writeSubstringIndexBucketed]])
+    * `h` — [[graft.sources.IndexStore.Substring]])
     * and serve every future batch with [[substringRunsAgainst]].
     */
   def substringGrams(df: DataFrame, idCol: String,
@@ -1327,7 +1327,7 @@ object Dedup {
   /** [[editDistancePairs]] against a STANDING corpus — the
     * incremental-ingest shape of the edit-distance family: the corpus'
     * segment hashes, strings, and length directory are persisted once
-    * ([[graft.sources.IndexStore.writeEditIndexBucketed]]) and every
+    * ([[graft.sources.IndexStore.Edit]]) and every
     * batch probes them in place. `corpusSegs` is the
     * [[editSegmentFrame]] output bucketed on `h` (the candidate
     * join's ONLY key, by the fold-length-and-slot-into-the-hash

@@ -428,7 +428,7 @@ object Multimodal {
   /** Banded (band, key) assignments of a `(id, dhash)` frame — the
     * shared candidate-generation frame of [[phashNearDuplicates]] and
     * the persisted index path ([[phashNearDuplicatesAgainst]] /
-    * [[graft.sources.IndexStore.writePhashIndexBucketed]]).
+    * [[graft.sources.IndexStore.Phash]]).
     */
   def phashBands(hashes: DataFrame, bands: Int): DataFrame = {
     require(bands >= 2 && 56 % bands == 0, s"bands must divide 56: $bands")
@@ -474,7 +474,7 @@ object Multimodal {
   /** [[phashNearDuplicates]] against a STANDING banded corpus — the
     * incremental-ingest shape for images: `corpusBanded` is the
     * `(id, dhash, band, key)` frame of [[phashBands]], persisted once
-    * ([[graft.sources.IndexStore.writePhashIndexBucketed]], bucketed
+    * ([[graft.sources.IndexStore.Phash]], bucketed
     * on exactly this join's (band, key)); only the new batch is
     * hashed and banded per ingest. Same pigeonhole completeness
     * (maxDist ≤ bands − 1) against the corpus; batch-internal pairs

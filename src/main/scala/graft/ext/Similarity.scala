@@ -181,7 +181,7 @@ object Similarity {
 
   /** The int8 corpus index frame: (id, q, scale) with q integral in
     * [-127, 127] — the persistable artifact ([[graft.sources
-    * .IndexStore.writeInt8Index]]): integral doubles and the scale
+    * .IndexStore.Int8]]): integral doubles and the scale
     * round-trip parquet bit-identically, so a query served from the
     * re-read artifact is hash-equal to the in-memory path.
     */
@@ -600,7 +600,7 @@ object Similarity {
 
   /** [[pqTopK]] served from PREBUILT (id, codes) corpus codes and a
     * (re-read) model — the persisted-index path
-    * ([[graft.sources.IndexStore.writePqIndex]]): the corpus is never
+    * ([[graft.sources.IndexStore.Pq]]): the corpus is never
     * re-encoded per query batch; per-query ADC tables derive from the
     * model's codebook doubles, which round-trip parquet bit-
     * identically, so the served ranking is hash-equal to in-memory.
@@ -632,7 +632,7 @@ object Similarity {
   /** The IVF-PQ corpus state built in ONE normalized pass:
     * (id, list_id, codes) — a list id plus m codes per vector, the
     * frame [[ivfPqTopK]] searches and [[graft.sources.IndexStore
-    * .writeIvfPqIndex]] persists.
+    * .IvfPq]] persists.
     */
   def ivfPqIndex(corpus: DataFrame, model: PqModel,
       centroids: DataFrame, idCol: String = "vec_id",

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, Multimodal, Similarity}
+import graft.ext.{Multimodal, Similarity}
 
 /** Write-once / read-many index artifacts (round-7 directive #3).
   *
@@ -37,24 +37,29 @@ import graft.ext.{Dedup, Multimodal, Similarity}
   * Doubles round-trip parquet bit-identically, so a served query is
   * hash-equal to the in-memory plan, not just approximately equal.
   *
-  * The bucketed families (MinHash dedup and its multi-index pipeline
-  * extension, substring grams, edit distance, pHash, key) are each
-  * described once as a [[Family]] value, and every lifecycle step is
-  * written once per store: the plain store ([[Bucketing]] catalog
-  * tables) and the versioned store ([[BucketedManifest]] gen
-  * manifests). The public methods below name a family and a store.
+  * '''Families and handles.''' Each index family is one public object:
+  * the bucketed [[Dedup]] (and its [[Pipeline]] extension),
+  * [[Substring]], [[Edit]], [[Phash]] and [[Key]], and the flat [[Ivf]],
+  * [[Int8]], [[Pq]] and [[IvfPq]]. Its `plain(…)` and `versioned(…)`
+  * give a handle: the family bound to its build parameters (banding,
+  * `k`, `d`, `keys`), one store and one location (a table, or a dir for
+  * the flat families). A handle's methods are the lifecycle steps that
+  * family × store cell has — build (`write`), append, delete, read /
+  * live / as-of, snapshot, compact, tiered compact, purge, rollback,
+  * add member — and nothing else, so a step a cell lacks is a compile
+  * error. Every handle that reads and appends is also an [[Ingest]]
+  * index, the one thing [[graft.streaming.StreamingValidate.ingestRun]]
+  * needs.
   *
-  * The flat similarity families (IVF, int8, PQ, IVF-PQ) are likewise
-  * each one [[Flat]] value: where its per-vector rows live in each
-  * store, its model leaves (centroids, codebooks, both or none), its
-  * encode and its serving decode. Every lifecycle step is written once
-  * per store: the plain store (a parquet leaf under `dir` —
-  * `ivf.parquet`, `int8.parquet`, `codes.parquet`, `ivfpq.parquet` —
-  * rewritten in place by purge and compact) and the versioned store (a
-  * [[VersionedFlat]] manifest chain — `dir/enc` for IVF and IVF-PQ,
-  * `dir/codes` for PQ, `dir` itself for int8 — whose purges and
-  * compactions publish versions).
-  * Both keep deleted ids in `dir/dead.parquet` until a purge.
+  * The stores: the plain bucketed store is one [[Bucketing]] catalog
+  * table per member, rewritten in place by purge and compact; the
+  * versioned one is the members of one [[BucketedManifest]] family. The
+  * plain flat store is a parquet leaf under `dir` — `ivf.parquet`,
+  * `int8.parquet`, `codes.parquet`, `ivfpq.parquet` — and the versioned
+  * one a [[VersionedFlat]] manifest chain: `dir/enc` for IVF and IVF-PQ,
+  * `dir/codes` for PQ, `dir` itself for int8. The flat stores keep
+  * deleted ids in `dir/dead.parquet` until a purge; the plain bucketed
+  * store keeps them in `<table>_dead`.
   */
 object IndexStore {
 
@@ -76,15 +81,17 @@ object IndexStore {
     * loudly instead. `shared` is the intermediate frame the members
     * derive from (cached while they are written when there is more
     * than one member); `idFrom` is the member whose `id` column types
-    * the empty tombstone frame of the id-tombstoned families.
+    * the empty tombstone frame of the id-tombstoned families; `batch`
+    * maps an ingest run's micro-batch to the frame it admits.
     */
   private final case class Family[P](kind: String, why: String,
       meta: P => Seq[(String, Any)], members: Seq[Member[P]],
       shared: P => DataFrame => DataFrame = (_: P) => identity[DataFrame] _,
-      idFrom: String = "")
+      idFrom: String = "",
+      batch: DataFrame => DataFrame = identity[DataFrame] _)
 
   /** MinHash banding parameters: (numHashes, bands, k). */
-  private type Banding = (Int, Int, Int)
+  type Banding = (Int, Int, Int)
 
   /** MinHash dedup over `(id, toks)`: `_sh` (id, sh) on id — the verify
     * join's key — and `_bands` (id, band, bucket) on (band, bucket) —
@@ -98,9 +105,9 @@ object IndexStore {
     Seq(Member("_sh", _ => Seq("id"), (_, _, sh) => sh),
       Member("_bands", _ => Seq("band", "bucket"),
         { case ((numHashes, bands, _), _, sh) =>
-          Dedup.bandAssignmentsFromShingles(sh, numHashes, bands) })),
+          graft.ext.Dedup.bandAssignmentsFromShingles(sh, numHashes, bands) })),
     shared = { case (_, _, k) => toks => toks.select(col("id"),
-      Dedup.shingleHashesFromTokens(col("toks"), k).as("sh")) },
+      graft.ext.Dedup.shingleHashesFromTokens(col("toks"), k).as("sh")) },
     idFrom = "_sh")
 
   /** The key-uniqueness member: one `(key…, n)` count row per distinct
@@ -145,7 +152,8 @@ object IndexStore {
       "overlap",
     k => Seq("k" -> k),
     Seq(Member("_grams", _ => Seq("h"),
-      (k, toks, _) => Dedup.substringGrams(toks, "id", col("toks"), k))),
+      (k, toks, _) =>
+        graft.ext.Dedup.substringGrams(toks, "id", col("toks"), k))),
     idFrom = "_grams")
 
   /** PassJoin edit distance over `(id, s)` strings (nulls dropped):
@@ -159,7 +167,7 @@ object IndexStore {
       "matches",
     d => Seq("d" -> d),
     Seq(Member("_segs", _ => Seq("h"),
-        (d, _, c) => Dedup.editSegmentFrame(c, d)),
+        (d, _, c) => graft.ext.Dedup.editSegmentFrame(c, d)),
       Member("_str", _ => Seq("id"),
         (_, _, c) => c.select(col("__id").as("id"), col("__s").as("s"))),
       Member("_bylen", _ => Seq("len"),
@@ -169,12 +177,9 @@ object IndexStore {
       .withColumn("__l", length(col("__s"))),
     idFrom = "_str")
 
-  private def editInput(df: DataFrame, idCol: String,
-      strCol: String): DataFrame =
-    df.select(col(idCol).as("id"), col(strCol).as("s"))
-
   /** Perceptual hashes `(id, dhash)` banded on (band, key) — exactly the
-    * serve join's key.
+    * serve join's key. An ingest run's batches are raw `(id, blob)`
+    * images, hashed before admission.
     */
   private val PhashFamily = Family[Int]("phash",
     "mismatched banding never collides and silently reports no " +
@@ -182,16 +187,12 @@ object IndexStore {
     bands => Seq("bands" -> bands),
     Seq(Member("_bands", _ => Seq("band", "key"),
       (bands, hashes, _) => Multimodal.phashBands(hashes, bands))),
-    idFrom = "_bands")
+    idFrom = "_bands",
+    batch = b => Multimodal.perceptualHash(b).select(col("id"), col("dhash")))
 
   private def metaFrame(spark: SparkSession,
       meta: Seq[(String, Any)]): DataFrame =
     spark.range(1).select(meta.map { case (c, v) => lit(v).as(c) }: _*)
-
-  private def writeMeta(spark: SparkSession, table: String,
-      meta: Seq[(String, Any)]): Unit =
-    metaFrame(spark, meta).write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_meta")
 
   private def checkMeta[P](built: DataFrame, where: String, f: Family[P],
       p: P): Unit = {
@@ -228,6 +229,10 @@ object IndexStore {
 
     /** The committed version (0 on the unversioned store). */
     def append(spark: SparkSession, table: String, rows: Rows): Int
+
+    def read(spark: SparkSession, table: String, member: String): DataFrame
+
+    def compact(spark: SparkSession, table: String, f: Family[_]): Unit
   }
 
   /** The plain store: one bucketed catalog table per member. Appends
@@ -249,27 +254,12 @@ object IndexStore {
       0
     }
 
-    def read(spark: SparkSession, member: String): DataFrame =
-      Bucketing.readBucketed(spark, member)
+    def read(spark: SparkSession, table: String, m: String): DataFrame =
+      Bucketing.readBucketed(spark, m)
 
     def compact(spark: SparkSession, table: String, f: Family[_]): Unit =
       f.members.foreach(m => Bucketing.compactBucketed(spark,
         table + m.suffix, if (m.lsm) keyMerge else identity))
-
-    def compactTiered(spark: SparkSession, table: String, f: Family[_],
-        minFilesPerBucket: Int): Unit =
-      f.members.foreach(m => Bucketing.compactBucketedTiered(spark,
-        table + m.suffix, minFilesPerBucket))
-
-    /** Rewrite every member without the tombstoned ids (the compaction
-      * rewrite with an anti-join merge), then clear the tombstones.
-      */
-    def purge(spark: SparkSession, table: String, f: Family[_]): Unit = {
-      val dead = readDeadIds(spark, table, table + f.idFrom)
-      f.members.foreach(m => Bucketing.compactBucketed(spark,
-        table + m.suffix, _.join(dead, Seq("id"), "left_anti")))
-      spark.sql(s"DROP TABLE IF EXISTS `${table}_dead`"): Unit
-    }
   }
 
   /** The versioned store: the members of one [[BucketedManifest]]
@@ -287,31 +277,13 @@ object IndexStore {
       BucketedManifest.append(spark, table,
         rows.map { case (t, df, _) => (t, df) })
 
-    def read(spark: SparkSession, table: String, member: String)
-        : DataFrame =
-      BucketedManifest.read(spark, table, member)
-
-    def readAsOf(spark: SparkSession, table: String, member: String,
-        v: Int): DataFrame =
-      BucketedManifest.readVersion(spark, table, member, v)
-
-    def snapshot(spark: SparkSession, table: String): Int =
-      BucketedManifest.currentVersion(spark, table)
+    def read(spark: SparkSession, table: String, m: String): DataFrame =
+      BucketedManifest.read(spark, table, m)
 
     def compact(spark: SparkSession, table: String, f: Family[_]): Unit =
       BucketedManifest.compact(spark, table, merges(table, f))
 
-    def compactTiered(spark: SparkSession, table: String, f: Family[_],
-        maxGens: Int): Boolean =
-      BucketedManifest.compactTiered(spark, table, maxGens,
-        merges(table, f))
-
-    def addMember(spark: SparkSession, table: String, member: String,
-        rows: DataFrame, keys: Seq[String], numBuckets: Int): Int =
-      BucketedManifest.addMember(spark, table, member, rows, keys,
-        numBuckets)
-
-    private def merges(table: String, f: Family[_])
+    def merges(table: String, f: Family[_])
         : Map[String, DataFrame => DataFrame] =
       f.members.filter(_.lsm)
         .map(m => (table + m.suffix).toLowerCase -> keyMerge).toMap
@@ -324,7 +296,8 @@ object IndexStore {
     // a build replaces the whole corpus: the replaced one's tombstones go
     spark.sql(s"DROP TABLE IF EXISTS `${table}_dead`")
     withRows(f, p, in, table)(store.create(spark, table, _, numBuckets))
-    writeMeta(spark, table, f.meta(p))
+    metaFrame(spark, f.meta(p)).write.mode("overwrite").format("parquet")
+      .saveAsTable(s"${table}_meta")
   }
 
   private def admit[P](store: Store, f: Family[P], p: P, delta: DataFrame,
@@ -340,795 +313,358 @@ object IndexStore {
     f.members.map(m => read(table + m.suffix))
   }
 
+  // -------------------------------------------------- bucketed handles
+  /** What one check-then-admit ingest run needs of an index
+    * ([[graft.streaming.StreamingValidate.ingestRun]]): the state a
+    * micro-batch is checked against, the batch's admission, and the
+    * catalog tables whose cached file listings each admission makes
+    * stale (none for the flat families, whose reads re-list a path).
+    */
+  trait Ingest[R] {
+    private[graft] def current(spark: SparkSession): R
+    private[graft] def admit(spark: SparkSession, batch: DataFrame): Unit
+    private[graft] def stale: Seq[String] = Seq.empty
+  }
+
+  /** A bucketed family bound to its build parameters, one store and the
+    * table its members hang off (`<table>_<member>`, `<table>_meta`).
+    * Every cell builds: `write` replaces the table's corpus, and its
+    * tombstones, with `in`'s rows in `numBuckets` buckets per member.
+    */
+  sealed abstract class Bucketed[P] private[IndexStore] (
+      private[IndexStore] val family: Family[P],
+      private[IndexStore] val params: P, val table: String,
+      private[IndexStore] val store: Store) {
+    def write(in: DataFrame, numBuckets: Int): Unit =
+      build(store, family, params, in, table, numBuckets)
+
+    /** Check the build parameters, derive the delta's member rows, and
+      * append them; the committed version (0 on the plain store).
+      */
+    private[IndexStore] def admitted(delta: DataFrame): Int =
+      admit(store, family, params, delta, table)
+  }
+
+  /** A bucketed cell that serves: `read` checks the build parameters
+    * against `_meta` and returns one frame per member as `R`, with
+    * bucket metadata attached so the per-batch serve join reads the
+    * corpus side exchange-free. `compact` rewrites every member to one
+    * file per non-empty bucket (the LSM merge for key members); content,
+    * layout and `_meta` are untouched, so the serve answer is invariant.
+    */
+  sealed abstract class Serving[P, R] private[IndexStore] (f: Family[P],
+      p: P, t: String, s: Store, shape: Seq[DataFrame] => R)
+      extends Bucketed[P](f, p, t, s) with Ingest[R] {
+    def read(spark: SparkSession): R =
+      served(spark)(store.read(spark, table, _))
+
+    def compact(spark: SparkSession): Unit = store.compact(spark, table, family)
+
+    private[IndexStore] def served(spark: SparkSession)(
+        read: String => DataFrame): R =
+      shape(serve(family, params, spark, table)(read))
+
+    private[graft] def current(spark: SparkSession): R = read(spark)
+    private[graft] def admit(spark: SparkSession, batch: DataFrame): Unit =
+      admitted(family.batch(batch)): Unit
+    override private[graft] def stale: Seq[String] =
+      family.members.map(table + _.suffix)
+  }
+
+  /** A bucketed cell on the plain store. `append` admits a delta: only
+    * the delta's rows are derived and shuffled into the tables' bucket
+    * layout (a spec mismatch is rejected by Spark), standing files are
+    * never rewritten, and every member's rows are a pure function of
+    * one document, so append(build(base), delta) ≡ build(base ∪ delta)
+    * row for row.
+    */
+  class PlainIndex[P, R] private[IndexStore] (f: Family[P], p: P,
+      t: String, shape: Seq[DataFrame] => R)
+      extends Serving[P, R](f, p, t, Plain, shape) {
+    def append(delta: DataFrame): Unit = admitted(delta): Unit
+  }
+
+  /** A bucketed cell on the versioned store. `append` commits the
+    * delta's rows of every member as ONE manifest link and returns the
+    * committed version — the freeze point "the corpus after this batch";
+    * standing generations are untouched, so captured reader frames stay
+    * valid. `read` resolves the manifest at call time; `compact`
+    * publishes merged generations the older versions keep referencing
+    * until [[BucketedManifest.vacuum]].
+    */
+  class VersionedIndex[P, R] private[IndexStore] (f: Family[P], p: P,
+      t: String, shape: Seq[DataFrame] => R)
+      extends Serving[P, R](f, p, t, Versioned, shape) {
+    def append(delta: DataFrame): Int = admitted(delta)
+  }
+
+  /** Id tombstones of the per-document families on the plain store:
+    * `delete` appends ids to `<table>_dead`, standing files untouched.
+    * Serving excludes dead corpus ids by anti-joining the OUTPUT pairs
+    * (exact: a dead document can only surface through candidates).
+    * `purge` rewrites every member without them (the compaction rewrite
+    * with an anti-join merge) and drops the tombstone table; the serve
+    * answer is invariant across it (BucketingSpec: excluded serve ≡
+    * rebuild-without-deleted ≡ post-purge serve).
+    */
+  trait Tombstones { this: PlainIndex[_, _] =>
+    def delete(ids: DataFrame): Unit =
+      ids.select(col("id")).write.mode("append").format("parquet")
+        .saveAsTable(s"${table}_dead")
+
+    /** The standing tombstone set — empty frame if none were deleted;
+      * the empty fallback's id TYPE comes from the family's own id
+      * member, never a hardcoded type (a mismatched empty frame would
+      * silently type-coerce the purge anti-join and the serve-side
+      * exclusion: string-vs-long casts can null out and un-exclude).
+      */
+    def deadIds(spark: SparkSession): DataFrame =
+      if (spark.catalog.tableExists(s"${table}_dead"))
+        spark.table(s"${table}_dead")
+      else spark.table(table + family.idFrom).select(col("id")).limit(0)
+
+    def purge(spark: SparkSession): Unit = {
+      val dead = deadIds(spark)
+      family.members.foreach(m => Bucketing.compactBucketed(spark,
+        table + m.suffix, _.join(dead, Seq("id"), "left_anti")))
+      spark.sql(s"DROP TABLE IF EXISTS `${table}_dead`"): Unit
+    }
+  }
+
   /** Key deletion as LSM tombstones: the deleted rows' per-key counts
-    * are appended NEGATED, so a fully-deleted key sums to zero.
+    * are appended NEGATED, so a fully-deleted key sums to zero from the
+    * moment the tombstone lands (one batch-sized append, no rewrite of
+    * history); the next compaction drops it physically. On the versioned
+    * store the tombstones are a commit of their own. Delete rows that
+    * were actually ingested: over-deleting drives a total negative,
+    * which no serve interprets.
     */
-  private def deleteKeys(store: Store, deleted: DataFrame, table: String,
-      keys: Seq[String]): Unit = {
-    val spark = deleted.sparkSession
-    checkMeta(spark.table(s"${table}_meta"), table, KeyFamily, keys)
-    store.append(spark, table, Seq((s"${table}_keys",
-      keyCounts(deleted, keys).withColumn("n", -col("n")), keys))): Unit
+  trait KeyDeletes { this: Serving[Seq[String], _] =>
+    def delete(deleted: DataFrame): Unit = {
+      val spark = deleted.sparkSession
+      checkMeta(spark.table(s"${table}_meta"), table, KeyFamily, params)
+      store.append(spark, table, Seq((s"${table}_keys",
+        keyCounts(deleted, params).withColumn("n", -col("n")), params))): Unit
+    }
   }
 
-  private def pair(dfs: Seq[DataFrame]): (DataFrame, DataFrame) =
-    (dfs(0), dfs(1))
-
-  // ------------------------------------------------- MinHash family
-  /** Build + persist the near-dup corpus index from a pre-tokenized
-    * `(id, toks)` frame as plain parquet under `dir`. One corpus scan:
-    * the shingle frame is cached, written, and reused for the band
-    * build. The banding parameters ride along as `meta.parquet`;
-    * [[readDedupIndex]] validates them.
+  /** Size-tiered compaction on the plain store: only buckets holding
+    * at least `minFilesPerBucket` files are rewritten
+    * ([[Bucketing.compactBucketedTiered]]).
     */
-  def writeDedupIndex(corpusToks: DataFrame, dir: String,
-      numHashes: Int = 32, bands: Int = 16, k: Int = 3): Unit = {
-    val p = (numHashes, bands, k)
-    Scratch.sweepOnce(corpusToks.sparkSession)
-    withRows(DedupFamily, p, corpusToks, dir)(_.zip(Seq("shingles", "bands"))
-      .foreach { case ((_, df, _), leaf) =>
-        df.write.mode("overwrite").parquet(s"$dir/$leaf.parquet") })
-    metaFrame(corpusToks.sparkSession, DedupFamily.meta(p))
-      .write.mode("overwrite").parquet(s"$dir/meta.parquet")
+  trait TieredPlain { this: PlainIndex[_, _] =>
+    def compactTiered(spark: SparkSession, minFilesPerBucket: Int): Unit =
+      family.members.foreach(m => Bucketing.compactBucketedTiered(spark,
+        table + m.suffix, minFilesPerBucket))
   }
 
-  /** Re-read the two dedup artifacts: (shingles, bands). The serve-time
-    * parameters must MATCH the build-time record in `meta.parquet`.
-    */
-  def readDedupIndex(spark: SparkSession, dir: String,
-      numHashes: Int = 32, bands: Int = 16, k: Int = 3)
-      : (DataFrame, DataFrame) = {
-    checkMeta(spark.read.parquet(s"$dir/meta.parquet"), dir, DedupFamily,
-      (numHashes, bands, k))
-    (spark.read.parquet(s"$dir/shingles.parquet"),
-      spark.read.parquet(s"$dir/bands.parquet"))
+  /** Every member as of FROZEN version `v`, blind to every commit since. */
+  trait AsOf[R] { this: VersionedIndex[_, R] =>
+    def readAsOf(spark: SparkSession, v: Int): R =
+      served(spark)(BucketedManifest.readVersion(spark, table, _, v))
   }
 
-  /** Bucketed-table variant of the dedup index: the band frame is
-    * saved bucketed on `(band, bucket)` — the serve join's exchange
-    * key — and the shingle frame bucketed on `id` (the verify join's
-    * key). Every future batch then joins against co-located splits:
-    * the CORPUS side of the per-batch join reads with NO Exchange
-    * (asserted in BucketingSpec); only the (small) new batch shuffles
-    * to match. At 100 TB this is the difference between re-shuffling
-    * the standing index per ingest batch and reading it in place.
+  /** The freeze point of the current state: pure metadata, since every
+    * committed version is already frozen.
     */
-  def writeDedupIndexBucketed(corpusToks: DataFrame, table: String,
-      numBuckets: Int, numHashes: Int = 32, bands: Int = 16,
-      k: Int = 3): Unit =
-    build(Plain, DedupFamily, (numHashes, bands, k), corpusToks, table,
-      numBuckets)
+  trait Snapshots { this: VersionedIndex[_, _] =>
+    def snapshot(spark: SparkSession): Int =
+      BucketedManifest.currentVersion(spark, table)
+  }
 
-  /** Re-read the bucketed dedup index: (shingles, bands), both with
-    * catalog bucket metadata so the per-batch serve join reads the
-    * corpus side with zero exchanges. Parameters validated against the
-    * build-time `_meta` record, like [[readDedupIndex]].
+  /** Size-tiered cadence ([[BucketedManifest.compactTiered]]): when the
+    * manifest references more than `maxGens` generations, merge the
+    * smallest down to the cap (LSM members re-aggregate) in one commit
+    * and reference the big ones untouched — the O(small generations)
+    * maintenance an every-batch ingest loop can run after each admit.
+    * Returns whether a merge ran.
     */
-  def readDedupIndexBucketed(spark: SparkSession, table: String,
-      numHashes: Int = 32, bands: Int = 16, k: Int = 3)
-      : (DataFrame, DataFrame) =
-    pair(serve(DedupFamily, (numHashes, bands, k), spark, table)(
-      Plain.read(spark, _)))
+  trait Tiered { this: Bucketed[_] =>
+    def maybeCompact(spark: SparkSession, maxGens: Int): Boolean =
+      BucketedManifest.compactTiered(spark, table, maxGens,
+        Versioned.merges(table, family))
+  }
 
-  /** Append a DELTA of new `(id, toks)` documents INTO the standing
-    * bucketed dedup index — the maintenance arc that closes the
-    * production ingest loop (serve the batch against the index, then
-    * ADMIT it so future batches dedup against it too; without this
-    * the index is frozen at build time and near-dups arriving in two
-    * different later batches are never caught).
-    *
-    * Only the delta is shingled, minhashed, and shuffled into the
-    * table's bucket layout (bucket count read from the catalog; a
-    * spec mismatch is rejected by Spark itself, so an append can
-    * never silently break the serve join's exchange-free contract —
-    * re-asserted after an append in BucketingSpec). The standing
-    * index files are never rewritten; each append adds one file per
-    * non-empty bucket — the LSM trade, compacted periodically like
-    * any bucketed fact table.
-    *
-    * Serve-time parameters are validated against the build-time meta
-    * record FIRST: appending band assignments computed under
-    * different banding than the standing rows would corrupt the
-    * index silently, the exact failure mode the meta record exists
-    * to stop. Shingles and band assignments are pure per-document
-    * functions, so append(build(base), delta) is ROW-IDENTICAL to
-    * build(base ∪ delta) — the x_dedup_index_append oracle computes
-    * the union-corpus answer in DuckDB and the hash-match proves it.
+  /** MinHash near-duplicate dedup over pre-tokenized `(id, toks)`
+    * documents: `_sh` (id, sh) bucketed on id, the verify join's key,
+    * and `_bands` (id, band, bucket) on (band, bucket), the candidate
+    * join's key, so every future batch joins co-located splits (the
+    * corpus side reads with NO Exchange; only the batch shuffles). The
+    * banding is pinned by `_meta`. `versioned` commits both halves in
+    * one atomic manifest per append (a half-frozen split cannot exist);
+    * x_dedup_index_versioned shares x_dedup_index_append's oracle.
+    * `files` is the unbucketed artifact: `shingles.parquet`,
+    * `bands.parquet` and the banding in `meta.parquet` under a dir.
     */
-  def appendDedupIndexBucketed(deltaToks: DataFrame, table: String,
-      numHashes: Int = 32, bands: Int = 16, k: Int = 3): Unit =
-    admit(Plain, DedupFamily, (numHashes, bands, k), deltaToks, table): Unit
+  object Dedup {
+    def files(dir: String, numHashes: Int = 32, bands: Int = 16,
+        k: Int = 3): DedupFiles = new DedupFiles(dir, (numHashes, bands, k))
 
-  /** Tombstone DELETION for the MinHash index: deleted document ids
-    * land in a sibling `_dead` table — standing index files untouched,
-    * one id-list append. Serving excludes dead corpus ids by
-    * anti-joining the OUTPUT pairs (batch-sized — the cheap side; a
-    * dead doc can only surface through candidates, so post-join
-    * exclusion is exact). [[purgeDedupIndexBucketed]] later removes
-    * dead rows physically via the compaction rewrite and clears the
-    * tombstones; the serve answer is invariant across the purge
-    * (BucketingSpec proves excluded-serve ≡ post-purge serve ≡
-    * rebuild-without-deleted).
+    def plain(table: String, numHashes: Int = 32, bands: Int = 16,
+        k: Int = 3) =
+      new PlainIndex[Banding, (DataFrame, DataFrame)](DedupFamily,
+        (numHashes, bands, k), table, m => (m(0), m(1))) with Tombstones
+
+    def versioned(table: String, numHashes: Int = 32, bands: Int = 16,
+        k: Int = 3) =
+      new VersionedIndex[Banding, (DataFrame, DataFrame)](DedupFamily,
+        (numHashes, bands, k), table, m => (m(0), m(1)))
+        with AsOf[(DataFrame, DataFrame)] with Snapshots with Tiered
+  }
+
+  /** The unbucketed dedup artifact under `dir`. One corpus scan builds
+    * it: the shingle frame is cached, written, and reused for the band
+    * build. `read` returns (shingles, bands) after checking the banding
+    * against `meta.parquet`.
     */
-  def deleteFromDedupIndexBucketed(ids: DataFrame, table: String): Unit =
-    appendDeadIds(ids, table)
+  final class DedupFiles private[IndexStore] (dir: String, p: Banding) {
+    def write(corpusToks: DataFrame): Unit = {
+      Scratch.sweepOnce(corpusToks.sparkSession)
+      withRows(DedupFamily, p, corpusToks, dir)(_.zip(Seq("shingles", "bands"))
+        .foreach { case ((_, df, _), leaf) =>
+          df.write.mode("overwrite").parquet(s"$dir/$leaf.parquet") })
+      metaFrame(corpusToks.sparkSession, DedupFamily.meta(p))
+        .write.mode("overwrite").parquet(s"$dir/meta.parquet")
+    }
 
-  /** Generic id-tombstone primitives shared by every PER-DOCUMENT index
-    * family (MinHash, substring grams, edit-distance, pHash — all pure
-    * functions of single documents, so deletes are id-keyed): deleted
-    * ids land in a sibling `_dead` table, one batch-sized append,
-    * standing index files untouched. Each family serves with dead
-    * corpus ids excluded by anti-joining the OUTPUT pairs (batch-sized,
-    * exact — a dead doc can only surface through candidates) and purges
-    * physically via its compaction rewrite with an anti-join merge.
-    */
-  private def appendDeadIds(ids: DataFrame, table: String): Unit =
-    ids.select(col("id"))
-      .write.mode("append").format("parquet")
-      .saveAsTable(s"${table}_dead")
+    def read(spark: SparkSession): (DataFrame, DataFrame) = {
+      checkMeta(spark.read.parquet(s"$dir/meta.parquet"), dir, DedupFamily, p)
+      (spark.read.parquet(s"$dir/shingles.parquet"),
+        spark.read.parquet(s"$dir/bands.parquet"))
+    }
+  }
 
-  /** The standing tombstone set — empty frame if none were deleted;
-    * the empty fallback's id TYPE comes from `idTypeFrom`'s own id
-    * column, never a hardcoded type (a mismatched empty frame would
-    * silently type-coerce the purge anti-join and the serve-side
-    * exclusion: string-vs-long casts can null out and un-exclude).
-    */
-  def readDeadIds(spark: SparkSession, table: String,
-      idTypeFrom: String): DataFrame =
-    if (spark.catalog.tableExists(s"${table}_dead"))
-      spark.table(s"${table}_dead")
-    else spark.table(idTypeFrom).select(col("id")).limit(0)
-
-  /** The MinHash index's standing tombstone set (id type from `_sh`). */
-  def readDedupDeadIds(spark: SparkSession, table: String): DataFrame =
-    readDeadIds(spark, table, table + DedupFamily.idFrom)
-
-  /** Physically remove tombstoned documents from both index halves
-    * (the compaction rewrite with an anti-join merge) and clear the
-    * tombstone table. After a purge, serving needs no exclusion until
-    * the next delete.
-    */
-  def purgeDedupIndexBucketed(spark: SparkSession, table: String): Unit =
-    Plain.purge(spark, table, DedupFamily)
-
-  /** Compact the standing bucketed MinHash dedup index back to one
-    * data file per non-empty bucket ([[Bucketing.compactBucketed]] on
-    * both halves) — the periodic rewrite [[appendDedupIndexBucketed]]
-    * prices in: after b appended batches every serve scan opens
-    * O(b × buckets) small files. Content, bucket layout, and the
-    * `_meta` parameter record are all untouched, so serving after a
-    * compaction is the SAME join plan over the SAME rows — the
-    * x_dedup_index_compact row shares x_dedup_index_append's oracle
-    * verbatim (hash-identity IS the claim), and BucketingSpec asserts
-    * the file count actually drops and the exchange-free serve
-    * contract survives.
-    */
-  def compactDedupIndexBucketed(spark: SparkSession,
-      table: String): Unit =
-    Plain.compact(spark, table, DedupFamily)
-
-  // -------------------------- MinHash family, versioned (round-15 #1)
-  /** The MinHash dedup index on [[BucketedManifest]] gen-manifest
-    * tables. Both halves (`_sh` on id, `_bands` on (band, bucket)) are
-    * MEMBERS of ONE family: every append commits both in a single
-    * atomic manifest (a half-frozen crash split cannot exist), every
-    * commit is a time-travelable version, and compaction publishes
-    * merged generations the old versions keep referencing — no hard
-    * links, no catalog-table-per-version, no pointer swap. Serve reads
-    * are partition-pruned catalog scans carrying the bucket metadata,
-    * so the per-batch join still reads the corpus side exchange-free
-    * (BucketedManifestSpec asserts the executed plan). Content contract
-    * unchanged: x_dedup_index_versioned shares x_dedup_index_append's
-    * oracle verbatim through a build/append/compact cycle.
-    */
-  def writeDedupIndexBucketedVersioned(corpusToks: DataFrame,
-      table: String, numBuckets: Int, numHashes: Int = 32,
-      bands: Int = 16, k: Int = 3): Unit =
-    build(Versioned, DedupFamily, (numHashes, bands, k), corpusToks, table,
-      numBuckets)
-
-  /** (shingles, bands) of the CURRENT version, bucket metadata
-    * attached; serve-time parameters validated against the build-time
-    * record. The manifest is resolved at call time, so a per-batch
-    * caller always serves against everything committed so far.
-    */
-  def readDedupIndexBucketedVersioned(spark: SparkSession,
-      table: String, numHashes: Int = 32, bands: Int = 16, k: Int = 3)
-      : (DataFrame, DataFrame) =
-    pair(serve(DedupFamily, (numHashes, bands, k), spark, table)(
-      Versioned.read(spark, table, _)))
-
-  /** [[appendDedupIndexBucketed]] as ONE atomic family commit: the
-    * delta's shingle and band generations land under a claimed gen
-    * number and both halves advance in a single manifest link — the
-    * committed version is returned and IS the freeze point ("the
-    * corpus after this batch"). Standing generations untouched;
-    * captured reader frames remain valid.
-    */
-  def appendDedupIndexBucketedVersioned(deltaToks: DataFrame,
-      table: String, numHashes: Int = 32, bands: Int = 16,
-      k: Int = 3): Int =
-    admit(Versioned, DedupFamily, (numHashes, bands, k), deltaToks, table)
-
-  /** The freeze point of the current ingest state. On the manifest
-    * store a snapshot is PURE METADATA — every committed version is
-    * already frozen (generations are immutable, manifests reference
-    * them forever until vacuum), so "freeze now" just reads the
-    * current version number.
-    */
-  def snapshotDedupIndexBucketedVersioned(spark: SparkSession,
-      table: String): Int =
-    Versioned.snapshot(spark, table)
-
-  /** (shingles, bands) of FROZEN version `v` — the corpus exactly as
-    * of that commit, regardless of every admission since.
-    */
-  def readDedupIndexBucketedVersionedAsOf(spark: SparkSession,
-      table: String, v: Int, numHashes: Int = 32, bands: Int = 16,
-      k: Int = 3): (DataFrame, DataFrame) =
-    pair(serve(DedupFamily, (numHashes, bands, k), spark, table)(
-      Versioned.readAsOf(spark, table, _, v)))
-
-  /** [[compactDedupIndexBucketed]] as version publication: both
-    * halves' one-file-per-bucket merged generations land under one
-    * claimed gen and ONE manifest commit — concurrent readers keep
-    * their versions' generations until [[BucketedManifest.vacuum]].
-    * Content, layout, `_meta` untouched, so the serve answer is
-    * hash-invariant.
-    */
-  def compactDedupIndexBucketedVersioned(spark: SparkSession,
-      table: String): Unit =
-    Versioned.compact(spark, table, DedupFamily)
-
-  /** Size-tiered cadence for the versioned MinHash family
-    * ([[BucketedManifest.compactTiered]]): when the manifest
-    * references more than `maxGens` generations, merge the smallest
-    * down to the cap and reference the big ones untouched — the
-    * O(small-generations) maintenance an every-batch ingest loop can
-    * afford to run after each admit.
-    */
-  def maybeCompactDedupIndexBucketedVersioned(spark: SparkSession,
-      table: String, maxGens: Int): Boolean =
-    Versioned.compactTiered(spark, table, DedupFamily, maxGens)
-
-  // ------------------- multi-index pipeline family (round-15 capstone)
   /** The MULTI-INDEX pipeline family: the MinHash halves (content
-    * identity) and a key member (document identity) in ONE manifest
-    * chain — the composability the gen-manifest store was built for.
-    * A training-data ingest loop screens every batch through BOTH
-    * gates (near-dup content, duplicate id) and admits the survivors
-    * into all three members with ONE atomic commit: a crash between
-    * "document counted in the dedup index" and "document counted in
-    * the key index" cannot exist, so the two indexes can never
-    * disagree about what was admitted — the cross-index consistency a
-    * per-index commit protocol cannot give. The dedup halves serve
-    * through [[readDedupIndexBucketedVersioned]] unchanged (same
-    * member names and `_meta` record); the key member serves the
-    * uniqueness gate.
+    * identity) and a key member `_keys` on `id` (document identity) in
+    * ONE manifest chain, with the dedup `_meta` record. An ingest loop
+    * screens every batch through both gates and admits the survivors
+    * into all three members with one atomic commit, so the two indexes
+    * can never disagree about what was admitted. The dedup halves serve
+    * through [[Dedup.versioned]] unchanged.
     */
-  def writePipelineIndexVersioned(corpusToks: DataFrame, table: String,
-      numBuckets: Int, numHashes: Int = 32, bands: Int = 16,
-      k: Int = 3): Unit =
-    build(Versioned, PipelineFamily, (numHashes, bands, k), corpusToks,
-      table, numBuckets)
-
-  /** Admit a delta into ALL THREE members atomically (one manifest
-    * link — returns the committed version, which is the freeze point
-    * of the whole pipeline state).
-    */
-  def appendPipelineIndexVersioned(deltaToks: DataFrame, table: String,
-      numHashes: Int = 32, bands: Int = 16, k: Int = 3): Int =
-    admit(Versioned, PipelineFamily, (numHashes, bands, k), deltaToks,
-      table)
-
-  /** The key member's raw LSM rows (id, n) of the current version —
-    * the uniqueness gate anti-joins present ids, audits sum totals.
-    */
-  def readPipelineKeyIndex(spark: SparkSession, table: String): DataFrame =
-    Versioned.read(spark, table, s"${table}_keys")
-
-  /** EVOLVE a versioned MinHash family into the pipeline family
-    * online ([[BucketedManifest.addMember]] — round-16): the key
-    * member is derived from the ids ALREADY ADMITTED (the `_sh`
-    * member's id set — corpus plus every admission so far) and added
-    * in one manifest commit. From that version on,
-    * [[readPipelineKeyIndex]] and the identity gate serve exactly as
-    * if the family had been born with
-    * [[writePipelineIndexVersioned]]; no existing generation is
-    * touched, nothing is rebuilt, and time travel before the birth
-    * version keeps working for the original members. Returns the
-    * birth version.
-    */
-  def addPipelineKeyMember(spark: SparkSession, table: String,
-      numBuckets: Int): Int =
-    Versioned.addMember(spark, table, s"${table}_keys",
-      keyCounts(Versioned.read(spark, table, s"${table}_sh")
-        .select("id").distinct(), Seq("id")),
-      Seq("id"), numBuckets)
-
-  /** Size-tiered cadence for the whole pipeline family (round-16
-    * directive #2 — the multi-gate ingest loop is the operator a real
-    * pipeline runs forever, so its generation growth must be
-    * boundable like every other ingest loop's): ONE tiered merge
-    * across all three members — the MinHash halves merge by plain
-    * concatenation (pure per-document rows), the key member through
-    * the LSM re-aggregation (split rows collapse, zero-total keys
-    * drop) — published as ONE manifest commit, so even the
-    * maintenance path keeps the cross-member atomicity the family
-    * exists for. Big standing generations are referenced untouched.
-    */
-  def maybeCompactPipelineIndexVersioned(spark: SparkSession,
-      table: String, maxGens: Int): Boolean =
-    Versioned.compactTiered(spark, table, PipelineFamily, maxGens)
-
-  // ------------------------------------------ substring gram family
-  /** Build + persist the SUBSTRING-DEDUP gram index from a
-    * pre-tokenized `(id, toks)` frame: `(id, pos, h)` k-gram rows
-    * ([[Dedup.substringGrams]]) saved as a bucketed table on `h` — the
-    * key BOTH serve-time joins (anchor candidates and diagonal
-    * extension) use, so every future batch reads the corpus side of
-    * both joins in place (asserted in BucketingSpec). The gram size
-    * `k` rides along as `_meta`: serving with a different k than the
-    * index was built with never matches a single gram and silently
-    * reports zero overlap — fail loudly instead.
-    */
-  def writeSubstringIndexBucketed(corpusToks: DataFrame, table: String,
-      numBuckets: Int, k: Int): Unit =
-    build(Plain, SubstringFamily, k, corpusToks, table, numBuckets)
-
-  /** Re-read the bucketed substring gram index; the serve-time `k`
-    * must match the build-time record.
-    */
-  def readSubstringIndexBucketed(spark: SparkSession, table: String,
-      k: Int): DataFrame =
-    serve(SubstringFamily, k, spark, table)(Plain.read(spark, _)).head
-
-  /** Append a DELTA of new `(id, toks)` documents INTO the standing
-    * bucketed substring gram index — the LSM maintenance arc the
-    * MinHash index already has ([[appendDedupIndexBucketed]]): without
-    * it a growing 100 TB corpus must re-gram-hash the FULL corpus per
-    * ingest batch just to admit the batch into future screens.
-    *
-    * Only the delta is gram-hashed and shuffled into the table's
-    * bucket layout; standing files are never rewritten. The gram size
-    * is validated against the build-time `_meta` record FIRST:
-    * appending k'-grams into a k-gram index would silently split every
-    * cross-boundary run. [[graft.ext.Dedup.substringGrams]] is a pure
-    * per-document function, so append(build(base), delta) is
-    * ROW-IDENTICAL to build(base ∪ delta) — the
-    * x_dedup_substring_append oracle computes the union-corpus answer
-    * from scratch in DuckDB and the hash-match proves it.
-    */
-  def appendSubstringIndexBucketed(deltaToks: DataFrame, table: String,
-      k: Int): Unit =
-    admit(Plain, SubstringFamily, k, deltaToks, table): Unit
-
-  /** Compact the standing bucketed substring gram index — same
-    * contract as [[compactDedupIndexBucketed]].
-    */
-  def compactSubstringIndexBucketed(spark: SparkSession,
-      table: String): Unit =
-    Plain.compact(spark, table, SubstringFamily)
-
-  /** Size-tiered compaction of the substring gram index: only buckets
-    * that accumulated >= `minFilesPerBucket` files are rewritten
-    * ([[Bucketing.compactBucketedTiered]]) — the periodic maintenance
-    * shape for a 100 TB index whose appends hit a few hot buckets.
-    */
-  def compactSubstringIndexTiered(spark: SparkSession, table: String,
-      minFilesPerBucket: Int): Unit =
-    Plain.compactTiered(spark, table, SubstringFamily, minFilesPerBucket)
-
-  /** Tombstone DELETION for the substring gram index — the MinHash
-    * id-tombstone pattern (grams are a pure per-document frame, so
-    * deletes are id-keyed): deleted ids land in `_dead`; serving
-    * excludes dead corpus ids by anti-joining the OUTPUT run/pair rows
-    * on corpus_id (exact — a dead doc can only surface through gram
-    * candidates); [[purgeSubstringIndexBucketed]] later removes dead
-    * grams physically. The right-to-be-forgotten shape: no rewrite of
-    * a 100 TB gram index on the request path.
-    */
-  def deleteFromSubstringIndexBucketed(ids: DataFrame,
-      table: String): Unit =
-    appendDeadIds(ids, table)
-
-  /** The substring index's standing tombstone set. */
-  def readSubstringDeadIds(spark: SparkSession, table: String): DataFrame =
-    readDeadIds(spark, table, table + SubstringFamily.idFrom)
-
-  /** Physically remove tombstoned documents' grams (the compaction
-    * rewrite with an anti-join merge) and clear the tombstone table;
-    * the served answer is invariant across the purge (BucketingSpec:
-    * excluded serve ≡ rebuild-without-deleted ≡ post-purge serve).
-    */
-  def purgeSubstringIndexBucketed(spark: SparkSession,
-      table: String): Unit =
-    Plain.purge(spark, table, SubstringFamily)
-
-  /** The substring gram index on [[BucketedManifest]] gen-manifest
-    * tables: one member, the gram frame on `h`; `_meta` pins k exactly
-    * as the plain twin does. Every admit commits a manifest and IS the
-    * freeze point, snapshots are pure metadata reads, and tiered
-    * compaction references big standing generations untouched. Serve
-    * content matches the plain store: x_dedup_substring_versioned,
-    * x_dedup_substring_tiered_versioned, and
-    * x_stream_substring_versioned share x_dedup_substring_append's
-    * oracle verbatim.
-    */
-  def writeSubstringIndexBucketedVersioned(corpusToks: DataFrame,
-      table: String, numBuckets: Int, k: Int): Unit =
-    build(Versioned, SubstringFamily, k, corpusToks, table, numBuckets)
-
-  /** The CURRENT version's gram set, bucket metadata attached (the
-    * manifest is resolved at call time, so a per-batch caller always
-    * serves against everything committed so far).
-    */
-  def readSubstringIndexBucketedVersioned(spark: SparkSession,
-      table: String, k: Int): DataFrame =
-    serve(SubstringFamily, k, spark, table)(
-      Versioned.read(spark, table, _)).head
-
-  /** Admit a delta's grams as a NEW VERSION (returned — it IS the
-    * freeze point "the corpus after this batch"; standing generations
-    * untouched, captured reader frames remain valid).
-    */
-  def appendSubstringIndexBucketedVersioned(deltaToks: DataFrame,
-      table: String, k: Int): Int =
-    admit(Versioned, SubstringFamily, k, deltaToks, table)
-
-  /** The freeze point of the current ingest state — PURE METADATA on
-    * the manifest store (every committed version is already frozen).
-    */
-  def snapshotSubstringIndexBucketedVersioned(spark: SparkSession,
-      table: String): Int =
-    Versioned.snapshot(spark, table)
-
-  /** The gram set as of FROZEN version `v` — blind to every admission
-    * and rewrite since that commit.
-    */
-  def readSubstringIndexBucketedVersionedAsOf(spark: SparkSession,
-      table: String, v: Int, k: Int): DataFrame =
-    serve(SubstringFamily, k, spark, table)(
-      Versioned.readAsOf(spark, table, _, v)).head
-
-  /** Full compaction as version publication: one merged generation,
-    * one file per non-empty bucket; older versions keep their
-    * generations until [[BucketedManifest.vacuum]]. Content-invariant
-    * (grams are pure per-document rows — no merge algebra needed).
-    */
-  def compactSubstringIndexBucketedVersioned(spark: SparkSession,
-      table: String): Unit =
-    Versioned.compact(spark, table, SubstringFamily)
-
-  /** Size-tiered cadence ([[BucketedManifest.compactTiered]]): when
-    * the manifest references more than `maxGens` generations, merge
-    * the SMALLEST down to the cap and reference the big standing ones
-    * untouched — O(small generations) maintenance with snapshot
-    * isolation.
-    */
-  def maybeCompactSubstringIndexBucketedVersioned(spark: SparkSession,
-      table: String, maxGens: Int): Boolean =
-    Versioned.compactTiered(spark, table, SubstringFamily, maxGens)
-
-  // ------------------------------------------------ edit-dist index
-  /** Persist the PassJoin corpus for incremental edit-distance
-    * screening ([[graft.ext.Dedup.editDistanceAgainst]]): three
-    * bucketed tables, each on its own serve join's key — `_segs`
-    * (id, len, h) on `h`, `_str` (id, s) on `id`, `_bylen` (len, id)
-    * on `len`. All three are pure per-string functions, so
-    * append(build(base), delta) ≡ build(base ∪ delta) row-for-row and
-    * the generic LSM append/compaction paths apply. `_meta` pins `d`:
-    * segments cut for a different threshold never hash-collide with
-    * the probes and silently report nothing — fail loudly instead.
-    */
-  def writeEditIndexBucketed(corpus: DataFrame, table: String,
-      numBuckets: Int, d: Int, idCol: String = "id",
-      strCol: String = "s"): Unit =
-    build(Plain, EditFamily, d, editInput(corpus, idCol, strCol), table,
-      numBuckets)
-
-  /** Admit a checked batch into the standing edit index (all three
-    * tables; only the delta shuffles).
-    */
-  def appendEditIndexBucketed(delta: DataFrame, table: String, d: Int,
-      idCol: String = "id", strCol: String = "s"): Unit =
-    admit(Plain, EditFamily, d, editInput(delta, idCol, strCol), table)
-      : Unit
-
-  /** Re-read the edit index: (segs, str, bylen); serve-time `d` must
-    * match the build-time record.
-    */
-  def readEditIndexBucketed(spark: SparkSession, table: String, d: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val m = serve(EditFamily, d, spark, table)(Plain.read(spark, _))
-    (m(0), m(1), m(2))
+  object Pipeline {
+    def versioned(table: String, numHashes: Int = 32, bands: Int = 16,
+        k: Int = 3): PipelineIndex =
+      new PipelineIndex(table, (numHashes, bands, k))
   }
 
-  /** Compact all three standing edit-index tables back to one file
-    * per non-empty bucket — same contract as
-    * [[compactDedupIndexBucketed]] (content, layout, `_meta`
-    * untouched; the serve plan is the same join over the same rows,
-    * so x_dedup_editdist_compact shares the append row's oracle
-    * verbatim).
-    */
-  def compactEditIndexBucketed(spark: SparkSession,
-      table: String): Unit =
-    Plain.compact(spark, table, EditFamily)
+  final class PipelineIndex private[IndexStore] (t: String, p: Banding)
+      extends Bucketed[Banding](PipelineFamily, p, t, Versioned) with Tiered {
+    /** Admit into all three members in one commit; the version. */
+    def append(delta: DataFrame): Int = admitted(delta)
 
-  /** The PassJoin edit index on [[BucketedManifest]] gen-manifest
-    * tables: ONE family with THREE members, so every admit advances
-    * all three in ONE atomic manifest commit — per-table appends could
-    * crash with the segment table a batch ahead of the string table (a
-    * candidate whose verify fetch finds no string); here that split
-    * cannot exist. `_meta` pins d as on the plain store. Serve content
-    * matches the plain store: x_dedup_editdist_versioned and
-    * x_stream_editdist_versioned share x_dedup_editdist_append's
-    * oracle verbatim.
-    */
-  def writeEditIndexBucketedVersioned(corpus: DataFrame, table: String,
-      numBuckets: Int, d: Int, idCol: String = "id",
-      strCol: String = "s"): Unit =
-    build(Versioned, EditFamily, d, editInput(corpus, idCol, strCol),
-      table, numBuckets)
+    /** The key member's raw LSM rows (id, n) of the current version —
+      * the uniqueness gate anti-joins present ids, audits sum totals.
+      */
+    def readKeys(spark: SparkSession): DataFrame =
+      Versioned.read(spark, table, s"${table}_keys")
 
-  /** Admit a checked batch as a NEW VERSION — all three members in
-    * one atomic manifest commit (returned; it IS the freeze point).
-    */
-  def appendEditIndexBucketedVersioned(delta: DataFrame, table: String,
-      d: Int, idCol: String = "id", strCol: String = "s"): Int =
-    admit(Versioned, EditFamily, d, editInput(delta, idCol, strCol), table)
-
-  def readEditIndexBucketedVersioned(spark: SparkSession, table: String,
-      d: Int): (DataFrame, DataFrame, DataFrame) = {
-    val m = serve(EditFamily, d, spark, table)(
-      Versioned.read(spark, table, _))
-    (m(0), m(1), m(2))
+    /** EVOLVE a versioned MinHash family into this one online
+      * ([[BucketedManifest.addMember]]): the key member is derived from
+      * the ids already admitted (the `_sh` member's id set) and added in
+      * one commit, touching no existing generation; time travel before
+      * the birth version keeps working for the original members. Returns
+      * the birth version.
+      */
+    def addKeyMember(spark: SparkSession, numBuckets: Int): Int =
+      BucketedManifest.addMember(spark, table, s"${table}_keys",
+        keyCounts(Versioned.read(spark, table, s"${table}_sh")
+          .select("id").distinct(), Seq("id")),
+        Seq("id"), numBuckets)
   }
 
-  /** Full compaction as version publication — one merged generation
-    * per member, all three published in ONE manifest commit.
+  /** SUBSTRING-dedup grams over pre-tokenized `(id, toks)` documents:
+    * `(id, pos, h)` k-gram rows ([[graft.ext.Dedup.substringGrams]])
+    * bucketed on `h`, the key both serve-time joins (anchor candidates
+    * and diagonal extension) use. `_meta` pins `k`: k'-grams never match
+    * k-grams and would silently report zero overlap.
     */
-  def compactEditIndexBucketedVersioned(spark: SparkSession,
-      table: String): Unit =
-    Versioned.compact(spark, table, EditFamily)
+  object Substring {
+    def plain(table: String, k: Int) =
+      new PlainIndex[Int, DataFrame](SubstringFamily, k, table, _.head)
+        with Tombstones with TieredPlain
 
-  /** Tombstone DELETION for the edit-distance index: all three tables
-    * are pure per-string frames keyed by id, so one id-list tombstone
-    * covers segments, strings, and the length directory alike. Serving
-    * excludes dead corpus ids on the OUTPUT pairs;
-    * [[purgeEditIndexBucketed]] rewrites all three tables without dead
-    * rows and clears the tombstones.
+    def versioned(table: String, k: Int) =
+      new VersionedIndex[Int, DataFrame](SubstringFamily, k, table, _.head)
+        with AsOf[DataFrame] with Snapshots with Tiered
+  }
+
+  /** The PassJoin corpus for incremental edit-distance screening
+    * ([[graft.ext.Dedup.editDistanceAgainst]]) over `(id, s)` strings:
+    * `read` serves (segs, str, bylen) — `_segs` (id, len, h) on `h`,
+    * `_str` (id, s) on `id`, `_bylen` (len, id) on `len`. `_meta` pins
+    * `d`: segments cut for another threshold never collide with the
+    * probes. On the versioned store one commit advances all three, so a
+    * candidate whose verify fetch finds no string cannot exist.
     */
-  def deleteFromEditIndexBucketed(ids: DataFrame, table: String): Unit =
-    appendDeadIds(ids, table)
+  object Edit {
+    def plain(table: String, d: Int) =
+      new PlainIndex[Int, (DataFrame, DataFrame, DataFrame)](EditFamily, d,
+        table, m => (m(0), m(1), m(2))) with Tombstones
 
-  /** The edit index's standing tombstone set. */
-  def readEditDeadIds(spark: SparkSession, table: String): DataFrame =
-    readDeadIds(spark, table, table + EditFamily.idFrom)
+    def versioned(table: String, d: Int) =
+      new VersionedIndex[Int, (DataFrame, DataFrame, DataFrame)](EditFamily,
+        d, table, m => (m(0), m(1), m(2)))
+  }
 
-  /** Physically remove tombstoned strings from all three edit-index
-    * tables (compaction rewrites with an anti-join merge) and clear
-    * the tombstone table; serve answer invariant (BucketingSpec).
-    */
-  def purgeEditIndexBucketed(spark: SparkSession, table: String): Unit =
-    Plain.purge(spark, table, EditFamily)
-
-  // ----------------------------------------------------- pHash index
-  /** Persist the banded perceptual-hash frame
-    * ([[graft.ext.Multimodal.phashBands]]) as a bucketed table on
-    * (band, key) — exactly the serve join's key, so checking an image
-    * ingest batch against the standing corpus
+  /** Banded perceptual hashes ([[graft.ext.Multimodal.phashBands]] over
+    * `(id, dhash)` rows) bucketed on (band, key), exactly the serve
+    * join's key, so checking an image batch
     * ([[graft.ext.Multimodal.phashNearDuplicatesAgainst]]) reads the
-    * corpus side in place; only the batch is decoded, hashed, banded,
-    * and shuffled. `_meta` pins the band count: hashes banded
-    * differently never collide and silently report no near-dups —
-    * fail loudly instead.
+    * corpus side in place. `_meta` pins the band count.
     */
-  def writePhashIndexBucketed(hashes: DataFrame, table: String,
-      numBuckets: Int, bands: Int = 8): Unit =
-    build(Plain, PhashFamily, bands, hashes, table, numBuckets)
+  object Phash {
+    def plain(table: String, bands: Int = 8) =
+      new PlainIndex[Int, DataFrame](PhashFamily, bands, table, _.head)
+        with Tombstones
 
-  def readPhashIndexBucketed(spark: SparkSession, table: String,
-      bands: Int = 8): DataFrame =
-    serve(PhashFamily, bands, spark, table)(Plain.read(spark, _)).head
+    def versioned(table: String, bands: Int = 8) =
+      new VersionedIndex[Int, DataFrame](PhashFamily, bands, table, _.head)
+  }
 
-  /** Admit a checked image batch's `(id, dhash)` rows into the
-    * standing pHash index: only the delta is banded and shuffled into
-    * the table's bucket layout; standing files untouched. Band count
-    * validated against the build-time `_meta` record first. Bands are
-    * a pure per-image function, so append(build(base), delta) ≡
-    * build(base ∪ delta) row-for-row — x_mm_phash_append proves it by
-    * sharing the full-corpus serve oracle.
+  /** The key-uniqueness / foreign-key index: one `(key…, n)` count row
+    * per distinct non-null key tuple, bucketed on the key columns, so
+    * checking a batch against history ([[graft.check.Checks
+    * .uniqueAgainstIndex]]) reads the history side in place and only
+    * the batch shuffles. LSM semantics: appends add the delta's per-key
+    * counts as new rows, so one key's total may be split across rows
+    * and `read` returns RAW rows — consumers sum per key (an FK anti
+    * join ignores multiplicity). `compact` re-aggregates split rows and
+    * drops zero totals (collapsed tombstones); `_meta` pins the key set.
     */
-  def appendPhashIndexBucketed(deltaHashes: DataFrame, table: String,
-      bands: Int = 8): Unit =
-    admit(Plain, PhashFamily, bands, deltaHashes, table): Unit
+  object Key {
+    def plain(table: String, keys: Seq[String]) =
+      new PlainIndex[Seq[String], DataFrame](KeyFamily, keys, table, _.head)
+        with KeyDeletes
 
-  /** Compact the standing pHash band table — same contract as
-    * [[compactDedupIndexBucketed]].
-    */
-  def compactPhashIndexBucketed(spark: SparkSession,
-      table: String): Unit =
-    Plain.compact(spark, table, PhashFamily)
+    def versioned(table: String, keys: Seq[String]) =
+      new VersionedIndex[Seq[String], DataFrame](KeyFamily, keys, table,
+        _.head) with AsOf[DataFrame] with KeyDeletes with Tiered
+  }
 
-  /** The pHash band index on [[BucketedManifest]] gen-manifest tables:
-    * one member on (band, key); `_meta` pins the band count. Serve
-    * content matches the plain store: x_mm_phash_versioned and
-    * x_stream_phash_versioned share x_mm_phash_served's oracle
-    * verbatim.
-    */
-  def writePhashIndexBucketedVersioned(hashes: DataFrame, table: String,
-      numBuckets: Int, bands: Int = 8): Unit =
-    build(Versioned, PhashFamily, bands, hashes, table, numBuckets)
-
-  def readPhashIndexBucketedVersioned(spark: SparkSession,
-      table: String, bands: Int = 8): DataFrame =
-    serve(PhashFamily, bands, spark, table)(
-      Versioned.read(spark, table, _)).head
-
-  /** Admit a checked image batch as a NEW VERSION (returned; it IS
-    * the freeze point).
-    */
-  def appendPhashIndexBucketedVersioned(deltaHashes: DataFrame,
-      table: String, bands: Int = 8): Int =
-    admit(Versioned, PhashFamily, bands, deltaHashes, table)
-
-  def compactPhashIndexBucketedVersioned(spark: SparkSession,
-      table: String): Unit =
-    Versioned.compact(spark, table, PhashFamily)
-
-  /** Tombstone DELETION for the pHash index: the banded hash frame is
-    * a pure per-image function, so deletes are id-keyed like the other
-    * per-document families. Serving excludes dead corpus ids on the
-    * OUTPUT pairs; [[purgePhashIndexBucketed]] rewrites the band table
-    * without dead rows and clears the tombstones.
-    */
-  def deleteFromPhashIndexBucketed(ids: DataFrame, table: String): Unit =
-    appendDeadIds(ids, table)
-
-  /** The pHash index's standing tombstone set. */
-  def readPhashDeadIds(spark: SparkSession, table: String): DataFrame =
-    readDeadIds(spark, table, table + PhashFamily.idFrom)
-
-  /** Physically remove tombstoned images' band rows (compaction
-    * rewrite with an anti-join merge) and clear the tombstone table;
-    * serve answer invariant (BucketingSpec).
-    */
-  def purgePhashIndexBucketed(spark: SparkSession, table: String): Unit =
-    Plain.purge(spark, table, PhashFamily)
-
-  // ------------------------------------------------------- key index
-  /** The key-uniqueness / foreign-key twin of the dedup index arc —
-    * the validation-core operator a growing 100 TB table actually
-    * needs: re-running `unique`/`primaryKey` over the FULL history per
-    * ingest batch re-scans and re-shuffles everything ever ingested,
-    * when the only question is "does the BATCH collide with what the
-    * history already holds". The key index persists one
-    * `(key…, n)` count row per distinct historical key tuple, bucketed
-    * on the key columns — exactly the serve join's key, so checking a
-    * batch reads the history side in place (BucketingSpec) and only
-    * the batch shuffles.
-    *
-    * LSM semantics, deliberately: [[appendKeyIndexBucketed]] appends
-    * the DELTA's per-key counts as new rows (never rewrites standing
-    * files), so one key's total may be split across several physical
-    * rows; every serve path merges with `sum(n) GROUP BY key` — a
-    * groupBy on the bucket columns, i.e. exchange-free — which makes
-    * correctness invariant under append granularity.
-    * [[compactKeyIndexBucketed]] is therefore a true LSM merge, not
-    * just a file rewrite: it re-aggregates split rows while
-    * compacting, and the serve answer cannot change because the serve
-    * already sums.
-    */
-  def writeKeyIndexBucketed(df: DataFrame, table: String,
-      keys: Seq[String], numBuckets: Int): Unit =
-    build(Plain, KeyFamily, keys, df, table, numBuckets)
-
-  /** Admit a checked batch's keys into the standing index: only the
-    * delta aggregates and shuffles into the table's bucket layout;
-    * standing files are untouched. Key columns are validated against
-    * the build-time `_meta` record first.
-    */
-  def appendKeyIndexBucketed(delta: DataFrame, table: String,
-      keys: Seq[String]): Unit =
-    admit(Plain, KeyFamily, keys, delta, table): Unit
-
-  /** Re-read the standing key index (bucket metadata from the
-    * catalog). Rows are RAW LSM rows — consumers must merge per key
-    * ([[graft.check.Checks.uniqueAgainstIndex]] does; FK serving
-    * doesn't need to, an anti join ignores right-side multiplicity).
-    */
-  def readKeyIndexBucketed(spark: SparkSession, table: String,
-      keys: Seq[String]): DataFrame =
-    serve(KeyFamily, keys, spark, table)(Plain.read(spark, _)).head
-
-  /** DELETE keys from the standing index WITHOUT touching history
-    * files — LSM tombstones: the deleted rows' per-key counts are
-    * appended NEGATED, and because every serve path aggregates with
-    * `sum(n)` per key, a fully-deleted key contributes exactly zero
-    * from the moment the tombstone lands. This is the
-    * right-to-be-forgotten shape at 100 TB: no rewrite of years of
-    * standing files, one batch-sized append; the next
-    * [[compactKeyIndexBucketed]] collapses tombstones physically
-    * (zero-total rows are dropped by the merge). Contract: delete
-    * rows that were actually ingested — over-deleting drives a key's
-    * total negative, which no serve interprets.
-    */
-  def deleteFromKeyIndexBucketed(deleted: DataFrame, table: String,
-      keys: Seq[String]): Unit =
-    deleteKeys(Plain, deleted, table, keys)
-
-  /** True LSM merge-compaction: re-aggregate rows a key accumulated
-    * across appends AND rewrite to one file per non-empty bucket,
-    * DROPPING keys whose total reached zero (collapsed tombstones —
-    * a fully-deleted key physically disappears here). The merge is a
-    * groupBy on the bucket columns (exchange-free) and the serve
-    * paths already sum per key, so the served answer is invariant —
-    * asserted in BucketingSpec alongside the file-count drop.
-    */
-  def compactKeyIndexBucketed(spark: SparkSession, table: String): Unit =
-    Plain.compact(spark, table, KeyFamily)
-
-  // ------------------------- key index, versioned (round-14 #2 cont.)
-  /** The key index on [[BucketedManifest]] gen-manifests — the LSM
-    * family: split rows, NEGATED-COUNT tombstones, and a
-    * merge-compaction that re-aggregates INTO the merged generation
-    * (the store's `merges` hook carries the full LSM algebra, not just
-    * file layout). Every append — admissions AND tombstones alike — is
-    * an atomic versioned commit, so the key history is time-travelable
-    * per batch with no freeze step.
+  /** `Key.versioned(table, keys).write`, kept by name for
+    * perfbench/src/PerfBench.scala; goes with the next benchmark change.
     */
   def writeKeyIndexBucketedVersioned(df: DataFrame, table: String,
       keys: Seq[String], numBuckets: Int): Unit =
-    build(Versioned, KeyFamily, keys, df, table, numBuckets)
+    Key.versioned(table, keys).write(df, numBuckets)
 
-  /** Admit a delta's count rows as a new version (returns it). */
+  /** `Key.versioned(table, keys).append`, kept for perfbench likewise. */
   def appendKeyIndexBucketedVersioned(delta: DataFrame, table: String,
       keys: Seq[String]): Int =
-    admit(Versioned, KeyFamily, keys, delta, table)
+    Key.versioned(table, keys).append(delta)
 
-  /** RAW LSM rows of the current version — consumers merge per key,
-    * like [[readKeyIndexBucketed]].
-    */
+  /** `Key.versioned(table, keys).read`, kept for perfbench likewise. */
   def readKeyIndexBucketedVersioned(spark: SparkSession, table: String,
       keys: Seq[String]): DataFrame =
-    serve(KeyFamily, keys, spark, table)(
-      Versioned.read(spark, table, _)).head
+    Key.versioned(table, keys).read(spark)
 
-  /** RAW LSM rows as of version `v` — the key history at that commit. */
-  def readKeyIndexBucketedVersionedAsOf(spark: SparkSession,
-      table: String, keys: Seq[String], v: Int): DataFrame =
-    serve(KeyFamily, keys, spark, table)(
-      Versioned.readAsOf(spark, table, _, v)).head
-
-  /** Negated-count tombstones, committed as their own version
-    * ([[deleteFromKeyIndexBucketed]]'s contract — deletion is part of
-    * the auditable history too).
-    */
-  def deleteFromKeyIndexBucketedVersioned(deleted: DataFrame,
-      table: String, keys: Seq[String]): Unit =
-    deleteKeys(Versioned, deleted, table, keys)
-
-  /** The LSM merge-compaction as version publication: split rows
-    * re-aggregate, zero-total keys (collapsed tombstones) drop, and
-    * the result lands as ONE merged generation — readers of older
-    * versions keep their generations until vacuum.
-    */
-  def compactKeyIndexBucketedVersioned(spark: SparkSession,
-      table: String): Unit =
-    Versioned.compact(spark, table, KeyFamily)
-
-  /** Size-tiered cadence for the versioned key index: the smallest
-    * generations MERGE (with the LSM re-aggregation — split rows
-    * collapse, zero-totals drop within the merged part), big standing
-    * generations are referenced untouched. Serve-invariant: consumers
-    * sum per key, and re-aggregating a subset of generations never
-    * changes a key's total.
+  /** `Key.versioned(table, …).maybeCompact`, kept for perfbench likewise.
+    * The cadence reads no key column, so the handle's key set is empty.
     */
   def maybeCompactKeyIndexBucketedVersioned(spark: SparkSession,
       table: String, maxGens: Int): Boolean =
-    Versioned.compactTiered(spark, table, KeyFamily, maxGens)
-
+    Key.versioned(table, Nil).maybeCompact(spark, maxGens)
 
   // ----------------------------------------- flat similarity artifacts
   /** The write-once model leaves of a flat family under `dir`: written
@@ -1159,47 +695,57 @@ object IndexStore {
     }, readPqModel)
 
   /** A flat similarity family: one row per corpus vector, keyed by
-    * `id`. `plain(dir)` is where the plain store keeps the rows (a
-    * parquet leaf) and `versioned(dir)` where the versioned store keeps
-    * them (`dir` itself when the family has no model leaves to sit
-    * beside). `encode` maps `(vectors, model, idCol, vecCol)` to the
+    * `id`. `plainAt(dir)` is where the plain store keeps the rows (a
+    * parquet leaf) and `versionedAt(dir)` where the versioned store
+    * keeps them (`dir` itself when the family has no model leaves to
+    * sit beside). `encode` maps `(vectors, model, idCol, vecCol)` to the
     * stored rows, a pure per-vector function of the static model, so
     * append(build(base), delta) ≡ build(base ∪ delta) row-for-row;
-    * `decode` maps stored rows to the serving frame. The raw stored
-    * rows type the empty tombstone set and are what purges and
-    * compactions rewrite, so a packed schema survives them byte-exact.
-    * `name` spells the public build method, `write<name>Index`.
+    * `decode` maps stored rows to the serving frame, and `state` pairs
+    * it with the model leaf serving reads beside it (IVF's and IVF-PQ's
+    * centroids). The raw stored rows type the empty tombstone set and
+    * are what purges and compactions rewrite, so a packed schema
+    * survives them byte-exact.
     */
-  private[graft] final case class Flat[M](name: String,
-      plain: String => String, versioned: String => String, model: Model[M],
+  private final case class Flat[M, S](plainAt: String => String,
+      versionedAt: String => String, model: Model[M],
       encode: (DataFrame, M, String, String) => DataFrame,
+      state: (SparkSession, String, DataFrame) => S,
       decode: DataFrame => DataFrame = identity[DataFrame] _)
 
-  private[graft] val Ivf = Flat[DataFrame]("Ivf", _ + "/ivf.parquet",
-    _ + "/enc", Centroids, Similarity.ivfIndexWith(_, _, _, _))
+  private def withCentroids(spark: SparkSession, dir: String,
+      rows: DataFrame): (DataFrame, DataFrame) =
+    (rows, Centroids.read(spark, dir))
+
+  private val IvfFlat = Flat[DataFrame, (DataFrame, DataFrame)](
+    _ + "/ivf.parquet", _ + "/enc", Centroids,
+    Similarity.ivfIndexWith(_, _, _, _), withCentroids)
 
   /** Quantized values are exact integers in [-127, 127], so the tinyint
     * pack on write and the double cast on read both round-trip exactly.
     */
-  private[graft] val Int8 = Flat[Unit]("Int8", _ + "/int8.parquet", identity,
+  private val Int8Flat = Flat[Unit, DataFrame](_ + "/int8.parquet", identity,
     Model((_, _, _) => (), (_, _) => ()), (df, _, idCol, vecCol) =>
       retype(Similarity.int8Index(df, idCol, vecCol), "tinyint"),
-    retype(_, "double"))
+    (_, _, rows) => rows, retype(_, "double"))
 
   private def retype(df: DataFrame, q: String): DataFrame =
     df.select(col("id"), transform(col("q"), _.cast(q)).as("q"), col("scale"))
 
-  private[graft] val Pq = Flat[Similarity.PqModel]("Pq", _ + "/codes.parquet",
+  private val PqFlat = Flat[Similarity.PqModel, DataFrame](_ + "/codes.parquet",
     _ + "/codes", Codebooks, (df, model, idCol, vecCol) =>
-      Similarity.pqEncode(df, model, idCol, vecCol).select("id", "codes"))
+      Similarity.pqEncode(df, model, idCol, vecCol).select("id", "codes"),
+    (_, _, rows) => rows)
 
-  private[graft] val IvfPq = Flat[(Similarity.PqModel, DataFrame)]("IvfPq",
+  private val IvfPqFlat = Flat[(Similarity.PqModel, DataFrame),
+      (DataFrame, DataFrame)](
     _ + "/ivfpq.parquet", _ + "/enc", Model(
       { case (s, (model, c), dir) =>
         Centroids.write(s, c, dir); Codebooks.write(s, model, dir) },
       (s, dir) => (Codebooks.read(s, dir), Centroids.read(s, dir))),
     { case (df, (model, c), idCol, vecCol) =>
-      Similarity.ivfPqIndex(df, model, c, idCol, vecCol) })
+      Similarity.ivfPqIndex(df, model, c, idCol, vecCol) },
+    withCentroids)
 
   /** One of the two places a flat family's stored rows can live, given
     * as where the rows of family `f` sit under `dir` (`at`) and four
@@ -1208,11 +754,11 @@ object IndexStore {
     * neighbor is replaced by the next-best, so exclusion cannot wait
     * for the output.
     */
-  private abstract class FlatStore(suffix: String,
-      at: Flat[_] => String => String, built: String => Boolean,
+  private abstract class FlatStore(
+      val at: Flat[_, _] => String => String, built: String => Boolean,
       create: (DataFrame, String) => Unit, append: (DataFrame, String) => Unit,
       raw: (SparkSession, String) => DataFrame) {
-    def build[M](f: Flat[M], corpus: DataFrame, model: M, dir: String,
+    def build[M](f: Flat[M, _], corpus: DataFrame, model: M, dir: String,
         idCol: String, vecCol: String): Unit = {
       Scratch.sweepOnce(corpus.sparkSession) // age out dead-pid scratch
       // a build replaces the whole corpus: the replaced one's tombstones go
@@ -1225,32 +771,32 @@ object IndexStore {
       * An unbuilt store fails before anything is read or written: an
       * append into it would silently create a partial corpus.
       */
-    def admit[M](f: Flat[M], delta: DataFrame, dir: String,
+    def admit[M](f: Flat[M, _], delta: DataFrame, dir: String,
         idCol: String, vecCol: String): Unit = {
-      require(built(at(f)(dir)), s"no ${f.name} artifact at $dir — " +
-        s"build with write${f.name}Index$suffix first")
+      require(built(at(f)(dir)),
+        s"no index artifact at $dir — build with write before append")
       append(f.encode(delta, f.model.read(delta.sparkSession, dir), idCol,
         vecCol), at(f)(dir))
     }
 
-    def read(spark: SparkSession, f: Flat[_], dir: String): DataFrame =
+    def read(spark: SparkSession, f: Flat[_, _], dir: String): DataFrame =
       f.decode(raw(spark, at(f)(dir)))
 
     /** The tombstones, or an empty set typed by the stored rows. */
-    def dead(spark: SparkSession, f: Flat[_], dir: String): DataFrame =
+    def dead(spark: SparkSession, f: Flat[_, _], dir: String): DataFrame =
       if (new java.io.File(s"$dir/dead.parquet").exists())
         spark.read.parquet(s"$dir/dead.parquet")
       else raw(spark, at(f)(dir)).select(col("id")).limit(0)
 
-    def live(spark: SparkSession, f: Flat[_], dir: String): DataFrame =
+    def live(spark: SparkSession, f: Flat[_, _], dir: String): DataFrame =
       read(spark, f, dir).join(dead(spark, f, dir), Seq("id"), "left_anti")
   }
 
-  /** The plain store: the rows are the leaf `plain(dir)`, appends land
+  /** The plain store: the rows are the leaf `plainAt(dir)`, appends land
     * as files beside the standing ones, and purge and compaction rewrite
     * it in place.
     */
-  private object FlatPlain extends FlatStore("", _.plain,
+  private object FlatPlain extends FlatStore(_.plainAt,
       p => new java.io.File(p).exists(),
       (rows, p) => rows.write.mode("overwrite").parquet(p),
       (rows, p) => rows.write.mode("append").parquet(p),
@@ -1265,9 +811,9 @@ object IndexStore {
       * harness shape; an object-store deployment swaps in its
       * FileSystem.
       */
-    def rewrite(spark: SparkSession, f: Flat[_], dir: String,
+    def rewrite(spark: SparkSession, f: Flat[_, _], dir: String,
         targetFiles: Int = 0): Unit = {
-      val cur = new java.io.File(f.plain(dir))
+      val cur = new java.io.File(f.plainAt(dir))
       val tmp = new java.io.File(s"${cur}__purge")
       val old = new java.io.File(s"${cur}__old")
       val live = spark.read.parquet(cur.getPath)
@@ -1283,40 +829,19 @@ object IndexStore {
   }
 
   /** The versioned store: the rows are a [[VersionedFlat]] manifest
-    * chain at `versioned(dir)`, so appends and compactions publish new
-    * versions instead of mutating what a concurrent reader holds, and
-    * every version stays readable until vacuumed. The model leaves are
-    * written once and never rewritten, so they stay plain. Tombstones
-    * mask serving at once, but the bytes persist in older versions
-    * until a purge publishes the excluded frame AND
+    * chain at `versionedAt(dir)`, so appends and compactions publish
+    * new versions instead of mutating what a concurrent reader holds,
+    * and every version stays readable until vacuumed. The model leaves
+    * are written once and never rewritten, so they stay plain.
+    * Tombstones mask serving at once, but the bytes persist in older
+    * versions until a purge publishes the excluded frame AND
     * [[VersionedFlat.vacuum]] drops the versions that still hold them:
     * physical erasure is purge + vacuum, by construction of time travel.
     */
-  private object FlatVersioned extends FlatStore("Versioned",
-      _.versioned, VersionedFlat.currentVersion(_) > 0,
+  private object FlatVersioned extends FlatStore(_.versionedAt,
+      VersionedFlat.currentVersion(_) > 0,
       VersionedFlat.write(_, _), VersionedFlat.append(_, _),
       VersionedFlat.read(_, _)) {
-    /** Version `asOf` decoded; 0 = current. */
-    def readAsOf(spark: SparkSession, f: Flat[_], dir: String,
-        asOf: Int): DataFrame =
-      if (asOf > 0)
-        f.decode(VersionedFlat.readVersion(spark, f.versioned(dir), asOf))
-      else read(spark, f, dir)
-
-    /** The merged batch is PUBLISHED as a new version. By default this
-      * is LAYOUT-ONLY — tombstones keep masking and the dead bytes stay
-      * until a purge — because in a store whose versions are immutable
-      * snapshots, silently erasing rows during a compact would
-      * contradict what time travel promises. That deliberately DIVERGES
-      * from the plain store's compact, which folds and clears pending
-      * tombstones, so the divergence is a call-site-visible flag:
-      * `purgeTombstones = true` opts into fold-and-clear.
-      */
-    def compact(spark: SparkSession, f: Flat[_], dir: String,
-        targetFiles: Int, purgeTombstones: Boolean): Unit =
-      if (purgeTombstones) purge(spark, f, dir, targetFiles)
-      else VersionedFlat.compact(spark, f.versioned(dir), targetFiles)
-
     /** Publish the rows minus the tombstoned ids as the next version,
       * then clear the tombstones — publish STRICTLY BEFORE the clear,
       * so a crash between the two leaves pending tombstones whose
@@ -1327,335 +852,182 @@ object IndexStore {
       * ConcurrentModificationException instead of being silently erased
       * by a purge built from a now-stale snapshot.
       */
-    def purge(spark: SparkSession, f: Flat[_], dir: String,
+    def purge(spark: SparkSession, f: Flat[_, _], dir: String,
         targetFiles: Int): Unit = {
-      val (gone, at) = (dead(spark, f, dir), f.versioned(dir))
+      val (gone, at) = (dead(spark, f, dir), f.versionedAt(dir))
       val v = VersionedFlat.currentVersion(at)
       VersionedFlat.replace(VersionedFlat.readVersion(spark, at, v)
         .join(gone, Seq("id"), "left_anti"), at, targetFiles, basedOn = v)
       Scratch.deleteRecursively(new java.io.File(s"$dir/dead.parquet"))
     }
-
-    /** Revert to version `v` by reference ([[VersionedFlat.rollback]]);
-      * the reverted-from versions stay time-travelable and the model
-      * leaves are untouched. Returns the committed version.
-      */
-    def rollback(f: Flat[_], dir: String, v: Int): Int =
-      VersionedFlat.rollback(f.versioned(dir), v)
   }
 
-  /** The flat artifacts' one tombstone writer: deleted ids append to
-    * `dir/dead.parquet`, the standing artifact untouched.
+  // ------------------------------------------------------ flat handles
+  /** A flat family's artifact under `dir` in one store. `write` builds
+    * it from the corpus and the caller's model (`()` for int8, which has
+    * none; (codebooks, centroids) for IVF-PQ) and drops the replaced
+    * artifact's tombstones; `append` encodes a delta against the
+    * artifact's own persisted model, and fails on an unbuilt store.
+    * `S` is what a read serves: the decoded rows, paired with the
+    * centroids for IVF and IVF-PQ.
     */
-  private def appendDeadFile(ids: DataFrame, dir: String): Unit =
-    ids.select(col("id")).write.mode("append").parquet(s"$dir/dead.parquet")
+  sealed abstract class FlatIndex[M, S] private[IndexStore] (
+      private[IndexStore] val flat: Flat[M, S], val dir: String,
+      private[IndexStore] val store: FlatStore) extends Ingest[S] {
+    def write(corpus: DataFrame, model: M, idCol: String = "vec_id",
+        vecCol: String = "embedding"): Unit =
+      store.build(flat, corpus, model, dir, idCol, vecCol)
 
-  // ------------------------------------------------------- IVF, plain
-  /** Build the IVF index (`ivf.parquet`: id long, nvec array<double>,
-    * list_id long) under an explicit centroid frame
+    def append(delta: DataFrame, idCol: String = "vec_id",
+        vecCol: String = "embedding"): Unit =
+      store.admit(flat, delta, dir, idCol, vecCol)
+
+    /** Where the stored rows live: the plain leaf or the manifest dir. */
+    private[graft] def at: String = store.at(flat)(dir)
+
+    private[IndexStore] def served(spark: SparkSession, rows: DataFrame): S =
+      flat.state(spark, dir, rows)
+
+    private[graft] def admit(spark: SparkSession, batch: DataFrame): Unit =
+      append(batch)
+  }
+
+  /** Tombstone deletion: `delete` appends ids to `dir/dead.parquet`, the
+    * stored rows untouched, and `live` serves the rows minus them — the
+    * state an ingest run checks against.
+    */
+  trait FlatTombstones[S] { this: FlatIndex[_, S] =>
+    def delete(ids: DataFrame): Unit =
+      ids.select(col("id")).write.mode("append").parquet(s"$dir/dead.parquet")
+
+    def live(spark: SparkSession): S =
+      served(spark, store.live(spark, flat, dir))
+
+    override private[graft] def current(spark: SparkSession): S = live(spark)
+  }
+
+  /** A flat artifact on the plain store. `purge` rewrites the leaf
+    * without the tombstoned rows and clears them (live serve ≡
+    * rebuild-without-deleted ≡ post-purge serve); `compact` rewrites the
+    * live rows into `targetFiles` files, folding and clearing pending
+    * tombstones the same way.
+    */
+  final class FlatPlainIndex[M, S] private[IndexStore] (f: Flat[M, S],
+      d: String) extends FlatIndex[M, S](f, d, FlatPlain)
+      with FlatTombstones[S] {
+    def read(spark: SparkSession): S =
+      served(spark, FlatPlain.read(spark, flat, dir))
+
+    def purge(spark: SparkSession): Unit = FlatPlain.rewrite(spark, flat, dir)
+
+    def compact(spark: SparkSession, targetFiles: Int = 1): Unit =
+      FlatPlain.rewrite(spark, flat, dir, targetFiles)
+  }
+
+  /** A flat artifact on the versioned store: `read` serves version
+    * `asOf` (0 = current), and serving any version equals building from
+    * that version's corpus. `autoCompacting(maxBatches)` is this
+    * artifact as an ingest run's index whose every admission is
+    * followed by [[VersionedFlat.maybeCompact]], so a long-lived
+    * stream's read plans keep O(1) multi-path roots (0 = off).
+    */
+  class FlatVersionedIndex[M, S] private[IndexStore] (f: Flat[M, S],
+      d: String) extends FlatIndex[M, S](f, d, FlatVersioned) {
+    def read(spark: SparkSession, asOf: Int = 0): S =
+      served(spark, if (asOf > 0)
+        flat.decode(VersionedFlat.readVersion(spark, at, asOf))
+      else FlatVersioned.read(spark, flat, dir))
+
+    private[graft] def current(spark: SparkSession): S = read(spark)
+
+    def autoCompacting(maxBatches: Int): Ingest[S] = new Ingest[S] {
+      private[graft] def current(spark: SparkSession): S =
+        FlatVersionedIndex.this.current(spark)
+      private[graft] def admit(spark: SparkSession, batch: DataFrame): Unit = {
+        FlatVersionedIndex.this.admit(spark, batch)
+        if (maxBatches > 0)
+          VersionedFlat.maybeCompact(spark, at, maxBatches): Unit
+      }
+    }
+  }
+
+  /** Tombstones on the versioned store. `compact` publishes the merged
+    * batch as a new version and is LAYOUT-ONLY by default: in a store
+    * whose versions are immutable snapshots, silently erasing rows
+    * during a compact would contradict what time travel promises. That
+    * deliberately diverges from the plain compact, so
+    * `purgeTombstones = true` opts into fold-and-clear, which is
+    * `purge`: the live rows published as the next version, then the
+    * tombstones cleared.
+    */
+  trait VersionedTombstones[S] extends FlatTombstones[S] {
+    this: FlatVersionedIndex[_, S] =>
+    def purge(spark: SparkSession, targetFiles: Int = 1): Unit =
+      FlatVersioned.purge(spark, flat, dir, targetFiles)
+
+    def compact(spark: SparkSession, targetFiles: Int = 1,
+        purgeTombstones: Boolean = false): Unit =
+      if (purgeTombstones) purge(spark, targetFiles)
+      else VersionedFlat.compact(spark, at, targetFiles)
+  }
+
+  /** Revert to version `v` by reference ([[VersionedFlat.rollback]]):
+    * serving the current version then equals serving `v`, the
+    * reverted-from versions stay time-travelable and the model leaves
+    * are untouched. Returns the committed version.
+    */
+  trait Rollbacks { this: FlatVersionedIndex[_, _] =>
+    def rollback(v: Int): Int = VersionedFlat.rollback(at, v)
+  }
+
+  /** IVF: `ivf.parquet` / `enc` (id long, nvec array<double>, list_id
+    * long) under an explicit centroid frame
     * ([[Similarity.firstIdCentroids]] for the deterministic plumbing
-    * path, [[Similarity.kmeansCentroids]] for the quality path); the
-    * artifact records whichever was used.
+    * path, [[Similarity.kmeansCentroids]] for the quality path); reads
+    * serve (rows, centroids).
     */
-  def writeIvfIndex(corpus: DataFrame, centroids: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    FlatPlain.build(Ivf, corpus, centroids, dir, idCol, vecCol)
+  object Ivf {
+    def plain(dir: String) = new FlatPlainIndex(IvfFlat, dir)
 
-  /** (index, centroids). */
-  def readIvfIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    (FlatPlain.read(spark, Ivf, dir), Centroids.read(spark, dir))
+    def versioned(dir: String) = new FlatVersionedIndex(IvfFlat, dir)
+      with VersionedTombstones[(DataFrame, DataFrame)] with Rollbacks
+  }
 
-  /** Admit a vector batch, assigned against the artifact's own
-    * centroids; x_sim_ivf_append shares x_sim_ivf_topk's full-corpus
-    * oracle verbatim.
+  /** int8: `int8.parquet` / `dir` (id long, q array<tinyint> in
+    * [-127, 127], scale double), 4× smaller than float32; reads serve
+    * (id, q array<double>, scale), the frame
+    * [[graft.ext.Similarity.quantizedTopKFromIndex]] consumes. Per-vector
+    * quantization has no fitted state, so the model is `()`.
     */
-  def appendIvfIndex(delta: DataFrame, dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit =
-    FlatPlain.admit(Ivf, delta, dir, idCol, vecCol)
+  object Int8 {
+    def plain(dir: String) = new FlatPlainIndex(Int8Flat, dir)
 
-  /** Tombstone deletion: dead ids append to `dead.parquet`;
-    * [[readIvfIndexLive]] excludes them before ranking and
-    * [[purgeIvfIndex]] removes them physically.
+    def versioned(dir: String) = new FlatVersionedIndex(Int8Flat, dir)
+  }
+
+  /** PQ: `codebooks.parquet` (the model, see [[readPqModel]]) and
+    * `codes.parquet` / `codes` (id long, codes array<int>: m small codes
+    * per corpus vector); reads serve the codes.
     */
-  def deleteFromIvfIndex(ids: DataFrame, dir: String): Unit =
-    appendDeadFile(ids, dir)
+  object Pq {
+    def plain(dir: String) = new FlatPlainIndex(PqFlat, dir)
 
-  def readIvfDeadIds(spark: SparkSession, dir: String): DataFrame =
-    FlatPlain.dead(spark, Ivf, dir)
+    def versioned(dir: String) = new FlatVersionedIndex(PqFlat, dir)
+      with VersionedTombstones[DataFrame]
+  }
 
-  /** (index minus tombstoned ids, centroids): the frame serving must
-    * rank over while tombstones are pending.
+  /** IVF-PQ: `centroids.parquet` (probe routing), `codebooks.parquet`
+    * (the model) and `ivfpq.parquet` / `enc` (id, list_id, codes); the
+    * model is (codebooks, centroids) and reads serve (rows, centroids).
+    * Serving never touches the float corpus again
+    * ([[graft.ext.Similarity.ivfPqTopKFromIndex]]).
     */
-  def readIvfIndexLive(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    (FlatPlain.live(spark, Ivf, dir), Centroids.read(spark, dir))
+  object IvfPq {
+    def plain(dir: String) = new FlatPlainIndex(IvfPqFlat, dir)
 
-  /** IvfDeleteSpec: live serve ≡ rebuild-without-deleted ≡ post-purge
-    * serve.
-    */
-  def purgeIvfIndex(spark: SparkSession, dir: String): Unit =
-    FlatPlain.rewrite(spark, Ivf, dir)
-
-  /** Rewrite the live rows into `targetFiles` files, folding and
-    * clearing pending tombstones; x_sim_ivf_compact shares
-    * x_sim_ivf_topk's oracle verbatim.
-    */
-  def compactIvfIndex(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit =
-    FlatPlain.rewrite(spark, Ivf, dir, targetFiles)
-
-  // --------------------------------------------------- IVF, versioned
-  /** Serving any version equals building from that version's corpus:
-    * x_sim_ivf_versioned shares x_sim_ivf_topk's oracle through a
-    * write/append/compact cycle, and x_sim_ivf_time_travel pins
-    * version 1's serve to an evens-only recompute.
-    */
-  def writeIvfIndexVersioned(corpus: DataFrame, centroids: DataFrame,
-      dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit =
-    FlatVersioned.build(Ivf, corpus, centroids, dir, idCol, vecCol)
-
-  def appendIvfIndexVersioned(delta: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    FlatVersioned.admit(Ivf, delta, dir, idCol, vecCol)
-
-  /** Layout-only unless `purgeTombstones`. */
-  def compactIvfIndexVersioned(spark: SparkSession, dir: String,
-      targetFiles: Int = 1, purgeTombstones: Boolean = false): Unit =
-    FlatVersioned.compact(spark, Ivf, dir, targetFiles, purgeTombstones)
-
-  /** (enc of version `asOf` — 0 = current, centroids). */
-  def readIvfIndexVersioned(spark: SparkSession, dir: String,
-      asOf: Int = 0): (DataFrame, DataFrame) =
-    (FlatVersioned.readAsOf(spark, Ivf, dir, asOf), Centroids.read(spark, dir))
-
-  /** Revert a poisoned admission: serving the current version then
-    * equals serving version `v` (x_sim_ivf_rollback).
-    */
-  def rollbackIvfIndexVersioned(spark: SparkSession, dir: String, v: Int): Int =
-    FlatVersioned.rollback(Ivf, dir, v)
-
-  def deleteFromIvfIndexVersioned(ids: DataFrame, dir: String): Unit =
-    appendDeadFile(ids, dir)
-
-  def readIvfVersionedDeadIds(spark: SparkSession, dir: String): DataFrame =
-    FlatVersioned.dead(spark, Ivf, dir)
-
-  /** (current enc minus tombstoned ids, centroids). */
-  def readIvfIndexVersionedLive(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    (FlatVersioned.live(spark, Ivf, dir), Centroids.read(spark, dir))
-
-  def purgeIvfIndexVersioned(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit =
-    FlatVersioned.purge(spark, Ivf, dir, targetFiles)
-
-  // -------------------------------------------------- int8, versioned
-  /** Batches land packed and [[VersionedFlat.compact]]'s raw rewrite
-    * keeps the tinyint schema; x_sim_quantized_versioned shares
-    * x_sim_quantized's oracle through a write/append/compact cycle.
-    */
-  def writeInt8IndexVersioned(corpus: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    FlatVersioned.build(Int8, corpus, (), dir, idCol, vecCol)
-
-  def appendInt8IndexVersioned(delta: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    FlatVersioned.admit(Int8, delta, dir, idCol, vecCol)
-
-  /** Version `asOf` (0 = current) decoded for serving. */
-  def readInt8IndexVersioned(spark: SparkSession, dir: String,
-      asOf: Int = 0): DataFrame =
-    FlatVersioned.readAsOf(spark, Int8, dir, asOf)
-
-  // ------------------------------------------------------ int8, plain
-  /** Persist the int8-quantized corpus as `int8.parquet` (id long,
-    * q array<tinyint> in [-127, 127], scale double), 4× smaller than
-    * float32 (Int8PackSpec measures the on-disk ratio);
-    * x_sim_quantized_served shares x_sim_quantized's oracle verbatim.
-    */
-  def writeInt8Index(corpus: DataFrame, dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit =
-    FlatPlain.build(Int8, corpus, (), dir, idCol, vecCol)
-
-  /** Per-vector quantization has no fitted state (each row's scale is
-    * its own max-abs), so the delta is only quantized and packed.
-    */
-  def appendInt8Index(delta: DataFrame, dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit =
-    FlatPlain.admit(Int8, delta, dir, idCol, vecCol)
-
-  /** (id, q array<double>, scale): the exact frame
-    * [[graft.ext.Similarity.quantizedTopKFromIndex]] consumes.
-    */
-  def readInt8Index(spark: SparkSession, dir: String): DataFrame =
-    FlatPlain.read(spark, Int8, dir)
-
-  def deleteFromInt8Index(ids: DataFrame, dir: String): Unit =
-    appendDeadFile(ids, dir)
-
-  def readInt8DeadIds(spark: SparkSession, dir: String): DataFrame =
-    FlatPlain.dead(spark, Int8, dir)
-
-  /** The int8 corpus minus tombstoned ids, decoded for serving. */
-  def readInt8IndexLive(spark: SparkSession, dir: String): DataFrame =
-    FlatPlain.live(spark, Int8, dir)
-
-  def purgeInt8Index(spark: SparkSession, dir: String): Unit =
-    FlatPlain.rewrite(spark, Int8, dir)
-
-  def compactInt8Index(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit =
-    FlatPlain.rewrite(spark, Int8, dir, targetFiles)
-
-  // -------------------------------------------------------- PQ, plain
-  /** Persist a PQ index: `codebooks.parquet` (the model) and
-    * `codes.parquet` (id long, codes array<int>: m small codes per
-    * corpus vector, the state that stays in executor memory when float
-    * vectors cannot).
-    */
-  def writePqIndex(corpus: DataFrame, model: Similarity.PqModel, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    FlatPlain.build(Pq, corpus, model, dir, idCol, vecCol)
-
-  /** Encode the delta against the artifact's own codebooks;
-    * x_sim_pq_append shares x_sim_pq's fitted-literal oracle verbatim.
-    */
-  def appendPqIndex(delta: DataFrame, dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit =
-    FlatPlain.admit(Pq, delta, dir, idCol, vecCol)
-
-  def deleteFromPqIndex(ids: DataFrame, dir: String): Unit =
-    appendDeadFile(ids, dir)
-
-  def readPqDeadIds(spark: SparkSession, dir: String): DataFrame =
-    FlatPlain.dead(spark, Pq, dir)
-
-  /** The PQ corpus codes minus tombstoned ids. */
-  def readPqCodesLive(spark: SparkSession, dir: String): DataFrame =
-    FlatPlain.live(spark, Pq, dir)
-
-  def purgePqIndex(spark: SparkSession, dir: String): Unit =
-    FlatPlain.rewrite(spark, Pq, dir)
-
-  def compactPqIndex(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit =
-    FlatPlain.rewrite(spark, Pq, dir, targetFiles)
-
-  // ---------------------------------------------------- PQ, versioned
-  /** x_sim_pq_versioned shares x_sim_pq's fitted-literal oracle through
-    * a write/append/compact cycle.
-    */
-  def writePqIndexVersioned(corpus: DataFrame, model: Similarity.PqModel,
-      dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit =
-    FlatVersioned.build(Pq, corpus, model, dir, idCol, vecCol)
-
-  def appendPqIndexVersioned(delta: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    FlatVersioned.admit(Pq, delta, dir, idCol, vecCol)
-
-  /** Layout-only unless `purgeTombstones`. */
-  def compactPqIndexVersioned(spark: SparkSession, dir: String,
-      targetFiles: Int = 1, purgeTombstones: Boolean = false): Unit =
-    FlatVersioned.compact(spark, Pq, dir, targetFiles, purgeTombstones)
-
-  /** The code frame of version `asOf` (0 = current). */
-  def readPqCodesVersioned(spark: SparkSession, dir: String,
-      asOf: Int = 0): DataFrame =
-    FlatVersioned.readAsOf(spark, Pq, dir, asOf)
-
-  def deleteFromPqIndexVersioned(ids: DataFrame, dir: String): Unit =
-    appendDeadFile(ids, dir)
-
-  def readPqVersionedDeadIds(spark: SparkSession, dir: String): DataFrame =
-    FlatVersioned.dead(spark, Pq, dir)
-
-  /** The current code frame minus tombstoned ids. */
-  def readPqCodesVersionedLive(spark: SparkSession, dir: String): DataFrame =
-    FlatVersioned.live(spark, Pq, dir)
-
-  def purgePqIndexVersioned(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit =
-    FlatVersioned.purge(spark, Pq, dir, targetFiles)
-
-  // ---------------------------------------------------- IVF-PQ, plain
-  /** Persist the composed IVF-PQ index: `centroids.parquet` (probe
-    * routing), `codebooks.parquet` (the model) and `ivfpq.parquet` (id,
-    * list_id, codes). Serving never touches the float corpus again
-    * ([[graft.ext.Similarity.ivfPqTopKFromIndex]]); x_sim_ivf_pq_served
-    * shares x_sim_ivf_pq's oracle verbatim.
-    */
-  def writeIvfPqIndex(corpus: DataFrame, model: Similarity.PqModel,
-      centroids: DataFrame, dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit =
-    FlatPlain.build(IvfPq, corpus, (model, centroids), dir, idCol, vecCol)
-
-  /** (enc, centroids); the model comes from [[readPqModel]]. */
-  def readIvfPqIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    (FlatPlain.read(spark, IvfPq, dir), Centroids.read(spark, dir))
-
-  /** Assign AND encode the delta against both persisted model halves. */
-  def appendIvfPqIndex(delta: DataFrame, dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit =
-    FlatPlain.admit(IvfPq, delta, dir, idCol, vecCol)
-
-  def deleteFromIvfPqIndex(ids: DataFrame, dir: String): Unit =
-    appendDeadFile(ids, dir)
-
-  def readIvfPqDeadIds(spark: SparkSession, dir: String): DataFrame =
-    FlatPlain.dead(spark, IvfPq, dir)
-
-  /** (enc minus tombstoned ids, centroids). */
-  def readIvfPqIndexLive(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    (FlatPlain.live(spark, IvfPq, dir), Centroids.read(spark, dir))
-
-  def purgeIvfPqIndex(spark: SparkSession, dir: String): Unit =
-    FlatPlain.rewrite(spark, IvfPq, dir)
-
-  def compactIvfPqIndex(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit =
-    FlatPlain.rewrite(spark, IvfPq, dir, targetFiles)
-
-  // ------------------------------------------------ IVF-PQ, versioned
-  /** x_sim_ivf_pq_versioned shares x_sim_ivf_pq's fitted-literal oracle
-    * through a write/append/compact cycle.
-    */
-  def writeIvfPqIndexVersioned(corpus: DataFrame, model: Similarity.PqModel,
-      centroids: DataFrame, dir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit =
-    FlatVersioned.build(IvfPq, corpus, (model, centroids), dir, idCol, vecCol)
-
-  def appendIvfPqIndexVersioned(delta: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    FlatVersioned.admit(IvfPq, delta, dir, idCol, vecCol)
-
-  /** Layout-only unless `purgeTombstones`. */
-  def compactIvfPqIndexVersioned(spark: SparkSession, dir: String,
-      targetFiles: Int = 1, purgeTombstones: Boolean = false): Unit =
-    FlatVersioned.compact(spark, IvfPq, dir, targetFiles, purgeTombstones)
-
-  /** (enc of version `asOf` — 0 = current, centroids). */
-  def readIvfPqIndexVersioned(spark: SparkSession, dir: String,
-      asOf: Int = 0): (DataFrame, DataFrame) =
-    (FlatVersioned.readAsOf(spark, IvfPq, dir, asOf),
-      Centroids.read(spark, dir))
-
-  def deleteFromIvfPqIndexVersioned(ids: DataFrame, dir: String): Unit =
-    appendDeadFile(ids, dir)
-
-  def readIvfPqVersionedDeadIds(spark: SparkSession, dir: String): DataFrame =
-    FlatVersioned.dead(spark, IvfPq, dir)
-
-  /** (current enc minus tombstoned ids, centroids). */
-  def readIvfPqIndexVersionedLive(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    (FlatVersioned.live(spark, IvfPq, dir), Centroids.read(spark, dir))
-
-  def purgeIvfPqIndexVersioned(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit =
-    FlatVersioned.purge(spark, IvfPq, dir, targetFiles)
+    def versioned(dir: String) = new FlatVersionedIndex(IvfPqFlat, dir)
+      with VersionedTombstones[(DataFrame, DataFrame)]
+  }
 
   // ----------------------------------------------------------- PQ model
   /** Reconstruct the PqModel from the codebook artifact (bounded:
@@ -1678,8 +1050,4 @@ object IndexStore {
     }
     Similarity.PqModel(m, ks, codebooks(0)(0).length, codebooks, biases)
   }
-
-  /** Re-read the PQ corpus codes: (id, codes). */
-  def readPqCodes(spark: SparkSession, dir: String): DataFrame =
-    FlatPlain.read(spark, Pq, dir)
 }

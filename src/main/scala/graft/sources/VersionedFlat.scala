@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * missing half of the dir-artifact story at object-store scale.
   *
   * The rename-aside swap of the plain flat store (its purges and
-  * compactions, e.g. [[IndexStore.compactIvfIndex]]) is crash-safe for
+  * compactions, e.g. `IndexStore.Ivf.plain(…).compact`) is crash-safe for
   * the WRITER, but it mutates the artifact in place: between the two
   * renames the leaf briefly has no current directory, and a
   * long-running reader that captured the old file listing has its

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.check.Checks
-import graft.ext.Similarity
 import graft.schema.TableSchema
-import graft.sources.{IndexStore, VersionedFlat}
+import graft.sources.IndexStore
 
 /** Sessionization records (see [[StreamingValidate.sessionize]]).
   * Times travel as epoch MICROseconds — java.sql.Timestamp.getTime is
@@ -499,7 +498,7 @@ object StreamingValidate {
 
   /** The ANN twin of [[nearDupIngestStream]]: a STREAM of query
     * vectors served against the standing persisted IVF index
-    * ([[graft.sources.IndexStore.writeIvfIndex]] artifacts re-read
+    * ([[graft.sources.IndexStore.Ivf]]`.plain` artifacts re-read
     * once, probed per micro-batch). Each query's top-k depends only on
     * its own vector and the static index, so the union over
     * micro-batches IS the one-shot batch answer — the harness row
@@ -510,8 +509,7 @@ object StreamingValidate {
   def annServeStream(spark: org.apache.spark.sql.SparkSession,
       queriesDir: String, indexDir: String, k: Int,
       nProbe: Int = 4): DataFrame = {
-    val (index, cents) = graft.sources.IndexStore
-      .readIvfIndex(spark, indexDir)
+    val (index, cents) = IndexStore.Ivf.plain(indexDir).read(spark)
     serveAvailableNow(spark, queriesDir, filesPerTrigger = 1,
       batch => graft.ext.Similarity.ivfTopKWith(batch, index, cents,
         k, nProbe))
@@ -579,7 +577,7 @@ object StreamingValidate {
   /** The production 100 TB ingest loop, closed end to end: micro-batches
     * of NEW documents stream in and are served against the STANDING
     * persisted dedup index — the bucketed tables written once by
-    * [[graft.sources.IndexStore.writeDedupIndexBucketed]] — via
+    * [[graft.sources.IndexStore.Dedup]]`.plain` — via
     * `foreachBatch`. Per batch, only the batch itself is shingled,
     * minhashed, and shuffled to match the index bucketing; the corpus
     * side reads its co-located splits in place with ZERO exchanges
@@ -605,8 +603,8 @@ object StreamingValidate {
       newDocsDir: String, indexTable: String, threshold: Double = 0.7,
       numHashes: Int = 32, bands: Int = 16, k: Int = 3,
       maxBucketSize: Int = 0): DataFrame = {
-    val (sh, bandIdx) = graft.sources.IndexStore
-      .readDedupIndexBucketed(spark, indexTable, numHashes, bands, k)
+    val (sh, bandIdx) =
+      IndexStore.Dedup.plain(indexTable, numHashes, bands, k).read(spark)
     serveAvailableNow(spark, newDocsDir, filesPerTrigger = 1,
       batch => graft.ext.Dedup.nearDuplicatesAgainstIndex(batch, sh,
         bandIdx, threshold, numHashes, bands, k, maxBucketSize))
@@ -633,8 +631,8 @@ object StreamingValidate {
       minQuality: Double = 0.7, minTokens: Int = 10,
       lang: String = "en", salt: String = "",
       nShards: Int = 8): DataFrame = {
-    val (sh, bandIdx) = graft.sources.IndexStore
-      .readDedupIndexBucketed(spark, indexTable, numHashes, bands, k)
+    val (sh, bandIdx) =
+      IndexStore.Dedup.plain(indexTable, numHashes, bands, k).read(spark)
     serveAvailableNow(spark, newDocsDir, filesPerTrigger = 1, batch =>
       admitRecords(gatedSurvivors(batch, sh, bandIdx, None, threshold,
         numHashes, bands, k, minQuality, minTokens, lang), salt, nShards))
@@ -727,7 +725,7 @@ object StreamingValidate {
     * re-admit its survivors' shingle rows, double every later verify
     * join against them, and (via the admit sink) double-count the
     * batch's admit records — x_stream_pipeline_admit's checksum
-    * catches either. Like [[uniqueIngestRun]], a caller WITHOUT a
+    * catches either. Like [[ingestRun]], a caller WITHOUT a
     * checkpoint gets fresh-run semantics only if it also supplies a
     * fresh sink and a freshly-built index — the harness rows wipe all
     * three per invocation; resumable ingestion is this function WITH
@@ -739,17 +737,15 @@ object StreamingValidate {
       minQuality: Double = 0.7, minTokens: Int = 10,
       lang: String = "en", salt: String = "", nShards: Int = 8,
       checkpointDir: String = null, sinkDir: String): Unit = {
+    val index = IndexStore.Dedup.plain(indexTable, numHashes, bands, k)
     gatedLoop(spark, newDocsDir, checkpointDir, sinkDir, salt, nShards,
       b => {
-        val (sh, bandIdx) = graft.sources.IndexStore
-          .readDedupIndexBucketed(spark, indexTable, numHashes, bands, k)
+        val (sh, bandIdx) = index.read(spark)
         gatedSurvivors(b, sh, bandIdx, None, threshold, numHashes, bands,
           k, minQuality, minTokens, lang)
       }) { toks =>
-      graft.sources.IndexStore.appendDedupIndexBucketed(toks, indexTable,
-        numHashes, bands, k)
-      Seq(s"${indexTable}_sh", s"${indexTable}_bands")
-        .foreach(spark.catalog.refreshTable)
+      index.append(toks)
+      index.stale.foreach(spark.catalog.refreshTable)
     }
   }
 
@@ -798,22 +794,18 @@ object StreamingValidate {
       checkpointDir: String = null, sinkDir: String,
       autoCompactGens: Int = 0, autoVacuumRetain: Int = 0,
       vacuumOrphanAgeMs: Long = 0L): Unit = {
+    val index = IndexStore.Dedup.versioned(indexTable, numHashes, bands, k)
     gatedLoop(spark, newDocsDir, checkpointDir, sinkDir, salt, nShards,
       b => {
-        val (sh, bandIdx) = graft.sources.IndexStore
-          .readDedupIndexBucketedVersioned(spark, indexTable, numHashes,
-            bands, k)
+        val (sh, bandIdx) = index.read(spark)
         gatedSurvivors(b, sh, bandIdx, None, threshold, numHashes, bands,
           k, minQuality, minTokens, lang)
       }) { toks =>
       // the append's manifest commit IS the per-batch freeze on the
       // gen-manifest store: version k+1 = the corpus after batch k, no
       // separate snapshot step
-      graft.sources.IndexStore.appendDedupIndexBucketedVersioned(toks,
-        indexTable, numHashes, bands, k): Unit
-      if (autoCompactGens > 0)
-        graft.sources.IndexStore.maybeCompactDedupIndexBucketedVersioned(
-          spark, indexTable, autoCompactGens): Unit
+      index.append(toks): Unit
+      if (autoCompactGens > 0) index.maybeCompact(spark, autoCompactGens): Unit
       if (autoVacuumRetain > 0)
         graft.sources.BucketedManifest.vacuum(spark, indexTable,
           retain = autoVacuumRetain, orphanMinAgeMs = vacuumOrphanAgeMs)
@@ -821,7 +813,7 @@ object StreamingValidate {
   }
 
   /** [[gatedIngestRunVersioned]] over the MULTI-INDEX pipeline family
-    * ([[graft.sources.IndexStore.writePipelineIndexVersioned]] —
+    * ([[graft.sources.IndexStore.Pipeline]] —
     * round-15 capstone): each micro-batch runs BOTH gates — the
     * near-dup CONTENT gate against the MinHash members and a
     * duplicate-id IDENTITY gate against the key member (a re-sent
@@ -836,11 +828,10 @@ object StreamingValidate {
     * Growth is BOUNDED by the same two cadence knobs as
     * [[gatedIngestRunVersioned]] (round-16 directive #2 — this was
     * the last ingest loop accumulating one generation per member per
-    * batch forever): `autoCompactGens` > 0 runs
-    * [[graft.sources.IndexStore.maybeCompactPipelineIndexVersioned]]
-    * after each admit — ONE tiered merge across all three members in
-    * ONE manifest commit, the key member re-aggregated through the
-    * LSM algebra, big generations referenced untouched — and
+    * batch forever): `autoCompactGens` > 0 runs the pipeline handle's
+    * `maybeCompact` after each admit — ONE tiered merge across all
+    * three members in ONE manifest commit, the key member re-aggregated
+    * through the LSM algebra, big generations referenced untouched — and
     * `autoVacuumRetain` > 0 keeps only the last N versions (vacuumed
     * freezes fail loudly on time travel, retained ones serve
     * exactly). Both default OFF so the capstone row keeps its pure
@@ -862,25 +853,22 @@ object StreamingValidate {
       checkpointDir: String = null, sinkDir: String,
       autoCompactGens: Int = 0, autoVacuumRetain: Int = 0,
       vacuumOrphanAgeMs: Long = 0L): Unit = {
+    val index = IndexStore.Pipeline.versioned(indexTable, numHashes, bands, k)
     gatedLoop(spark, newDocsDir, checkpointDir, sinkDir, salt, nShards,
       b => {
-        val (sh, bandIdx) = graft.sources.IndexStore
-          .readDedupIndexBucketedVersioned(spark, indexTable, numHashes,
-            bands, k)
+        val (sh, bandIdx) =
+          IndexStore.Dedup.versioned(indexTable, numHashes, bands, k)
+            .read(spark)
         // the identity gate: ids already counted in the key member
-        val takenIds = graft.sources.IndexStore
-          .readPipelineKeyIndex(spark, indexTable)
+        val takenIds = index.readKeys(spark)
           .groupBy("id").agg(sum(col("n")).as("n"))
           .filter(col("n") > 0)
           .select(col("id").as("doc_id"))
         gatedSurvivors(b, sh, bandIdx, Some(takenIds), threshold,
           numHashes, bands, k, minQuality, minTokens, lang)
       }) { toks =>
-      graft.sources.IndexStore.appendPipelineIndexVersioned(toks,
-        indexTable, numHashes, bands, k): Unit
-      if (autoCompactGens > 0)
-        graft.sources.IndexStore.maybeCompactPipelineIndexVersioned(spark,
-          indexTable, autoCompactGens): Unit
+      index.append(toks): Unit
+      if (autoCompactGens > 0) index.maybeCompact(spark, autoCompactGens): Unit
       if (autoVacuumRetain > 0)
         graft.sources.BucketedManifest.vacuum(spark, indexTable,
           retain = autoVacuumRetain, orphanMinAgeMs = vacuumOrphanAgeMs)
@@ -890,8 +878,8 @@ object StreamingValidate {
   /** The SUBSTRING twin of [[nearDupIngestStream]]: a stream of
     * `(id, toks)` documents screened per micro-batch against the
     * standing bucketed gram index
-    * ([[graft.sources.IndexStore.writeSubstringIndexBucketed]], read
-    * once — static). Each document's shared runs depend only on its
+    * ([[graft.sources.IndexStore.Substring]]`.plain`, read once —
+    * static). Each document's shared runs depend only on its
     * own grams and the index, and the per-pair rollup aggregates
     * within one document's rows, so the union over micro-batches IS
     * the one-shot batch answer — x_stream_substring shares
@@ -900,400 +888,24 @@ object StreamingValidate {
   def substringIngestStream(spark: org.apache.spark.sql.SparkSession,
       newDocsDir: String, indexTable: String, minRunLen: Int,
       k: Int): DataFrame = {
-    val grams = graft.sources.IndexStore
-      .readSubstringIndexBucketed(spark, indexTable, k)
+    val grams = IndexStore.Substring.plain(indexTable, k).read(spark)
     serveAvailableNow(spark, newDocsDir, filesPerTrigger = 1,
       batch => graft.ext.Dedup.sharedSubstringRunsAgainst(batch, grams,
         minRunLen, k))
   }
 
-  /** The substring family's RESUMABLE check-then-admit run: per
-    * micro-batch, screen against the standing gram index (re-read per
-    * batch so earlier admits are visible), sink the per-pair rollups,
-    * then admit the batch's grams
-    * ([[graft.sources.IndexStore.appendSubstringIndexBucketed]]).
-    * Same restart proof as the other families: a re-admitted batch
-    * duplicates its gram rows, every later probe's diagonal recovers
-    * each matched position twice, and the chained run rows double.
-    */
-  def substringIngestRun(spark: org.apache.spark.sql.SparkSession,
-      newDocsDir: String, indexTable: String, minRunLen: Int, k: Int,
-      checkpointDir: String, sinkDir: String): Unit =
-    checkAdmitRun(spark, newDocsDir, checkpointDir, sinkDir,
-      check = b => graft.ext.Dedup.sharedSubstringRunsAgainst(b,
-        graft.sources.IndexStore.readSubstringIndexBucketed(spark,
-          indexTable, k), minRunLen, k),
-      admit = b => graft.sources.IndexStore
-        .appendSubstringIndexBucketed(b, indexTable, k),
-      refreshTables = Seq(s"${indexTable}_grams"))
-
-  /** One RESUMABLE AvailableNow run of the near-dup CHECK-THEN-ADMIT
-    * loop (round-13 directive #5 — [[uniqueIngestRun]]'s restart arc
-    * for the MinHash index): each micro-batch of `(id, toks)` docs is
-    * served against the STANDING bucketed index (re-read per batch so
-    * earlier admits are visible), its pairs appended to `sinkDir`, and
-    * the batch then ADMITTED
-    * ([[graft.sources.IndexStore.appendDedupIndexBucketed]]). With a
-    * checkpoint, a later invocation processes only files that arrived
-    * since — and re-processing an already-admitted batch is exactly
-    * what the oracle catches: the re-admit duplicates the batch's
-    * `_sh`/`_bands` rows, every later probe's verify join then emits
-    * its pairs against those ids TWICE, and the row count misses.
-    */
-  def nearDupIngestRun(spark: org.apache.spark.sql.SparkSession,
-      newDocsDir: String, indexTable: String, checkpointDir: String,
-      sinkDir: String, threshold: Double = 0.7, numHashes: Int = 32,
-      bands: Int = 16, k: Int = 3): Unit =
-    checkAdmitRun(spark, newDocsDir, checkpointDir, sinkDir,
-      check = b => {
-        val (sh, bandIdx) = graft.sources.IndexStore
-          .readDedupIndexBucketed(spark, indexTable, numHashes, bands, k)
-        graft.ext.Dedup.nearDuplicatesAgainstIndex(b, sh, bandIdx,
-          threshold, numHashes, bands, k)
-      },
-      admit = b => graft.sources.IndexStore
-        .appendDedupIndexBucketed(b, indexTable, numHashes, bands, k),
-      refreshTables =
-        Seq(s"${indexTable}_sh", s"${indexTable}_bands"))
-
-  /** [[nearDupIngestRun]] over the VERSIONED MinHash family
-    * ([[graft.sources.BucketedManifest]] — the gen-manifest streaming
-    * arc): checks resolve the CURRENT manifest of both halves per
-    * micro-batch, admits commit new generations atomically (standing
-    * generations untouched — captured listings stay valid), and a
-    * versioned COMPACTION interleaved between runs publishes merged
-    * generations without touching what this stream or any reader
-    * holds. Check semantics, restart safety, and the
-    * admit-exactly-once proof are identical to the flat-family run's —
-    * x_stream_dedup_versioned shares x_dedup_index_append's oracle
-    * verbatim.
-    */
-  def nearDupIngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
-      newDocsDir: String, indexTable: String, checkpointDir: String,
-      sinkDir: String, threshold: Double = 0.7, numHashes: Int = 32,
-      bands: Int = 16, k: Int = 3): Unit =
-    checkAdmitRun(spark, newDocsDir, checkpointDir, sinkDir,
-      check = b => {
-        val (sh, bandIdx) = graft.sources.IndexStore
-          .readDedupIndexBucketedVersioned(spark, indexTable,
-            numHashes, bands, k)
-        graft.ext.Dedup.nearDuplicatesAgainstIndex(b, sh, bandIdx,
-          threshold, numHashes, bands, k)
-      },
-      admit = b => graft.sources.IndexStore
-        .appendDedupIndexBucketedVersioned(b, indexTable, numHashes,
-          bands, k): Unit,
-      refreshTables = Seq(s"${indexTable}_sh", s"${indexTable}_bands"))
-
-  /** [[substringIngestRun]] over the VERSIONED gram family — on the
-    * [[graft.sources.BucketedManifest]] gen-manifest store since
-    * round 16 (round-15 ran it on the pointer store): checks resolve
-    * a FRESH manifest per micro-batch (earlier admits visible), each
-    * admit commits its own manifest version, and a versioned
-    * compaction interleaved between runs publishes merged generations
-    * without touching what a captured frame holds. Shares the
-    * swap-family run's oracle verbatim. The member table name is
-    * stable across versions (the manifest, not a live-version pointer,
-    * carries the state), so the refresh target is static.
-    */
-  def substringIngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
-      newDocsDir: String, indexTable: String, minRunLen: Int, k: Int,
-      checkpointDir: String, sinkDir: String): Unit =
-    checkAdmitRun(spark, newDocsDir, checkpointDir, sinkDir,
-      check = b => graft.ext.Dedup.sharedSubstringRunsAgainst(b,
-        graft.sources.IndexStore.readSubstringIndexBucketedVersioned(
-          spark, indexTable, k), minRunLen, k),
-      admit = b => graft.sources.IndexStore
-        .appendSubstringIndexBucketedVersioned(b, indexTable, k): Unit,
-      refreshTables = Seq(s"${indexTable}_grams"))
-
-  /** [[editDistanceIngestRun]] over the VERSIONED three-table PassJoin
-    * family — [[substringIngestRunVersioned]]'s contract, all three
-    * live versions resolved at run start.
-    */
-  def editDistanceIngestRunVersioned(
-      spark: org.apache.spark.sql.SparkSession,
-      newDocsDir: String, indexTable: String, d: Int,
-      checkpointDir: String, sinkDir: String): Unit =
-    checkAdmitRun(spark, newDocsDir, checkpointDir, sinkDir,
-      check = b => {
-        val (segs, str, bylen) = graft.sources.IndexStore
-          .readEditIndexBucketedVersioned(spark, indexTable, d)
-        graft.ext.Dedup.editDistanceAgainst(b, "id",
-          org.apache.spark.sql.functions.col("s"), segs, str, bylen, d)
-      },
-      admit = b => graft.sources.IndexStore
-        .appendEditIndexBucketedVersioned(b, indexTable, d): Unit,
-      refreshTables = Seq("_segs", "_str", "_bylen")
-        .map(sfx => s"$indexTable$sfx"))
-
-  /** [[phashIngestRun]] over the VERSIONED band family —
-    * [[substringIngestRunVersioned]]'s contract for the image index.
-    */
-  def phashIngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
-      newImagesDir: String, indexTable: String, bands: Int,
-      maxDist: Int, checkpointDir: String, sinkDir: String): Unit =
-    checkAdmitRun(spark, newImagesDir, checkpointDir, sinkDir,
-      check = b => graft.ext.Multimodal.phashNearDuplicatesAgainst(
-        graft.ext.Multimodal.perceptualHash(b)
-          .select(org.apache.spark.sql.functions.col("id"),
-            org.apache.spark.sql.functions.col("dhash")),
-        graft.sources.IndexStore.readPhashIndexBucketedVersioned(spark,
-          indexTable, bands), bands, maxDist),
-      admit = b => graft.sources.IndexStore
-        .appendPhashIndexBucketedVersioned(
-          graft.ext.Multimodal.perceptualHash(b)
-            .select(org.apache.spark.sql.functions.col("id"),
-              org.apache.spark.sql.functions.col("dhash")),
-          indexTable, bands): Unit,
-      refreshTables = Seq(s"${indexTable}_bands"))
-
-  /** [[uniqueIngestRun]] over the VERSIONED key index — on the
-    * gen-manifest store ([[graft.sources.BucketedManifest]], round-15:
-    * the LSM family on the table format): every admitted batch is an
-    * atomic versioned commit, checks resolve the current manifest per
-    * micro-batch, raw split rows merge at check time as in the swap
-    * twin.
-    */
-  def uniqueIngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
-      newKeysDir: String, indexTable: String, keys: Seq[String],
-      checkpointDir: String, sinkDir: String): Unit =
-    checkAdmitRun(spark, newKeysDir, checkpointDir, sinkDir,
-      check = b => graft.check.Checks.uniqueAgainstIndex(b,
-        graft.sources.IndexStore.readKeyIndexBucketedVersioned(spark,
-          indexTable, keys), keys),
-      admit = b => graft.sources.IndexStore
-        .appendKeyIndexBucketedVersioned(b, indexTable, keys): Unit,
-      refreshTables = Seq(s"${indexTable}_keys"))
-
-  /** The edit-distance twin of [[nearDupIngestRun]]: resumable
-    * check-then-admit over the PassJoin index — per batch, `(id, s)`
-    * strings are screened against the standing three-table index and
-    * then admitted into all three ([[graft.sources.IndexStore
-    * .appendEditIndexBucketed]]). Same restart proof: a re-admitted
-    * batch duplicates its `_str`/`_segs` rows and every later probe's
-    * verify join double-reports against those ids.
-    */
-  /** The IMAGE twin of [[nearDupIngestRun]]: resumable check-then-admit
-    * over the pHash index — per batch, `(id, blob)` raw bytes are
-    * decoded + dHashed + banded, screened against the standing band
-    * table, and then admitted
-    * ([[graft.sources.IndexStore.appendPhashIndexBucketed]]). Same
-    * restart proof as the other families: a re-admitted batch
-    * duplicates its band rows and every later probe double-reports
-    * against those ids.
-    */
-  def phashIngestRun(spark: org.apache.spark.sql.SparkSession,
-      newImagesDir: String, indexTable: String, bands: Int,
-      maxDist: Int, checkpointDir: String, sinkDir: String): Unit =
-    checkAdmitRun(spark, newImagesDir, checkpointDir, sinkDir,
-      check = b => graft.ext.Multimodal.phashNearDuplicatesAgainst(
-        graft.ext.Multimodal.perceptualHash(b)
-          .select(org.apache.spark.sql.functions.col("id"),
-            org.apache.spark.sql.functions.col("dhash")),
-        graft.sources.IndexStore.readPhashIndexBucketed(spark,
-          indexTable, bands), bands, maxDist),
-      admit = b => graft.sources.IndexStore.appendPhashIndexBucketed(
-        graft.ext.Multimodal.perceptualHash(b)
-          .select(org.apache.spark.sql.functions.col("id"),
-            org.apache.spark.sql.functions.col("dhash")),
-        indexTable, bands),
-      refreshTables = Seq(s"${indexTable}_bands"))
-
-  /** Check-then-admit VECTOR ingestion for the flat similarity
-    * artifacts (the [[uniqueIngestRun]] shape over a dir-based
-    * artifact), one run per family × store, all on [[flatIngestRun]].
-    * Per micro-batch the arriving vectors are first CHECKED against the
-    * standing live artifact (probe-routed cosine top-k here — the
-    * embedding near-dup gate a training-data pipeline runs before
-    * admitting new documents) and the check is sunk STRICTLY BEFORE
-    * the batch is ADMITTED ([[graft.sources.IndexStore.appendIvfIndex]]:
-    * only the delta is normalized and assigned, against the artifact's
-    * own persisted centroids). The artifact is re-read inside the
-    * check, so each batch's fresh path read lists the files earlier
-    * batches appended — admissions are visible to the next batch with
-    * no catalog to refresh. With a checkpoint the run is RESUMABLE: a
-    * re-processed batch would append duplicate (id, nvec, list_id)
-    * rows whose doubled scored candidates occupy two bounded-top-k
-    * slots and push the true k-th neighbor out — x_stream_ivf_resume
-    * detects exactly that by hash-matching the final artifact's serve
-    * against x_sim_ivf_topk's full-corpus oracle.
-    */
-  def ivfIngestRun(spark: org.apache.spark.sql.SparkSession,
-      newVecsDir: String, indexDir: String, k: Int, nProbe: Int,
-      checkpointDir: String, sinkDir: String): Unit =
-    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir)(
-      check = b => {
-        val (index, cents) = IndexStore.readIvfIndexLive(spark, indexDir)
-        Similarity.ivfTopKWith(b, index, cents, k, nProbe)
-      },
-      admit = IndexStore.appendIvfIndex(_, indexDir))
-
-  /** [[ivfIngestRun]] over the VERSIONED IVF artifact: every admitted
-    * micro-batch PUBLISHES a new manifest version instead of appending
-    * files into a mutable leaf, so the ingest history itself becomes
-    * time-travelable (version N = the corpus after batch N−1 admitted)
-    * and concurrent serving readers keep consistent snapshots while
-    * the stream runs (SimArtifactLifecycleSpec: version count = 1 +
-    * admitted batches, as-of replay equals the prefix corpus).
-    * `autoCompactBatches > 0` bounds manifest growth: after an admit,
-    * when the current manifest references more than that many batch
-    * dirs, [[graft.sources.VersionedFlat.maybeCompact]] publishes one
-    * merged batch — so a long-lived stream's read plans keep O(1)
-    * multi-path roots instead of one per ever-admitted batch (PLANS.md
-    * §Round 14 has the planning-cost table). 0 = off.
-    */
-  def ivfIngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
-      newVecsDir: String, indexDir: String, k: Int, nProbe: Int,
-      checkpointDir: String, sinkDir: String,
-      autoCompactBatches: Int = 0): Unit =
-    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir,
-        IndexStore.Ivf.versioned(indexDir), autoCompactBatches)(
-      check = b => {
-        val (index, cents) = IndexStore
-          .readIvfIndexVersionedLive(spark, indexDir)
-        Similarity.ivfTopKWith(b, index, cents, k, nProbe)
-      },
-      admit = IndexStore.appendIvfIndexVersioned(_, indexDir))
-
-  /** [[pqIngestRun]] over the VERSIONED PQ store: checks ADC-score
-    * against the current version's live codes; the codebooks are
-    * re-read, never re-fitted. `autoCompactBatches` is
-    * [[ivfIngestRunVersioned]]'s manifest-growth cadence, as in the
-    * other versioned runs.
-    */
-  def pqIngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
-      newVecsDir: String, indexDir: String, k: Int,
-      checkpointDir: String, sinkDir: String,
-      autoCompactBatches: Int = 0): Unit =
-    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir,
-        IndexStore.Pq.versioned(indexDir), autoCompactBatches)(
-      check = b => Similarity.pqTopKFromCodes(b,
-        IndexStore.readPqCodesVersionedLive(spark, indexDir), k,
-        IndexStore.readPqModel(spark, indexDir)),
-      admit = IndexStore.appendPqIndexVersioned(_, indexDir))
-
-  /** [[int8IngestRun]] over the VERSIONED int8 store. That store has
-    * no tombstones, so the check scores against the current version.
-    */
-  def int8IngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
-      newVecsDir: String, indexDir: String, k: Int,
-      checkpointDir: String, sinkDir: String,
-      autoCompactBatches: Int = 0): Unit =
-    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir,
-        IndexStore.Int8.versioned(indexDir), autoCompactBatches)(
-      check = b => Similarity.quantizedTopKFromIndex(b,
-        IndexStore.readInt8IndexVersioned(spark, indexDir), k),
-      admit = IndexStore.appendInt8IndexVersioned(_, indexDir))
-
-  /** [[ivfPqIngestRun]] over the VERSIONED composed store. */
-  def ivfPqIngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
-      newVecsDir: String, indexDir: String, k: Int, nProbe: Int,
-      checkpointDir: String, sinkDir: String,
-      autoCompactBatches: Int = 0): Unit =
-    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir,
-        IndexStore.IvfPq.versioned(indexDir), autoCompactBatches)(
-      check = b => {
-        val (enc, cents) = IndexStore
-          .readIvfPqIndexVersionedLive(spark, indexDir)
-        Similarity.ivfPqTopKFromIndex(b, enc, cents,
-          IndexStore.readPqModel(spark, indexDir), k, nProbe)
-      },
-      admit = IndexStore.appendIvfPqIndexVersioned(_, indexDir))
-
-  /** Check-then-admit ingestion for the PQ code artifact: arriving
-    * vectors are ADC-scored against the standing live code table (the
-    * codebook model is re-read too — bounded m·ks rows — and never
-    * re-fitted). x_stream_pq_ingest hash-matches the final artifact's
-    * serve against x_sim_pq's full-corpus fitted-literal oracle.
-    */
-  def pqIngestRun(spark: org.apache.spark.sql.SparkSession,
-      newVecsDir: String, indexDir: String, k: Int,
-      checkpointDir: String, sinkDir: String): Unit =
-    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir)(
-      check = b => Similarity.pqTopKFromCodes(b,
-        IndexStore.readPqCodesLive(spark, indexDir), k,
-        IndexStore.readPqModel(spark, indexDir)),
-      admit = IndexStore.appendPqIndex(_, indexDir))
-
-  /** Check-then-admit ingestion for the int8 artifact: int8 has no
-    * model, so admission just quantizes the batch, and the check scores
-    * against the standing live decoded frame. x_stream_int8_ingest
-    * hash-matches the final artifact's serve against x_sim_quantized's
-    * full-corpus oracle — a dropped or doubled admission misses it.
-    */
-  def int8IngestRun(spark: org.apache.spark.sql.SparkSession,
-      newVecsDir: String, indexDir: String, k: Int,
-      checkpointDir: String, sinkDir: String): Unit =
-    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir)(
-      check = b => Similarity.quantizedTopKFromIndex(b,
-        IndexStore.readInt8IndexLive(spark, indexDir), k),
-      admit = IndexStore.appendInt8Index(_, indexDir))
-
-  /** Check-then-admit ingestion for the composed IVF-PQ artifact:
-    * arriving vectors are probe-routed and ADC-scored against the
-    * standing live (id, list_id, codes) table, then admitted assigned
-    * AND encoded against both persisted model halves.
-    * x_stream_ivfpq_ingest shares x_sim_ivf_pq's fitted-literal oracle.
-    */
-  def ivfPqIngestRun(spark: org.apache.spark.sql.SparkSession,
-      newVecsDir: String, indexDir: String, k: Int, nProbe: Int,
-      checkpointDir: String, sinkDir: String): Unit =
-    flatIngestRun(spark, newVecsDir, checkpointDir, sinkDir)(
-      check = b => {
-        val (enc, cents) = IndexStore.readIvfPqIndexLive(spark, indexDir)
-        Similarity.ivfPqTopKFromIndex(b, enc, cents,
-          IndexStore.readPqModel(spark, indexDir), k, nProbe)
-      },
-      admit = IndexStore.appendIvfPqIndex(_, indexDir))
-
-  /** The flat families' one check-then-admit step: [[checkAdmitRun]]
-    * with no catalog tables to refresh (each check re-reads the
-    * artifact's path). On the versioned store, `versioned` is where
-    * the family's frame lives and a positive `autoCompactBatches` runs
-    * the manifest-growth cadence after every admit.
-    */
-  private def flatIngestRun(spark: org.apache.spark.sql.SparkSession,
-      newVecsDir: String, checkpointDir: String, sinkDir: String,
-      versioned: String = "", autoCompactBatches: Int = 0)(
-      check: DataFrame => DataFrame, admit: DataFrame => Unit): Unit =
-    checkAdmitRun(spark, newVecsDir, checkpointDir, sinkDir, check,
-      admit = b => {
-        admit(b)
-        if (autoCompactBatches > 0)
-          VersionedFlat.maybeCompact(spark, versioned, autoCompactBatches)
-            : Unit
-      },
-      refreshTables = Seq.empty)
-
-  def editDistanceIngestRun(spark: org.apache.spark.sql.SparkSession,
-      newDocsDir: String, indexTable: String, d: Int,
-      checkpointDir: String, sinkDir: String): Unit =
-    checkAdmitRun(spark, newDocsDir, checkpointDir, sinkDir,
-      check = b => {
-        val (segs, str, bylen) = graft.sources.IndexStore
-          .readEditIndexBucketed(spark, indexTable, d)
-        graft.ext.Dedup.editDistanceAgainst(b, "id",
-          org.apache.spark.sql.functions.col("s"), segs, str, bylen, d)
-      },
-      admit = b => graft.sources.IndexStore
-        .appendEditIndexBucketed(b, indexTable, d),
-      refreshTables = Seq("_segs", "_str", "_bylen")
-        .map(s => s"$indexTable$s"))
-
   /** The edit-distance twin of [[nearDupIngestStream]]: a STREAM of
     * `(id, s)` documents screened per micro-batch against the standing
     * bucketed PassJoin index
-    * ([[graft.sources.IndexStore.writeEditIndexBucketed]] artifacts
-    * re-read once). Each document's matches depend only on its own
-    * string and the static index, so the union over micro-batches IS
+    * ([[graft.sources.IndexStore.Edit]]`.plain`, re-read once). Each
+    * document's matches depend only on its own string and the static
+    * index, so the union over micro-batches IS
     * the one-shot batch answer — x_stream_editdist shares
     * x_dedup_editdist_served's oracle verbatim.
     */
   def editDistanceIngestStream(spark: org.apache.spark.sql.SparkSession,
       newDocsDir: String, indexTable: String, d: Int): DataFrame = {
-    val (segs, str, bylen) = graft.sources.IndexStore
-      .readEditIndexBucketed(spark, indexTable, d)
+    val (segs, str, bylen) = IndexStore.Edit.plain(indexTable, d).read(spark)
     serveAvailableNow(spark, newDocsDir, filesPerTrigger = 1,
       batch => graft.ext.Dedup.editDistanceAgainst(batch, "id",
         org.apache.spark.sql.functions.col("s"), segs, str, bylen, d))
@@ -1309,8 +921,7 @@ object StreamingValidate {
   def phashIngestStream(spark: org.apache.spark.sql.SparkSession,
       newImagesDir: String, indexTable: String, bands: Int = 8,
       maxDist: Int = 7): DataFrame = {
-    val idx = graft.sources.IndexStore
-      .readPhashIndexBucketed(spark, indexTable, bands)
+    val idx = IndexStore.Phash.plain(indexTable, bands).read(spark)
     serveAvailableNow(spark, newImagesDir, filesPerTrigger = 1,
       batch => graft.ext.Multimodal.phashNearDuplicatesAgainst(
         graft.ext.Multimodal.perceptualHash(batch)
@@ -1322,7 +933,7 @@ object StreamingValidate {
   /** STREAMING uniqueness over a growing table: each micro-batch is
     * CHECKED against the standing key index
     * ([[graft.check.Checks.uniqueAgainstIndex]]) and then ADMITTED
-    * into it ([[graft.sources.IndexStore.appendKeyIndexBucketed]]),
+    * into it ([[ingestRun]] over [[graft.sources.IndexStore.Key]]`.plain`),
     * so duplicates arriving in two different batches are caught when
     * the second lands — the stateful arc nearDupIngestStream's static
     * index can't express. The check is materialized to the sink
@@ -1354,65 +965,62 @@ object StreamingValidate {
     // call on the same dir must NOT inherit the first call's sink rows
     // (they'd ride the aggregate twice). Callers re-ADMITTING the same
     // stream still owe a rebuilt index per invocation — resumable
-    // ingestion is [[uniqueIngestRun]] with a checkpoint.
+    // ingestion is [[ingestRun]] with a checkpoint.
     graft.sources.Scratch.deleteRecursively(new java.io.File(sinkDir))
-    uniqueIngestRun(spark, newKeysDir, indexTable, keys,
-      checkpointDir = null, sinkDir = sinkDir)
+    ingestRun(spark, newKeysDir, IndexStore.Key.plain(indexTable, keys),
+      checkpointDir = null, sinkDir = sinkDir)(
+      Checks.uniqueAgainstIndex(_, _, keys))
     uniqueViolationTotals(spark, sinkDir, keys)
   }
 
-  /** One AvailableNow RUN of the check-then-admit loop against
-    * whatever files `newKeysDir` currently holds. With a non-null
-    * `checkpointDir` the run is RESUMABLE: a later invocation with the
-    * same checkpoint processes only files that arrived since — the
-    * restart-safety contract (x_stream_unique_resume's oracle is its
-    * proof: re-processing an already-admitted batch would re-check it
-    * against an index that now CONTAINS it, inflating its keys'
-    * cumulative counts and failing the hash).
+  /** One RESUMABLE AvailableNow run of the check-then-admit ingest loop
+    * over any index handle: each micro-batch of `inputDir` (one file per
+    * batch) is CHECKED against the index's current state, re-read per
+    * batch so earlier admissions are visible — the live rows of a flat
+    * artifact with tombstones, its plain read otherwise; the bucketed
+    * families' read — and `check(batch, state)` is appended to `sinkDir`
+    * STRICTLY BEFORE the batch is ADMITTED into the index (the write IS
+    * the barrier: admitting first would make a batch collide with
+    * itself). A pHash index admits the batch's hashed images; a
+    * versioned flat artifact's `autoCompacting` view runs its
+    * manifest-growth cadence after each admission. The index tables'
+    * relation caches are then refreshed on the OUTER session: the admit
+    * ran through the stream's CLONED session and refreshed only the
+    * clone's cache, so without it the outer session keeps serving the
+    * pre-append listing and every cross-batch duplicate is silently
+    * missed (regression-trapped in StreamingSpec). Flat artifacts have
+    * no catalog tables: each check re-lists their path.
+    *
+    * With a non-null `checkpointDir` the run is RESUMABLE: a later
+    * invocation with the same checkpoint processes only files that
+    * arrived since, and that is what every family's resume row proves.
+    * Re-processing an already-admitted batch would admit its rows
+    * twice: a re-checked key meets an index that already CONTAINS it
+    * and its cumulative count inflates (x_stream_unique_resume); the
+    * doubled shingle, gram, segment or band rows make every later
+    * probe's verify join report its pairs against those ids twice
+    * (x_stream_dedup_resume and its substring, edit-distance and pHash
+    * twins); and doubled vectors occupy two bounded-top-k slots and
+    * push the true k-th neighbor out (x_stream_ivf_resume). Without a
+    * checkpoint the caller gets fresh-run semantics only with a fresh
+    * sink and a freshly built index. The sink is created once, empty
+    * with the check's schema; a resumed run appends to it.
     */
-  def uniqueIngestRun(spark: org.apache.spark.sql.SparkSession,
-      newKeysDir: String, indexTable: String, keys: Seq[String],
-      checkpointDir: String, sinkDir: String): Unit =
-    checkAdmitRun(spark, newKeysDir, checkpointDir, sinkDir,
-      check = b => graft.check.Checks.uniqueAgainstIndex(b,
-        graft.sources.IndexStore.readKeyIndexBucketed(spark, indexTable,
-          keys), keys),
-      admit = b => graft.sources.IndexStore.appendKeyIndexBucketed(b,
-        indexTable, keys),
-      refreshTables = Seq(s"${indexTable}_keys"))
-
-  /** The shared check-then-admit AvailableNow loop (round-13: factored
-    * from [[uniqueIngestRun]] for the near-dup / edit-distance ingest
-    * arcs): per micro-batch, `check(batch)` is materialized to the
-    * sink STRICTLY BEFORE `admit(batch)` appends the batch into the
-    * standing index (the write IS the barrier — the serve plan reads
-    * the index's file listing at that action; admitting first would
-    * make a batch collide with itself), then the index tables'
-    * relation caches are refreshed on the OUTER session (the admit ran
-    * through the stream's CLONED session and refreshed only the
-    * clone's cache; without the explicit refresh the outer session
-    * keeps serving the pre-append file listing and every cross-batch
-    * duplicate is silently missed — regression-trapped in
-    * StreamingSpec). With a non-null `checkpointDir` the run is
-    * RESUMABLE: a later invocation with the same checkpoint processes
-    * only files that arrived since.
-    */
-  private def checkAdmitRun(spark: org.apache.spark.sql.SparkSession,
-      inputDir: String, checkpointDir: String, sinkDir: String,
-      check: DataFrame => DataFrame, admit: DataFrame => Unit,
-      refreshTables: Seq[String]): Unit = {
+  def ingestRun[R](spark: org.apache.spark.sql.SparkSession,
+      inputDir: String, index: IndexStore.Ingest[R], checkpointDir: String,
+      sinkDir: String)(check: (DataFrame, R) => DataFrame): Unit = {
     import org.apache.spark.sql.streaming.Trigger
+    def checked(b: DataFrame): DataFrame = check(b, index.current(spark))
     val batchInput = spark.read.parquet(inputDir)
-    // init the sink once (first run only — a resumed run must APPEND)
     if (!new java.io.File(sinkDir).exists())
-      check(batchInput.limit(0)).write.mode("overwrite").parquet(sinkDir)
+      checked(batchInput.limit(0)).write.mode("overwrite").parquet(sinkDir)
     val reader = spark.readStream.schema(batchInput.schema)
       .option("maxFilesPerTrigger", "1").parquet(inputDir)
     val writer0 = reader.writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
-        check(b).write.mode("append").parquet(sinkDir)
-        admit(b)
-        refreshTables.foreach(spark.catalog.refreshTable)
+        checked(b).write.mode("append").parquet(sinkDir)
+        index.admit(spark, b)
+        index.stale.foreach(spark.catalog.refreshTable)
         ()
       }
     val writer = if (checkpointDir == null) writer0
@@ -1422,8 +1030,19 @@ object StreamingValidate {
     q.stop()
   }
 
+  /** [[ingestRun]] of [[graft.check.Checks.uniqueAgainstIndex]] over the
+    * versioned key index. Kept by name for perfbench/src/PerfBench.scala;
+    * it goes with the next benchmark change.
+    */
+  def uniqueIngestRunVersioned(spark: org.apache.spark.sql.SparkSession,
+      newKeysDir: String, indexTable: String, keys: Seq[String],
+      checkpointDir: String, sinkDir: String): Unit =
+    ingestRun(spark, newKeysDir, IndexStore.Key.versioned(indexTable, keys),
+      checkpointDir, sinkDir)(Checks.uniqueAgainstIndex(_, _, keys))
+
   /** Order-invariant aggregate of the per-batch violation sink —
-    * see [[uniqueIngestStream]].
+    * see [[uniqueIngestStream]]. perfbench/src/PerfBench.scala calls it
+    * by name: keep its signature until the next benchmark change.
     */
   def uniqueViolationTotals(spark: org.apache.spark.sql.SparkSession,
       sinkDir: String, keys: Seq[String]): DataFrame = {

@@ -1097,11 +1097,10 @@ class PlanSpec extends SparkSpec {
     val e = Tables.load(spark, dir, "embeddings")
     val idx = java.nio.file.Files
       .createTempDirectory("graft_vflat_plan").toString
-    IndexStore.writeIvfIndexVersioned(e.filter(col("vec_id") % 2 === 0),
-      Similarity.firstIdCentroids(e, 16), idx)
-    IndexStore.appendIvfIndexVersioned(
-      e.filter(col("vec_id") % 2 === 1), idx)
-    val (enc, _) = IndexStore.readIvfIndexVersioned(spark, idx)
+    IndexStore.Ivf.versioned(idx).write(e.filter(col("vec_id") % 2 === 0),
+      Similarity.firstIdCentroids(e, 16))
+    IndexStore.Ivf.versioned(idx).append(e.filter(col("vec_id") % 2 === 1))
+    val (enc, _) = IndexStore.Ivf.versioned(idx).read(spark)
     val n = nodes(enc)
     assert(!n.exists(_.isInstanceOf[UnionExec]),
       "a version must read as one relation, not a per-batch union")

@@ -373,6 +373,18 @@ class ValidateSpec extends SparkSpec {
       e.code == report.ErrorCodes.PrimaryKey && e.violations == 1))
   }
 
+  test("Graft.validateJson: a descriptor string with absolute paths " +
+      "reports byte-identically to Graft.validate on it written to disk") {
+    val csv = write("gj.csv", "id,code\n1,AB\n2,CD\n2,EF\n")
+    val descriptor =
+      s"""{"name":"gj","resources":[{"name":"t","path":"$csv","schema":{
+        |"fields":[{"name":"id","type":"integer"},{"name":"code"}],
+        |"primaryKey":"id"}}]}""".stripMargin
+    val fromDisk = Graft.validate(spark, write("gj.json", descriptor))
+    assert(!fromDisk.valid)
+    assert(Graft.validateJson(spark, descriptor).toJson === fromDisk.toJson)
+  }
+
   test("report JSON shape") {
     val p = pkg("id,code\n1,AB\n1,AB\n",
       "cid,parent_id,pair_a,pair_b,qty,flag\n10,1,1,1,1,true\n")

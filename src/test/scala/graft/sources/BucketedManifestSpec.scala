@@ -224,20 +224,18 @@ class BucketedManifestSpec extends SparkSpec {
         graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      IndexStore.writeDedupIndexBucketedVersioned(docs, fam,
-        numBuckets = 8, k = 5)
+      IndexStore.Dedup.versioned(fam, k = 5).write(docs, numBuckets = 8)
       val frozen =
-        IndexStore.snapshotDedupIndexBucketedVersioned(spark, fam)
+        IndexStore.Dedup.versioned(fam).snapshot(spark)
       assert(frozen === 1, "a freeze is a pure metadata read")
-      val v2 = IndexStore.appendDedupIndexBucketedVersioned(
-        docs.select((col("id") + 500000L).as("id"), col("toks")), fam,
-        k = 5)
+      val v2 = IndexStore.Dedup.versioned(fam, k = 5)
+        .append(docs.select((col("id") + 500000L).as("id"), col("toks")))
       assert(v2 === 2, "the append commits the next version atomically")
       val (shAsOf, _) = IndexStore
-        .readDedupIndexBucketedVersionedAsOf(spark, fam, frozen, k = 5)
+        .Dedup.versioned(fam, k = 5).readAsOf(spark, frozen)
       assert(shAsOf.count() === docs.count(),
         "the freeze point must be blind to the later admission")
-      IndexStore.compactDedupIndexBucketedVersioned(spark, fam)
+      IndexStore.Dedup.versioned(fam).compact(spark)
       assert(BucketedManifest.currentVersion(spark, fam) === 3)
       assert(BucketedManifest.gensOf(spark, fam, s"${fam}_bands")
         .size === 1, "compaction merges to one generation")
@@ -288,27 +286,26 @@ class BucketedManifestSpec extends SparkSpec {
         graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      IndexStore.writeSubstringIndexBucketedVersioned(docs, fam,
-        numBuckets = 8, k = 5)
+      IndexStore.Substring.versioned(fam, k = 5).write(docs, numBuckets = 8)
       val frozen =
-        IndexStore.snapshotSubstringIndexBucketedVersioned(spark, fam)
+        IndexStore.Substring.versioned(fam, k = 5).snapshot(spark)
       assert(frozen === 1, "the freeze is a pure metadata read")
       val baseGrams = IndexStore
-        .readSubstringIndexBucketedVersioned(spark, fam, k = 5).count()
+        .Substring.versioned(fam, k = 5).read(spark).count()
       // two small delta commits over the big base generation
       def delta(off: Long, lo: Long, hi: Long) = docs
         .filter(col("id") >= lo && col("id") < hi)
         .select((col("id") + off).as("id"), col("toks"))
-      assert(IndexStore.appendSubstringIndexBucketedVersioned(
-        delta(600000L, 0L, 20L), fam, k = 5) === 2)
-      assert(IndexStore.appendSubstringIndexBucketedVersioned(
-        delta(700000L, 20L, 40L), fam, k = 5) === 3)
-      assert(IndexStore.readSubstringIndexBucketedVersionedAsOf(
-        spark, fam, frozen, k = 5).count() === baseGrams,
+      assert(IndexStore.Substring.versioned(fam, k = 5)
+        .append(delta(600000L, 0L, 20L)) === 2)
+      assert(IndexStore.Substring.versioned(fam, k = 5)
+        .append(delta(700000L, 20L, 40L)) === 3)
+      assert(IndexStore.Substring.versioned(fam, k = 5)
+        .readAsOf(spark, frozen).count() === baseGrams,
         "the frozen version must be blind to both admissions")
       // k-mismatch still fails loudly through the migration
       intercept[IllegalArgumentException] {
-        IndexStore.readSubstringIndexBucketedVersioned(spark, fam, k = 7)
+        IndexStore.Substring.versioned(fam, k = 7).read(spark)
       }
       // tiered: the big base generation must be referenced, not
       // rewritten (byte-untouched files), and content must not move
@@ -321,9 +318,9 @@ class BucketedManifestSpec extends SparkSpec {
           .get.filter(_.isFile)
           .map(f => f.getName -> f.lastModified())).toMap
       val before = IndexStore
-        .readSubstringIndexBucketedVersioned(spark, fam, k = 5).count()
-      assert(IndexStore.maybeCompactSubstringIndexBucketedVersioned(
-        spark, fam, maxGens = 2))
+        .Substring.versioned(fam, k = 5).read(spark).count()
+      assert(IndexStore.Substring.versioned(fam, k = 5)
+        .maybeCompact(spark, maxGens = 2))
       assert(BucketedManifest.gensOf(spark, fam, gt).size === 2)
       assert(BucketedManifest.gensOf(spark, fam, gt).contains(bigGen),
         "the big gram generation must survive by reference")
@@ -336,13 +333,13 @@ class BucketedManifestSpec extends SparkSpec {
           .map(f => f.getName -> f.lastModified())).toMap
       assert(bigAfter === bigFiles,
         "the big generation's files must be byte-for-byte untouched")
-      assert(IndexStore.readSubstringIndexBucketedVersioned(spark, fam,
-        k = 5).count() === before, "tiered merge is content-invariant")
+      assert(IndexStore.Substring.versioned(fam, k = 5).read(spark).count()
+        === before, "tiered merge is content-invariant")
       // serve plan: the anchor join on h reads the gram member in
       // place (partition-pruned, zero store-side exchanges)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val grams = IndexStore
-        .readSubstringIndexBucketedVersioned(spark, fam, k = 5)
+        .Substring.versioned(fam, k = 5).read(spark)
       val probes = graft.ext.Dedup.substringGrams(
           delta(900000L, 0L, 30L), "id", col("toks"), 5)
         .select(col("id").as("new_id"), col("pos").as("new_pos"),
@@ -375,16 +372,14 @@ class BucketedManifestSpec extends SparkSpec {
     try {
       val o = graft.Tables.load(spark, "/root/testdata/sf0.001",
         "orders").select("o_orderkey")
-      IndexStore.writeKeyIndexBucketedVersioned(o, fam,
-        Seq("o_orderkey"), numBuckets = 4)
+      IndexStore.Key.versioned(fam, Seq("o_orderkey")).write(o, numBuckets = 4)
       // split rows: the %5 subset re-admitted; tombstones: the %7
       // subset fully deleted (incl. the %35 re-admissions)
-      IndexStore.appendKeyIndexBucketedVersioned(
-        o.filter(col("o_orderkey") % 5 === 0), fam, Seq("o_orderkey"))
-      IndexStore.deleteFromKeyIndexBucketedVersioned(
-        o.filter(col("o_orderkey") % 7 === 0)
-          .unionByName(o.filter(col("o_orderkey") % 35 === 0)),
-        fam, Seq("o_orderkey"))
+      IndexStore.Key.versioned(fam, Seq("o_orderkey"))
+        .append(o.filter(col("o_orderkey") % 5 === 0))
+      IndexStore.Key.versioned(fam, Seq("o_orderkey"))
+        .delete(o.filter(col("o_orderkey") % 7 === 0)
+          .unionByName(o.filter(col("o_orderkey") % 35 === 0)))
       assert(BucketedManifest.currentVersion(spark, fam) === 3,
         "admissions AND tombstones are versioned commits")
       def totals(df: DataFrame): Map[Long, Long] = df
@@ -392,15 +387,15 @@ class BucketedManifestSpec extends SparkSpec {
         .filter(col("n") =!= 0)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       def live() = IndexStore
-        .readKeyIndexBucketedVersioned(spark, fam, Seq("o_orderkey"))
+        .Key.versioned(fam, Seq("o_orderkey")).read(spark)
       val before = totals(live())
       assert(!before.keySet.exists(_ % 7 == 0),
         "fully-deleted keys must sum to zero pre-compaction")
       // the pre-delete history is still exactly recomputable
-      assert(totals(IndexStore.readKeyIndexBucketedVersionedAsOf(
-        spark, fam, Seq("o_orderkey"), 2)).keySet.exists(_ % 7 == 0),
+      assert(totals(IndexStore.Key.versioned(fam, Seq("o_orderkey"))
+        .readAsOf(spark, 2)).keySet.exists(_ % 7 == 0),
         "version 2 (pre-tombstone) must still hold the %7 keys")
-      IndexStore.compactKeyIndexBucketedVersioned(spark, fam)
+      IndexStore.Key.versioned(fam, Seq("o_orderkey")).compact(spark)
       assert(BucketedManifest.currentVersion(spark, fam) === 4)
       assert(totals(live()) === before, "merge-compaction serve-invariant")
       val physical = live()
@@ -411,13 +406,13 @@ class BucketedManifestSpec extends SparkSpec {
         "zero-total keys must be physically gone in the new generation")
       // tiered cadence with the LSM merge: more appends, then merge
       // only the small generations — totals never move
-      IndexStore.appendKeyIndexBucketedVersioned(
-        o.filter(col("o_orderkey") % 11 === 0), fam, Seq("o_orderkey"))
-      IndexStore.appendKeyIndexBucketedVersioned(
-        o.filter(col("o_orderkey") % 13 === 0), fam, Seq("o_orderkey"))
+      IndexStore.Key.versioned(fam, Seq("o_orderkey"))
+        .append(o.filter(col("o_orderkey") % 11 === 0))
+      IndexStore.Key.versioned(fam, Seq("o_orderkey"))
+        .append(o.filter(col("o_orderkey") % 13 === 0))
       val want = totals(live())
-      assert(IndexStore.maybeCompactKeyIndexBucketedVersioned(spark,
-        fam, maxGens = 2))
+      assert(IndexStore.Key.versioned(fam, Seq("o_orderkey"))
+        .maybeCompact(spark, maxGens = 2))
       assert(BucketedManifest.gensOf(spark, fam, kt).size === 2)
       assert(totals(live()) === want, "tiered LSM merge serve-invariant")
     } finally
@@ -441,40 +436,34 @@ class BucketedManifestSpec extends SparkSpec {
     val families: Seq[(String, Seq[String], () => Unit, () => Any,
         () => Any)] = Seq(
       ("bm_mm_dedup", Seq("_sh", "_bands"),
-        () => IndexStore.writeDedupIndexBucketedVersioned(toks,
-          "bm_mm_dedup", 4),
-        () => IndexStore.readDedupIndexBucketedVersioned(spark,
-          "bm_mm_dedup", numHashes = 16),
-        () => IndexStore.appendDedupIndexBucketedVersioned(toks,
-          "bm_mm_dedup", bands = 8)),
+        () => IndexStore.Dedup.versioned("bm_mm_dedup").write(toks, 4),
+        () => IndexStore.Dedup.versioned("bm_mm_dedup", numHashes = 16)
+          .read(spark),
+        () => IndexStore.Dedup.versioned("bm_mm_dedup", bands = 8)
+          .append(toks)),
       ("bm_mm_substr", Seq("_grams"),
-        () => IndexStore.writeSubstringIndexBucketedVersioned(toks,
-          "bm_mm_substr", 4, k = 8),
-        () => IndexStore.readSubstringIndexBucketedVersioned(spark,
-          "bm_mm_substr", k = 6),
-        () => IndexStore.appendSubstringIndexBucketedVersioned(toks,
-          "bm_mm_substr", k = 6)),
+        () => IndexStore.Substring.versioned("bm_mm_substr", k = 8)
+          .write(toks, 4),
+        () => IndexStore.Substring.versioned("bm_mm_substr", k = 6).read(spark),
+        () => IndexStore.Substring.versioned("bm_mm_substr", k = 6)
+          .append(toks)),
       ("bm_mm_edit", Seq("_segs", "_str", "_bylen"),
-        () => IndexStore.writeEditIndexBucketedVersioned(strs,
-          "bm_mm_edit", 4, d = 3),
-        () => IndexStore.readEditIndexBucketedVersioned(spark,
-          "bm_mm_edit", d = 2),
-        () => IndexStore.appendEditIndexBucketedVersioned(strs,
-          "bm_mm_edit", d = 2)),
+        () => IndexStore.Edit.versioned("bm_mm_edit", d = 3).write(strs, 4),
+        () => IndexStore.Edit.versioned("bm_mm_edit", d = 2).read(spark),
+        () => IndexStore.Edit.versioned("bm_mm_edit", d = 2).append(strs)),
       ("bm_mm_phash", Seq("_bands"),
-        () => IndexStore.writePhashIndexBucketedVersioned(hashes,
-          "bm_mm_phash", 4, bands = 8),
-        () => IndexStore.readPhashIndexBucketedVersioned(spark,
-          "bm_mm_phash", bands = 4),
-        () => IndexStore.appendPhashIndexBucketedVersioned(hashes,
-          "bm_mm_phash", bands = 4)),
+        () => IndexStore.Phash.versioned("bm_mm_phash", bands = 8)
+          .write(hashes, 4),
+        () => IndexStore.Phash.versioned("bm_mm_phash", bands = 4).read(spark),
+        () => IndexStore.Phash.versioned("bm_mm_phash", bands = 4)
+          .append(hashes)),
       ("bm_mm_key", Seq("_keys"),
-        () => IndexStore.writeKeyIndexBucketedVersioned(keyed, "bm_mm_key",
-          Seq("doc_id"), 4),
-        () => IndexStore.readKeyIndexBucketedVersioned(spark, "bm_mm_key",
-          Seq("doc_id", "n_chars")),
-        () => IndexStore.appendKeyIndexBucketedVersioned(keyed,
-          "bm_mm_key", Seq("doc_id", "n_chars"))))
+        () => IndexStore.Key.versioned("bm_mm_key", Seq("doc_id"))
+          .write(keyed, 4),
+        () => IndexStore.Key.versioned("bm_mm_key", Seq("doc_id", "n_chars"))
+          .read(spark),
+        () => IndexStore.Key.versioned("bm_mm_key", Seq("doc_id", "n_chars"))
+          .append(keyed)))
     for ((fam, members, build, badRead, badAppend) <- families)
       try {
         build()

@@ -75,8 +75,8 @@ class BucketingSpec extends SparkSpec {
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id").as("id"),
         graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
-    graft.sources.IndexStore.writeDedupIndexBucketed(docs, "idx_spec",
-      numBuckets = 8, k = 5)
+    graft.sources.IndexStore.Dedup.plain("idx_spec", k = 5)
+      .write(docs, numBuckets = 8)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -152,17 +152,15 @@ class BucketingSpec extends SparkSpec {
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id").as("id"),
         graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
-    IndexStore.writeSubstringIndexBucketed(docs, "sgx_spec",
-      numBuckets = 8, k = 8)
+    IndexStore.Substring.plain("sgx_spec", k = 8).write(docs, numBuckets = 8)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       // k mismatch fails loudly, never silently-zero
       intercept[IllegalArgumentException] {
-        IndexStore.readSubstringIndexBucketed(spark, "sgx_spec", k = 5)
+        IndexStore.Substring.plain("sgx_spec", k = 5).read(spark)
       }
-      val grams = IndexStore.readSubstringIndexBucketed(spark,
-        "sgx_spec", k = 8)
+      val grams = IndexStore.Substring.plain("sgx_spec", k = 8).read(spark)
       val batch = docs.filter(col("id") < 10)
         .select((col("id") + 900000L).as("id"),
           slice(col("toks"), lit(3), lit(40)).as("toks"))
@@ -217,15 +215,13 @@ class BucketingSpec extends SparkSpec {
     val probes = docs.filter(col("id") < 10)
       .select((col("id") + 900000L).as("id"),
         slice(col("toks"), lit(3), lit(40)).as("toks"))
-    IndexStore.writeSubstringIndexBucketed(docs, "sga_spec",
-      numBuckets = 8, k = 8)
-    IndexStore.appendSubstringIndexBucketed(delta, "sga_spec", k = 8)
-    IndexStore.writeSubstringIndexBucketed(docs.unionByName(delta),
-      "sga_full", numBuckets = 8, k = 8)
+    IndexStore.Substring.plain("sga_spec", k = 8).write(docs, numBuckets = 8)
+    IndexStore.Substring.plain("sga_spec", k = 8).append(delta)
+    IndexStore.Substring.plain("sga_full", k = 8)
+      .write(docs.unionByName(delta), numBuckets = 8)
     try {
       def serve(table: String): Set[(Long, Long, Long, Long, Long)] = {
-        val grams = IndexStore.readSubstringIndexBucketed(spark, table,
-          k = 8)
+        val grams = IndexStore.Substring.plain(table, k = 8).read(spark)
         graft.ext.Dedup.substringRunsAgainst(probes, grams,
             minRunLen = 30, k = 8)
           .collect()
@@ -239,15 +235,14 @@ class BucketingSpec extends SparkSpec {
         "no match against an appended delta row")
       // gram-size guard holds for appends too
       intercept[IllegalArgumentException] {
-        IndexStore.appendSubstringIndexBucketed(delta, "sga_spec", k = 5)
+        IndexStore.Substring.plain("sga_spec", k = 5).append(delta)
       }
       // plan contract survives the append: the (now multi-file-per-
       // bucket) gram side still reads in place below the serve join
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val grams = IndexStore.readSubstringIndexBucketed(spark,
-          "sga_spec", k = 8)
+        val grams = IndexStore.Substring.plain("sga_spec", k = 8).read(spark)
         val served = graft.ext.Dedup.substringRunsAgainst(probes, grams,
           minRunLen = 30, k = 8)
         served.count()
@@ -292,15 +287,14 @@ class BucketingSpec extends SparkSpec {
     val probes = docs.select((col("id") + 900000L).as("id"),
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.6).cast("int")).as("toks"))
-    IndexStore.writeDedupIndexBucketed(docs, "apx_spec",
-      numBuckets = 8, k = 5)
-    IndexStore.appendDedupIndexBucketed(delta, "apx_spec", k = 5)
-    IndexStore.writeDedupIndexBucketed(docs.unionByName(delta),
-      "apx_full", numBuckets = 8, k = 5)
+    IndexStore.Dedup.plain("apx_spec", k = 5).write(docs, numBuckets = 8)
+    IndexStore.Dedup.plain("apx_spec", k = 5).append(delta)
+    IndexStore.Dedup.plain("apx_full", k = 5)
+      .write(docs.unionByName(delta), numBuckets = 8)
     try {
       def serve(table: String): Set[(Long, Long, Double)] = {
         val (sh, bands) = IndexStore
-          .readDedupIndexBucketed(spark, table, k = 5)
+          .Dedup.plain(table, k = 5).read(spark)
         graft.ext.Dedup.nearDuplicatesAgainstIndex(probes, sh, bands,
             threshold = 0.5, k = 5)
           .collect()
@@ -315,7 +309,7 @@ class BucketingSpec extends SparkSpec {
         "no match against an appended delta row")
       // banding-parameter guard holds for appends too
       intercept[IllegalArgumentException] {
-        IndexStore.appendDedupIndexBucketed(delta, "apx_spec", k = 3)
+        IndexStore.Dedup.plain("apx_spec", k = 3).append(delta)
       }
       // plan contract survives the append: the (now multi-file-per-
       // bucket) corpus side still reads with no exchange above it
@@ -323,7 +317,7 @@ class BucketingSpec extends SparkSpec {
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         val (sh, bands) = IndexStore
-          .readDedupIndexBucketed(spark, "apx_spec", k = 5)
+          .Dedup.plain("apx_spec", k = 5).read(spark)
         val p = graft.ext.Dedup.againstIndexPlan(probes, sh, bands,
           threshold = 0.5, numHashes = 32, bands = 16, k = 5)
         p.count()
@@ -362,17 +356,14 @@ class BucketingSpec extends SparkSpec {
         slice(col("toks"), lit(1),
           floor(size(col("toks")) * frac).cast("int")).as("toks"))
     val probes = shifted(900000L, 0.6)
-    IndexStore.writeDedupIndexBucketed(docs, "cpx_spec",
-      numBuckets = 8, k = 5)
+    IndexStore.Dedup.plain("cpx_spec", k = 5).write(docs, numBuckets = 8)
     // two appended batches → three files per touched bucket
-    IndexStore.appendDedupIndexBucketed(shifted(50000L, 0.8),
-      "cpx_spec", k = 5)
-    IndexStore.appendDedupIndexBucketed(shifted(60000L, 0.7),
-      "cpx_spec", k = 5)
+    IndexStore.Dedup.plain("cpx_spec", k = 5).append(shifted(50000L, 0.8))
+    IndexStore.Dedup.plain("cpx_spec", k = 5).append(shifted(60000L, 0.7))
     try {
       def serve(): Set[(Long, Long, Double)] = {
         val (sh, bands) = IndexStore
-          .readDedupIndexBucketed(spark, "cpx_spec", k = 5)
+          .Dedup.plain("cpx_spec", k = 5).read(spark)
         graft.ext.Dedup.nearDuplicatesAgainstIndex(probes, sh, bands,
             threshold = 0.5, k = 5)
           .collect()
@@ -383,7 +374,7 @@ class BucketingSpec extends SparkSpec {
       assert(filesBefore > 8,
         s"two appends must have grown past one file per bucket " +
           s"(saw $filesBefore)")
-      IndexStore.compactDedupIndexBucketed(spark, "cpx_spec")
+      IndexStore.Dedup.plain("cpx_spec").compact(spark)
       val filesAfter = Bucketing.dataFileCount(spark, "cpx_spec_bands")
       assert(filesAfter <= 8 && filesAfter < filesBefore,
         s"compaction must restore one file per non-empty bucket " +
@@ -398,7 +389,7 @@ class BucketingSpec extends SparkSpec {
       assert(after.exists { case (_, cid, _) => cid >= 50000L })
       // meta record untouched → parameter guard still fires
       intercept[IllegalArgumentException] {
-        IndexStore.readDedupIndexBucketed(spark, "cpx_spec", k = 3)
+        IndexStore.Dedup.plain("cpx_spec", k = 3).read(spark)
       }
       // the compacted table keeps its bucket metadata: the serve join
       // still reads raw index rows with no exchange above them
@@ -407,7 +398,7 @@ class BucketingSpec extends SparkSpec {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         assert(Bucketing.numBucketsOf(spark, "cpx_spec_bands") == 8)
         val (sh, bands) = IndexStore
-          .readDedupIndexBucketed(spark, "cpx_spec", k = 5)
+          .Dedup.plain("cpx_spec", k = 5).read(spark)
         val p = graft.ext.Dedup.againstIndexPlan(probes, sh, bands,
           threshold = 0.5, numHashes = 32, bands = 16, k = 5)
         p.count()
@@ -453,17 +444,14 @@ class BucketingSpec extends SparkSpec {
       .select((col("o_orderkey") + 1000000L).as("o_orderkey"))
       .unionByName(orders.filter(col("o_orderkey") % 10 === 1)
         .select("o_orderkey"))
-    IndexStore.writeKeyIndexBucketed(orders, "kix_spec",
-      Seq("o_orderkey"), numBuckets = 8)
-    IndexStore.appendKeyIndexBucketed(batch1, "kix_spec",
-      Seq("o_orderkey"))
-    IndexStore.writeKeyIndexBucketed(
-      orders.select("o_orderkey").unionByName(batch1), "kix_full",
-      Seq("o_orderkey"), numBuckets = 8)
+    IndexStore.Key.plain("kix_spec", Seq("o_orderkey"))
+      .write(orders, numBuckets = 8)
+    IndexStore.Key.plain("kix_spec", Seq("o_orderkey")).append(batch1)
+    IndexStore.Key.plain("kix_full", Seq("o_orderkey"))
+      .write(orders.select("o_orderkey").unionByName(batch1), numBuckets = 8)
     try {
       def serve(table: String): Set[(Long, Long, Long)] = {
-        val idx = IndexStore.readKeyIndexBucketed(spark, table,
-          Seq("o_orderkey"))
+        val idx = IndexStore.Key.plain(table, Seq("o_orderkey")).read(spark)
         graft.check.Checks.uniqueAgainstIndex(batch2, idx,
             Seq("o_orderkey"))
           .collect()
@@ -476,15 +464,14 @@ class BucketingSpec extends SparkSpec {
         "batch-2 keys must collide with batch-1 keys appended earlier")
       // second append of the same batch splits its keys across files;
       // the serve must sum the split rows (n_existing = 2 now)
-      IndexStore.appendKeyIndexBucketed(batch1, "kix_spec",
-        Seq("o_orderkey"))
+      IndexStore.Key.plain("kix_spec", Seq("o_orderkey")).append(batch1)
       val split = serve("kix_spec")
       assert(split.exists { case (k, _, ne) => k > 1000000L && ne == 2 },
         "LSM split rows must sum at serve time")
       val rowsBefore = spark.table("kix_spec_keys").count()
       val filesBefore = Bucketing.dataFileCount(spark, "kix_spec_keys")
       assert(filesBefore > 8, "two appends must exceed one file/bucket")
-      IndexStore.compactKeyIndexBucketed(spark, "kix_spec")
+      IndexStore.Key.plain("kix_spec", Seq("o_orderkey")).compact(spark)
       val filesAfter = Bucketing.dataFileCount(spark, "kix_spec_keys")
       assert(filesAfter <= 8 && filesAfter < filesBefore,
         s"compaction must shrink files ($filesBefore → $filesAfter)")
@@ -500,21 +487,17 @@ class BucketingSpec extends SparkSpec {
         "merge-compaction must not change the served answer")
       // key-set guard fires on read and append
       intercept[IllegalArgumentException] {
-        IndexStore.readKeyIndexBucketed(spark, "kix_spec",
-          Seq("o_custkey"))
+        IndexStore.Key.plain("kix_spec", Seq("o_custkey")).read(spark)
       }
       intercept[IllegalArgumentException] {
-        IndexStore.appendKeyIndexBucketed(batch1, "kix_spec",
-          Seq("o_custkey"))
+        IndexStore.Key.plain("kix_spec", Seq("o_custkey")).append(batch1)
       }
       // tombstones: deleting BOTH admitted copies of batch1 returns
       // the index to its pre-append state (serve-identical), and the
       // next merge-compaction drops the dead keys physically
-      IndexStore.deleteFromKeyIndexBucketed(batch1, "kix_spec",
-        Seq("o_orderkey"))
-      IndexStore.deleteFromKeyIndexBucketed(batch1, "kix_spec",
-        Seq("o_orderkey"))
-      IndexStore.compactKeyIndexBucketed(spark, "kix_spec")
+      IndexStore.Key.plain("kix_spec", Seq("o_orderkey")).delete(batch1)
+      IndexStore.Key.plain("kix_spec", Seq("o_orderkey")).delete(batch1)
+      IndexStore.Key.plain("kix_spec", Seq("o_orderkey")).compact(spark)
       assert(spark.table("kix_spec_keys")
         .filter(col("o_orderkey") > 1000000L).count() == 0,
         "merge-compaction must physically drop fully-deleted keys")
@@ -526,8 +509,8 @@ class BucketingSpec extends SparkSpec {
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val idx = IndexStore.readKeyIndexBucketed(spark, "kix_spec",
-          Seq("o_orderkey"))
+        val idx = IndexStore.Key.plain("kix_spec", Seq("o_orderkey"))
+          .read(spark)
         val p = graft.check.Checks.uniqueAgainstIndex(batch2, idx,
           Seq("o_orderkey"))
         p.count()
@@ -563,16 +546,14 @@ class BucketingSpec extends SparkSpec {
       .select(col("id"), col("dhash"))
     val corpus = hashes.filter(col("id") % 2 === 0)
     val probes = hashes.filter(col("id") % 2 === 1)
-    IndexStore.writePhashIndexBucketed(corpus, "phx_spec",
-      numBuckets = 8, bands = 8)
+    IndexStore.Phash.plain("phx_spec", bands = 8).write(corpus, numBuckets = 8)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       intercept[IllegalArgumentException] {
-        IndexStore.readPhashIndexBucketed(spark, "phx_spec", bands = 4)
+        IndexStore.Phash.plain("phx_spec", bands = 4).read(spark)
       }
-      val idx = IndexStore.readPhashIndexBucketed(spark, "phx_spec",
-        bands = 8)
+      val idx = IndexStore.Phash.plain("phx_spec", bands = 8).read(spark)
       val served = Multimodal.phashNearDuplicatesAgainst(probes, idx,
         bands = 8, maxDist = 7)
       val got = served.collect()
@@ -617,16 +598,15 @@ class BucketingSpec extends SparkSpec {
     val batch = corpus.select((col("id") + 70000L).as("id"),
       concat(substring(col("s"), 1, 9), lit("X"),
         col("s").substr(lit(11), length(col("s")))).as("s"))
-    IndexStore.writeEditIndexBucketed(corpus, "edx_spec",
-      numBuckets = 8, d = 4)
+    IndexStore.Edit.plain("edx_spec", d = 4).write(corpus, numBuckets = 8)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       intercept[IllegalArgumentException] {
-        IndexStore.readEditIndexBucketed(spark, "edx_spec", d = 2)
+        IndexStore.Edit.plain("edx_spec", d = 2).read(spark)
       }
-      val (segs, str, bylen) = IndexStore.readEditIndexBucketed(spark,
-        "edx_spec", d = 4)
+      val (segs, str, bylen) = IndexStore.Edit.plain("edx_spec", d = 4)
+        .read(spark)
       // the plan probe: identical join tree WITHOUT the scoped-cache
       // localCheckpoint that collapses the public frame to a LogicalRDD
       val served = graft.ext.Dedup.editDistanceAgainstPlan(batch, "id",
@@ -660,21 +640,20 @@ class BucketingSpec extends SparkSpec {
     val probes = docs.select((col("id") + 900000L).as("id"),
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.6).cast("int")).as("toks"))
-    IndexStore.writeDedupIndexBucketed(docs, "del_spec",
-      numBuckets = 8, k = 5)
-    IndexStore.writeDedupIndexBucketed(docs.filter(col("id") % 3 =!= 0),
-      "del_ref", numBuckets = 8, k = 5)
-    IndexStore.deleteFromDedupIndexBucketed(
-      docs.filter(col("id") % 3 === 0).select("id"), "del_spec")
+    IndexStore.Dedup.plain("del_spec", k = 5).write(docs, numBuckets = 8)
+    IndexStore.Dedup.plain("del_ref", k = 5)
+      .write(docs.filter(col("id") % 3 =!= 0), numBuckets = 8)
+    IndexStore.Dedup.plain("del_spec")
+      .delete(docs.filter(col("id") % 3 === 0).select("id"))
     try {
       def serve(table: String, excludeDead: Boolean)
           : Set[(Long, Long, Double)] = {
         val (sh, bands) = IndexStore
-          .readDedupIndexBucketed(spark, table, k = 5)
+          .Dedup.plain(table, k = 5).read(spark)
         val r0 = graft.ext.Dedup.nearDuplicatesAgainstIndex(probes, sh,
           bands, threshold = 0.5, k = 5)
         val r = if (!excludeDead) r0
-          else r0.join(IndexStore.readDedupDeadIds(spark, table)
+          else r0.join(IndexStore.Dedup.plain(table).deadIds(spark)
             .select(col("id").as("corpus_id")), Seq("corpus_id"),
             "left_anti")
         r.select(col("new_id"), col("corpus_id"), col("jaccard"))
@@ -685,7 +664,7 @@ class BucketingSpec extends SparkSpec {
       assert(serve("del_spec", excludeDead = true) === ref,
         "tombstone-excluded serve must equal rebuild-without-deleted")
       assert(ref.nonEmpty)
-      IndexStore.purgeDedupIndexBucketed(spark, "del_spec")
+      IndexStore.Dedup.plain("del_spec").purge(spark)
       assert(!spark.catalog.tableExists("del_spec_dead"),
         "purge must clear the tombstone table")
       assert(spark.table("del_spec_sh")
@@ -710,21 +689,20 @@ class BucketingSpec extends SparkSpec {
     val probes = docs.select((col("id") + 900000L).as("id"),
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.6).cast("int")).as("toks"))
-    IndexStore.writeSubstringIndexBucketed(docs, "sdel_spec",
-      numBuckets = 8, k = 8)
-    IndexStore.writeSubstringIndexBucketed(
-      docs.filter(col("id") % 3 =!= 0), "sdel_ref", numBuckets = 8, k = 8)
-    IndexStore.deleteFromSubstringIndexBucketed(
-      docs.filter(col("id") % 3 === 0).select("id"), "sdel_spec")
+    IndexStore.Substring.plain("sdel_spec", k = 8).write(docs, numBuckets = 8)
+    IndexStore.Substring.plain("sdel_ref", k = 8)
+      .write(docs.filter(col("id") % 3 =!= 0), numBuckets = 8)
+    IndexStore.Substring.plain("sdel_spec", k = 8)
+      .delete(docs.filter(col("id") % 3 === 0).select("id"))
     try {
       def serve(table: String, excludeDead: Boolean)
           : Set[(Long, Long, Long, Long, Long)] = {
-        val grams = IndexStore.readSubstringIndexBucketed(spark, table,
-          k = 8)
+        val grams = IndexStore.Substring.plain(table, k = 8).read(spark)
         val r0 = graft.ext.Dedup.sharedSubstringRunsAgainst(probes,
           grams, minRunLen = 20, k = 8)
         val r = if (!excludeDead) r0
-          else r0.join(IndexStore.readSubstringDeadIds(spark, table)
+          else r0.join(IndexStore.Substring.plain(table, k = 8)
+            .deadIds(spark)
             .select(col("id").as("corpus_id")), Seq("corpus_id"),
             "left_anti")
         r.select(col("new_id"), col("corpus_id"), col("n_runs"),
@@ -737,7 +715,7 @@ class BucketingSpec extends SparkSpec {
       assert(serve("sdel_spec", excludeDead = true) === ref,
         "tombstone-excluded serve must equal rebuild-without-deleted")
       assert(ref.nonEmpty)
-      IndexStore.purgeSubstringIndexBucketed(spark, "sdel_spec")
+      IndexStore.Substring.plain("sdel_spec", k = 8).purge(spark)
       assert(!spark.catalog.tableExists("sdel_spec_dead"),
         "purge must clear the tombstone table")
       assert(spark.table("sdel_spec_grams")
@@ -760,21 +738,19 @@ class BucketingSpec extends SparkSpec {
     val batch = corpus.select((col("id") + 900000L).as("id"),
       concat(substring(col("s"), 1, 9), lit("X"),
         col("s").substr(lit(11), length(col("s")))).as("s"))
-    IndexStore.writeEditIndexBucketed(corpus, "edel_spec",
-      numBuckets = 8, d = 4)
-    IndexStore.writeEditIndexBucketed(corpus.filter(col("id") % 3 =!= 0),
-      "edel_ref", numBuckets = 8, d = 4)
-    IndexStore.deleteFromEditIndexBucketed(
-      corpus.filter(col("id") % 3 === 0).select("id"), "edel_spec")
+    IndexStore.Edit.plain("edel_spec", d = 4).write(corpus, numBuckets = 8)
+    IndexStore.Edit.plain("edel_ref", d = 4)
+      .write(corpus.filter(col("id") % 3 =!= 0), numBuckets = 8)
+    IndexStore.Edit.plain("edel_spec", d = 4)
+      .delete(corpus.filter(col("id") % 3 === 0).select("id"))
     try {
       def serve(table: String, excludeDead: Boolean)
           : Set[(Long, Long, Long)] = {
-        val (segs, str, bylen) = IndexStore.readEditIndexBucketed(spark,
-          table, d = 4)
+        val (segs, str, bylen) = IndexStore.Edit.plain(table, d = 4).read(spark)
         val r0 = graft.ext.Dedup.editDistanceAgainst(batch, "id",
           col("s"), segs, str, bylen, d = 4)
         val r = if (!excludeDead) r0
-          else r0.join(IndexStore.readEditDeadIds(spark, table)
+          else r0.join(IndexStore.Edit.plain(table, d = 4).deadIds(spark)
             .select(col("id").as("corpus_id")), Seq("corpus_id"),
             "left_anti")
         r.select(col("new_id"), col("corpus_id"), col("dist"))
@@ -785,7 +761,7 @@ class BucketingSpec extends SparkSpec {
       assert(serve("edel_spec", excludeDead = true) === ref,
         "tombstone-excluded serve must equal rebuild-without-deleted")
       assert(ref.nonEmpty)
-      IndexStore.purgeEditIndexBucketed(spark, "edel_spec")
+      IndexStore.Edit.plain("edel_spec", d = 4).purge(spark)
       assert(!spark.catalog.tableExists("edel_spec_dead"),
         "purge must clear the tombstone table")
       for (t <- Seq("_segs", "_str", "_bylen"))
@@ -811,21 +787,19 @@ class BucketingSpec extends SparkSpec {
       .select(col("id"), col("dhash"))
     val probes = hashes.filter(col("id") % 2 === 1)
       .select(col("id"), col("dhash"))
-    IndexStore.writePhashIndexBucketed(corpus, "pdel_spec",
-      numBuckets = 8, bands = 8)
-    IndexStore.writePhashIndexBucketed(corpus.filter(col("id") % 4 =!= 0),
-      "pdel_ref", numBuckets = 8, bands = 8)
-    IndexStore.deleteFromPhashIndexBucketed(
-      corpus.filter(col("id") % 4 === 0).select("id"), "pdel_spec")
+    IndexStore.Phash.plain("pdel_spec", bands = 8).write(corpus, numBuckets = 8)
+    IndexStore.Phash.plain("pdel_ref", bands = 8)
+      .write(corpus.filter(col("id") % 4 =!= 0), numBuckets = 8)
+    IndexStore.Phash.plain("pdel_spec")
+      .delete(corpus.filter(col("id") % 4 === 0).select("id"))
     try {
       def serve(table: String, excludeDead: Boolean)
           : Set[(Long, Long, Int)] = {
-        val idx = IndexStore.readPhashIndexBucketed(spark, table,
-          bands = 8)
+        val idx = IndexStore.Phash.plain(table, bands = 8).read(spark)
         val r0 = graft.ext.Multimodal.phashNearDuplicatesAgainst(probes,
           idx, bands = 8, maxDist = 7)
         val r = if (!excludeDead) r0
-          else r0.join(IndexStore.readPhashDeadIds(spark, table)
+          else r0.join(IndexStore.Phash.plain(table).deadIds(spark)
             .select(col("id").as("corpus_id")), Seq("corpus_id"),
             "left_anti")
         r.select(col("new_id"), col("corpus_id"), col("hamming"))
@@ -836,7 +810,7 @@ class BucketingSpec extends SparkSpec {
       assert(serve("pdel_spec", excludeDead = true) === ref,
         "tombstone-excluded serve must equal rebuild-without-deleted")
       assert(ref.nonEmpty)
-      IndexStore.purgePhashIndexBucketed(spark, "pdel_spec")
+      IndexStore.Phash.plain("pdel_spec").purge(spark)
       assert(!spark.catalog.tableExists("pdel_spec_dead"),
         "purge must clear the tombstone table")
       assert(spark.table("pdel_spec_bands")
@@ -865,18 +839,20 @@ class BucketingSpec extends SparkSpec {
     val families = Seq[(String, String => Unit,
         (org.apache.spark.sql.DataFrame, String) => Unit, String,
         String => org.apache.spark.sql.DataFrame)](
-      ("rb_dedup", IndexStore.writeDedupIndexBucketed(toks, _,
-        numBuckets = 4, k = 5), IndexStore.deleteFromDedupIndexBucketed,
-        "_sh", IndexStore.readDedupDeadIds(spark, _)),
-      ("rb_sub", IndexStore.writeSubstringIndexBucketed(toks, _,
-        numBuckets = 4, k = 8), IndexStore.deleteFromSubstringIndexBucketed,
-        "_grams", IndexStore.readSubstringDeadIds(spark, _)),
-      ("rb_edit", IndexStore.writeEditIndexBucketed(strs, _,
-        numBuckets = 4, d = 4), IndexStore.deleteFromEditIndexBucketed,
-        "_str", IndexStore.readEditDeadIds(spark, _)),
-      ("rb_phash", IndexStore.writePhashIndexBucketed(hashes, _,
-        numBuckets = 4, bands = 8), IndexStore.deleteFromPhashIndexBucketed,
-        "_bands", IndexStore.readPhashDeadIds(spark, _)))
+      ("rb_dedup", IndexStore.Dedup.plain(_, k = 5).write(toks, numBuckets = 4),
+        (ids, t) => IndexStore.Dedup.plain(t).delete(ids),
+        "_sh", IndexStore.Dedup.plain(_).deadIds(spark)),
+      ("rb_sub", IndexStore.Substring.plain(_, k = 8)
+        .write(toks, numBuckets = 4),
+        (ids, t) => IndexStore.Substring.plain(t, k = 8).delete(ids),
+        "_grams", IndexStore.Substring.plain(_, k = 8).deadIds(spark)),
+      ("rb_edit", IndexStore.Edit.plain(_, d = 4).write(strs, numBuckets = 4),
+        (ids, t) => IndexStore.Edit.plain(t, d = 4).delete(ids),
+        "_str", IndexStore.Edit.plain(_, d = 4).deadIds(spark)),
+      ("rb_phash", IndexStore.Phash.plain(_, bands = 8)
+        .write(hashes, numBuckets = 4),
+        (ids, t) => IndexStore.Phash.plain(t).delete(ids),
+        "_bands", IndexStore.Phash.plain(_).deadIds(spark)))
     def idSet(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select(col("id")).collect().map(_.getLong(0)).toSet
     try {
@@ -1000,19 +976,17 @@ class BucketingSpec extends SparkSpec {
       .select((col("o_orderkey") + 900000L).as("o_orderkey"))
     val batch2 = batch1.unionByName(
       orders.filter(col("o_orderkey") % 10 === 1).select("o_orderkey"))
-    IndexStore.writeKeyIndexBucketed(orders, "ktier_spec",
-      Seq("o_orderkey"), numBuckets = 8)
+    IndexStore.Key.plain("ktier_spec", Seq("o_orderkey"))
+      .write(orders, numBuckets = 8)
     try {
       // two appends of the same batch → split per-key rows AND
       // multi-file buckets, the state tiered compaction operates on
-      IndexStore.appendKeyIndexBucketed(batch1, "ktier_spec",
-        Seq("o_orderkey"))
-      IndexStore.appendKeyIndexBucketed(batch1, "ktier_spec",
-        Seq("o_orderkey"))
+      IndexStore.Key.plain("ktier_spec", Seq("o_orderkey")).append(batch1)
+      IndexStore.Key.plain("ktier_spec", Seq("o_orderkey")).append(batch1)
       def serve(): Set[(Long, Long, Long)] =
         graft.check.Checks.uniqueAgainstIndex(batch2,
-            IndexStore.readKeyIndexBucketed(spark, "ktier_spec",
-              Seq("o_orderkey")), Seq("o_orderkey"))
+            IndexStore.Key.plain("ktier_spec", Seq("o_orderkey")).read(spark),
+            Seq("o_orderkey"))
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val before = serve()
@@ -1023,7 +997,7 @@ class BucketingSpec extends SparkSpec {
       assert(Bucketing.dataFileCount(spark, "ktier_spec_keys")
         < filesBefore, "tiered compaction must shrink the file count")
       // file-level ONLY: split LSM rows survive (row merging is
-      // compactKeyIndexBucketed's job) — and the serve's sum-per-key
+      // the key index's full `compact`'s job) — and the serve's sum-per-key
       // makes that invisible, which is exactly why file-level tiered
       // compaction is VALID for the key family
       assert(spark.table("ktier_spec_keys").count() == rowsBefore,
@@ -1053,36 +1027,27 @@ class BucketingSpec extends SparkSpec {
     val families: Seq[(String, Seq[String], () => Unit, () => Any,
         () => Any)] = Seq(
       ("mm_dedup", Seq("_sh", "_bands"),
-        () => IndexStore.writeDedupIndexBucketed(toks, "mm_dedup", 4),
-        () => IndexStore.readDedupIndexBucketed(spark, "mm_dedup",
-          bands = 8),
-        () => IndexStore.appendDedupIndexBucketed(toks, "mm_dedup",
-          k = 5)),
+        () => IndexStore.Dedup.plain("mm_dedup").write(toks, 4),
+        () => IndexStore.Dedup.plain("mm_dedup", bands = 8).read(spark),
+        () => IndexStore.Dedup.plain("mm_dedup", k = 5).append(toks)),
       ("mm_substr", Seq("_grams"),
-        () => IndexStore.writeSubstringIndexBucketed(toks, "mm_substr", 4,
-          k = 8),
-        () => IndexStore.readSubstringIndexBucketed(spark, "mm_substr",
-          k = 6),
-        () => IndexStore.appendSubstringIndexBucketed(toks, "mm_substr",
-          k = 6)),
+        () => IndexStore.Substring.plain("mm_substr", k = 8).write(toks, 4),
+        () => IndexStore.Substring.plain("mm_substr", k = 6).read(spark),
+        () => IndexStore.Substring.plain("mm_substr", k = 6).append(toks)),
       ("mm_edit", Seq("_segs", "_str", "_bylen"),
-        () => IndexStore.writeEditIndexBucketed(strs, "mm_edit", 4, d = 3),
-        () => IndexStore.readEditIndexBucketed(spark, "mm_edit", d = 2),
-        () => IndexStore.appendEditIndexBucketed(strs, "mm_edit", d = 2)),
+        () => IndexStore.Edit.plain("mm_edit", d = 3).write(strs, 4),
+        () => IndexStore.Edit.plain("mm_edit", d = 2).read(spark),
+        () => IndexStore.Edit.plain("mm_edit", d = 2).append(strs)),
       ("mm_phash", Seq("_bands"),
-        () => IndexStore.writePhashIndexBucketed(hashes, "mm_phash", 4,
-          bands = 8),
-        () => IndexStore.readPhashIndexBucketed(spark, "mm_phash",
-          bands = 4),
-        () => IndexStore.appendPhashIndexBucketed(hashes, "mm_phash",
-          bands = 4)),
+        () => IndexStore.Phash.plain("mm_phash", bands = 8).write(hashes, 4),
+        () => IndexStore.Phash.plain("mm_phash", bands = 4).read(spark),
+        () => IndexStore.Phash.plain("mm_phash", bands = 4).append(hashes)),
       ("mm_key", Seq("_keys"),
-        () => IndexStore.writeKeyIndexBucketed(keyed, "mm_key",
-          Seq("doc_id"), 4),
-        () => IndexStore.readKeyIndexBucketed(spark, "mm_key",
-          Seq("doc_id", "n_chars")),
-        () => IndexStore.appendKeyIndexBucketed(keyed, "mm_key",
-          Seq("doc_id", "n_chars"))))
+        () => IndexStore.Key.plain("mm_key", Seq("doc_id")).write(keyed, 4),
+        () => IndexStore.Key.plain("mm_key", Seq("doc_id", "n_chars"))
+          .read(spark),
+        () => IndexStore.Key.plain("mm_key", Seq("doc_id", "n_chars"))
+          .append(keyed)))
     for ((table, members, build, badRead, badAppend) <- families)
       try {
         build()

@@ -49,52 +49,56 @@ class FlatLifecycleSpec extends SparkSpec {
     spark.read.parquet(s"$dir/$leaf")
 
   private def cells: Seq[Cell] = Seq(
-    Cell("IVF plain", IndexStore.writeIvfIndex(vecs, cents, _),
-      IndexStore.appendIvfIndex(vecs, _), plain(_, "ivf.parquet"),
-      IndexStore.readIvfIndexLive(spark, _)._1, IndexStore.deleteFromIvfIndex,
-      IndexStore.purgeIvfIndex(spark, _), IndexStore.compactIvfIndex(spark, _)),
-    Cell("int8 plain", IndexStore.writeInt8Index(vecs, _),
-      IndexStore.appendInt8Index(vecs, _), plain(_, "int8.parquet"),
-      IndexStore.readInt8IndexLive(spark, _), IndexStore.deleteFromInt8Index,
-      IndexStore.purgeInt8Index(spark, _),
-      IndexStore.compactInt8Index(spark, _)),
-    Cell("PQ plain", IndexStore.writePqIndex(vecs, model, _),
-      IndexStore.appendPqIndex(vecs, _), plain(_, "codes.parquet"),
-      IndexStore.readPqCodesLive(spark, _), IndexStore.deleteFromPqIndex,
-      IndexStore.purgePqIndex(spark, _), IndexStore.compactPqIndex(spark, _)),
-    Cell("IVF-PQ plain", IndexStore.writeIvfPqIndex(vecs, model, cents, _),
-      IndexStore.appendIvfPqIndex(vecs, _), plain(_, "ivfpq.parquet"),
-      IndexStore.readIvfPqIndexLive(spark, _)._1,
-      IndexStore.deleteFromIvfPqIndex, IndexStore.purgeIvfPqIndex(spark, _),
-      IndexStore.compactIvfPqIndex(spark, _)),
-    Cell("IVF versioned", IndexStore.writeIvfIndexVersioned(vecs, cents, _),
-      IndexStore.appendIvfIndexVersioned(vecs, _),
-      IndexStore.readIvfIndexVersioned(spark, _)._1,
-      IndexStore.readIvfIndexVersionedLive(spark, _)._1,
-      IndexStore.deleteFromIvfIndexVersioned,
-      IndexStore.purgeIvfIndexVersioned(spark, _),
-      IndexStore.compactIvfIndexVersioned(spark, _),
-      Some(IndexStore.compactIvfIndexVersioned(spark, _,
-        purgeTombstones = true))),
-    Cell("PQ versioned", IndexStore.writePqIndexVersioned(vecs, model, _),
-      IndexStore.appendPqIndexVersioned(vecs, _),
-      IndexStore.readPqCodesVersioned(spark, _),
-      IndexStore.readPqCodesVersionedLive(spark, _),
-      IndexStore.deleteFromPqIndexVersioned,
-      IndexStore.purgePqIndexVersioned(spark, _),
-      IndexStore.compactPqIndexVersioned(spark, _),
-      Some(IndexStore.compactPqIndexVersioned(spark, _,
-        purgeTombstones = true))),
+    Cell("IVF plain", IndexStore.Ivf.plain(_).write(vecs, cents),
+      IndexStore.Ivf.plain(_).append(vecs), plain(_, "ivf.parquet"),
+      IndexStore.Ivf.plain(_).live(spark)._1,
+      (ids, d) => IndexStore.Ivf.plain(d).delete(ids),
+      IndexStore.Ivf.plain(_).purge(spark),
+      IndexStore.Ivf.plain(_).compact(spark)),
+    Cell("int8 plain", IndexStore.Int8.plain(_).write(vecs, ()),
+      IndexStore.Int8.plain(_).append(vecs), plain(_, "int8.parquet"),
+      IndexStore.Int8.plain(_).live(spark),
+      (ids, d) => IndexStore.Int8.plain(d).delete(ids),
+      IndexStore.Int8.plain(_).purge(spark),
+      IndexStore.Int8.plain(_).compact(spark)),
+    Cell("PQ plain", IndexStore.Pq.plain(_).write(vecs, model),
+      IndexStore.Pq.plain(_).append(vecs), plain(_, "codes.parquet"),
+      IndexStore.Pq.plain(_).live(spark),
+      (ids, d) => IndexStore.Pq.plain(d).delete(ids),
+      IndexStore.Pq.plain(_).purge(spark),
+      IndexStore.Pq.plain(_).compact(spark)),
+    Cell("IVF-PQ plain", IndexStore.IvfPq.plain(_).write(vecs, (model, cents)),
+      IndexStore.IvfPq.plain(_).append(vecs), plain(_, "ivfpq.parquet"),
+      IndexStore.IvfPq.plain(_).live(spark)._1,
+      (ids, d) => IndexStore.IvfPq.plain(d).delete(ids),
+      IndexStore.IvfPq.plain(_).purge(spark),
+      IndexStore.IvfPq.plain(_).compact(spark)),
+    Cell("IVF versioned", IndexStore.Ivf.versioned(_).write(vecs, cents),
+      IndexStore.Ivf.versioned(_).append(vecs),
+      IndexStore.Ivf.versioned(_).read(spark)._1,
+      IndexStore.Ivf.versioned(_).live(spark)._1,
+      (ids, d) => IndexStore.Ivf.versioned(d).delete(ids),
+      IndexStore.Ivf.versioned(_).purge(spark),
+      IndexStore.Ivf.versioned(_).compact(spark),
+      Some(IndexStore.Ivf.versioned(_).compact(spark, purgeTombstones = true))),
+    Cell("PQ versioned", IndexStore.Pq.versioned(_).write(vecs, model),
+      IndexStore.Pq.versioned(_).append(vecs),
+      IndexStore.Pq.versioned(_).read(spark),
+      IndexStore.Pq.versioned(_).live(spark),
+      (ids, d) => IndexStore.Pq.versioned(d).delete(ids),
+      IndexStore.Pq.versioned(_).purge(spark),
+      IndexStore.Pq.versioned(_).compact(spark),
+      Some(IndexStore.Pq.versioned(_).compact(spark, purgeTombstones = true))),
     Cell("IVF-PQ versioned",
-      IndexStore.writeIvfPqIndexVersioned(vecs, model, cents, _),
-      IndexStore.appendIvfPqIndexVersioned(vecs, _),
-      IndexStore.readIvfPqIndexVersioned(spark, _)._1,
-      IndexStore.readIvfPqIndexVersionedLive(spark, _)._1,
-      IndexStore.deleteFromIvfPqIndexVersioned,
-      IndexStore.purgeIvfPqIndexVersioned(spark, _),
-      IndexStore.compactIvfPqIndexVersioned(spark, _),
-      Some(IndexStore.compactIvfPqIndexVersioned(spark, _,
-        purgeTombstones = true))))
+      IndexStore.IvfPq.versioned(_).write(vecs, (model, cents)),
+      IndexStore.IvfPq.versioned(_).append(vecs),
+      IndexStore.IvfPq.versioned(_).read(spark)._1,
+      IndexStore.IvfPq.versioned(_).live(spark)._1,
+      (ids, d) => IndexStore.IvfPq.versioned(d).delete(ids),
+      IndexStore.IvfPq.versioned(_).purge(spark),
+      IndexStore.IvfPq.versioned(_).compact(spark),
+      Some(IndexStore.IvfPq.versioned(_)
+        .compact(spark, purgeTombstones = true))))
 
   private def idFrame(xs: Long*): DataFrame =
     xs.map(x => spark.range(x, x + 1).toDF()).reduce(_ union _)
@@ -159,13 +163,13 @@ class FlatLifecycleSpec extends SparkSpec {
   test("IVF versioned rollback: the head reverts to the rolled-back-to " +
       "version by a new commit; the reverted version stays readable") {
     val dir = tmp("rollback")
-    IndexStore.writeIvfIndexVersioned(vecs, cents, dir)
-    IndexStore.appendIvfIndexVersioned(vecs.filter(col("vec_id") < 4)
-      .select((col("vec_id") + 100L).as("vec_id"), col("embedding")), dir)
-    assert(IndexStore.rollbackIvfIndexVersioned(spark, dir, 1) === 3)
+    IndexStore.Ivf.versioned(dir).write(vecs, cents)
+    IndexStore.Ivf.versioned(dir).append(vecs.filter(col("vec_id") < 4)
+      .select((col("vec_id") + 100L).as("vec_id"), col("embedding")))
+    assert(IndexStore.Ivf.versioned(dir).rollback(1) === 3)
     val v1 = (0L until 24L).toSet
-    assert(ids(IndexStore.readIvfIndexVersioned(spark, dir)._1) === v1)
-    assert(ids(IndexStore.readIvfIndexVersioned(spark, dir, asOf = 2)._1)
+    assert(ids(IndexStore.Ivf.versioned(dir).read(spark)._1) === v1)
+    assert(ids(IndexStore.Ivf.versioned(dir).read(spark, asOf = 2)._1)
       === v1 ++ (100L until 104L).toSet)
   }
 
@@ -173,7 +177,7 @@ class FlatLifecycleSpec extends SparkSpec {
       "build method, and writes nothing") {
     val appends = cells.map(c => c.name -> c.append) :+
       ("int8 versioned" -> ((d: String) =>
-        IndexStore.appendInt8IndexVersioned(vecs, d)))
+        IndexStore.Int8.versioned(d).append(vecs)))
     appends.foreach { case (name, append) =>
       val dir = tmp("unbuilt")
       val e = intercept[IllegalArgumentException](append(dir))

@@ -29,7 +29,7 @@ class Int8PackSpec extends SparkSpec {
     val e = Tables.load(spark, dir, "embeddings")
     val idx = java.nio.file.Files
       .createTempDirectory("graft_int8_spec").toString
-    IndexStore.writeInt8Index(e, idx)
+    IndexStore.Int8.plain(idx).write(e, ())
 
     // on-disk schema: q is array<tinyint> — one byte per dim for any
     // external consumer, not an array of 8-byte doubles
@@ -44,7 +44,7 @@ class Int8PackSpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
       .sortBy(_._1)
-    val back = IndexStore.readInt8Index(spark, idx)
+    val back = IndexStore.Int8.plain(idx).read(spark)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
       .sortBy(_._1)
@@ -77,11 +77,10 @@ class Int8PackSpec extends SparkSpec {
       .createTempDirectory("graft_int8del_spec").toString
     val refIdx = java.nio.file.Files
       .createTempDirectory("graft_int8del_ref").toString
-    IndexStore.writeInt8Index(e, idx)
-    IndexStore.writeInt8Index(e.filter(col("vec_id") % 7 =!= 3), refIdx)
-    IndexStore.deleteFromInt8Index(
-      e.filter(col("vec_id") % 7 === 3).select(col("vec_id").as("id")),
-      idx)
+    IndexStore.Int8.plain(idx).write(e, ())
+    IndexStore.Int8.plain(refIdx).write(e.filter(col("vec_id") % 7 =!= 3), ())
+    IndexStore.Int8.plain(idx)
+      .delete(e.filter(col("vec_id") % 7 === 3).select(col("vec_id").as("id")))
     def serve(corpusIdx: DataFrame): Seq[(Long, Long, Long)] =
       graft.ext.Similarity.quantizedTopKFromIndex(queries, corpusIdx, 10)
         .select(col("query_id"), col("neighbor_id"),
@@ -89,13 +88,13 @@ class Int8PackSpec extends SparkSpec {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSeq.sorted
-    val ref = serve(IndexStore.readInt8Index(spark, refIdx))
+    val ref = serve(IndexStore.Int8.plain(refIdx).read(spark))
     assert(ref.nonEmpty)
-    assert(serve(IndexStore.readInt8IndexLive(spark, idx)) === ref,
+    assert(serve(IndexStore.Int8.plain(idx).live(spark)) === ref,
       "tombstone-excluded serve must equal rebuild-without-deleted")
-    assert(serve(IndexStore.readInt8Index(spark, idx)) !== ref,
+    assert(serve(IndexStore.Int8.plain(idx).read(spark)) !== ref,
       "deleted ids must have been in some top-10 for the test to bite")
-    IndexStore.purgeInt8Index(spark, idx)
+    IndexStore.Int8.plain(idx).purge(spark)
     assert(!new java.io.File(s"$idx/dead.parquet").exists(),
       "purge must clear the tombstones")
     assert(spark.read.parquet(s"$idx/int8.parquet").schema("q")
@@ -104,7 +103,7 @@ class Int8PackSpec extends SparkSpec {
     assert(spark.read.parquet(s"$idx/int8.parquet")
       .filter(col("id") % 7 === 3).count() == 0,
       "purge must drop deleted vectors physically")
-    assert(serve(IndexStore.readInt8IndexLive(spark, idx)) === ref,
+    assert(serve(IndexStore.Int8.plain(idx).live(spark)) === ref,
       "post-purge serve needs no exclusion and keeps the answer")
   }
 }

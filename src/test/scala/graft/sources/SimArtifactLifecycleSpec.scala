@@ -36,19 +36,18 @@ class SimArtifactLifecycleSpec extends SparkSpec {
     val e = Tables.load(spark, dir, "embeddings")
     val idx = tmp("int8")
     val ref = tmp("int8ref")
-    IndexStore.writeInt8Index(e.filter(col("vec_id") % 2 === 0), idx)
-    IndexStore.appendInt8Index(e.filter(col("vec_id") % 2 === 1), idx)
-    IndexStore.writeInt8Index(e, ref)
-    assert(rows(IndexStore.readInt8Index(spark, idx)) ===
-      rows(IndexStore.readInt8Index(spark, ref)),
+    IndexStore.Int8.plain(idx).write(e.filter(col("vec_id") % 2 === 0), ())
+    IndexStore.Int8.plain(idx).append(e.filter(col("vec_id") % 2 === 1))
+    IndexStore.Int8.plain(ref).write(e, ())
+    assert(rows(IndexStore.Int8.plain(idx).read(spark)) ===
+      rows(IndexStore.Int8.plain(ref).read(spark)),
       "append(build(evens), odds) must equal build(all) row-for-row")
 
-    IndexStore.deleteFromInt8Index(
-      e.filter(col("vec_id") % 7 === 3).select(col("vec_id").as("id")),
-      idx)
+    IndexStore.Int8.plain(idx)
+      .delete(e.filter(col("vec_id") % 7 === 3).select(col("vec_id").as("id")))
     val before = partFiles(s"$idx/int8.parquet")
     assert(before >= 2, "build + append must leave >= 2 files")
-    IndexStore.compactInt8Index(spark, idx)
+    IndexStore.Int8.plain(idx).compact(spark)
     assert(partFiles(s"$idx/int8.parquet") === 1,
       "compaction must rewrite to one file")
     assert(!new java.io.File(s"$idx/dead.parquet").exists(),
@@ -69,26 +68,26 @@ class SimArtifactLifecycleSpec extends SparkSpec {
 
     val pq = tmp("pq")
     val pqRef = tmp("pqref")
-    IndexStore.writePqIndex(evens, model, pq)
-    IndexStore.appendPqIndex(odds, pq)
-    IndexStore.writePqIndex(e, model, pqRef)
-    assert(rows(IndexStore.readPqCodes(spark, pq)) ===
-      rows(IndexStore.readPqCodes(spark, pqRef)),
+    IndexStore.Pq.plain(pq).write(evens, model)
+    IndexStore.Pq.plain(pq).append(odds)
+    IndexStore.Pq.plain(pqRef).write(e, model)
+    assert(rows(IndexStore.Pq.plain(pq).read(spark)) ===
+      rows(IndexStore.Pq.plain(pqRef).read(spark)),
       "PQ append(build(evens), odds) must equal build(all)")
     assert(partFiles(s"$pq/codes.parquet") >= 2)
-    IndexStore.compactPqIndex(spark, pq)
+    IndexStore.Pq.plain(pq).compact(spark)
     assert(partFiles(s"$pq/codes.parquet") === 1)
 
     val cents = Similarity.firstIdCentroids(e, 8)
     val ivfpq = tmp("ivfpq")
     val ivfpqRef = tmp("ivfpqref")
-    IndexStore.writeIvfPqIndex(evens, model, cents, ivfpq)
-    IndexStore.appendIvfPqIndex(odds, ivfpq)
-    IndexStore.writeIvfPqIndex(e, model, cents, ivfpqRef)
-    assert(rows(IndexStore.readIvfPqIndex(spark, ivfpq)._1) ===
-      rows(IndexStore.readIvfPqIndex(spark, ivfpqRef)._1),
+    IndexStore.IvfPq.plain(ivfpq).write(evens, (model, cents))
+    IndexStore.IvfPq.plain(ivfpq).append(odds)
+    IndexStore.IvfPq.plain(ivfpqRef).write(e, (model, cents))
+    assert(rows(IndexStore.IvfPq.plain(ivfpq).read(spark)._1) ===
+      rows(IndexStore.IvfPq.plain(ivfpqRef).read(spark)._1),
       "IVF-PQ append(build(evens), odds) must equal build(all)")
-    IndexStore.compactIvfPqIndex(spark, ivfpq)
+    IndexStore.IvfPq.plain(ivfpq).compact(spark)
     assert(partFiles(s"$ivfpq/ivfpq.parquet") === 1)
   }
 
@@ -98,20 +97,18 @@ class SimArtifactLifecycleSpec extends SparkSpec {
     val queries = e.filter(col("vec_id") < 5)
     val cents = Similarity.firstIdCentroids(e, 16)
     val idx = tmp("ivfcmp")
-    IndexStore.writeIvfIndex(e.filter(col("vec_id") % 2 === 0), cents,
-      idx)
-    IndexStore.appendIvfIndex(e.filter(col("vec_id") % 2 === 1), idx)
+    IndexStore.Ivf.plain(idx).write(e.filter(col("vec_id") % 2 === 0), cents)
+    IndexStore.Ivf.plain(idx).append(e.filter(col("vec_id") % 2 === 1))
 
     def serve(): Seq[String] = {
-      val (enc, cn) = IndexStore.readIvfIndexLive(spark, idx)
+      val (enc, cn) = IndexStore.Ivf.plain(idx).live(spark)
       rows(Similarity.ivfTopKWith(queries, enc, cn, 10, nProbe = 4))
     }
-    IndexStore.deleteFromIvfIndex(
-      e.filter(col("vec_id") % 7 === 3).select(col("vec_id").as("id")),
-      idx)
+    IndexStore.Ivf.plain(idx)
+      .delete(e.filter(col("vec_id") % 7 === 3).select(col("vec_id").as("id")))
     val expected = serve()
     assert(partFiles(s"$idx/ivf.parquet") >= 2)
-    IndexStore.compactIvfIndex(spark, idx)
+    IndexStore.Ivf.plain(idx).compact(spark)
     assert(partFiles(s"$idx/ivf.parquet") === 1,
       "compaction must rewrite to one file")
     assert(!new java.io.File(s"$idx/dead.parquet").exists())
@@ -126,14 +123,16 @@ class SimArtifactLifecycleSpec extends SparkSpec {
     val src = tmp("ivfing_src")
     val ckpt = tmp("ivfing_ckpt")
     val sink = tmp("ivfing_sink")
-    IndexStore.writeIvfIndex(e.filter(col("vec_id") % 3 === 0),
-      Similarity.firstIdCentroids(e, 16), idx)
+    IndexStore.Ivf.plain(idx).write(e.filter(col("vec_id") % 3 === 0),
+      Similarity.firstIdCentroids(e, 16))
     e.filter(col("vec_id") % 3 === 1).coalesce(1)
       .write.mode("append").parquet(src)
-    StreamingValidate.ivfIngestRun(spark, src, idx, 5, 4, ckpt, sink)
+    StreamingValidate.ingestRun(spark, src, IndexStore.Ivf.plain(idx), ckpt,
+      sink)((b, st) => Similarity.ivfTopKWith(b, st._1, st._2, 5, 4))
     e.filter(col("vec_id") % 3 === 2).coalesce(1)
       .write.mode("append").parquet(src)
-    StreamingValidate.ivfIngestRun(spark, src, idx, 5, 4, ckpt, sink)
+    StreamingValidate.ingestRun(spark, src, IndexStore.Ivf.plain(idx), ckpt,
+      sink)((b, st) => Similarity.ivfTopKWith(b, st._1, st._2, 5, 4))
     // a re-processed file A would double the % 3 = 1 rows
     val enc = spark.read.parquet(s"$idx/ivf.parquet")
     assert(enc.count() === e.count(),
@@ -156,16 +155,19 @@ class SimArtifactLifecycleSpec extends SparkSpec {
     val src = tmp("pqing_src")
     val ckpt = tmp("pqing_ckpt")
     val sink = tmp("pqing_sink")
-    IndexStore.writePqIndex(e.filter(col("vec_id") % 3 === 0), model,
-      idx)
+    IndexStore.Pq.plain(idx).write(e.filter(col("vec_id") % 3 === 0), model)
     e.filter(col("vec_id") % 3 === 1).coalesce(1)
       .write.mode("append").parquet(src)
-    StreamingValidate.pqIngestRun(spark, src, idx, 5, ckpt, sink)
+    StreamingValidate.ingestRun(spark, src, IndexStore.Pq.plain(idx), ckpt,
+      sink)(Similarity.pqTopKFromCodes(_, _, 5,
+        IndexStore.readPqModel(spark, idx)))
     e.filter(col("vec_id") % 3 === 2).coalesce(1)
       .write.mode("append").parquet(src)
-    StreamingValidate.pqIngestRun(spark, src, idx, 5, ckpt, sink)
+    StreamingValidate.ingestRun(spark, src, IndexStore.Pq.plain(idx), ckpt,
+      sink)(Similarity.pqTopKFromCodes(_, _, 5,
+        IndexStore.readPqModel(spark, idx)))
     // a re-processed file A would double the % 3 = 1 code rows
-    val codes = IndexStore.readPqCodes(spark, idx)
+    val codes = IndexStore.Pq.plain(idx).read(spark)
     assert(codes.count() === e.count(),
       "exactly one code row per corpus vector after the restart")
     assert(codes.groupBy(col("id")).count().filter(col("count") > 1)
@@ -184,15 +186,17 @@ class SimArtifactLifecycleSpec extends SparkSpec {
     val src = tmp("i8ing_src")
     val ckpt = tmp("i8ing_ckpt")
     val sink = tmp("i8ing_sink")
-    IndexStore.writeInt8Index(e.filter(col("vec_id") % 3 === 0), idx)
+    IndexStore.Int8.plain(idx).write(e.filter(col("vec_id") % 3 === 0), ())
     e.filter(col("vec_id") % 3 === 1).coalesce(1)
       .write.mode("append").parquet(src)
-    StreamingValidate.int8IngestRun(spark, src, idx, 5, ckpt, sink)
+    StreamingValidate.ingestRun(spark, src, IndexStore.Int8.plain(idx), ckpt,
+      sink)(Similarity.quantizedTopKFromIndex(_, _, 5))
     e.filter(col("vec_id") % 3 === 2).coalesce(1)
       .write.mode("append").parquet(src)
-    StreamingValidate.int8IngestRun(spark, src, idx, 5, ckpt, sink)
+    StreamingValidate.ingestRun(spark, src, IndexStore.Int8.plain(idx), ckpt,
+      sink)(Similarity.quantizedTopKFromIndex(_, _, 5))
     // a re-processed file A would double the % 3 = 1 quantized rows
-    val q = IndexStore.readInt8Index(spark, idx)
+    val q = IndexStore.Int8.plain(idx).read(spark)
     assert(q.count() === e.count(),
       "exactly one quantized row per corpus vector after the restart")
     assert(q.groupBy(col("id")).count().filter(col("count") > 1)
@@ -214,17 +218,21 @@ class SimArtifactLifecycleSpec extends SparkSpec {
     val src = tmp("ivfpqing_src")
     val ckpt = tmp("ivfpqing_ckpt")
     val sink = tmp("ivfpqing_sink")
-    IndexStore.writeIvfPqIndex(e.filter(col("vec_id") % 3 === 0),
-      model, cents, idx)
+    IndexStore.IvfPq.plain(idx)
+      .write(e.filter(col("vec_id") % 3 === 0), (model, cents))
     val modelBytes = Option(new java.io.File(s"$idx/codebooks.parquet")
       .listFiles()).get.filter(_.isFile)
       .map(f => f.getName -> f.length()).toMap
     e.filter(col("vec_id") % 3 === 1).coalesce(1)
       .write.mode("append").parquet(src)
-    StreamingValidate.ivfPqIngestRun(spark, src, idx, 5, 4, ckpt, sink)
+    StreamingValidate.ingestRun(spark, src, IndexStore.IvfPq.plain(idx), ckpt,
+      sink)((b, st) => Similarity.ivfPqTopKFromIndex(b, st._1, st._2,
+        IndexStore.readPqModel(spark, idx), 5, 4))
     e.filter(col("vec_id") % 3 === 2).coalesce(1)
       .write.mode("append").parquet(src)
-    StreamingValidate.ivfPqIngestRun(spark, src, idx, 5, 4, ckpt, sink)
+    StreamingValidate.ingestRun(spark, src, IndexStore.IvfPq.plain(idx), ckpt,
+      sink)((b, st) => Similarity.ivfPqTopKFromIndex(b, st._1, st._2,
+        IndexStore.readPqModel(spark, idx), 5, 4))
     val enc = spark.read.parquet(s"$idx/ivfpq.parquet")
     assert(enc.count() === e.count(),
       "exactly one enc row per corpus vector after the restart")
@@ -248,16 +256,16 @@ class SimArtifactLifecycleSpec extends SparkSpec {
     val cents = Similarity.firstIdCentroids(e, 16)
     val arcs: Seq[(String, String => Unit, String => String)] = Seq(
       ("pqv", { idx: String =>
-        IndexStore.writePqIndexVersioned(
-          e.filter(col("vec_id") % 3 === 0), model, idx) },
+        IndexStore.Pq.versioned(idx)
+          .write(e.filter(col("vec_id") % 3 === 0), model) },
         (idx: String) => s"$idx/codes"),
       ("i8v", { idx: String =>
-        IndexStore.writeInt8IndexVersioned(
-          e.filter(col("vec_id") % 3 === 0), idx) },
+        IndexStore.Int8.versioned(idx)
+          .write(e.filter(col("vec_id") % 3 === 0), ()) },
         (idx: String) => idx),
       ("ipqv", { idx: String =>
-        IndexStore.writeIvfPqIndexVersioned(
-          e.filter(col("vec_id") % 3 === 0), model, cents, idx) },
+        IndexStore.IvfPq.versioned(idx)
+          .write(e.filter(col("vec_id") % 3 === 0), (model, cents)) },
         (idx: String) => s"$idx/enc"))
     for ((tag, build, store) <- arcs) {
       val idx = tmp(s"${tag}_idx")
@@ -267,12 +275,17 @@ class SimArtifactLifecycleSpec extends SparkSpec {
       build(idx)
       assert(VersionedFlat.currentVersion(store(idx)) === 1)
       def run(): Unit = tag match {
-        case "pqv" => StreamingValidate.pqIngestRunVersioned(spark,
-          src, idx, 5, ckpt, sink)
-        case "i8v" => StreamingValidate.int8IngestRunVersioned(spark,
-          src, idx, 5, ckpt, sink)
-        case _ => StreamingValidate.ivfPqIngestRunVersioned(spark,
-          src, idx, 5, 4, ckpt, sink)
+        case "pqv" => StreamingValidate.ingestRun(spark, src,
+          IndexStore.Pq.versioned(idx), ckpt, sink)(
+          Similarity.pqTopKFromCodes(_, _, 5,
+            IndexStore.readPqModel(spark, idx)))
+        case "i8v" => StreamingValidate.ingestRun(spark, src,
+          IndexStore.Int8.versioned(idx), ckpt, sink)(
+          Similarity.quantizedTopKFromIndex(_, _, 5))
+        case _ => StreamingValidate.ingestRun(spark, src,
+          IndexStore.IvfPq.versioned(idx), ckpt, sink)((b, st) =>
+          Similarity.ivfPqTopKFromIndex(b, st._1, st._2,
+            IndexStore.readPqModel(spark, idx), 5, 4))
       }
       e.filter(col("vec_id") % 3 === 1).coalesce(1)
         .write.mode("append").parquet(src)
@@ -300,26 +313,26 @@ class SimArtifactLifecycleSpec extends SparkSpec {
     val ckpt = tmp("ivfverstream_ckpt")
     val sink = tmp("ivfverstream_sink")
     val base = e.filter(col("vec_id") % 3 === 0)
-    IndexStore.writeIvfIndexVersioned(base,
-      Similarity.firstIdCentroids(e, 16), idx)
+    IndexStore.Ivf.versioned(idx)
+      .write(base, Similarity.firstIdCentroids(e, 16))
     e.filter(col("vec_id") % 3 === 1).coalesce(1)
       .write.mode("append").parquet(src)
-    StreamingValidate.ivfIngestRunVersioned(spark, src, idx, 5, 4,
-      ckpt, sink)
+    StreamingValidate.ingestRun(spark, src, IndexStore.Ivf.versioned(idx),
+      ckpt, sink)((b, st) => Similarity.ivfTopKWith(b, st._1, st._2, 5, 4))
     e.filter(col("vec_id") % 3 === 2).coalesce(1)
       .write.mode("append").parquet(src)
-    StreamingValidate.ivfIngestRunVersioned(spark, src, idx, 5, 4,
-      ckpt, sink)
+    StreamingValidate.ingestRun(spark, src, IndexStore.Ivf.versioned(idx),
+      ckpt, sink)((b, st) => Similarity.ivfTopKWith(b, st._1, st._2, 5, 4))
     assert(VersionedFlat.currentVersion(s"$idx/enc") === 3,
       "base + one version per admitted batch")
     // as-of replay: version 2 = base + the first batch, exactly
-    val v2 = IndexStore.readIvfIndexVersioned(spark, idx, asOf = 2)._1
+    val v2 = IndexStore.Ivf.versioned(idx).read(spark, asOf = 2)._1
     assert(v2.count() ===
       base.count() + e.filter(col("vec_id") % 3 === 1).count())
     assert(v2.filter(col("id") % 3 === 2).count() === 0,
       "batch 2's vectors must not exist at version 2")
     // restart admitted exactly once: current has one row per vector
-    val cur = IndexStore.readIvfIndexVersioned(spark, idx)._1
+    val cur = IndexStore.Ivf.versioned(idx).read(spark)._1
     assert(cur.count() === e.count())
     assert(cur.groupBy(col("id")).count().filter(col("count") > 1)
       .count() === 0)
@@ -332,17 +345,18 @@ class SimArtifactLifecycleSpec extends SparkSpec {
     val src = tmp("ivfvercad_src")
     val ckpt = tmp("ivfvercad_ckpt")
     val sink = tmp("ivfvercad_sink")
-    IndexStore.writeIvfIndexVersioned(e.filter(col("vec_id") % 3 === 0),
-      Similarity.firstIdCentroids(e, 16), idx)
+    IndexStore.Ivf.versioned(idx).write(e.filter(col("vec_id") % 3 === 0),
+      Similarity.firstIdCentroids(e, 16))
     e.filter(col("vec_id") % 3 === 1).coalesce(1)
       .write.mode("append").parquet(src)
     e.filter(col("vec_id") % 3 === 2).coalesce(1)
       .write.mode("append").parquet(src)
-    StreamingValidate.ivfIngestRunVersioned(spark, src, idx, 5, 4,
-      ckpt, sink, autoCompactBatches = 1)
+    StreamingValidate.ingestRun(spark, src,
+      IndexStore.Ivf.versioned(idx).autoCompacting(1), ckpt, sink)(
+      (b, st) => Similarity.ivfTopKWith(b, st._1, st._2, 5, 4))
     assert(VersionedFlat.batchCount(s"$idx/enc") === 1,
       "the cadence must hold the current manifest at one batch root")
-    val cur = IndexStore.readIvfIndexVersioned(spark, idx)._1
+    val cur = IndexStore.Ivf.versioned(idx).read(spark)._1
     assert(cur.count() === e.count(),
       "auto-compaction must not drop or double any admission")
     assert(cur.groupBy(col("id")).count().filter(col("count") > 1)
@@ -353,10 +367,8 @@ class SimArtifactLifecycleSpec extends SparkSpec {
       "version including the compacted merge; decode matches flat") {
     val e = Tables.load(spark, dir, "embeddings")
     val idx = tmp("int8ver")
-    IndexStore.writeInt8IndexVersioned(
-      e.filter(col("vec_id") % 2 === 0), idx)
-    IndexStore.appendInt8IndexVersioned(
-      e.filter(col("vec_id") % 2 === 1), idx)
+    IndexStore.Int8.versioned(idx).write(e.filter(col("vec_id") % 2 === 0), ())
+    IndexStore.Int8.versioned(idx).append(e.filter(col("vec_id") % 2 === 1))
     VersionedFlat.compact(spark, idx)
     (1 to 3).foreach { v =>
       assert(VersionedFlat.readVersion(spark, idx, v)
@@ -364,9 +376,9 @@ class SimArtifactLifecycleSpec extends SparkSpec {
         s"version $v must hold the packed schema")
     }
     val flat = tmp("int8flat")
-    IndexStore.writeInt8Index(e, flat)
-    assert(rows(IndexStore.readInt8IndexVersioned(spark, idx)) ===
-      rows(IndexStore.readInt8Index(spark, flat)),
+    IndexStore.Int8.plain(flat).write(e, ())
+    assert(rows(IndexStore.Int8.versioned(idx).read(spark)) ===
+      rows(IndexStore.Int8.plain(flat).read(spark)),
       "versioned decode must equal the flat artifact's")
   }
 
@@ -379,35 +391,34 @@ class SimArtifactLifecycleSpec extends SparkSpec {
     val odds = e.filter(col("vec_id") % 2 === 1)
     val pq = tmp("pqver")
     val ref = tmp("pqverref")
-    IndexStore.writePqIndexVersioned(evens, model, pq)
-    IndexStore.appendPqIndexVersioned(odds, pq)
+    IndexStore.Pq.versioned(pq).write(evens, model)
+    IndexStore.Pq.versioned(pq).append(odds)
     assert(VersionedFlat.currentVersion(s"$pq/codes") === 2,
       "build + one version per admitted batch")
     // time travel: version 1 is exactly the evens-only encode
-    val v1 = IndexStore.readPqCodesVersioned(spark, pq, asOf = 1)
+    val v1 = IndexStore.Pq.versioned(pq).read(spark, asOf = 1)
     assert(v1.filter(col("id") % 2 === 1).count() === 0)
     assert(v1.count() === evens.count())
-    IndexStore.compactPqIndexVersioned(spark, pq) // v3, one batch
+    IndexStore.Pq.versioned(pq).compact(spark) // v3, one batch
     assert(VersionedFlat.currentVersion(s"$pq/codes") === 3)
-    IndexStore.writePqIndex(e, model, ref)
-    assert(rows(IndexStore.readPqCodesVersioned(spark, pq)) ===
-      rows(IndexStore.readPqCodes(spark, ref)),
+    IndexStore.Pq.plain(ref).write(e, model)
+    assert(rows(IndexStore.Pq.versioned(pq).read(spark)) ===
+      rows(IndexStore.Pq.plain(ref).read(spark)),
       "versioned write/append/compact must equal the one-shot build")
     // tombstones mask serving; the default compact is LAYOUT-ONLY
     val dead = e.filter(col("vec_id") % 7 === 3)
       .select(col("vec_id").as("id"))
-    IndexStore.deleteFromPqIndexVersioned(dead, pq)
+    IndexStore.Pq.versioned(pq).delete(dead)
     def liveIds(): Set[Long] = IndexStore
-      .readPqCodesVersionedLive(spark, pq)
+      .Pq.versioned(pq).live(spark)
       .select("id").collect().map(_.getLong(0)).toSet
     val masked = liveIds()
     assert(!masked.exists(_ % 7 == 3))
-    IndexStore.compactPqIndexVersioned(spark, pq) // layout-only
+    IndexStore.Pq.versioned(pq).compact(spark) // layout-only
     assert(new java.io.File(s"$pq/dead.parquet").exists(),
       "the default versioned compact must NOT clear tombstones")
     assert(liveIds() === masked)
-    IndexStore.compactPqIndexVersioned(spark, pq,
-      purgeTombstones = true)
+    IndexStore.Pq.versioned(pq).compact(spark, purgeTombstones = true)
     assert(!new java.io.File(s"$pq/dead.parquet").exists(),
       "purgeTombstones = true must fold and clear")
     assert(liveIds() === masked, "purge must be serve-invariant")
@@ -422,27 +433,27 @@ class SimArtifactLifecycleSpec extends SparkSpec {
     val odds = e.filter(col("vec_id") % 2 === 1)
     val idx = tmp("ivfpqver")
     val ref = tmp("ivfpqverref")
-    IndexStore.writeIvfPqIndexVersioned(evens, model, cents, idx)
-    IndexStore.appendIvfPqIndexVersioned(odds, idx)
+    IndexStore.IvfPq.versioned(idx).write(evens, (model, cents))
+    IndexStore.IvfPq.versioned(idx).append(odds)
     assert(VersionedFlat.currentVersion(s"$idx/enc") === 2)
-    val v1 = IndexStore.readIvfPqIndexVersioned(spark, idx, asOf = 1)._1
+    val v1 = IndexStore.IvfPq.versioned(idx).read(spark, asOf = 1)._1
     assert(v1.filter(col("id") % 2 === 1).count() === 0)
-    IndexStore.compactIvfPqIndexVersioned(spark, idx)
-    IndexStore.writeIvfPqIndex(e, model, cents, ref)
-    assert(rows(IndexStore.readIvfPqIndexVersioned(spark, idx)._1) ===
-      rows(IndexStore.readIvfPqIndex(spark, ref)._1),
+    IndexStore.IvfPq.versioned(idx).compact(spark)
+    IndexStore.IvfPq.plain(ref).write(e, (model, cents))
+    assert(rows(IndexStore.IvfPq.versioned(idx).read(spark)._1) ===
+      rows(IndexStore.IvfPq.plain(ref).read(spark)._1),
       "versioned write/append/compact must equal the one-shot build")
     val dead = e.filter(col("vec_id") % 7 === 3)
       .select(col("vec_id").as("id"))
-    IndexStore.deleteFromIvfPqIndexVersioned(dead, idx)
+    IndexStore.IvfPq.versioned(idx).delete(dead)
     val queries = e.filter(col("vec_id") < 5)
     def serve(): Seq[String] = {
-      val (enc, cn) = IndexStore.readIvfPqIndexVersionedLive(spark, idx)
+      val (enc, cn) = IndexStore.IvfPq.versioned(idx).live(spark)
       rows(Similarity.ivfPqTopKFromIndex(queries, enc, cn,
         IndexStore.readPqModel(spark, idx), 10, nProbe = 4))
     }
     val expected = serve()
-    IndexStore.purgeIvfPqIndexVersioned(spark, idx)
+    IndexStore.IvfPq.versioned(idx).purge(spark)
     assert(!new java.io.File(s"$idx/dead.parquet").exists())
     assert(serve() === expected,
       "post-purge serve must equal the tombstone-excluded serve")
@@ -478,19 +489,19 @@ class SimArtifactLifecycleSpec extends SparkSpec {
             .collect().map(_.toString).toSeq.sorted
 
         val i8 = tmp("lawint8"); val i8r = tmp("lawint8r")
-        IndexStore.writeInt8Index(batches.head, i8)
+        IndexStore.Int8.plain(i8).write(batches.head, ())
         batches.tail.filter(!_.isEmpty)
-          .foreach(IndexStore.appendInt8Index(_, i8))
-        IndexStore.writeInt8Index(all, i8r)
+          .foreach(IndexStore.Int8.plain(i8).append(_))
+        IndexStore.Int8.plain(i8r).write(all, ())
         val int8Ok =
           slurp(i8, "int8.parquet") == slurp(i8r, "int8.parquet")
 
         val model = Similarity.pqFit(all, m = 2, ks = 4)
         val pq = tmp("lawpq"); val pqr = tmp("lawpqr")
-        IndexStore.writePqIndex(batches.head, model, pq)
+        IndexStore.Pq.plain(pq).write(batches.head, model)
         batches.tail.filter(!_.isEmpty)
-          .foreach(IndexStore.appendPqIndex(_, pq))
-        IndexStore.writePqIndex(all, model, pqr)
+          .foreach(IndexStore.Pq.plain(pq).append(_))
+        IndexStore.Pq.plain(pqr).write(all, model)
         val pqOk =
           slurp(pq, "codes.parquet") == slurp(pqr, "codes.parquet")
 

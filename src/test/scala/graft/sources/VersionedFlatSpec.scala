@@ -240,28 +240,27 @@ class VersionedFlatSpec extends SparkSpec {
       "re-pending tombstones over purged rows are a no-op") {
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val idx = tmp("ivfverdel")
-    IndexStore.writeIvfIndexVersioned(e,
-      Similarity.firstIdCentroids(e, 16), idx)
+    IndexStore.Ivf.versioned(idx).write(e, Similarity.firstIdCentroids(e, 16))
     val dead = e.filter(col("vec_id") % 7 === 3)
       .select(col("vec_id").as("id"))
-    IndexStore.deleteFromIvfIndexVersioned(dead, idx)
+    IndexStore.Ivf.versioned(idx).delete(dead)
     def liveIds(): Set[Long] =
-      idSet(IndexStore.readIvfIndexVersionedLive(spark, idx)._1)
+      idSet(IndexStore.Ivf.versioned(idx).live(spark)._1)
     val masked = liveIds()
     assert(!masked.exists(_ % 7 == 3), "tombstones must mask serving")
-    IndexStore.purgeIvfIndexVersioned(spark, idx)
+    IndexStore.Ivf.versioned(idx).purge(spark)
     assert(liveIds() === masked, "purge must be serve-invariant")
     assert(!new java.io.File(s"$idx/dead.parquet").exists())
     // time travel is HONEST: version 1 still holds the dead bytes
-    assert(idSet(IndexStore.readIvfIndexVersioned(spark, idx,
-      asOf = 1)._1).exists(_ % 7 == 3))
+    assert(idSet(IndexStore.Ivf.versioned(idx).read(spark, asOf = 1)._1)
+      .exists(_ % 7 == 3))
     VersionedFlat.vacuum(s"$idx/enc", retain = 1)
     intercept[IllegalArgumentException] {
-      IndexStore.readIvfIndexVersioned(spark, idx, asOf = 1)._1.collect()
+      IndexStore.Ivf.versioned(idx).read(spark, asOf = 1)._1.collect()
     }
     // a crash between publish and tombstone-clear leaves pending
     // tombstones over already-purged rows — must be a no-op
-    IndexStore.deleteFromIvfIndexVersioned(dead, idx)
+    IndexStore.Ivf.versioned(idx).delete(dead)
     assert(liveIds() === masked)
   }
 

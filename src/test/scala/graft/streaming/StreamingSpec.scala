@@ -470,8 +470,8 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id").as("id"),
         graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
-    graft.sources.IndexStore.writeDedupIndexBucketed(docs, "sidx_spec",
-      numBuckets = 8, k = 5)
+    graft.sources.IndexStore.Dedup.plain("sidx_spec", k = 5)
+      .write(docs, numBuckets = 8)
     val twins = docs.select((col("id") + 500000L).as("id"),
       slice(col("toks"), lit(1),
         floor(size(col("toks")) * 0.8).cast("int")).as("toks"))
@@ -496,7 +496,7 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       // one-shot batch serve from the SAME bucketed artifacts
       val (sh, bands) = graft.sources.IndexStore
-        .readDedupIndexBucketed(spark, "sidx_spec", k = 5)
+        .Dedup.plain("sidx_spec", k = 5).read(spark)
       val batch = graft.ext.Dedup.nearDuplicatesAgainstIndex(
         twins, sh, bands, threshold = 0.5, k = 5)
       assert(streamed ===
@@ -554,7 +554,7 @@ class StreamingSpec extends SparkSpec {
       // an empty (silently duplicate-free) result
       val ex = intercept[IllegalArgumentException] {
         graft.sources.IndexStore
-          .readDedupIndexBucketed(spark, "sidx_spec", k = 3)
+          .Dedup.plain("sidx_spec", k = 3).read(spark)
       }
       assert(ex.getMessage.contains("built with"))
     } finally {
@@ -568,8 +568,8 @@ class StreamingSpec extends SparkSpec {
       "recompute; cross-batch duplicates caught via admitted appends") {
     import graft.sources.IndexStore
     val orders = Tables.load(spark, dir, "orders").select("o_orderkey")
-    IndexStore.writeKeyIndexBucketed(orders, "ustr_spec",
-      Seq("o_orderkey"), numBuckets = 8)
+    IndexStore.Key.plain("ustr_spec", Seq("o_orderkey"))
+      .write(orders, numBuckets = 8)
     val sdir = java.nio.file.Files
       .createTempDirectory("graft_ustream").toString
     // fresh keys ride ONCE PER FILE: with maxFilesPerTrigger = 1 each
@@ -601,8 +601,7 @@ class StreamingSpec extends SparkSpec {
         "history collisions must be caught too")
       // the stream is admitted: re-checking the fresh keys collides
       // with BOTH streamed copies now
-      val idx = IndexStore.readKeyIndexBucketed(spark, "ustr_spec",
-        Seq("o_orderkey"))
+      val idx = IndexStore.Key.plain("ustr_spec", Seq("o_orderkey")).read(spark)
       assert(graft.check.Checks.uniqueAgainstIndex(fileA, idx,
           Seq("o_orderkey"))
         .filter(col("n_existing") >= 2).count() > 0,
@@ -623,8 +622,7 @@ class StreamingSpec extends SparkSpec {
           floor(size(col("toks")) * frac).cast("int")).as("toks"))
     val fileA = twins(900000L, 0.8)
     val fileB = twins(2000000L, 0.6)
-    IndexStore.writeDedupIndexBucketed(docs, "ndres_spec",
-      numBuckets = 8, k = 5)
+    IndexStore.Dedup.plain("ndres_spec", k = 5).write(docs, numBuckets = 8)
     val sdir = java.nio.file.Files
       .createTempDirectory("graft_ndres_stream").toString
     val ckpt = java.nio.file.Files
@@ -633,11 +631,15 @@ class StreamingSpec extends SparkSpec {
       .createTempDirectory("graft_ndres_sink").toString + "/s"
     try {
       fileA.coalesce(1).write.mode("append").parquet(sdir)
-      StreamingValidate.nearDupIngestRun(spark, sdir, "ndres_spec",
-        ckpt, sink, threshold = 0.5, k = 5)
+      StreamingValidate.ingestRun(spark, sdir,
+        IndexStore.Dedup.plain("ndres_spec", k = 5), ckpt, sink)((b, ix) =>
+        graft.ext.Dedup.nearDuplicatesAgainstIndex(b, ix._1, ix._2,
+          threshold = 0.5, k = 5))
       fileB.coalesce(1).write.mode("append").parquet(sdir)
-      StreamingValidate.nearDupIngestRun(spark, sdir, "ndres_spec",
-        ckpt, sink, threshold = 0.5, k = 5)
+      StreamingValidate.ingestRun(spark, sdir,
+        IndexStore.Dedup.plain("ndres_spec", k = 5), ckpt, sink)((b, ix) =>
+        graft.ext.Dedup.nearDuplicatesAgainstIndex(b, ix._1, ix._2,
+          threshold = 0.5, k = 5))
       def probeRows(path: String): Seq[(Long, Long, Double)] =
         spark.read.parquet(path)
           .filter(col("new_id") >= 2000000L)
@@ -647,10 +649,9 @@ class StreamingSpec extends SparkSpec {
       // reference: fileB served one-shot against a FROM-SCRATCH index
       // over base ∪ fileA (multiset compare — duplicate rows would be
       // exactly the re-admit failure mode)
-      IndexStore.writeDedupIndexBucketed(docs.unionByName(fileA),
-        "ndres_ref", numBuckets = 8, k = 5)
-      val (sh, bands) = IndexStore.readDedupIndexBucketed(spark,
-        "ndres_ref", k = 5)
+      IndexStore.Dedup.plain("ndres_ref", k = 5)
+        .write(docs.unionByName(fileA), numBuckets = 8)
+      val (sh, bands) = IndexStore.Dedup.plain("ndres_ref", k = 5).read(spark)
       val ref = graft.ext.Dedup.nearDuplicatesAgainstIndex(fileB, sh,
           bands, threshold = 0.5, k = 5)
         .collect()
@@ -666,8 +667,11 @@ class StreamingSpec extends SparkSpec {
       // _sh rows
       val sink2 = java.nio.file.Files
         .createTempDirectory("graft_ndres_sink2").toString + "/s"
-      StreamingValidate.nearDupIngestRun(spark, sdir, "ndres_spec",
-        checkpointDir = null, sinkDir = sink2, threshold = 0.5, k = 5)
+      StreamingValidate.ingestRun(spark, sdir,
+        IndexStore.Dedup.plain("ndres_spec", k = 5), checkpointDir = null,
+        sinkDir = sink2)((b, ix) =>
+        graft.ext.Dedup.nearDuplicatesAgainstIndex(b, ix._1, ix._2,
+          threshold = 0.5, k = 5))
       val rerun = probeRows(sink2)
       assert(rerun.size > rerun.distinct.size,
         "an uncheckpointed re-run must double-report probe×A pairs " +
@@ -798,8 +802,8 @@ class StreamingSpec extends SparkSpec {
     val corpus = docs.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id").as("id"),
         graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
-    graft.sources.IndexStore.writeDedupIndexBucketed(corpus,
-      "gated_spec", numBuckets = 8, k = 5)
+    graft.sources.IndexStore.Dedup.plain("gated_spec", k = 5)
+      .write(corpus, numBuckets = 8)
     // stream = odd docs + exact copies of 10 even docs (must die at
     // the dedup gate) across 3 files/batches
     val stream = docs.filter(col("doc_id") % 2 === 1)
@@ -818,7 +822,7 @@ class StreamingSpec extends SparkSpec {
         .toSet
       // one-shot composition over the same artifacts
       val (sh, bands) = graft.sources.IndexStore
-        .readDedupIndexBucketed(spark, "gated_spec", k = 5)
+        .Dedup.plain("gated_spec", k = 5).read(spark)
       val dup = graft.ext.Dedup.nearDuplicatesAgainstIndex(
           stream.select(col("doc_id").as("id"),
             graft.ext.TextAnalysis.tokens(col("text")).as("toks")),
@@ -854,8 +858,8 @@ class StreamingSpec extends SparkSpec {
         graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
     val fam = "gatedver_spec"
     try {
-      graft.sources.IndexStore.writeDedupIndexBucketedVersioned(
-        corpusToks, fam, numBuckets = 8, k = 5)
+      graft.sources.IndexStore.Dedup.versioned(fam, k = 5)
+        .write(corpusToks, numBuckets = 8)
       val base = corpusToks.count()
       def run(batch: org.apache.spark.sql.DataFrame, sink: String)
           : Long = {
@@ -904,8 +908,8 @@ class StreamingSpec extends SparkSpec {
         graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
     val fam = "multi_spec"
     try {
-      graft.sources.IndexStore.writePipelineIndexVersioned(corpusToks,
-        fam, numBuckets = 8, k = 5)
+      graft.sources.IndexStore.Pipeline.versioned(fam, k = 5)
+        .write(corpusToks, numBuckets = 8)
       assert(graft.sources.BucketedManifest
         .currentVersion(spark, fam) === 1)
       // the re-fetch: a CORPUS id re-sent with a fresh odd doc's text
@@ -953,8 +957,8 @@ class StreamingSpec extends SparkSpec {
         graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
     val fam = "gatedcad_spec"
     try {
-      graft.sources.IndexStore.writeDedupIndexBucketedVersioned(
-        corpusToks, fam, numBuckets = 8, k = 5)
+      graft.sources.IndexStore.Dedup.versioned(fam, k = 5)
+        .write(corpusToks, numBuckets = 8)
       def run(batch: org.apache.spark.sql.DataFrame): Unit = {
         val d = java.nio.file.Files
           .createTempDirectory("graft_gc_b").toString
@@ -1002,8 +1006,8 @@ class StreamingSpec extends SparkSpec {
         graft.ext.TextAnalysis.tokens(col("text")).as("toks"))
     val fam = "multicad_spec"
     try {
-      graft.sources.IndexStore.writePipelineIndexVersioned(corpusToks,
-        fam, numBuckets = 8, k = 5)
+      graft.sources.IndexStore.Pipeline.versioned(fam, k = 5)
+        .write(corpusToks, numBuckets = 8)
       def run(batch: org.apache.spark.sql.DataFrame): Unit = {
         val d = java.nio.file.Files
           .createTempDirectory("graft_mc_b").toString
@@ -1034,7 +1038,7 @@ class StreamingSpec extends SparkSpec {
       // the key member survived the LSM merge: one row per id, total
       // = corpus + both batches' admissions
       val keys = graft.sources.IndexStore
-        .readPipelineKeyIndex(spark, fam)
+        .Pipeline.versioned(fam).readKeys(spark)
       assert(keys.groupBy("id").count()
         .filter(col("count") > 1).count() === 0,
         "the merged key generation must hold collapsed rows")
@@ -1109,8 +1113,8 @@ class StreamingSpec extends SparkSpec {
               .select(col("__cid").as("doc_id"), col("text")))
         }
         // streamed: one run per ordered batch into one sink
-        graft.sources.IndexStore.writeDedupIndexBucketed(corpusToks,
-          "gatedlaw_spec", numBuckets = 8, k = 5)
+        graft.sources.IndexStore.Dedup.plain("gatedlaw_spec", k = 5)
+          .write(corpusToks, numBuckets = 8)
         val sink = java.nio.file.Files
           .createTempDirectory("graft_glaw_sink").toString
         java.nio.file.Files.delete(java.nio.file.Paths.get(sink))

@@ -5,9 +5,10 @@
 writes the physical plan of every SQL execution the query ran. Those
 executions run concurrently, so their order, their execution ids and
 their expression ids depend on the schedule, and the callsites carry
-source line numbers. This script drops all of that and sorts the
-executions, so two dumps diff empty exactly when the same set of plans
-ran.
+source line numbers; index rows also name tables after the process id,
+read them from the checkout's warehouse, and print JVM lambda identities
+in their DDL. This script drops all of that and sorts the executions,
+so two dumps diff empty exactly when the same set of plans ran.
 
     python3 tools/plan_canon.py DUMP.txt > CANON.txt
 """
@@ -25,6 +26,13 @@ SUBS = [
     # the CSV fixture's location and its writer's file ids
     (re.compile(r"file:\S*?/csv_fixture/"), "<fixture>/"),
     (re.compile(r"part-\d+-[0-9a-f-]{36}-c000"), "part-<id>"),
+    # the checkout's warehouse, and the process id in the index tables'
+    # names and their staging dirs
+    (re.compile(r"(?:file:)?/\S*?/spark-warehouse/"), "<warehouse>/"),
+    (re.compile(r"_p\d+(?=_|\b)"), "_p<pid>"),
+    (re.compile(r"staging-p\d+t"), "staging-p<pid>t"),
+    # JVM lambda class names and object identities in DDL arguments
+    (re.compile(r"\$\$Lambda\$?[\w/]*@[0-9a-f]+"), "$$Lambda<id>"),
 ]
 
 HEADER = re.compile(r"^===== internal execution \d+: (.*) =====$", re.M)
